@@ -34,45 +34,12 @@ import pkel.scoring.PairScorer
   */
 object Pipeline {
 
-  /** Embedding-vector sourcing for the scoring kernel.
-    *
-    * [[VecMemo]]: the kernel encodes from the raw surface behind a bounded
-    * per-partition memo (encoder cost O(bucket members) in the bucket kernel
-    * / up to O(pairs) on the sparse path, shuffle lean).
-    *
-    * [[VecCarry]]: compute the per-mention embedding ONCE on the keyed-mention
-    * table and carry it through `PairGen` into the kernel (encoder cost
-    * exactly O(mentions), shuffle +dim×4 bytes per member).
-    *
-    * [[VecAuto]]: decide per corpus from a KMV distinct-surface estimate on
-    * the keyed table (one cheap single-column aggregate, recorded to the
-    * metrics table). Measured (`BENCH/SURFACE_CARD.md`, 94.5M pairs): with
-    * this repo's cheap hashed-n-gram encoder the memo path wins at EVERY
-    * surface cardinality — even 100% unique surfaces (memo 8.1M vs carry
-    * 3.2M pairs/s @32) — because the bucket kernel encodes O(members) per
-    * bucket, not O(pairs), while carry pays dim×4 bytes/member through the
-    * bucket shuffle. Carry wins only when the encoder itself is expensive
-    * (a real bi-encoder model costs ~10^3× a dot product, so
-    * encode-per-bucket-visit dominates) AND the memo can't hold the surface
-    * universe. Hence the rule: carry iff `costlyEncoder` && estimate >
-    * `distinctThreshold` (default `PairScorer.MemoCap`). */
-  sealed trait VecMode
-  case object VecMemo extends VecMode
-  case object VecCarry extends VecMode
-  final case class VecAuto(
-      distinctThreshold: Long = PairScorer.MemoCap,
-      /** Set when plugging a model-backed `Embedder` whose per-encode cost
-        * dwarfs a dot product; the offline hashed-n-gram default is cheap. */
-      costlyEncoder: Boolean = false) extends VecMode
-
   final case class Config(
       pairCfg: PairGen.Config = PairGen.Config(),
       weights: PairScorer.Weights = PairScorer.Weights(),
       edgeThreshold: Double = 0.90,
       cascade: Cascade.Config = Cascade.Config(),
       useAnchors: Boolean = true,
-      /** See [[VecMode]]; auto-selects memo vs vec-carry per corpus. */
-      vecMode: VecMode = VecAuto(),
       /** Length-bound prune ([[PairScorer.lengthBound]]): drop cross-key LSH
         * pairs that provably score below `edgeThreshold` BEFORE the JW/cosine
         * kernel. Edges and clusters are invariant (LengthPruneSpec); the
@@ -110,11 +77,6 @@ object Pipeline {
 
   private def fp(cfg: Config, extra: String = ""): String =
     (cfg.toString + extra).hashCode.toHexString
-
-  /** Per-mention embedding column (computed once, carried through PairGen). */
-  private val embedVecUdf =
-    udf(pkel.text.Memo.named("embed_vec")((s: String) =>
-      pkel.scoring.Embedder.default.encode(Option(s).getOrElse(""))))
 
   /** Anchor node id for an entity: "Q57" → −58 (strictly below all mention ids). */
   def anchorId(paramId: String): Long = {
@@ -247,32 +209,9 @@ object Pipeline {
     // truncation is a visible counter, never a silent cap. A resumed stage
     // drains nothing (the counters were recorded when it originally computed).
     PairDropMetrics.reset(spark)
-    def vecCarry: Boolean = cfg.vecMode match {
-      case VecCarry => true
-      case VecMemo => false
-      case VecAuto(threshold, costlyEncoder) =>
-        // one single-column aggregate over the keyed table — O(mentions) scan
-        // of one string column, negligible next to the pair stage it tunes;
-        // the KMV sketch is this repo's own mergeable
-        // TypedImperativeAggregate (k=256 ⇒ ~6% relative error, ample for an
-        // order-of-magnitude threshold). Evaluated INSIDE the scored stage's
-        // compute block (round-5 advice): a resumed run replays the scored
-        // snapshot and must not re-pay the scan or append duplicate counters.
-        val est = keyed
-          .agg(pkel.functions.Functions.kmv_distinct(col("mention"), k = 256).as("d"))
-          .head().getLong(0)
-        val carry = costlyEncoder && est > threshold
-        io.appendCounters("keyed", Seq(
-          "distinct_surfaces_est" -> est,
-          "vec_carry" -> (if (carry) 1L else 0L)))
-        carry
-    }
     val scored = io.readOrCompute("scored", fp(cfg, "s")) {
-      val base = keyed.select("mention_id", "blocking_key", "tokens", "mention")
-      val forPairs =
-        if (vecCarry) base.withColumn("vec", embedVecUdf(col("mention")))
-        else base
-      PairScorer.scoreCandidates(forPairs, cfg.pairCfg, cfg.weights,
+      PairScorer.scoreCandidates(
+        keyed.select("mention_id", "blocking_key", "tokens", "mention"), cfg.pairCfg, cfg.weights,
         minScore = if (cfg.prunePairs) Some(cfg.edgeThreshold) else None)
     }
     PairDropMetrics.drain(spark).foreach { d =>

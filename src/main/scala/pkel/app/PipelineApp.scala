@@ -89,12 +89,6 @@ object PipelineApp {
     val io = pkel.io.StageStore.forBackend(opts.getOrElse("store", "snapshot"),
       spark, out, s"run-${java.util.UUID.randomUUID().toString.take(8)}")
     val cfg = Pipeline.Config(
-      vecMode = opts.getOrElse("vec-mode", "auto") match {
-        case "memo" => Pipeline.VecMemo
-        case "carry" => Pipeline.VecCarry
-        case "auto" => Pipeline.VecAuto()
-        case other => sys.error(s"--vec-mode must be memo|carry|auto, got $other")
-      },
       edgeThreshold = opts.getOrElse("edge-threshold", "0.90").toDouble,
       // --prune true: drop cross-key pairs provably below the edge threshold
       // (length bound) before the scoring kernel; clusters are invariant,

@@ -27,9 +27,8 @@ import scala.util.hashing.MurmurHash3
   *   mention per key): all mentions of a key share one token set, so banding
   *   them individually would replicate every hot key's block once per band.
   *   Degenerate (oversized) LSH buckets are dropped wholesale;
-  * - features carried through pairs are `mention` plus, when the input has a
-  *   `vec` column, the precomputed per-mention embedding — at scale the
-  *   encoder then runs O(mentions) times instead of O(pairs);
+  * - the one scoring feature carried through pairs is the raw `mention`
+  *   surface; the scorer embeds it behind a bounded memo;
   * - duplicate pairs across generators are tolerated downstream (CC dedupes
   *   edges; scoring is idempotent) — no global distinct shuffle.
   */
@@ -47,11 +46,7 @@ object PairGen {
         * a key passes cap×target mentions — the round-4 latent scale-killer).
         * Exists only so tests can pin a cap and observe the re-growth. */
       maxSaltFactor: Int = Int.MaxValue,
-      adaptiveSalt: Boolean = true,
-      /** Pair explosion strategy: collect_list + index-pair explosion (one
-        * shuffle of the bucket rows) vs bucket-key self-join (two shuffles,
-        * but whole-stage-codegen'd). */
-      fusedBuckets: Boolean = true)
+      adaptiveSalt: Boolean = true)
 
   /** MinHash signature of a token set: k seeded min-hashes. */
   def minhash(tokens: Seq[String], k: Int): Array[Int] = {
@@ -82,18 +77,13 @@ object PairGen {
   private val minhashUdf = udf((tokens: Seq[String], k: Int, bands: Int) =>
     bandHashes(minhash(Option(tokens).getOrElse(Seq.empty), k), bands))
 
-  /** Scoring features carried through pairs: the raw mention surface always,
-    * the precomputed embedding column when the caller provides one. */
-  private def featureCols(df: DataFrame): Seq[String] =
-    Seq("mention") ++ (if (df.columns.contains("vec")) Seq("vec") else Nil)
+  /** Bucket-member columns: the pair endpoints' ids, keys and the one
+    * scoring feature, the raw mention surface. */
+  private val memberCols = Seq("mention_id", "blocking_key", "mention")
 
   /** Self-join formulation: codegen'd but shuffles every bucket row twice. */
-  private def pairsInBucketsJoin(buckets: DataFrame, features: Seq[String],
-      maxBucketSize: Int, dropOversized: Boolean): DataFrame = {
-    val aCols = col("bucket_key") +: (col("mention_id").as("src") +:
-      col("blocking_key").as("key_a") +: features.map(f => col(f).as(s"${f}_a")))
-    val bCols = col("bucket_key") +: (col("mention_id").as("dst") +:
-      col("blocking_key").as("key_b") +: features.map(f => col(f).as(s"${f}_b")))
+  private def pairsInBucketsJoin(buckets: DataFrame, maxBucketSize: Int,
+      dropOversized: Boolean): DataFrame = {
     val (boundedA, boundedB) =
       if (!dropOversized) (buckets, buckets)
       else {
@@ -114,26 +104,24 @@ object PairGen {
         (buckets.join(counts.filter(keepCounting(col("bucket_n"))), "bucket_key"),
           buckets.join(counts.filter(col("bucket_n") <= maxBucketSize), "bucket_key"))
       }
-    val a = boundedA.select(aCols: _*)
-    val b = boundedB.select(bCols: _*)
+    val a = boundedA.select(col("bucket_key"), col("mention_id").as("src"),
+      col("blocking_key").as("key_a"), col("mention").as("mention_a"))
+    val b = boundedB.select(col("bucket_key"), col("mention_id").as("dst"),
+      col("blocking_key").as("key_b"), col("mention").as("mention_b"))
     a.join(b, Seq("bucket_key"))
       .filter(col("src") > col("dst"))
-      .select((Seq("src", "dst", "key_a", "key_b") ++
-        features.flatMap(f => Seq(s"${f}_a", s"${f}_b"))).map(col): _*)
+      .select("src", "dst", "key_a", "key_b", "mention_a", "mention_b")
   }
 
   /** All (src>dst) pairs within each bucket via ONE shuffle:
     * `groupBy(bucket_key).collect_list` + index-pair explosion (the self-join
-    * formulation shuffled every bucket row twice). Bucket sizes are bounded
-    * (salting / oversize drop), so per-group lists stay small. `buckets`
-    * columns: bucket_key, mention_id, blocking_key, <features>. */
-  private def pairsInBucketsFused(buckets: DataFrame, features: Seq[String],
-      maxBucketSize: Int, dropOversized: Boolean): DataFrame = {
-    val member = struct((Seq("mention_id", "blocking_key") ++ features).map(col): _*)
-    val grouped0 = buckets.groupBy("bucket_key").agg(collect_list(member).as("ms"))
+    * formulation shuffled every bucket row twice). Only for buckets whose
+    * size adaptive salting bounds, so per-group lists stay small. `buckets`
+    * columns: bucket_key, mention_id, blocking_key, mention. */
+  private def pairsInBucketsFused(buckets: DataFrame): DataFrame = {
+    val member = struct(memberCols.map(col): _*)
+    val grouped = buckets.groupBy("bucket_key").agg(collect_list(member).as("ms"))
       .filter(size(col("ms")) >= 2)
-    val grouped =
-      if (dropOversized) grouped0.filter(size(col("ms")) <= maxBucketSize) else grouped0
     val ms = col("ms")
     // i < j index pairs over the collected list (exactly C(n,2) structs)
     val pairsCol = flatten(transform(sequence(lit(0), size(ms) - 2), i =>
@@ -145,38 +133,27 @@ object PairGen {
     def aSide(f: String): Column = when(swap, col(s"p.y.$f")).otherwise(col(s"p.x.$f"))
     def bSide(f: String): Column = when(swap, col(s"p.x.$f")).otherwise(col(s"p.y.$f"))
     grouped.select(explode(pairsCol).as("p"))
-      .select((Seq(
+      .select(
         aSide("mention_id").as("src"), bSide("mention_id").as("dst"),
-        aSide("blocking_key").as("key_a"), bSide("blocking_key").as("key_b")) ++
-        features.flatMap(f => Seq(aSide(f).as(s"${f}_a"), bSide(f).as(s"${f}_b")))): _*)
+        aSide("blocking_key").as("key_a"), bSide("blocking_key").as("key_b"),
+        aSide("mention").as("mention_a"), bSide("mention").as("mention_b"))
       .filter(col("src") =!= col("dst"))
   }
-
-  private def pairsInBuckets(buckets: DataFrame, features: Seq[String], cfg: Config,
-      dropOversized: Boolean): DataFrame =
-    // the fused explosion materializes all C(n,2) feature-carrying structs of
-    // a bucket as ONE array value, so it is only safe when bucket sizes are
-    // bounded by construction: adaptive salting (≈ targetBucketSize members)
-    // or an explicit oversize drop. Fixed-salt buckets without a drop are
-    // unbounded (a hot key / saltBuckets can still be huge) — stream them
-    // through the self-join, same guard the LSH path applies
-    if (cfg.fusedBuckets && (dropOversized || cfg.adaptiveSalt))
-      pairsInBucketsFused(buckets, features, cfg.maxBucketSize, dropOversized)
-    else pairsInBucketsJoin(buckets, features, cfg.maxBucketSize, dropOversized)
 
   /** Per-key annotation in a single exchange on blocking_key: key frequency
     * (adaptive salt factor) via an unordered count window. The downstream
     * per-(key,salt) rep aggregation and the rep-star window reuse this
-    * partitioning — no further key-side exchange. */
-  private def annotate(mentions: DataFrame, cfg: Config): DataFrame = {
-    // project EARLY (guide §2.3): only (mention_id, blocking_key, features)
+    * partitioning — no further key-side exchange. Public so callers fusing
+    * both pair generators can share one lineage of it. */
+  def annotated(mentions: DataFrame, cfg: Config = Config()): DataFrame = {
+    // project EARLY (guide §2.3): only (mention_id, blocking_key, mention)
     // ride the key exchange + count window. The tokens array — the fattest
     // input column, consumed solely by the LSH path's key-rep aggregate,
     // which runs on the raw mentions — previously paid this shuffle + the
     // window sort + the bucket collect_list partials for nothing (measured
     // ~90 MB exchange at the 1M-conv probe, most of it tokens).
     val keyed = mentions
-      .select((Seq("mention_id", "blocking_key") ++ featureCols(mentions)).map(col): _*)
+      .select(memberCols.map(col): _*)
       .filter(col("blocking_key") =!= "")
     val withSalt =
       if (cfg.adaptiveSalt)
@@ -194,12 +171,18 @@ object PairGen {
   }
 
   /** Salted intra-bucket pairs + representative star across the salt
-    * buckets of each key (salt-invariant transitivity). */
-  private def saltedPairs(annotated: DataFrame, features: Seq[String], cfg: Config): DataFrame = {
-    val intra = pairsInBuckets(
-      annotated.select((Seq("bucket_key", "mention_id", "blocking_key") ++ features).map(col): _*),
-      features, cfg, dropOversized = false)
-    intra.unionByName(repStarPairs(annotated, features))
+    * buckets of each key (salt-invariant transitivity). The fused explosion
+    * materializes all C(n,2) feature-carrying structs of a bucket as ONE
+    * array value, so it is only safe when adaptive salting bounds bucket
+    * sizes (≈ targetBucketSize members). Fixed-salt buckets are unbounded (a
+    * hot key / saltBuckets can still be huge) — stream them through the
+    * self-join, same guard the LSH path applies. */
+  private def saltedPairs(annotated: DataFrame, cfg: Config): DataFrame = {
+    val buckets = annotated.select(("bucket_key" +: memberCols).map(col): _*)
+    val intra =
+      if (cfg.adaptiveSalt) pairsInBucketsFused(buckets)
+      else pairsInBucketsJoin(buckets, cfg.maxBucketSize, dropOversized = false)
+    intra.unionByName(repStarPairs(annotated))
   }
 
   /** Representative STAR pairs across the salt buckets of each key: every
@@ -211,81 +194,71 @@ object PairGen {
     * (measured: a 3M-conv corpus whose hottest keys salt into ~10^4 buckets
     * took 11 CC iterations, the fixpoint 59% of the job wall), while the
     * star shape contracts in O(1) rounds at ANY key skew. */
-  private def repStarPairs(annotated: DataFrame, features: Seq[String]): DataFrame = {
+  private def repStarPairs(annotated: DataFrame): DataFrame = {
     val reps = annotated.groupBy("blocking_key", "salt")
       .agg(min("mention_id").as("rep"),
-        features.map(f => min_by(col(f), col("mention_id")).as(s"rep_$f")): _*)
+        min_by(col("mention"), col("mention_id")).as("rep_mention"))
     // one window over the key's reps (O(salt_n) rows per key, re-using the
-    // blocking_key partitioning): the anchor is the min-id rep, its feature
-    // columns selected by min_by on the same ordering
+    // blocking_key partitioning): the anchor is the min-id rep, its mention
+    // selected by min_by on the same ordering
     val wKey = Window.partitionBy("blocking_key")
-    val withAnchor = features.foldLeft(
-      reps.withColumn("anchor_rep", min("rep").over(wKey))) { (df, f) =>
-      df.withColumn(s"anchor_$f", min_by(col(s"rep_$f"), col("rep")).over(wKey))
-    }
     // rep > anchor_rep for every non-anchor bucket (the anchor is the min),
     // so src/dst orientation is fixed without a greatest/least shuffle
-    withAnchor
+    reps
+      .withColumn("anchor_rep", min("rep").over(wKey))
+      .withColumn("anchor_mention", min_by(col("rep_mention"), col("rep")).over(wKey))
       .filter(col("rep") =!= col("anchor_rep"))
-      .select((Seq(
+      .select(
         col("rep").as("src"),
         col("anchor_rep").as("dst"),
-        col("blocking_key").as("key_a"), col("blocking_key").as("key_b")) ++
-        features.flatMap(f => Seq(
-          col(s"rep_$f").as(s"${f}_a"),
-          col(s"anchor_$f").as(s"${f}_b")))): _*)
+        col("blocking_key").as("key_a"), col("blocking_key").as("key_b"),
+        col("rep_mention").as("mention_a"), col("anchor_mention").as("mention_b"))
   }
 
   /** MinHash-LSH pairs over per-key representatives (rep = min mention_id,
     * computed by a map-side-combined aggregation — output is O(distinct
     * keys), never O(mentions)). */
-  private def lshFromMentions(mentions: DataFrame, features: Seq[String], cfg: Config): DataFrame = {
+  private def lshFromMentions(mentions: DataFrame, cfg: Config): DataFrame = {
     val keyReps = mentions
       .filter(col("blocking_key") =!= "" && size(col("tokens")) > 0)
       .groupBy("blocking_key")
       .agg(min("mention_id").as("mention_id"),
-        (min_by(col("tokens"), col("mention_id")).as("tokens") +:
-          features.map(f => min_by(col(f), col("mention_id")).as(f))): _*)
+        min_by(col("tokens"), col("mention_id")).as("tokens"),
+        min_by(col("mention"), col("mention_id")).as("mention"))
     val banded = keyReps
-      .select((Seq(col("mention_id"), col("blocking_key")) ++ features.map(col) :+
-        explode(minhashUdf(col("tokens"), lit(cfg.minhashFunctions), lit(cfg.lshBands))).as("band")): _*)
+      .select(col("mention_id"), col("blocking_key"), col("mention"),
+        explode(minhashUdf(col("tokens"), lit(cfg.minhashFunctions), lit(cfg.lshBands))).as("band"))
       .withColumn("bucket_key", col("band").cast("string"))
-      .select((Seq("bucket_key", "mention_id", "blocking_key") ++ features).map(col): _*)
+      .select(("bucket_key" +: memberCols).map(col): _*)
     // ALWAYS the streaming self-join here: LSH buckets run up to
     // maxBucketSize (default 1000) members, and the fused explosion would
     // materialize C(1000,2) feature-carrying structs as ONE array value
     // (hundreds of MB against the 2 GB row limit); the join streams the
     // same pairs in O(n) memory. The fused form stays for salted buckets,
     // whose size the adaptive salt bounds near targetBucketSize.
-    pairsInBucketsJoin(banded, features, cfg.maxBucketSize, dropOversized = true)
+    pairsInBucketsJoin(banded, cfg.maxBucketSize, dropOversized = true)
       // same key pair recurs across bands; rep set is small
       .dropDuplicates("src", "dst")
   }
 
   /** Blocking-key pairs with (adaptively) salted buckets + representative
-    * star. Input columns: mention_id, blocking_key, mention [, vec]. */
-  def blockingKeyPairs(mentions: DataFrame, cfg: Config): DataFrame = {
-    val features = featureCols(mentions)
-    saltedPairs(annotate(mentions, cfg), features, cfg)
-  }
+    * star. Input columns: mention_id, blocking_key, mention. */
+  def blockingKeyPairs(mentions: DataFrame, cfg: Config): DataFrame =
+    saltedPairs(annotated(mentions, cfg), cfg)
 
   /** MinHash-LSH pairs over *distinct* canonical token sets (one
     * representative mention per blocking key).
-    * Input columns: mention_id, blocking_key, tokens, mention [, vec]. */
-  def lshPairs(mentions: DataFrame, cfg: Config = Config()): DataFrame = {
-    val features = featureCols(mentions)
-    lshFromMentions(mentions, features, cfg)
-  }
+    * Input columns: mention_id, blocking_key, tokens, mention. */
+  def lshPairs(mentions: DataFrame, cfg: Config = Config()): DataFrame =
+    lshFromMentions(mentions, cfg)
 
   /** Union of both generators, WITH scoring features on every pair; the
     * per-key annotation pass is shared so the mention table is exchanged on
     * blocking_key exactly once. Columns: src, dst, key_a, key_b, mention_a,
-    * mention_b [, vec_a, vec_b]. */
-  def candidatePairsWithFeatures(mentions: DataFrame, cfg: Config = Config()): DataFrame = {
-    val features = featureCols(mentions)
-    saltedPairs(annotate(mentions, cfg), features, cfg)
-      .unionByName(lshFromMentions(mentions, features, cfg))
-  }
+    * mention_b. */
+  def candidatePairsWithFeatures(mentions: DataFrame, cfg: Config = Config()): DataFrame =
+    saltedPairs(annotated(mentions, cfg), cfg)
+      .unionByName(lshFromMentions(mentions, cfg))
 
   /** Bare (src, dst) pair ids. */
   def candidatePairs(mentions: DataFrame, cfg: Config = Config()): DataFrame =
@@ -293,18 +266,18 @@ object PairGen {
 
   /** Salted bucket-member table for kernel-fused scoring
     * (`PairScorer.scoreBuckets`): one row per salted bucket with ≥ 2
-    * members, each member a struct of (mention_id, blocking_key,
-    * <features>). Pair enumeration happens inside the scoring kernel, so the
-    * quadratic pair stream is never materialized as a relational
-    * intermediate. */
+    * members, each member a struct of (mention_id, blocking_key, mention).
+    * Every bucket holds exactly one non-empty blocking key. Pair enumeration
+    * happens inside the scoring kernel, so the quadratic pair stream is never
+    * materialized as a relational intermediate. */
   def saltedBucketTable(mentions: DataFrame, cfg: Config = Config()): DataFrame =
-    saltedBucketTableFromAnnotated(annotate(mentions, cfg), featureCols(mentions))
+    saltedBucketTableFromAnnotated(annotated(mentions, cfg))
 
   /** [[saltedBucketTable]] over an already-annotated table — lets
     * `PairScorer.scoreCandidates` share one lineage of the key exchange +
     * count window between its two physical plans. */
-  def saltedBucketTableFromAnnotated(ann: DataFrame, features: Seq[String]): DataFrame = {
-    val member = struct((Seq("mention_id", "blocking_key") ++ features).map(col): _*)
+  def saltedBucketTableFromAnnotated(ann: DataFrame): DataFrame = {
+    val member = struct(memberCols.map(col): _*)
     // group on the COMPOSITE bucket key string, not (blocking_key, salt):
     // the latter would satisfy its distribution with the count window's
     // by-key partitioning and keep every bucket of a hot key in one task —
@@ -317,24 +290,12 @@ object PairGen {
       .select("ms")
   }
 
-  /** The annotated (salted) mention table — exposed so callers fusing both
-    * pair generators can share one lineage of it. */
-  def annotated(mentions: DataFrame, cfg: Config = Config()): DataFrame =
-    annotate(mentions, cfg)
-
   /** The sparse complement of the salted bucket table: representative
     * star pairs + MinHash-LSH rep pairs (both O(distinct keys), not
-    * O(mentions)), with scoring features attached. */
-  def sparsePairsWithFeatures(mentions: DataFrame, cfg: Config = Config()): DataFrame =
-    sparsePairsFromAnnotated(annotate(mentions, cfg), mentions, cfg)
-
-  /** [[sparsePairsWithFeatures]] with the rep-star side reading an
-    * already-annotated table (the LSH side aggregates the raw mentions —
-    * it needs `tokens`, which [[annotate]] deliberately projects away). */
+    * O(mentions)), with scoring features attached. The rep-star side reads
+    * an already-annotated table; the LSH side aggregates the raw mentions —
+    * it needs `tokens`, which [[annotated]] deliberately projects away. */
   def sparsePairsFromAnnotated(ann: DataFrame, mentions: DataFrame,
-      cfg: Config = Config()): DataFrame = {
-    val features = featureCols(mentions)
-    repStarPairs(ann, features)
-      .unionByName(lshFromMentions(mentions, features, cfg))
-  }
+      cfg: Config = Config()): DataFrame =
+    repStarPairs(ann).unionByName(lshFromMentions(mentions, cfg))
 }

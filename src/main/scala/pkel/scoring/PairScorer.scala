@@ -1,6 +1,6 @@
 package pkel.scoring
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,11 +10,9 @@ import org.apache.spark.sql.types._
   *
   * Input: candidate pairs already joined with both sides' features
   * (`key_a/key_b` canonical blocking-key strings, `mention_a/mention_b` raw
-  * surface strings, optionally `vec_a/vec_b` per-mention embeddings computed
-  * once upstream and carried through `PairGen`). When the vector columns are
-  * present the encoder never runs per pair — the scale path for
-  * high-cardinality surfaces where a per-partition memo would thrash; without
-  * them the kernel encodes from the raw mention behind a bounded memo.
+  * surface strings), or the salted bucket-member table for the fused bucket
+  * kernel. Embeddings come from `Embedder.encode` on the raw surface, behind
+  * a bounded per-partition memo.
   *
   * Combined score = wKey·indel(key_a,key_b)/100 + wJw·JW(mention_a,mention_b)
   * + wCos·cosine — the key term carries the reference's canonicalization
@@ -25,8 +23,7 @@ object PairScorer {
 
   /** Per-partition bound on every kernel memo (embeddings per surface, scores
     * per surface/combo pair). Above ~this many distinct surfaces the memos
-    * thrash and the kernel re-encodes per bucket occurrence — the crossover
-    * `Pipeline.VecAuto` keys its carry-vs-memo decision on. */
+    * stop growing and the kernel re-encodes per bucket occurrence. */
   val MemoCap = 200000
 
   final case class Weights(wKey: Double = 0.5, wJw: Double = 0.2, wCos: Double = 0.3)
@@ -81,68 +78,52 @@ object PairScorer {
   }
 
   /** Score a pair DataFrame with columns (src, dst, key_a, key_b, mention_a,
-    * mention_b [, vec_a, vec_b]). Appends (key_sim, jw_sim, cos_sim, score);
-    * the vector columns are consumed and dropped (pair rows downstream carry
-    * scores, not payloads). `minScore` enables the [[lengthBound]] prune:
-    * pairs that provably score below it never reach the kernel. */
+    * mention_b). Appends (key_sim, jw_sim, cos_sim, score). `minScore`
+    * enables the [[lengthBound]] prune: pairs that provably score below it
+    * never reach the kernel. */
   def scorePairs(pairs0: DataFrame, w: Weights = Weights(),
       embedder: Embedder = Embedder.default,
       minScore: Option[Double] = None): DataFrame = {
     val pairs = minScore.map(t => lengthPrune(pairs0, w, t)).getOrElse(pairs0)
-    val hasVecs = pairs.schema.fieldNames.contains("vec_a") &&
-      pairs.schema.fieldNames.contains("vec_b")
-    val keptFields = pairs.schema.fields.toSeq.filterNot(f =>
-      hasVecs && (f.name == "vec_a" || f.name == "vec_b"))
-    val outSchema = StructType(keptFields ++ Seq(
-      StructField("key_sim", DoubleType), StructField("jw_sim", DoubleType),
-      StructField("cos_sim", DoubleType), StructField("score", DoubleType)))
-    val keptIdx = keptFields.map(f => pairs.schema.fieldIndex(f.name)).toArray
+    val outSchema = StructType(pairs.schema.fields.toSeq ++ simFields)
     val iKeyA = pairs.schema.fieldIndex("key_a")
     val iKeyB = pairs.schema.fieldIndex("key_b")
     val iMenA = pairs.schema.fieldIndex("mention_a")
     val iMenB = pairs.schema.fieldIndex("mention_b")
-    val iVecA = if (hasVecs) pairs.schema.fieldIndex("vec_a") else -1
-    val iVecB = if (hasVecs) pairs.schema.fieldIndex("vec_b") else -1
     val encoder = org.apache.spark.sql.Encoders.row(outSchema)
     pairs.mapPartitions { rows =>
-      // Two per-partition memos: embeddings per surface, and the full score
-      // per (key_a,key_b,mention_a,mention_b) combo — transcript-scale data
+      // embeddings per surface, and the full score per
+      // (key_a,key_b,mention_a,mention_b) combo — transcript-scale data
       // repeats surface combinations massively, so most pairs are a hash
-      // lookup. Bounded to keep worst-case (all-unique) memory flat.
-      val embMemo = new java.util.HashMap[String, Array[Float]](1024)
-      val comboMemo = new java.util.HashMap[String, Array[Double]](4096)
-      val memoCap = MemoCap
-      def embed(s: String): Array[Float] = {
-        var v = embMemo.get(s)
-        if (v == null) {
-          v = embedder.encode(s)
-          if (embMemo.size < memoCap) embMemo.put(s, v)
-        }
-        v
-      }
-      def vecAt(r: Row, i: Int, fallback: String): Array[Float] =
-        if (i >= 0 && !r.isNullAt(i)) {
-          val seq = r.getSeq[Float](i)
-          val out = new Array[Float](seq.length)
-          var j = 0
-          while (j < out.length) { out(j) = seq(j); j += 1 }
-          out
-        } else embed(fallback)
+      // lookup
+      val embMemo = new CappedMemo[Array[Float]]
+      val comboMemo = new CappedMemo[Array[Double]]
+      def embed(s: String): Array[Float] = embMemo(s)(embedder.encode(s))
       rows.map { r =>
         def s(i: Int): String = if (r.isNullAt(i)) "" else r.getString(i)
         val keyA = s(iKeyA); val keyB = s(iKeyB)
         val menA = s(iMenA); val menB = s(iMenB)
-        val comboKey = keyA + "" + keyB + "" + menA + "" + menB
-        var v = comboMemo.get(comboKey)
-        if (v == null) {
-          val (keySim, jw, cos, combined) =
-            score(keyA, keyB, menA, menB, vecAt(r, iVecA, menA), vecAt(r, iVecB, menB), w)
-          v = Array(keySim, jw, cos, combined)
-          if (comboMemo.size < memoCap) comboMemo.put(comboKey, v)
+        val v = comboMemo(keyA + "\u0001" + keyB + "\u0001" + menA + "\u0001" + menB) {
+          val (keySim, jw, cos, combined) = score(keyA, keyB, menA, menB, embed(menA), embed(menB), w)
+          Array(keySim, jw, cos, combined)
         }
-        Row.fromSeq(keptIdx.map(r.get).toSeq ++ Seq(v(0), v(1), v(2), v(3)))
+        Row.fromSeq(r.toSeq ++ Seq(v(0), v(1), v(2), v(3)))
       }
     }(encoder)
+  }
+
+  /** Per-partition memo bounded at [[MemoCap]] entries: past the cap a miss
+    * computes without storing, so an all-unique partition keeps memory flat. */
+  private final class CappedMemo[V <: AnyRef] {
+    private val map = new java.util.HashMap[String, V](1024)
+    def apply(k: String)(compute: => V): V = {
+      var v = map.get(k)
+      if (v == null) {
+        v = compute
+        if (map.size < MemoCap) map.put(k, v)
+      }
+      v
+    }
   }
 
   private val simFields = Seq(
@@ -152,12 +133,7 @@ object PairScorer {
   private val leanSchema = StructType(Seq(
     StructField("src", LongType), StructField("dst", LongType)) ++ simFields)
 
-  private val wideSchema = StructType(Seq(
-    StructField("src", LongType), StructField("dst", LongType),
-    StructField("key_a", StringType), StructField("key_b", StringType),
-    StructField("mention_a", StringType), StructField("mention_b", StringType)) ++ simFields)
-
-  /** Kernel-fused scoring over a bucket-member table
+  /** Kernel-fused scoring over a salted bucket-member table
     * (`PairGen.saltedBucketTable`): pair enumeration AND scoring run in one
     * pass over the bucket rows, so the quadratic pair stream is never a
     * relational intermediate (no pair-row shuffle, member payloads decoded
@@ -165,55 +141,28 @@ object PairScorer {
     * descending mention_id, making output rows independent of collect_list
     * order (parallelism-invariant).
     *
-    * The lean path (default) runs at the InternalRow level and emits reused
-    * fixed-width UnsafeRows: zero per-pair allocation. The external-Row
-    * encoder path boxes ~6 values per pair, and at 10^9 pairs that
-    * allocation rate is what serializes wide fan-out (GC-bound at 4N
-    * threads). `carryFeatures` keeps the string-carrying Row path for
-    * debugging. */
-  def scoreBuckets(buckets: DataFrame, w: Weights = Weights(),
-      embedder: Embedder = Embedder.default, carryFeatures: Boolean = false): DataFrame =
-    if (carryFeatures) scoreBucketsRows(buckets, w, embedder)
-    else scoreBucketsInternal(buckets, w, embedder)
-
-  /** Member layout shared by both bucket kernels. */
-  private def memberLayout(buckets: DataFrame): (Int, StructType, Int, Int, Int, Int) = {
-    import org.apache.spark.sql.types.ArrayType
-    val msIdx = buckets.schema.fieldIndex("ms")
-    val memberSchema = buckets.schema(msIdx).dataType.asInstanceOf[ArrayType]
-      .elementType.asInstanceOf[StructType]
-    val iId = memberSchema.fieldIndex("mention_id")
-    val iKey = memberSchema.fieldIndex("blocking_key")
-    val iMen = memberSchema.fieldIndex("mention")
-    val iVec = if (memberSchema.fieldNames.contains("vec")) memberSchema.fieldIndex("vec") else -1
-    (msIdx, memberSchema, iId, iKey, iMen, iVec)
-  }
-
-  /** Zero-allocation-per-pair bucket kernel: InternalRow in, one reused
-    * UnsafeRow out. Salted buckets are single-key by construction, so
+    * Runs at the InternalRow level and emits one reused fixed-width
+    * UnsafeRow: zero per-pair allocation (an external-Row encoder boxes ~6
+    * values per pair, and at 10^9 pairs that allocation rate serializes wide
+    * fan-out). Every bucket must hold ONE non-empty blocking key — the
+    * salted table groups on `key#salt` after dropping empty keys — so
     * key_sim and the combined score are the constant 1.0 (identical
     * canonical keys are the reference's own equality predicate) and jw/cos
     * depend only on the SURFACE pair: distinct surfaces are interned per
     * bucket and a d x d sim matrix is scored once (with a cross-bucket
-    * memo); each emitted pair is index lookups + six fixed-width writes. */
-  private def scoreBucketsInternal(buckets: DataFrame, w: Weights,
-      embedder: Embedder): DataFrame = {
-    val (msIdx, memberSchema, iId, iKey, iMen, iVec) = memberLayout(buckets)
+    * memo); each emitted pair is index lookups + six fixed-width writes. A
+    * mixed-key or empty-key bucket fails the task. */
+  def scoreBuckets(buckets: DataFrame, embedder: Embedder = Embedder.default): DataFrame = {
+    val msIdx = buckets.schema.fieldIndex("ms")
+    val memberSchema = buckets.schema(msIdx).dataType.asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType]
     val nMemberFields = memberSchema.length
-    val spark = buckets.sparkSession
+    val iId = memberSchema.fieldIndex("mention_id")
+    val iKey = memberSchema.fieldIndex("blocking_key")
+    val iMen = memberSchema.fieldIndex("mention")
     val rdd = buckets.queryExecution.toRdd.mapPartitions { iter =>
-      val embMemo = new java.util.HashMap[String, Array[Float]](1024)
-      val surfPairMemo = new java.util.HashMap[String, Array[Double]](4096)
-      val comboMemo = new java.util.HashMap[String, Array[Double]](4096)
-      val memoCap = MemoCap
-      def embed(str: String): Array[Float] = {
-        var v = embMemo.get(str)
-        if (v == null) {
-          v = embedder.encode(str)
-          if (embMemo.size < memoCap) embMemo.put(str, v)
-        }
-        v
-      }
+      val embMemo = new CappedMemo[Array[Float]]
+      val surfPairMemo = new CappedMemo[Array[Double]]
       // one reused output row: 8-byte null bitset + 6 fixed-width fields.
       // Downstream operators consume or copy each UnsafeRow before the next
       // one is produced (standard codegen buffer-reuse contract).
@@ -225,68 +174,54 @@ object PairScorer {
         val arr = bucketRow.getArray(msIdx)
         val n = arr.numElements()
         val ids = new Array[Long](n)
-        val keys = new Array[String](n)
         val mens = new Array[String](n)
-        val vecs = new Array[Array[Float]](n)
+        var key: org.apache.spark.unsafe.types.UTF8String = null
         var k = 0
         while (k < n) {
           val m = arr.getStruct(k, nMemberFields)
+          val mk = if (m.isNullAt(iKey)) null else m.getUTF8String(iKey)
+          require(mk != null && mk.numBytes > 0 && (key == null || key == mk),
+            s"bucket kernel needs one non-empty blocking key per bucket, got '$key' and '$mk'")
+          key = mk
           ids(k) = m.getLong(iId)
-          keys(k) = if (m.isNullAt(iKey)) "" else m.getUTF8String(iKey).toString
           mens(k) = if (m.isNullAt(iMen)) "" else m.getUTF8String(iMen).toString
-          vecs(k) =
-            if (iVec >= 0 && !m.isNullAt(iVec)) m.getArray(iVec).toFloatArray
-            else null
           k += 1
         }
         // sort member indices by descending id so pair (i,j), i<j is (src,dst)
         val order = Array.range(0, n).sortBy(t => -ids(t))
-        var sameKey = true
-        k = 1
-        while (k < n) { if (keys(order(k)) != keys(order(0))) sameKey = false; k += 1 }
-        val singleKey = sameKey && n > 0 && keys(order(0)).nonEmpty
 
         val surfOf = new Array[Int](n)
-        var jwM: Array[Array[Double]] = null
-        var cosM: Array[Array[Double]] = null
-        if (singleKey) {
-          val surfMap = new java.util.HashMap[String, Integer](16)
-          val surfs = new scala.collection.mutable.ArrayBuffer[String](8)
-          val surfVecs = new scala.collection.mutable.ArrayBuffer[Array[Float]](8)
-          var t = 0
-          while (t < n) {
-            val mt = order(t)
-            var si = surfMap.get(mens(mt))
-            if (si == null) {
-              si = Integer.valueOf(surfs.length)
-              surfMap.put(mens(mt), si)
-              surfs += mens(mt)
-              surfVecs += (if (vecs(mt) != null) vecs(mt) else embed(mens(mt)))
-            }
-            surfOf(t) = si.intValue()
-            t += 1
+        val surfMap = new java.util.HashMap[String, Integer](16)
+        val surfs = new scala.collection.mutable.ArrayBuffer[String](8)
+        val surfVecs = new scala.collection.mutable.ArrayBuffer[Array[Float]](8)
+        var t = 0
+        while (t < n) {
+          val mt = order(t)
+          var si = surfMap.get(mens(mt))
+          if (si == null) {
+            si = Integer.valueOf(surfs.length)
+            surfMap.put(mens(mt), si)
+            surfs += mens(mt)
+            surfVecs += embMemo(mens(mt))(embedder.encode(mens(mt)))
           }
-          val d = surfs.length
-          jwM = Array.ofDim[Double](d, d)
-          cosM = Array.ofDim[Double](d, d)
-          var x = 0
-          while (x < d) {
-            var y = x
-            while (y < d) {
-              val ck = surfs(x) + "\u0001" + surfs(y)
-              var v = surfPairMemo.get(ck)
-              if (v == null) {
-                v = Array(
-                  Similarity.jaroWinkler(surfs(x).toLowerCase, surfs(y).toLowerCase),
-                  Similarity.dot(surfVecs(x), surfVecs(y)))
-                if (surfPairMemo.size < memoCap) surfPairMemo.put(ck, v)
-              }
-              jwM(x)(y) = v(0); jwM(y)(x) = v(0)
-              cosM(x)(y) = v(1); cosM(y)(x) = v(1)
-              y += 1
-            }
-            x += 1
+          surfOf(t) = si.intValue()
+          t += 1
+        }
+        val d = surfs.length
+        val jwM = Array.ofDim[Double](d, d)
+        val cosM = Array.ofDim[Double](d, d)
+        var x = 0
+        while (x < d) {
+          var y = x
+          while (y < d) {
+            val v = surfPairMemo(surfs(x) + "\u0001" + surfs(y))(Array(
+              Similarity.jaroWinkler(surfs(x).toLowerCase, surfs(y).toLowerCase),
+              Similarity.dot(surfVecs(x), surfVecs(y))))
+            jwM(x)(y) = v(0); jwM(y)(x) = v(0)
+            cosM(x)(y) = v(1); cosM(y)(x) = v(1)
+            y += 1
           }
+          x += 1
         }
 
         new scala.collection.AbstractIterator[org.apache.spark.sql.catalyst.InternalRow] {
@@ -301,269 +236,22 @@ object PairScorer {
           skipSelfPairs()
           override def hasNext: Boolean = i < n - 1 && j < n
           override def next(): org.apache.spark.sql.catalyst.InternalRow = {
-            val ii = order(i); val jj = order(j)
             val pi = i; val pj = j
             j += 1
             if (j >= n) { i += 1; j = i + 1 }
-            out.setLong(0, ids(ii))
-            out.setLong(1, ids(jj))
-            if (singleKey) {
-              out.setDouble(2, 1.0)
-              out.setDouble(3, jwM(surfOf(pi))(surfOf(pj)))
-              out.setDouble(4, cosM(surfOf(pi))(surfOf(pj)))
-              out.setDouble(5, 1.0)
-            } else {
-              val ck = keys(ii) + "\u0001" + keys(jj) + "\u0001" + mens(ii) + "\u0001" + mens(jj)
-              var v = comboMemo.get(ck)
-              if (v == null) {
-                val (keySim, jw, cos, combined) = score(keys(ii), keys(jj), mens(ii), mens(jj),
-                  if (vecs(ii) != null) vecs(ii) else embed(mens(ii)),
-                  if (vecs(jj) != null) vecs(jj) else embed(mens(jj)), w)
-                v = Array(keySim, jw, cos, combined)
-                if (comboMemo.size < memoCap) comboMemo.put(ck, v)
-              }
-              out.setDouble(2, v(0))
-              out.setDouble(3, v(1))
-              out.setDouble(4, v(2))
-              out.setDouble(5, v(3))
-            }
+            out.setLong(0, ids(order(pi)))
+            out.setLong(1, ids(order(pj)))
+            out.setDouble(2, 1.0)
+            out.setDouble(3, jwM(surfOf(pi))(surfOf(pj)))
+            out.setDouble(4, cosM(surfOf(pi))(surfOf(pj)))
+            out.setDouble(5, 1.0)
             skipSelfPairs()
             out
           }
         }
       }
     }
-    org.apache.spark.sql.pkelbridge.Bridge.internalDf(spark, rdd, leanSchema)
-  }
-
-  /** External-Row bucket kernel variant that carries the feature strings
-    * (debug/inspection shape — boxes per pair, do not use at full scale). */
-  private def scoreBucketsRows(buckets: DataFrame, w: Weights,
-      embedder: Embedder): DataFrame = {
-    val (msIdx, memberSchema, iId, iKey, iMen, iVec) = memberLayout(buckets)
-    val encoder = org.apache.spark.sql.Encoders.row(wideSchema)
-    buckets.mapPartitions { rows =>
-      val embMemo = new java.util.HashMap[String, Array[Float]](1024)
-      val comboMemo = new java.util.HashMap[String, Array[Double]](4096)
-      val memoCap = MemoCap
-      def embed(str: String): Array[Float] = {
-        var v = embMemo.get(str)
-        if (v == null) {
-          v = embedder.encode(str)
-          if (embMemo.size < memoCap) embMemo.put(str, v)
-        }
-        v
-      }
-      rows.flatMap { r =>
-        val ms = r.getSeq[Row](msIdx)
-        val sorted = ms.toArray.sortBy(m => -m.getLong(iId))
-        val n = sorted.length
-        val ids = sorted.map(_.getLong(iId))
-        val keys = sorted.map(m => if (m.isNullAt(iKey)) "" else m.getString(iKey))
-        val mens = sorted.map(m => if (m.isNullAt(iMen)) "" else m.getString(iMen))
-        val vecs: Array[Array[Float]] = sorted.map { m =>
-          if (iVec >= 0 && !m.isNullAt(iVec)) m.getSeq[Float](iVec).toArray else null
-        }
-        (0 until n).iterator.flatMap { i =>
-          (i + 1 until n).iterator.filter(j => ids(i) != ids(j)).map { j =>
-            val ck = keys(i) + "\u0001" + keys(j) + "\u0001" + mens(i) + "\u0001" + mens(j)
-            var v = comboMemo.get(ck)
-            if (v == null) {
-              val (keySim, jw, cos, combined) = score(keys(i), keys(j), mens(i), mens(j),
-                if (vecs(i) != null) vecs(i) else embed(mens(i)),
-                if (vecs(j) != null) vecs(j) else embed(mens(j)), w)
-              v = Array(keySim, jw, cos, combined)
-              if (comboMemo.size < memoCap) comboMemo.put(ck, v)
-            }
-            Row(ids(i), ids(j), keys(i), keys(j), mens(i), mens(j), v(0), v(1), v(2), v(3))
-          }
-        }
-      }
-    }(encoder)
-  }
-
-  /** ONE-exchange salted pair kernel: hash-repartition the keyed mentions by
-    * blocking_key (plain exchange — no sort, no aggregation buffers), then a
-    * per-partition pass groups rows by key, assigns adaptive salt buckets,
-    * and emits the intra-bucket pairs AND the cross-bucket representative
-    * star directly as reused fixed-width UnsafeRows. Compared to the
-    * window + collect_list formulation this removes the per-key sort and the
-    * aggregation shuffle — the kernel sees each mention exactly once.
-    * Salt assignment replicates the relational path bit-for-bit
-    * (pmod(xxhash64(mention_id), ceil(n/target)), uncapped by default), so the emitted
-    * pair set is identical (parity-tested). Skew note: a partition holds all
-    * rows of its keys — the same residency the window formulation already
-    * required; per-bucket pair cost stays O(n·target) via the salt split. */
-  def scoreMentions(mentions: DataFrame,
-      cfg: pkel.blocking.PairGen.Config = pkel.blocking.PairGen.Config(),
-      w: Weights = Weights(), embedder: Embedder = Embedder.default): DataFrame = {
-    val keyed = mentions.filter(org.apache.spark.sql.functions.col("blocking_key") =!= "")
-    val parts = keyed.repartition(org.apache.spark.sql.functions.col("blocking_key"))
-    val schema = parts.schema
-    val iId = schema.fieldIndex("mention_id")
-    val iKey = schema.fieldIndex("blocking_key")
-    val iMen = schema.fieldIndex("mention")
-    val iVec = if (schema.fieldNames.contains("vec")) schema.fieldIndex("vec") else -1
-    val adaptive = cfg.adaptiveSalt
-    val target = cfg.targetBucketSize
-    val maxSalt = cfg.maxSaltFactor.toLong
-    val fixedSalt = cfg.saltBuckets
-    val spark = parts.sparkSession
-    val rdd = parts.queryExecution.toRdd.mapPartitions { iter =>
-      final class Member(val id: Long, val men: String, val vec: Array[Float])
-      val groups = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[Member]]()
-      while (iter.hasNext) {
-        val r = iter.next()
-        if (!r.isNullAt(iKey) && !r.isNullAt(iId)) {
-          val key = r.getUTF8String(iKey).toString
-          val men = if (r.isNullAt(iMen)) "" else r.getUTF8String(iMen).toString
-          val vec = if (iVec >= 0 && !r.isNullAt(iVec)) r.getArray(iVec).toFloatArray else null
-          var g = groups.get(key)
-          if (g == null) {
-            g = new scala.collection.mutable.ArrayBuffer[Member](4)
-            groups.put(key, g)
-          }
-          g += new Member(r.getLong(iId), men, vec)
-        }
-      }
-      val embMemo = new java.util.HashMap[String, Array[Float]](1024)
-      val surfPairMemo = new java.util.HashMap[String, Array[Double]](4096)
-      val memoCap = MemoCap
-      def embed(str: String): Array[Float] = {
-        var v = embMemo.get(str)
-        if (v == null) {
-          v = embedder.encode(str)
-          if (embMemo.size < memoCap) embMemo.put(str, v)
-        }
-        v
-      }
-      val outBuf = new Array[Byte](8 + 6 * 8)
-      val out = new org.apache.spark.sql.catalyst.expressions.UnsafeRow(6)
-      out.pointTo(outBuf, outBuf.length)
-      def emit(srcId: Long, dstId: Long, jw: Double, cos: Double): org.apache.spark.sql.catalyst.InternalRow = {
-        out.setLong(0, srcId)
-        out.setLong(1, dstId)
-        out.setDouble(2, 1.0) // identical canonical keys: key_sim = 1
-        out.setDouble(3, jw)
-        out.setDouble(4, cos)
-        out.setDouble(5, 1.0) // identical canonical keys: combined = 1
-        out
-      }
-
-      import scala.jdk.CollectionConverters._
-      groups.entrySet().iterator().asScala.flatMap { e =>
-        val members = e.getValue
-        val n = members.length
-        if (n < 1) Iterator.empty
-        else {
-          // intern surfaces, score the distinct-surface matrix once per key
-          val surfMap = new java.util.HashMap[String, Integer](16)
-          val surfs = new scala.collection.mutable.ArrayBuffer[String](8)
-          val surfVecs = new scala.collection.mutable.ArrayBuffer[Array[Float]](8)
-          val surfOf = new Array[Int](n)
-          var t = 0
-          while (t < n) {
-            val m = members(t)
-            var si = surfMap.get(m.men)
-            if (si == null) {
-              si = Integer.valueOf(surfs.length)
-              surfMap.put(m.men, si)
-              surfs += m.men
-              surfVecs += (if (m.vec != null) m.vec else embed(m.men))
-            }
-            surfOf(t) = si.intValue()
-            t += 1
-          }
-          val d = surfs.length
-          val jwM = Array.ofDim[Double](d, d)
-          val cosM = Array.ofDim[Double](d, d)
-          var x = 0
-          while (x < d) {
-            var y = x
-            while (y < d) {
-              val ck = surfs(x) + "\u0001" + surfs(y)
-              var v = surfPairMemo.get(ck)
-              if (v == null) {
-                v = Array(
-                  Similarity.jaroWinkler(surfs(x).toLowerCase, surfs(y).toLowerCase),
-                  Similarity.dot(surfVecs(x), surfVecs(y)))
-                if (surfPairMemo.size < memoCap) surfPairMemo.put(ck, v)
-              }
-              jwM(x)(y) = v(0); jwM(y)(x) = v(0)
-              cosM(x)(y) = v(1); cosM(y)(x) = v(1)
-              y += 1
-            }
-            x += 1
-          }
-          // salt assignment — bit-identical to pmod(xxhash64(mention_id), salt_n)
-          val saltN: Long =
-            if (adaptive) math.min(math.max(math.ceil(n.toDouble / target).toLong, 1L), maxSalt)
-            else fixedSalt.toLong
-          val bySalt = new java.util.TreeMap[Long, scala.collection.mutable.ArrayBuffer[Int]]()
-          t = 0
-          while (t < n) {
-            val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(members(t).id, 42L)
-            val salt = ((h % saltN) + saltN) % saltN
-            var b = bySalt.get(salt)
-            if (b == null) {
-              b = new scala.collection.mutable.ArrayBuffer[Int](target)
-              bySalt.put(salt, b)
-            }
-            b += t
-            t += 1
-          }
-          // per bucket: sort desc by id, emit i<j pairs via matrix lookups
-          val buckets = bySalt.values().iterator().asScala.toArray
-          val intra = buckets.iterator.flatMap { b =>
-            val idx = b.toArray.sortBy(q => -members(q).id)
-            val m2 = idx.length
-            new scala.collection.AbstractIterator[org.apache.spark.sql.catalyst.InternalRow] {
-              private var i = 0
-              private var j = 1
-              private def skipSelf(): Unit = {
-                while (i < m2 - 1 && j < m2 && members(idx(i)).id == members(idx(j)).id) {
-                  j += 1
-                  if (j >= m2) { i += 1; j = i + 1 }
-                }
-              }
-              skipSelf()
-              override def hasNext: Boolean = i < m2 - 1 && j < m2
-              override def next(): org.apache.spark.sql.catalyst.InternalRow = {
-                val a = idx(i); val c = idx(j)
-                j += 1
-                if (j >= m2) { i += 1; j = i + 1 }
-                skipSelf()
-                emit(members(a).id, members(c).id, jwM(surfOf(a))(surfOf(c)), cosM(surfOf(a))(surfOf(c)))
-              }
-            }
-          }
-          // representative STAR across the key's salt buckets — every
-          // bucket rep (min id) pairs with the key's anchor rep (global min
-          // id). Mirrors PairGen.repStarPairs: same pair count as the former
-          // salt-ascending lag-chain but CC-contractible in O(1) rounds
-          // (a chain of salt_n reps needs O(log salt_n) star iterations).
-          val bucketReps = buckets.map { b =>
-            var rep = b(0)
-            var q = 1
-            while (q < b.length) { if (members(b(q)).id < members(rep).id) rep = b(q); q += 1 }
-            rep
-          }
-          var anchor = bucketReps(0)
-          var r = 1
-          while (r < bucketReps.length) {
-            if (members(bucketReps(r)).id < members(anchor).id) anchor = bucketReps(r)
-            r += 1
-          }
-          val star = bucketReps.iterator.flatMap { rep =>
-            if (members(rep).id == members(anchor).id) Iterator.empty
-            else Iterator.single(emit(members(rep).id, members(anchor).id,
-              jwM(surfOf(rep))(surfOf(anchor)), cosM(surfOf(rep))(surfOf(anchor))))
-          }
-          intra ++ star
-        }
-      }
-    }
-    org.apache.spark.sql.pkelbridge.Bridge.internalDf(spark, rdd, leanSchema)
+    org.apache.spark.sql.pkelbridge.Bridge.internalDf(buckets.sparkSession, rdd, leanSchema)
   }
 
   /** Full fused candidate scoring: salted buckets through the bucket kernel,
@@ -573,44 +261,29 @@ object PairScorer {
   def scoreCandidates(mentions: DataFrame,
       cfg: pkel.blocking.PairGen.Config = pkel.blocking.PairGen.Config(),
       w: Weights = Weights(), embedder: Embedder = Embedder.default,
-      carryFeatures: Boolean = false,
-      minScore: Option[Double] = None): DataFrame =
+      minScore: Option[Double] = None): DataFrame = {
     // `minScore` (the length-bound prune) applies to the SPARSE relational
     // path only: salted-bucket and rep-star pairs share one blocking key
     // (bound = 1.0, never prunable), so only the cross-key MinHash-LSH pairs
     // can fall below the bound — and those are exactly the pairs that pay
     // the full JW + cosine kernel on distinct surfaces.
-    if (carryFeatures) {
-      // debug shape: bucket-table kernel with feature strings + relational sparse
-      scoreBuckets(pkel.blocking.PairGen.saltedBucketTable(mentions, cfg),
-        w, embedder, carryFeatures = true)
-        .unionByName(scorePairs(
-          pkel.blocking.PairGen.sparsePairsWithFeatures(mentions, cfg), w, embedder, minScore))
-    } else {
-      // scale shape: bucket-balanced zero-alloc kernel over the salted bucket
-      // table (hot keys spread across tasks) + relational rep-star/LSH sparse
-      // pairs. `scoreMentions` (one-exchange, by-key partitioning) exists as
-      // an alternative for low-parallelism / low-skew runs.
-      //
-      // The bucket kernel runs at the InternalRow level (toRdd), so its plan
-      // and the sparse plan are separate query executions that cannot share
-      // exchanges — both used to re-run the scan + key exchange + count
-      // window (two identical ~90 MB exchange writes per probe rep, one full
-      // extra pass over the mention table at any scale). The annotated
-      // lineage is therefore shared via Bridge.shareLineage: one scan + one
-      // key-exchange map stage feeds both plans through the same shuffle
-      // files, the LogicalRDD keeps the by-key partitioning (so the rep-star
-      // window still adds no exchange), and NOTHING is persisted — every
-      // invocation builds a fresh lineage and recomputes from the inputs.
-      val features = Seq("mention") ++
-        (if (mentions.columns.contains("vec")) Seq("vec") else Nil)
-      val ann = org.apache.spark.sql.pkelbridge.Bridge.shareLineage(
-        pkel.blocking.PairGen.annotated(mentions, cfg))
-      val sparse = scorePairs(
-        pkel.blocking.PairGen.sparsePairsFromAnnotated(ann, mentions, cfg), w, embedder, minScore)
-        .select("src", "dst", "key_sim", "jw_sim", "cos_sim", "score")
-      scoreBucketsInternal(
-        pkel.blocking.PairGen.saltedBucketTableFromAnnotated(ann, features), w, embedder)
-        .unionByName(sparse)
-    }
+    //
+    // The bucket kernel runs at the InternalRow level (toRdd), so its plan
+    // and the sparse plan are separate query executions that cannot share
+    // exchanges — both used to re-run the scan + key exchange + count
+    // window (two identical ~90 MB exchange writes per probe rep, one full
+    // extra pass over the mention table at any scale). The annotated
+    // lineage is therefore shared via Bridge.shareLineage: one scan + one
+    // key-exchange map stage feeds both plans through the same shuffle
+    // files, the LogicalRDD keeps the by-key partitioning (so the rep-star
+    // window still adds no exchange), and NOTHING is persisted — every
+    // invocation builds a fresh lineage and recomputes from the inputs.
+    val ann = org.apache.spark.sql.pkelbridge.Bridge.shareLineage(
+      pkel.blocking.PairGen.annotated(mentions, cfg))
+    val sparse = scorePairs(
+      pkel.blocking.PairGen.sparsePairsFromAnnotated(ann, mentions, cfg), w, embedder, minScore)
+      .select("src", "dst", "key_sim", "jw_sim", "cos_sim", "score")
+    scoreBuckets(pkel.blocking.PairGen.saltedBucketTableFromAnnotated(ann), embedder)
+      .unionByName(sparse)
+  }
 }

@@ -16,20 +16,19 @@ package pkel.text
   * Bounded so a worst-case all-unique corpus keeps memory flat and degrades
   * to the unmemoized cost (same discipline as PairScorer.MemoCap).
   *
+  * Every table is keyed by an explicit id ([[Memo.named]]): one id is one
+  * registry entry for the life of the JVM, so the registry holds exactly
+  * the kernels the code names, and two memos built from one id share a
+  * table by design.
+  *
   * [[Memo.clearAll]] drops every table — the bench calls it via
   * `Queries.releaseCaches` between its warm-up pass and the timed battery so
   * warm-up can never pre-fill kernel results for the timed runs.
   */
-final class Memo[T](f: String => T, cap: Int = Memo.DefaultCap,
-    id: String = null) extends (String => T) with Serializable {
-  // Unnamed memos get a UNIQUE id per construction (assigned driver-side,
-  // serialized with the closure): keying by lambda class name alone would
-  // silently SHARE a table between two instances built at the same call
-  // site with different captured state — each other's cached results.
-  private val tableId =
-    if (id != null) id
-    else f.getClass.getName + "#" + Memo.instanceSeq.incrementAndGet()
-  @transient private lazy val table = Memo.tableFor(tableId)
+final class Memo[T](id: String, f: String => T, cap: Int = Memo.DefaultCap)
+    extends (String => T) with Serializable {
+  require(id != null, "a memo table needs an id")
+  @transient private lazy val table = Memo.tableFor(id)
   def apply(s: String): T = {
     if (s == null) return f(null) // CHM rejects null keys; old memo tolerated null inputs
     val memo = table.map
@@ -63,8 +62,6 @@ object Memo {
 
   private val tables = new java.util.concurrent.ConcurrentHashMap[String, Table]()
 
-  private val instanceSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
   private def tableFor(id: String): Table =
     tables.computeIfAbsent(id, _ => new Table)
 
@@ -76,9 +73,6 @@ object Memo {
     * invisible to a later clear). */
   def clearAll(): Unit = tables.values.forEach { t => t.map.clear(); t.n.set(0) }
 
-  def apply[T](f: String => T, cap: Int = DefaultCap): String => T = new Memo(f, cap)
-
-  /** Named variant: a stable id keyed table (anonymous-class names are stable
-    * within a JVM too, but an explicit id documents intent). */
-  def named[T](id: String)(f: String => T): String => T = new Memo(f, DefaultCap, id)
+  /** A memo over the table `id`. */
+  def named[T](id: String)(f: String => T): String => T = new Memo(id, f)
 }

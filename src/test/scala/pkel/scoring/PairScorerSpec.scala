@@ -6,7 +6,7 @@ import pkel.blocking.PairGen
 
 /** Pins the kernel-fused bucket scoring path (`scoreCandidates`) to the
   * relational reference path (`scorePairs` over exploded candidate pairs),
-  * and the precomputed-vec seam to the in-kernel encoder. */
+  * and the bucket kernel to its one-key-per-bucket contract. */
 class PairScorerSpec extends SparkSpec {
 
   import spark.implicits._
@@ -24,6 +24,9 @@ class PairScorerSpec extends SparkSpec {
       (i, key, s"surface ${key.toUpperCase} $i")
     })
 
+  // every surface distinct: the kernel's per-partition memos never hit
+  private val unique = keyedDf((1L to 120L).map(i => (i, "cl", s"unique-surface-$i")))
+
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
     df.select(col("src"), col("dst"), (col("score") * 1e6).cast("long").as("score_q"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -31,24 +34,14 @@ class PairScorerSpec extends SparkSpec {
 
   test("scoreCandidates == scorePairs over candidatePairsWithFeatures (pair set + scores)") {
     val cfg = PairGen.Config(adaptiveSalt = true, targetBucketSize = 16)
-    val viaKernel = rowsOf(PairScorer.scoreCandidates(corpus, cfg))
+    val scored = PairScorer.scoreCandidates(corpus, cfg)
+    assert(scored.columns.toSeq == Seq("src", "dst", "key_sim", "jw_sim", "cos_sim", "score"),
+      "lean output must carry ids and scores only")
+    val viaKernel = rowsOf(scored)
     val viaRows = rowsOf(PairScorer.scorePairs(PairGen.candidatePairsWithFeatures(corpus, cfg)))
     assert(viaKernel == viaRows,
       s"kernel-only: ${(viaKernel -- viaRows).take(5)}; rows-only: ${(viaRows -- viaKernel).take(5)}")
-  }
-
-  test("precomputed vec columns produce identical scores to in-kernel encoding") {
-    val embedUdf = udf((s: String) => Embedder.default.encode(Option(s).getOrElse("")))
-    val withVec = corpus.withColumn("vec", embedUdf(col("mention")))
-    val cfg = PairGen.Config(adaptiveSalt = true, targetBucketSize = 16)
-    assert(rowsOf(PairScorer.scoreCandidates(withVec, cfg)) ==
-      rowsOf(PairScorer.scoreCandidates(corpus, cfg)))
-    // and the vec columns are consumed, not leaked into the output
-    val out = PairScorer.scoreCandidates(withVec, cfg, carryFeatures = true)
-    assert(!out.columns.contains("vec_a") && !out.columns.contains("vec_b"))
-    assert(out.columns.contains("mention_a"), "carryFeatures must keep feature columns")
-    assert(!PairScorer.scoreCandidates(withVec, cfg).columns.contains("mention_a"),
-      "lean output must drop feature columns")
+    assert(viaKernel.nonEmpty)
   }
 
   test("scoreCandidates rows are invariant to shuffle-partition count") {
@@ -64,39 +57,38 @@ class PairScorerSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
-  private def fullRowsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Long, Long, Long)] =
-    df.select(col("src"), col("dst"),
-      (col("key_sim") * 1e6).cast("long"), (col("jw_sim") * 1e6).cast("long"),
-      (col("cos_sim") * 1e6).cast("long"), (col("score") * 1e6).cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5))).toSet
-
-  test("scoreMentions (one-exchange kernel) == scorePairs over blockingKeyPairs") {
-    // the one-exchange kernel replicates the relational salted path by hand
-    // (XXH64 pmod salt assignment, TreeMap salt order, min-id reps) — this is
-    // the parity pin its docstring promises, over BOTH salt modes
-    for (cfg <- Seq(
-        PairGen.Config(adaptiveSalt = true, targetBucketSize = 16),
-        PairGen.Config(adaptiveSalt = false, saltBuckets = 4))) {
-      val viaKernel = fullRowsOf(PairScorer.scoreMentions(corpus, cfg))
-      val viaRows = fullRowsOf(PairScorer.scorePairs(PairGen.blockingKeyPairs(corpus, cfg)))
-      assert(viaKernel == viaRows,
-        s"cfg=$cfg kernel-only: ${(viaKernel -- viaRows).take(5)}; " +
-          s"rows-only: ${(viaRows -- viaKernel).take(5)}")
-      assert(viaKernel.nonEmpty)
-    }
+  test("unique-surface corpus (memo-miss regime): vec path scores each mention once") {
+    // every surface distinct -> the embedding and surface-pair memos never
+    // hit; the kernel must still match the relational path and emit each
+    // unordered mention pair exactly once
+    val cfg = PairGen.Config(adaptiveSalt = false, saltBuckets = 2)
+    val scored = PairScorer.scoreCandidates(unique, cfg)
+      .select(col("src"), col("dst"), (col("score") * 1e6).cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val viaRows = rowsOf(PairScorer.scorePairs(PairGen.candidatePairsWithFeatures(unique, cfg)))
+    assert(scored.toSet == viaRows,
+      s"kernel-only: ${(scored.toSet -- viaRows).take(5)}; rows-only: ${(viaRows -- scored.toSet).take(5)}")
+    val pairs = scored.map { case (a, b, _) => (math.min(a, b), math.max(a, b)) }
+    assert(pairs.distinct.size == pairs.size, "a mention pair was scored more than once")
+    assert(pairs.forall { case (a, b) => a != b }, "self pair emitted")
+    assert(pairs.flatMap { case (a, b) => Seq(a, b) }.toSet == (1L to 120L).toSet,
+      "every mention must be scored")
   }
 
-  test("unique-surface corpus (memo-miss regime): vec path scores each mention once") {
-    // every surface distinct → the per-pair memo never hits; correctness must
-    // hold on both paths regardless
-    val unique = keyedDf((1L to 120L).map(i => (i, "cl", s"unique-surface-$i")))
-    val embedUdf = udf((s: String) => Embedder.default.encode(Option(s).getOrElse("")))
-    val cfg = PairGen.Config(adaptiveSalt = false, saltBuckets = 2)
-    val memo = rowsOf(PairScorer.scoreCandidates(unique, cfg))
-    val vec = rowsOf(PairScorer.scoreCandidates(
-      unique.withColumn("vec", embedUdf(col("mention"))), cfg))
-    assert(memo == vec)
-    assert(memo.nonEmpty)
+  test("bucket kernel fails the task on a mixed-key or empty-key bucket") {
+    def bucket(members: (Long, String, String)*) =
+      members.toDF("mention_id", "blocking_key", "mention")
+        .agg(collect_list(struct(col("mention_id"), col("blocking_key"), col("mention"))).as("ms"))
+    def rejects(members: (Long, String, String)*): Boolean = {
+      val e = intercept[org.apache.spark.SparkException](
+        PairScorer.scoreBuckets(bucket(members: _*)).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("one non-empty blocking key")))
+    }
+    assert(PairScorer.scoreBuckets(bucket((3L, "cl", "x"), (1L, "cl", "y"), (2L, "cl", "x")))
+      .count() == 3)
+    assert(rejects((1L, "cl", "x"), (2L, "auc inf", "y")), "mixed-key bucket must fail")
+    assert(rejects((1L, "", "x"), (2L, "", "y")), "empty-key bucket must fail")
+    assert(rejects((1L, "cl", "x"), (2L, null, "y")), "null-key member must fail")
   }
 }
