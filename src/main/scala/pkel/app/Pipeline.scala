@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import pkel.blocking.{PairDropMetrics, PairGen}
 import pkel.cluster.ConnectedComponents
 import pkel.eval.Metrics
-import pkel.io.TableIO
+import pkel.io.SnapshotFooters
 import pkel.link.{Cascade, ExactLinker}
 import pkel.model.OntologyEntry
 import pkel.ontology.Ontology
@@ -28,8 +28,8 @@ import pkel.scoring.PairScorer
   * CC roots read off the entity directly — the mention→ontology tier and the
   * pair-similarity graph compose in one transitive closure.
   *
-  * Every stage commits a parquet snapshot + per-partition metrics via
-  * `TableIO`; a re-run with the same fingerprint resumes from the last
+  * Every stage commits a parquet snapshot + per-write-task lineage rows via
+  * a `StageStore`; a re-run with the same fingerprint resumes from the last
   * committed stage.
   */
 object Pipeline {
@@ -150,11 +150,10 @@ object Pipeline {
     * CC stage. One cheap aggregate (distinct ids vs distinct source triples)
     * turns that silent corruption into a loud stage failure.
     *
-    * The pipeline does NOT call this as a standalone action: [[mentionIdAudit]]
-    * folds the same two countDistincts into the stage-1 commit's row-count
-    * job (see `StageStore.Audit`), so the audit shares the metrics pass
-    * instead of re-scanning mentions. This method stays for auditing a
-    * mention table outside a `StageStore` commit. */
+    * The pipeline does not call this: it runs the same two countDistincts
+    * as [[mentionIdAudit]], the stage-1 commit's `StageStore.Audit`, so a
+    * collision vetoes the commit instead of failing after it. This method
+    * audits a mention table outside a `StageStore` commit. */
   def auditMentionIds(mentions: DataFrame): Unit = {
     val r = mentions.agg(
       countDistinct(col("mention_id")).as("ids"),
@@ -167,10 +166,10 @@ object Pipeline {
       s"mention_id hash collision: $ids distinct ids for $triples distinct " +
         "(conv_id, turn_idx, span_idx) triples — rerun with a salted id derivation")
 
-  /** The collision audit as a commit-time rider: the two countDistincts join
-    * the stage-1 commit's `count(*)` in ONE aggregate job (row layout:
-    * rows_total, ids, triples). A collision vetoes the commit, so a bad
-    * mention table is never resumable. */
+  /** The collision audit as a commit-time check: one aggregate over the
+    * committed mention snapshot (row layout: rows_total, ids, triples). A
+    * collision vetoes the commit before its marker write, so a bad mention
+    * table is never resumable. */
   val mentionIdAudit: pkel.io.StageStore.Audit = pkel.io.StageStore.Audit(
     Seq(countDistinct(col("mention_id")).as("ids"),
       countDistinct(col("conv_id"), col("turn_idx"), col("span_idx")).as("triples")),
@@ -184,8 +183,8 @@ object Pipeline {
 
     // stage 1: mention extraction under stable conversation ordering; the id
     // audit fails the stage on a (birthday-bound) hash collision instead of
-    // letting it silently merge clusters downstream — folded into the
-    // commit's row-count job, not a separate pass over mentions
+    // letting it silently merge clusters downstream — run by the commit,
+    // before its marker write, so a bad mention table is never resumable
     val mentions = io.readOrCompute("mentions", fp(cfg, "m"), Some(mentionIdAudit)) {
       extractMentions(transcripts)
     }
@@ -328,9 +327,10 @@ object Pipeline {
         .drop("root")
     }
 
-    val nMentions = mentions.count()
-    val nPairs = scored.count()
-    val nEdges = edges.count()
+    // each is a bare scan of a committed snapshot, so its footers count it
+    val nMentions = SnapshotFooters.rows(mentions)
+    val nPairs = SnapshotFooters.rows(scored)
+    val nEdges = SnapshotFooters.rows(edges)
     val nClusters = clusters.select("cluster_id").distinct().count()
     val wallSec = (System.nanoTime() - t0) / 1e9
 

@@ -7,7 +7,8 @@ import org.apache.spark.sql.DataFrame
   * `writeJsonl` mirrors the reference's line-delimited JSON sink (no
   * forward-slash escaping — Spark's JSON writer doesn't escape `/` either);
   * residue/error sinks are ordinary overwrite snapshots; the append-mode
-  * metrics sink lives in [[TableIO]] (per-partition lineage rows).
+  * metrics sink lives in [[StageStore]]: one lineage row per part file a
+  * stage commit wrote (per write task), read from the parquet footers.
   */
 object Sinks {
 

@@ -5,8 +5,9 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-/** Stage-checkpointed table IO with per-partition lineage metrics.
+/** Stage-checkpointed table IO with per-write-task lineage metrics.
   *
   * The north rule asks for Iceberg tables with per-stage checkpoints and an
   * idempotent resume. No Iceberg runtime jar ships in this offline image
@@ -26,6 +27,13 @@ import org.apache.spark.sql.functions._
   * itself — on a cluster the marker/pointer lands on the same HDFS/S3/file
   * scheme as the parquet it guards (driver-local `java.nio` would silently
   * write markers to the driver's disk instead).
+  *
+  * A commit's only Spark jobs are its write and the one-row-per-file
+  * `_metrics` append (plus an [[StageStore.Audit]]'s aggregate when one is
+  * given): the row count, the lineage rows and the returned frame's schema
+  * come from the parquet footers the write produced ([[SnapshotFooters]]),
+  * read on the driver. A replay reads the footer schema the same way and
+  * runs no job.
   */
 trait StageStore {
   protected def spark: SparkSession
@@ -39,29 +47,46 @@ trait StageStore {
   protected def committedLocation(stage: String): String
 
   /** Write `df` as the committed output of `stage` (overwrites any partial
-    * previous attempt), record metrics, return the re-read DataFrame. An
-    * optional [[StageStore.Audit]] folds extra aggregate checks into the
-    * commit's row-count action (zero additional Spark jobs). */
+    * previous attempt), record one lineage row per written part file, and
+    * return a scan of the snapshot. An optional [[StageStore.Audit]] runs
+    * one aggregate over the snapshot and can veto the commit. */
   def commit(stage: String, df: DataFrame, fingerprint: String,
       audit: Option[StageStore.Audit] = None): DataFrame
 
   /** Idempotent stage execution: replay from the committed snapshot when the
     * fingerprint matches, else compute + commit. Audits run at commit time
-    * only — a committed snapshot has already passed its audit. */
+    * only — a committed snapshot has already passed its audit. A replay
+    * takes its schema from the snapshot's footers and runs no Spark job. */
   final def readOrCompute(stage: String, fingerprint: String,
       audit: Option[StageStore.Audit] = None)(compute: => DataFrame): DataFrame =
-    if (isCommitted(stage, fingerprint)) spark.read.parquet(committedLocation(stage))
-    else commit(stage, compute, fingerprint, audit)
+    if (isCommitted(stage, fingerprint)) {
+      val dir = committedLocation(stage)
+      scan(dir, SnapshotFooters.read(spark, dir))
+    } else commit(stage, compute, fingerprint, audit)
 
-  /** One action for total-rows + audit aggregates: `count(*)` at index 0,
-    * the audit's columns after it. The audit's `check` fails the commit
-    * before the marker/pointer write, so a failed audit leaves the stage
-    * uncommitted (the next run recomputes instead of resuming bad data). */
-  protected def countAndAudit(out: DataFrame, audit: Option[StageStore.Audit]): Long = {
-    val aggCols = count(lit(1)).as("rows_total") +: audit.map(_.aggs).getOrElse(Seq.empty)
-    val row = out.agg(aggCols.head, aggCols.tail: _*).head()
-    audit.foreach(_.check(row))
-    row.getLong(0)
+  private def scan(dir: String, footers: SnapshotFooters): DataFrame =
+    spark.read.schema(footers.schema).parquet(dir)
+
+  /** The commit body both backends share, up to their commit point: write
+    * `df` to `dir`, read its footers, run the audit (whose `check` throws
+    * before the caller's marker/pointer write, so a vetoed stage stays
+    * uncommitted and the next run recomputes it), append the lineage rows.
+    * Returns the snapshot scan, its row count and the commit's `wall_ms`,
+    * which covers the write, the footer read and the audit. */
+  protected final def writeSnapshot(stage: String, dir: String, df: DataFrame,
+      audit: Option[StageStore.Audit]): (DataFrame, Long, Long) = {
+    val t0 = System.nanoTime()
+    df.write.mode("overwrite").parquet(dir)
+    val footers = SnapshotFooters.read(spark, dir)
+    val out = scan(dir, footers)
+    audit.foreach { a =>
+      a.check(out.agg(count(lit(1)).as("rows_total"), a.aggs: _*).head())
+    }
+    val wallMs = (System.nanoTime() - t0) / 1000000
+    appendMetrics(footers.parts.map { case (partition, rows) =>
+      (partition, rows, stage, footers.rows, wallMs)
+    })
+    (out, footers.rows, wallMs)
   }
 
   protected def fs(p: Path): FileSystem =
@@ -84,48 +109,41 @@ trait StageStore {
     finally os.close()
   }
 
-  /** Per-partition lineage counters appended to the metrics table
-    * (north rule: "per-partition lineage + counter metrics"). */
-  protected def writeMetrics(stage: String, df: DataFrame, totalRows: Long, wallMs: Long): Unit = {
-    val perPartition = df.groupBy(spark_partition_id().as("partition_id"))
-      .agg(count(lit(1)).as("rows_out"))
-      .withColumn("run_id", lit(runId))
-      .withColumn("stage", lit(stage))
-      .withColumn("total_rows", lit(totalRows))
-      .withColumn("wall_ms", lit(wallMs))
-      .withColumn("committed_at", current_timestamp())
-    perPartition.write.mode("append").parquet(s"$root/_metrics")
-  }
-
   /** Append named counter rows to the metrics table (silent-cap visibility:
-    * e.g. LSH dropped-bucket counts). Counters reuse the per-partition
-    * lineage schema — `stage` = "<stage>.<counter>", `rows_out` = value,
+    * e.g. LSH dropped-bucket counts). Counters share the lineage rows'
+    * schema — `stage` = "<stage>.<counter>", `rows_out` = value,
     * `partition_id` = −1 marks a run-level counter — so one parquet schema
     * serves both row kinds and `metrics()` reads them together. */
   final def appendCounters(stage: String, counters: Seq[(String, Long)]): Unit =
-    if (counters.nonEmpty) {
-      spark.createDataFrame(counters).toDF("counter", "value")
-        .select(
-          lit(-1).as("partition_id"),
-          col("value").as("rows_out"),
-          lit(runId).as("run_id"),
-          concat(lit(stage + "."), col("counter")).as("stage"),
-          col("value").as("total_rows"),
-          lit(0L).as("wall_ms"),
-          current_timestamp().as("committed_at"))
-        .coalesce(1)
-        .write.mode("append").parquet(s"$root/_metrics")
-    }
+    if (counters.nonEmpty)
+      appendMetrics(counters.map { case (name, value) => (-1, value, s"$stage.$name", value, 0L) })
 
-  def metrics(): DataFrame = spark.read.parquet(s"$root/_metrics")
+  /** One local write of `(partition_id, rows_out, stage, total_rows,
+    * wall_ms)` rows to the metrics table, in [[StageStore.MetricsSchema]]. */
+  private def appendMetrics(rows: Seq[(Int, Long, String, Long, Long)]): Unit =
+    spark.createDataFrame(rows).toDF("partition_id", "rows_out", "stage", "total_rows", "wall_ms")
+      .select(col("partition_id"), col("rows_out"), lit(runId).as("run_id"), col("stage"),
+        col("total_rows"), col("wall_ms"), current_timestamp().as("committed_at"))
+      .coalesce(1)
+      .write.mode("append").parquet(s"$root/_metrics")
+
+  def metrics(): DataFrame = spark.read.schema(StageStore.MetricsSchema).parquet(s"$root/_metrics")
 }
 
 object StageStore {
-  /** Commit-time audit: `aggs` ride the SAME `agg()` as the commit's total
-    * row count (one Spark job for both), `check` receives the aggregate row
+  /** The metrics table: one lineage row per part file a stage commit wrote
+    * (`partition_id` = the id of the write task that produced it, `rows_out`
+    * = its rows, `total_rows` = the stage's rows), plus counter rows with
+    * `partition_id` = −1. */
+  private[io] val MetricsSchema: StructType = StructType.fromDDL(
+    "partition_id INT, rows_out BIGINT, run_id STRING, stage STRING, " +
+      "total_rows BIGINT, wall_ms BIGINT, committed_at TIMESTAMP")
+
+  /** Commit-time audit: `aggs` run in one aggregate over the committed
+    * snapshot, after `count(lit(1))`; `check` receives the aggregate row
     * with `rows_total` at index 0 followed by `aggs` in order and throws to
     * veto the commit. This is how the pipeline's mention-id collision audit
-    * shares the stage-1 metrics pass instead of running its own job. */
+    * keeps a bad mention table from ever being resumable. */
   final case class Audit(aggs: Seq[org.apache.spark.sql.Column],
       check: org.apache.spark.sql.Row => Unit)
 
@@ -155,13 +173,7 @@ final class TableIO(protected val spark: SparkSession, val root: String,
 
   def commit(stage: String, df: DataFrame, fingerprint: String,
       audit: Option[StageStore.Audit] = None): DataFrame = {
-    val dir = stageDir(stage)
-    val t0 = System.nanoTime()
-    df.write.mode("overwrite").parquet(dir)
-    val out = spark.read.parquet(dir)
-    val rows = countAndAudit(out, audit)
-    val wallMs = (System.nanoTime() - t0) / 1000000
-    writeMetrics(stage, out, rows, wallMs)
+    val (out, rows, wallMs) = writeSnapshot(stage, stageDir(stage), df, audit)
     writeSmallFile(markerPath(stage),
       s"fingerprint=$fingerprint\nrows=$rows\nrun_id=$runId\nwall_ms=$wallMs\n")
     out
@@ -208,12 +220,7 @@ final class CatalogTableIO(protected val spark: SparkSession, val root: String,
   def commit(stage: String, df: DataFrame, fingerprint: String,
       audit: Option[StageStore.Audit] = None): DataFrame = {
     val dir = snapDir(stage, fingerprint)
-    val t0 = System.nanoTime()
-    df.write.mode("overwrite").parquet(dir)
-    val out = spark.read.parquet(dir)
-    val rows = countAndAudit(out, audit)
-    val wallMs = (System.nanoTime() - t0) / 1000000
-    writeMetrics(stage, out, rows, wallMs)
+    val (out, rows, wallMs) = writeSnapshot(stage, dir, df, audit)
     writeSmallFile(pointerPath(stage), toJson(Seq(
       "stage" -> stage, "fingerprint" -> fingerprint, "location" -> dir,
       "rows" -> rows.toString, "run_id" -> runId, "wall_ms" -> wallMs.toString)))

@@ -14,7 +14,11 @@ package pkel.text
   * id amortizes across tasks AND stages; on a cluster that is exactly the
   * per-executor scope. Reads are lock-free; values are immutable results.
   * Bounded so a worst-case all-unique corpus keeps memory flat and degrades
-  * to the unmemoized cost (same discipline as PairScorer.MemoCap).
+  * to the unmemoized cost (same discipline as PairScorer.MemoCap). The bound
+  * is soft: the capacity check and the counter increment are not one atomic
+  * step, so a table can overshoot its cap by up to the number of threads
+  * inserting into it at once — a few entries per executor core, never
+  * growth without bound.
   *
   * Every table is keyed by an explicit id ([[Memo.named]]): one id is one
   * registry entry for the life of the JVM, so the registry holds exactly

@@ -1,5 +1,6 @@
 package pkel
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +16,20 @@ trait SparkSpec extends AnyFunSuite {
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  /** Spark jobs started while `body` runs, counted by a listener. */
+  def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try body finally {
+      org.apache.spark.sql.pkelbridge.Bridge.waitForListeners(spark)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    n.get()
   }
 
   def resourcePath(p: String): String = {

@@ -104,36 +104,22 @@ class TranscriptPipelineSpec extends SparkSpec {
     assert(e.getMessage.contains("collision"))
   }
 
-  test("folded stage-1 audit: fewer Spark jobs than commit + separate audit, and vetoes bad commits") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  test("stage-1 audit: adds exactly its own jobs and vetoes bad commits") {
     import spark.implicits._
     val t = TranscriptSynth.generate(spark, entries, nConvs = 40, seed = 5L)
     val mentions = Pipeline.extractMentions(t)
-    def jobsDuring(body: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      try body finally {
-        org.apache.spark.sql.pkelbridge.Bridge.waitForListeners(spark)
-        spark.sparkContext.removeSparkListener(l)
-      }
-      n.get()
-    }
     val rootA = Files.createTempDirectory("pkel_audit_sep_").toString
-    val separate = jobsDuring {
-      val out = new TableIO(spark, rootA, "sep").commit("mentions", mentions, "f")
-      Pipeline.auditMentionIds(out)
-    }
+    val plain = jobsDuring(new TableIO(spark, rootA, "sep").commit("mentions", mentions, "f"))
+    val snapshot = new TableIO(spark, rootA, "sep").readOrCompute("mentions", "f")(fail("must replay"))
+    val audit = jobsDuring(Pipeline.auditMentionIds(snapshot))
     val rootB = Files.createTempDirectory("pkel_audit_fold_").toString
-    val folded = jobsDuring {
+    val audited = jobsDuring {
       new TableIO(spark, rootB, "fold")
         .commit("mentions", mentions, "f", Some(Pipeline.mentionIdAudit))
     }
-    info(s"jobs: separate-audit=$separate folded-audit=$folded")
-    assert(folded < separate,
-      s"folded audit should save at least one Spark job ($folded vs $separate)")
+    info(s"jobs: commit=$plain audit=$audit audited-commit=$audited")
+    assert(audited == plain + audit,
+      s"an audited commit should add exactly the audit's jobs ($audited vs $plain + $audit)")
     // a collision vetoes the commit BEFORE the marker write: the stage is not
     // resumable with corrupt ids
     val collided = Seq((1L, "c1", 0, 0), (1L, "c2", 0, 0))
@@ -160,6 +146,11 @@ class TranscriptPipelineSpec extends SparkSpec {
     val snap2 = c2.select("mention_id", "cluster_id").collect().map(_.toString).sorted
     assert(snap1.sameElements(snap2))
     assert(s2.wallSec < s1.wallSec, "resumed run should be faster (no recompute)")
+    // the closing counts, read from the snapshots' footers, are the committed
+    // tables' counts on both the computing and the replaying run
+    val committed = Seq("mentions", "scored", "edges").map(st => spark.read.parquet(s"$root/$st").count())
+    for (s <- Seq(s1, s2))
+      assert(Seq(s.mentions, s.pairs, s.edges) == committed, s"$s vs committed counts $committed")
     // metrics table has rows for every stage
     val stages = io1.metrics().select("stage").distinct().collect().map(_.getString(0)).toSet
     assert(Set("mentions", "keyed", "linked", "scored", "edges", "components", "clusters")
