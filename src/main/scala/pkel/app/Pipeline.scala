@@ -55,19 +55,14 @@ object Pipeline {
         * stage falls back to shuffle anti-joins against the assigned ids.
         * 10M longs ≈ 320 MB hashed — comfortable for executor broadcast. */
       broadcastResidueLimit: Long = 10000000L,
-      /** Physical form of each connected-components star round: "window"
-        * (one exchange per star — default) or "join" (groupBy+self-join,
-        * AQE-skew-splittable — the escape hatch for ≫10^8-degree hubs).
-        * See [[pkel.cluster.ConnectedComponents]]. */
-      ccStarImpl: String = "window",
       /** Durable-checkpoint cadence inside the CC fixpoint (every k-th
         * iteration writes parquet instead of localCheckpoint). With the
         * round-5 fixpoint shape (star-forest stop, 1–2 rounds typical) the
         * default of 3 means short fixpoints write no durable iterate at all
         * — correct, since a kill then resumes from the committed edges
         * stage for the price of re-running 1–2 cheap rounds. Set 1 when
-        * fixpoints run long (join-form at extreme skew) or to exercise
-        * mid-fixpoint resume (tools/kill_resume_bench.sh). */
+        * fixpoints run long or to exercise mid-fixpoint resume
+        * (tools/kill_resume_bench.sh). */
       ccReliableEvery: Int = 3)
 
   final case class Summary(
@@ -271,7 +266,9 @@ object Pipeline {
     // lost executor mid-fixpoint RESUMES from the last durable iterate, not
     // from a full recompute. The checkpoint dir is scoped by the stage
     // fingerprint: CC resume is only valid against the identical edge set,
-    // so a config change can never pick up a stale iterate.
+    // so a config change can never pick up a stale iterate. A fixpoint that
+    // exhausts its budget throws inside the compute thunk, so an unproven
+    // root set never commits; the next run resumes from the durable iterate.
     // the fixpoint's star iterations execute eagerly inside run(), BEFORE
     // the stage commit's timed write — the per-iteration callback is the
     // only place their cost is observable, so it lands in the metrics
@@ -297,7 +294,6 @@ object Pipeline {
         checkpointDir = Some(s"${io.root}/_cc_checkpoints/${fp(cfg, "c")}"),
         reliableEvery = cfg.ccReliableEvery,
         onIteration = (it, nEdges, wallMs) => ccIterStats += ((it, nEdges, wallMs)),
-        starImpl = cfg.ccStarImpl,
         // the committed edges snapshot is canonical-distinct by
         // construction — pair generators emit each unordered pair once
         // (salted intra-bucket i<j; LSH pairs deduped across bands; rep-star

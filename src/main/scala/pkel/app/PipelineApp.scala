@@ -94,9 +94,6 @@ object PipelineApp {
       // (length bound) before the scoring kernel; clusters are invariant,
       // drops land in the metrics table as length_pruned_pairs
       prunePairs = opts.getOrElse("prune", "false").toBoolean,
-      // --cc-star window|join: physical form of the CC star rounds (window =
-      // one exchange per star; join = AQE-skew-splittable escape hatch)
-      ccStarImpl = opts.getOrElse("cc-star", "window"),
       // --cc-reliable-every N: durable-checkpoint cadence in the CC fixpoint
       // (1 = every round durable — used by tools/kill_resume_bench.sh to
       // exercise TRUE mid-fixpoint resume now that fixpoints are 1-2 rounds)

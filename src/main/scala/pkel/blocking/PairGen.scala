@@ -1,6 +1,6 @@
 package pkel.blocking
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,19 +10,21 @@ import scala.util.hashing.MurmurHash3
   * band buckets (BASELINE.json north_star).
   *
   * Scale posture:
-  * - pair production is the quadratic danger zone; hot blocking keys are
-  *   salted ADAPTIVELY — salt factor ∝ key frequency — so every bucket holds
-  *   ≈ `targetBucketSize` members and per-key pair cost is O(n·target), not
-  *   O(n²); a star over bucket representatives (every rep → the key's
-  *   min-id rep) keeps each key's mentions transitively connected at graph
-  *   diameter 2, so clusters are salt-invariant and the connected-components
-  *   fixpoint contracts in O(1) rounds at any skew;
-  * - the whole generator costs TWO data-scale shuffles: one window pass on
-  *   `blocking_key` (per-key frequency for salting + per-key representative
-  *   for LSH, in the same exchange) and one `groupBy(bucket_key)` whose
-  *   collect_list feeds an index-pair explosion — pairs are born in the
-  *   final stage with both sides' scoring features attached, so the scoring
-  *   kernel pipelines on the explode output and pair rows NEVER shuffle;
+  * - pair production is the quadratic danger zone; every blocking key is
+  *   salted ADAPTIVELY — salt_n = ceil(key_n / targetBucketSize), uncapped —
+  *   so every bucket holds ≈ `targetBucketSize` members and per-key pair
+  *   cost is O(n·target), not O(n²), at any skew; a star over bucket
+  *   representatives (every rep → the key's min-id rep) keeps each key's
+  *   mentions transitively connected at graph diameter 2, so clusters are
+  *   salt-invariant and the connected-components fixpoint contracts in O(1)
+  *   rounds. A test that wants one bucket per key sets
+  *   `targetBucketSize = Int.MaxValue` (salt_n = 1 for every key);
+  * - production scoring (`PairScorer.scoreCandidates`) never materializes
+  *   salted pairs as rows: one window pass on `blocking_key` (key frequency)
+  *   and one `groupBy(bucket_key)` build the [[saltedBucketTable]], and the
+  *   bucket kernel enumerates and scores each bucket's pairs in place. The
+  *   relational [[candidatePairsWithFeatures]] — the kernel's spec oracle —
+  *   enumerates the same pairs with a streaming bucket self-join;
   * - MinHash-LSH runs over *distinct* blocking keys (one representative
   *   mention per key): all mentions of a key share one token set, so banding
   *   them individually would replicate every hot key's block once per band.
@@ -35,18 +37,10 @@ import scala.util.hashing.MurmurHash3
 object PairGen {
 
   final case class Config(
-      saltBuckets: Int = 8,          // fixed-salt mode (tests)
       minhashFunctions: Int = 32,
       lshBands: Int = 8,
-      maxBucketSize: Int = 1000,
-      targetBucketSize: Int = 64,    // adaptive mode: aim C(target,2) pairs/bucket
-      /** Optional ceiling on salt_n — UNCAPPED by default: salt_n grows as
-        * ceil(key_n / target) without limit, so per-key pair cost stays
-        * O(n·target) at ANY skew (a finite cap re-grows buckets to n/cap once
-        * a key passes cap×target mentions — the round-4 latent scale-killer).
-        * Exists only so tests can pin a cap and observe the re-growth. */
-      maxSaltFactor: Int = Int.MaxValue,
-      adaptiveSalt: Boolean = true)
+      maxBucketSize: Int = 1000,     // LSH buckets above this are dropped
+      targetBucketSize: Int = 64)    // salted buckets: aim C(target,2) pairs each
 
   /** MinHash signature of a token set: k seeded min-hashes. */
   def minhash(tokens: Seq[String], k: Int): Array[Int] = {
@@ -81,7 +75,9 @@ object PairGen {
     * scoring feature, the raw mention surface. */
   private val memberCols = Seq("mention_id", "blocking_key", "mention")
 
-  /** Self-join formulation: codegen'd but shuffles every bucket row twice. */
+  /** All (src>dst) pairs within each bucket as a streaming self-join on
+    * `bucket_key`: O(members) memory per bucket at any bucket size. `buckets`
+    * columns: bucket_key, mention_id, blocking_key, mention. */
   private def pairsInBucketsJoin(buckets: DataFrame, maxBucketSize: Int,
       dropOversized: Boolean): DataFrame = {
     val (boundedA, boundedB) =
@@ -113,35 +109,8 @@ object PairGen {
       .select("src", "dst", "key_a", "key_b", "mention_a", "mention_b")
   }
 
-  /** All (src>dst) pairs within each bucket via ONE shuffle:
-    * `groupBy(bucket_key).collect_list` + index-pair explosion (the self-join
-    * formulation shuffled every bucket row twice). Only for buckets whose
-    * size adaptive salting bounds, so per-group lists stay small. `buckets`
-    * columns: bucket_key, mention_id, blocking_key, mention. */
-  private def pairsInBucketsFused(buckets: DataFrame): DataFrame = {
-    val member = struct(memberCols.map(col): _*)
-    val grouped = buckets.groupBy("bucket_key").agg(collect_list(member).as("ms"))
-      .filter(size(col("ms")) >= 2)
-    val ms = col("ms")
-    // i < j index pairs over the collected list (exactly C(n,2) structs)
-    val pairsCol = flatten(transform(sequence(lit(0), size(ms) - 2), i =>
-      transform(sequence(i + lit(1), size(ms) - 1), j =>
-        struct(element_at(ms, i + lit(1)).as("x"), element_at(ms, j + lit(1)).as("y")))))
-    // collect_list order is nondeterministic; orient every pair by mention_id
-    // so the emitted rows are parallelism-invariant
-    val swap = col("p.x.mention_id") < col("p.y.mention_id")
-    def aSide(f: String): Column = when(swap, col(s"p.y.$f")).otherwise(col(s"p.x.$f"))
-    def bSide(f: String): Column = when(swap, col(s"p.x.$f")).otherwise(col(s"p.y.$f"))
-    grouped.select(explode(pairsCol).as("p"))
-      .select(
-        aSide("mention_id").as("src"), bSide("mention_id").as("dst"),
-        aSide("blocking_key").as("key_a"), bSide("blocking_key").as("key_b"),
-        aSide("mention").as("mention_a"), bSide("mention").as("mention_b"))
-      .filter(col("src") =!= col("dst"))
-  }
-
   /** Per-key annotation in a single exchange on blocking_key: key frequency
-    * (adaptive salt factor) via an unordered count window. The downstream
+    * (salt factor) via an unordered count window. The downstream
     * per-(key,salt) rep aggregation and the rep-star window reuse this
     * partitioning — no further key-side exchange. Public so callers fusing
     * both pair generators can share one lineage of it. */
@@ -155,34 +124,25 @@ object PairGen {
     val keyed = mentions
       .select(memberCols.map(col): _*)
       .filter(col("blocking_key") =!= "")
-    val withSalt =
-      if (cfg.adaptiveSalt)
-        keyed.withColumn("key_n", count(lit(1)).over(Window.partitionBy("blocking_key")))
-          // LONG salt_n: at 10^12 mentions a degenerate key can need more
-          // than Int.MaxValue salts; the cap (default Int.MaxValue ≈ uncapped)
-          // only binds when a test pins it
-          .withColumn("salt_n",
-            least(greatest(ceil(col("key_n") / cfg.targetBucketSize), lit(1)), lit(cfg.maxSaltFactor.toLong))
-              .cast("long"))
-      else keyed.withColumn("salt_n", lit(cfg.saltBuckets))
-    withSalt
+    keyed
+      .withColumn("key_n", count(lit(1)).over(Window.partitionBy("blocking_key")))
+      // LONG and uncapped: at 10^12 mentions a degenerate key can need more
+      // than Int.MaxValue salts, and any cap would re-grow its buckets to
+      // key_n / cap members
+      .withColumn("salt_n",
+        greatest(ceil(col("key_n") / cfg.targetBucketSize), lit(1)).cast("long"))
       .withColumn("salt", pmod(xxhash64(col("mention_id")), col("salt_n")))
       .withColumn("bucket_key", concat_ws("#", col("blocking_key"), col("salt")))
   }
 
   /** Salted intra-bucket pairs + representative star across the salt
-    * buckets of each key (salt-invariant transitivity). The fused explosion
-    * materializes all C(n,2) feature-carrying structs of a bucket as ONE
-    * array value, so it is only safe when adaptive salting bounds bucket
-    * sizes (≈ targetBucketSize members). Fixed-salt buckets are unbounded (a
-    * hot key / saltBuckets can still be huge) — stream them through the
-    * self-join, same guard the LSH path applies. */
+    * buckets of each key (salt-invariant transitivity). The self-join streams
+    * each bucket, so an unsalted test bucket of thousands of members never
+    * becomes one array value. */
   private def saltedPairs(annotated: DataFrame, cfg: Config): DataFrame = {
     val buckets = annotated.select(("bucket_key" +: memberCols).map(col): _*)
-    val intra =
-      if (cfg.adaptiveSalt) pairsInBucketsFused(buckets)
-      else pairsInBucketsJoin(buckets, cfg.maxBucketSize, dropOversized = false)
-    intra.unionByName(repStarPairs(annotated))
+    pairsInBucketsJoin(buckets, cfg.maxBucketSize, dropOversized = false)
+      .unionByName(repStarPairs(annotated))
   }
 
   /** Representative STAR pairs across the salt buckets of each key: every
@@ -215,10 +175,11 @@ object PairGen {
         col("rep_mention").as("mention_a"), col("anchor_mention").as("mention_b"))
   }
 
-  /** MinHash-LSH pairs over per-key representatives (rep = min mention_id,
-    * computed by a map-side-combined aggregation — output is O(distinct
-    * keys), never O(mentions)). */
-  private def lshFromMentions(mentions: DataFrame, cfg: Config): DataFrame = {
+  /** MinHash-LSH pairs over *distinct* canonical token sets: one
+    * representative per blocking key (rep = min mention_id, computed by a
+    * map-side-combined aggregation — output is O(distinct keys), never
+    * O(mentions)). Input columns: mention_id, blocking_key, tokens, mention. */
+  def lshPairs(mentions: DataFrame, cfg: Config = Config()): DataFrame = {
     val keyReps = mentions
       .filter(col("blocking_key") =!= "" && size(col("tokens")) > 0)
       .groupBy("blocking_key")
@@ -230,27 +191,12 @@ object PairGen {
         explode(minhashUdf(col("tokens"), lit(cfg.minhashFunctions), lit(cfg.lshBands))).as("band"))
       .withColumn("bucket_key", col("band").cast("string"))
       .select(("bucket_key" +: memberCols).map(col): _*)
-    // ALWAYS the streaming self-join here: LSH buckets run up to
-    // maxBucketSize (default 1000) members, and the fused explosion would
-    // materialize C(1000,2) feature-carrying structs as ONE array value
-    // (hundreds of MB against the 2 GB row limit); the join streams the
-    // same pairs in O(n) memory. The fused form stays for salted buckets,
-    // whose size the adaptive salt bounds near targetBucketSize.
+    // LSH buckets run up to maxBucketSize (default 1000) members; the
+    // self-join streams their pairs in O(n) memory
     pairsInBucketsJoin(banded, cfg.maxBucketSize, dropOversized = true)
       // same key pair recurs across bands; rep set is small
       .dropDuplicates("src", "dst")
   }
-
-  /** Blocking-key pairs with (adaptively) salted buckets + representative
-    * star. Input columns: mention_id, blocking_key, mention. */
-  def blockingKeyPairs(mentions: DataFrame, cfg: Config): DataFrame =
-    saltedPairs(annotated(mentions, cfg), cfg)
-
-  /** MinHash-LSH pairs over *distinct* canonical token sets (one
-    * representative mention per blocking key).
-    * Input columns: mention_id, blocking_key, tokens, mention. */
-  def lshPairs(mentions: DataFrame, cfg: Config = Config()): DataFrame =
-    lshFromMentions(mentions, cfg)
 
   /** Union of both generators, WITH scoring features on every pair; the
     * per-key annotation pass is shared so the mention table is exchanged on
@@ -258,7 +204,7 @@ object PairGen {
     * mention_b. */
   def candidatePairsWithFeatures(mentions: DataFrame, cfg: Config = Config()): DataFrame =
     saltedPairs(annotated(mentions, cfg), cfg)
-      .unionByName(lshFromMentions(mentions, cfg))
+      .unionByName(lshPairs(mentions, cfg))
 
   /** Bare (src, dst) pair ids. */
   def candidatePairs(mentions: DataFrame, cfg: Config = Config()): DataFrame =
@@ -297,5 +243,5 @@ object PairGen {
     * it needs `tokens`, which [[annotated]] deliberately projects away. */
   def sparsePairsFromAnnotated(ann: DataFrame, mentions: DataFrame,
       cfg: Config = Config()): DataFrame =
-    repStarPairs(ann).unionByName(lshFromMentions(mentions, cfg))
+    repStarPairs(ann).unionByName(lshPairs(mentions, cfg))
 }

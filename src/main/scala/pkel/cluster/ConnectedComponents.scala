@@ -9,60 +9,29 @@ import org.apache.spark.sql.functions._
   * Beyond" recipe (SURVEY.md §2.11).
   *
   * Input: undirected edge list (src: long, dst: long). Output: (node, root)
-  * where root = min node id of the component. Two physical forms of the same
-  * round, property-tested set-equal per iteration:
-  *
-  *  - "window" (default): each star is ONE exchange — partition the
-  *    bidirected edges by node and take the per-partition window min. A full
-  *    round costs 3 wide exchanges (large star, small star, canonical
-  *    distinct); measured 2.3× faster than the join form on a 69M-edge
-  *    round. Caveat: a window partition cannot be split by AQE, so one task
-  *    sorts all of a hub's edges (spills, never OOMs — nothing is collected
-  *    per node).
-  *  - "join": groupBy(min) + self-join per star (~8 exchanges per round),
-  *    kept because the join ahead of each star IS AQE-skew-splittable — the
-  *    escape hatch for degenerate hubs (≫10^8-degree) at extreme scale.
+  * where root = min node id of the component. Each star is ONE exchange —
+  * partition the bidirected edges by node and take the per-partition window
+  * min — so a full round costs 3 wide exchanges (large star, small star,
+  * canonical distinct). A window partition cannot be split by AQE, so one
+  * task sorts all of a hub's edges (spills, never OOMs — nothing is collected
+  * per node); in the pipeline the rep star bounds a hub's degree near
+  * key_n / targetBucketSize plus the bucket size.
   *
   * Every iteration localCheckpoints to truncate lineage. Convergence: the
   * round output is tested directly for being a star forest (the fixpoint
   * shape) — detection costs one cheap aggregate instead of one more full
   * round; (count, xxhash64-xor) signature equality remains as the backstop
-  * stop rule.
+  * stop rule. A run that exhausts its iteration budget before the fixpoint
+  * throws instead of returning roots that may be non-transitive.
   */
 object ConnectedComponents {
 
   /** Large-star: for every node u (over bidirected edges), connect all
-    * strictly-larger neighbors to m(u) = min(N(u) ∪ u). */
-  private def largeStarJoin(edges: DataFrame): DataFrame = {
-    val bidir = edges.select(col("src").as("u"), col("dst").as("v"))
-      .union(edges.select(col("dst").as("u"), col("src").as("v")))
-    val mins = bidir.groupBy("u").agg(least(min(col("v")), col("u")).as("m"))
-    bidir.join(mins, "u")
-      .filter(col("v") > col("u"))
-      .select(col("v").as("src"), col("m").as("dst"))
-      .distinct()
-  }
-
-  /** Small-star: over edges directed large→small (u > v), connect all
-    * neighbors (and u itself) to m(u) = min neighbor. */
-  private def smallStarJoin(edges: DataFrame): DataFrame = {
-    val dir = edges.select(
-      greatest(col("src"), col("dst")).as("u"),
-      least(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    val mins = dir.groupBy("u").agg(min(col("v")).as("m"))
-    val nbrEdges = dir.join(mins, "u")
-      .filter(col("v") =!= col("m"))
-      .select(col("v").as("src"), col("m").as("dst"))
-    val selfEdges = mins.select(col("u").as("src"), col("m").as("dst"))
-    nbrEdges.union(selfEdges).distinct()
-  }
-
-  /** Large-star as one window exchange: m(u) arrives per-row via the
-    * partition-wide min instead of a groupBy + join back. Output may carry
+    * strictly-larger neighbors to m(u) = min(N(u) ∪ u), which arrives per
+    * row as the window min over u's partition. Output may carry
     * duplicates — the small star's terminal distinct canonicalizes the
     * round, so no exchange is spent deduping here. */
-  private def largeStarWindow(edges: DataFrame): DataFrame = {
+  private def largeStar(edges: DataFrame): DataFrame = {
     val bidir = edges.select(col("src").as("u"), col("dst").as("v"))
       .union(edges.select(col("dst").as("u"), col("src").as("v")))
     bidir.withColumn("m", least(min(col("v")).over(Window.partitionBy("u")), col("u")))
@@ -70,11 +39,12 @@ object ConnectedComponents {
       .select(col("v").as("src"), col("m").as("dst"))
   }
 
-  /** Small-star as one window exchange + the round's canonical distinct.
-    * Rows where v = m carry the self edge (u, m) — min(v) over duplicated
-    * input is unchanged, so the large star's duplicates are harmless and
-    * collapse in the terminal distinct. */
-  private def smallStarWindow(edges: DataFrame): DataFrame = {
+  /** Small-star: over edges directed large→small (u > v), connect all
+    * neighbors (and u itself) to m(u) = min neighbor, as one window exchange
+    * + the round's canonical distinct. Rows where v = m carry the self edge
+    * (u, m) — min(v) over duplicated input is unchanged, so the large star's
+    * duplicates are harmless and collapse in the terminal distinct. */
+  private def smallStar(edges: DataFrame): DataFrame = {
     val dir = edges.select(
       greatest(col("src"), col("dst")).as("u"),
       least(col("src"), col("dst")).as("v"))
@@ -117,7 +87,7 @@ object ConnectedComponents {
     * driver-side union-find over the collected edges instead of the
     * iterative fixpoint — the same move Spark itself makes when it
     * broadcasts a small join side. The distributed fixpoint pays a
-    * per-iteration job floor (two stars × groupBy+join × ~4 rounds) that
+    * per-iteration job floor (two window stars + distinct per round) that
     * dominates wall time on small graphs; at 2M edges the collect is
     * ~32 MB of longs, far below any driver budget, and the result is
     * IDENTICAL (min-reachable-id roots, equality property-tested). Pass
@@ -129,15 +99,18 @@ object ConnectedComponents {
     * `reliableEvery`-th iteration the edge set is written to parquet and
     * re-read, so on a long cluster run the job resumes from durable state
     * instead of dying with a lost executor. Intermediate iterations still
-    * use localCheckpoint (cheap) between durable ones. */
+    * use localCheckpoint (cheap) between durable ones.
+    *
+    * Throws `IllegalStateException` when `maxIterations` fresh rounds pass
+    * without reaching the fixpoint; a durable iterate written before the
+    * throw stays for the next run to resume from. */
   def run(spark: SparkSession, edges0: DataFrame, maxIterations: Int = 50,
       checkpointDir: Option[String] = None, reliableEvery: Int = 3,
       smallGraphThreshold: Long = 2000000L,
       onIteration: (Int, Long, Long) => Unit = (_, _, _) => (),
-      starImpl: String = "window",
       inputCanonical: Boolean = false): DataFrame =
     runWithStats(spark, edges0, maxIterations, checkpointDir, reliableEvery,
-      smallGraphThreshold, onIteration, starImpl, inputCanonical)._1
+      smallGraphThreshold, onIteration, inputCanonical)._1
 
   /** Driver-side union-find with min-root semantics (attach the larger root
     * under the smaller), path-compressed. */
@@ -181,7 +154,6 @@ object ConnectedComponents {
       checkpointDir: Option[String] = None, reliableEvery: Int = 3,
       smallGraphThreshold: Long = 2000000L,
       onIteration: (Int, Long, Long) => Unit = (_, _, _) => (),
-      starImpl: String = "window",
       /** Caller vouches edges0 is ALREADY canonical-distinct (src ≠ dst,
         * each unordered pair exactly once — e.g. a committed pair-stage
         * snapshot): skips iteration 0's canonicalize + re-materialize of the
@@ -191,11 +163,6 @@ object ConnectedComponents {
         * covers both orders; each round ends in a canonical distinct), so a
         * wrong vouch costs duplicate work in round 1, never wrong roots. */
       inputCanonical: Boolean = false): (DataFrame, Int) = {
-    require(starImpl == "window" || starImpl == "join",
-      s"starImpl must be 'window' or 'join', got '$starImpl'")
-    val round: DataFrame => DataFrame =
-      if (starImpl == "window") e => smallStarWindow(largeStarWindow(e))
-      else e => smallStarJoin(largeStarJoin(e))
     // superseded durable checkpoints are deleted as soon as the next one is
     // fully written, so a run keeps AT MOST ONE edge-set copy on disk (the
     // final checkpoint remains until the caller is done with the returned
@@ -276,7 +243,7 @@ object ConnectedComponents {
       it += 1
       fresh += 1
       val tIt = System.nanoTime()
-      val next = materialize(round(edges), it)
+      val next = materialize(smallStar(largeStar(edges)), it)
       val nextSig = signature(next)
       // star-forest test first: it fires one full round EARLIER than
       // signature equality (which needs an unchanged round to observe);
@@ -286,16 +253,13 @@ object ConnectedComponents {
       edges = next
       sig = nextSig
     }
-    // a non-fixpoint exit means the returned roots can be WRONG (multi-hop
-    // chains not yet contracted). Loud, never silent: specs simulate kills
-    // with tiny budgets, so this warns rather than throws — star iterations
-    // converge in O(log n) rounds, so a default-budget exhaustion on real
-    // data indicates a pathology worth the operator's attention.
+    // a non-fixpoint exit means the roots can be WRONG (multi-hop chains not
+    // yet contracted), so none are returned: a caller inside a stage commit
+    // commits nothing, and the next run resumes from the last durable iterate
     if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connected components exited after $fresh iterations WITHOUT reaching " +
-          s"fixpoint (budget $maxIterations, ${sig._1} canonical edges) — " +
-          "returned roots may be non-transitive; raise maxIterations")
+      throw new IllegalStateException(
+        s"connected components exhausted its budget of $maxIterations iterations " +
+          s"without reaching the fixpoint (${sig._1} canonical edges); raise maxIterations")
     // at fixpoint every edge is (node, root)
     val roots = edges.select(col("src").as("node"), col("dst").as("root"))
     // roots themselves

@@ -209,20 +209,24 @@ class TranscriptPipelineSpec extends SparkSpec {
     val seed = 13L
     val transcripts = TranscriptSynth.generate(spark, entries, nConvs = 80, seed = seed)
     val gold = goldDf(transcripts, seed)
-    def clustersWith(salt: Int): Map[Long, String] = {
-      val root = Files.createTempDirectory(s"pkel_salt${salt}_").toString
-      val cfg = Pipeline.Config(pairCfg = PairGen.Config(saltBuckets = salt))
-      val io = new TableIO(spark, root, s"salt-$salt")
-      val (c, _) = Pipeline.run(spark, transcripts, entries, cfg, io, Some(gold))
+    // targetBucketSize = Int.MaxValue gives every key one bucket (unsalted)
+    def clustersWith(target: Int): (Map[Long, String], Pipeline.Summary) = {
+      val root = Files.createTempDirectory(s"pkel_salt${target}_").toString
+      val cfg = Pipeline.Config(pairCfg = PairGen.Config(targetBucketSize = target))
+      val io = new TableIO(spark, root, s"salt-$target")
+      val (c, summary) = Pipeline.run(spark, transcripts, entries, cfg, io, Some(gold))
       // canonicalize cluster ids by their member sets (min member id)
       val rows = c.select("mention_id", "cluster_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-      rows.groupBy(_._2).toSeq.flatMap { case (_, ms) =>
+      (rows.groupBy(_._2).toSeq.flatMap { case (_, ms) =>
         val label = ms.map(_._1).min.toString
         ms.map(m => m._1 -> label)
-      }.toMap
+      }.toMap, summary)
     }
-    val unsalted = clustersWith(1)
-    val salted = clustersWith(8)
+    val (unsalted, unsaltedSummary) = clustersWith(Int.MaxValue)
+    val (salted, saltedSummary) = clustersWith(4)
+    info(s"pairs: unsalted=${unsaltedSummary.pairs} salted=${saltedSummary.pairs}")
+    assert(unsaltedSummary.pairs != saltedSummary.pairs,
+      "salting must change the scored pair count")
     assert(unsalted == salted, "salting must not change the transitive clusters")
   }
 

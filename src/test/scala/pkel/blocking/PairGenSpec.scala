@@ -21,10 +21,9 @@ class PairGenSpec extends SparkSpec {
     val rows = (1L to 200L).map(i => (i, if (i % 3 == 0) "auc inf" else "cl", s"m$i"))
     val df = mentionsDf(rows)
     Seq(
-      PairGen.Config(adaptiveSalt = false, saltBuckets = 1),
-      PairGen.Config(adaptiveSalt = false, saltBuckets = 7),
-      PairGen.Config(adaptiveSalt = true, targetBucketSize = 5),
-      PairGen.Config(adaptiveSalt = true, targetBucketSize = 64)
+      PairGen.Config(targetBucketSize = Int.MaxValue), // unsalted
+      PairGen.Config(targetBucketSize = 5),
+      PairGen.Config(targetBucketSize = 64)
     ).foreach { cfg =>
       val comps = componentsOf(PairGen.candidatePairs(df, cfg))
       val byKey = rows.groupBy(_._2).values.toSeq
@@ -38,8 +37,8 @@ class PairGenSpec extends SparkSpec {
 
   test("adaptive salting caps pair production on hot keys") {
     val hot = (1L to 2000L).map(i => (i, "t1/2", s"m$i"))
-    val cfgAll = PairGen.Config(adaptiveSalt = false, saltBuckets = 1)
-    val cfgSalted = PairGen.Config(adaptiveSalt = true, targetBucketSize = 32)
+    val cfgAll = PairGen.Config(targetBucketSize = Int.MaxValue) // unsalted
+    val cfgSalted = PairGen.Config(targetBucketSize = 32)
     val nAll = PairGen.candidatePairs(mentionsDf(hot), cfgAll).count()
     val nSalted = PairGen.candidatePairs(mentionsDf(hot), cfgSalted).count()
     info(s"all-pairs=$nAll salted=$nSalted")
@@ -52,7 +51,7 @@ class PairGenSpec extends SparkSpec {
 
   test("pairs carry correct features for both sides") {
     val df = mentionsDf(Seq((1L, "cl", "CL"), (2L, "cl", "clearance"), (3L, "auc", "AUC")))
-    val pairs = PairGen.candidatePairsWithFeatures(df, PairGen.Config(adaptiveSalt = false, saltBuckets = 1))
+    val pairs = PairGen.candidatePairsWithFeatures(df, PairGen.Config(targetBucketSize = Int.MaxValue))
       .collect()
     val p = pairs.find(r => r.getLong(0) == 2L && r.getLong(1) == 1L)
     assert(p.isDefined, s"missing (2,1) pair in ${pairs.mkString(",")}")

@@ -113,7 +113,7 @@ class SkewStressSpec extends SparkSpec {
   }
 
   test("(a) adaptive salting bounds bucket sizes under the hot-key Zipf corpus") {
-    val cfg = PairGen.Config(adaptiveSalt = true, targetBucketSize = 64)
+    val cfg = PairGen.Config(targetBucketSize = 64)
     val sizes = PairGen.saltedBucketTable(corpus, cfg)
       .agg(max(size(col("ms"))).as("mx"), count(lit(1)).as("buckets")).head()
     val (mx, buckets) = (sizes.getInt(0), sizes.getLong(1))
@@ -127,8 +127,8 @@ class SkewStressSpec extends SparkSpec {
   }
 
   test("(b) per-task pair load: salted quadratic stage is balanced, unsalted is not") {
-    val salted = PairGen.Config(adaptiveSalt = true, targetBucketSize = 64)
-    val unsalted = PairGen.Config(adaptiveSalt = false, saltBuckets = 1)
+    val salted = PairGen.Config(targetBucketSize = 64)
+    val unsalted = PairGen.Config(targetBucketSize = Int.MaxValue)
     corpus.count() // materialize the cache so measured jobs are pair-path only
     // the scored output keeps the bucket stage's partitioning (the kernel
     // never shuffles pair rows), so rows-per-partition IS the per-task pair
@@ -168,8 +168,8 @@ class SkewStressSpec extends SparkSpec {
   }
 
   test("(c) clusters are identical to the unsalted all-pairs oracle") {
-    val salted = clustersOf(PairGen.Config(adaptiveSalt = true, targetBucketSize = 64))
-    val oracle = clustersOf(PairGen.Config(adaptiveSalt = false, saltBuckets = 1))
+    val salted = clustersOf(PairGen.Config(targetBucketSize = 64))
+    val oracle = clustersOf(PairGen.Config(targetBucketSize = Int.MaxValue))
     assert(salted.size == oracle.size)
     val diff = salted.count { case (id, c) => oracle(id) != c }
     assert(diff == 0, s"$diff of ${salted.size} mentions changed cluster under salting")
@@ -183,7 +183,7 @@ class SkewStressSpec extends SparkSpec {
     // (ceil(300k/12) = 25000 ≫ 4096) and pins bounded buckets + linear pair
     // volume + salt-invariant connectivity at that scale.
     val bigN = 300000L
-    val cfg = PairGen.Config(adaptiveSalt = true, targetBucketSize = 12)
+    val cfg = PairGen.Config(targetBucketSize = 12)
     val mono = spark.range(0, bigN).select(
       (col("id") + 1).as("mention_id"),
       lit("t1 2 hot").as("blocking_key"))
@@ -210,7 +210,7 @@ class SkewStressSpec extends SparkSpec {
   }
 
   test("(d) pair-count cap: salted pair volume is linear-times-target, not quadratic") {
-    val cfg = PairGen.Config(adaptiveSalt = true, targetBucketSize = 64)
+    val cfg = PairGen.Config(targetBucketSize = 64)
     val nPairs = PairGen.candidatePairs(corpus, cfg).count()
     val hotN = N / HotShare
     info(s"salted pairs=$nPairs (unsalted hot key alone would be ${hotN * (hotN - 1) / 2})")

@@ -99,11 +99,15 @@ class ConnectedComponentsSpec extends SparkSpec {
     val cold = coldDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cold == expect)
     assert(coldIters >= 2, s"graph too easy for a resume test ($coldIters iterations)")
-    // simulated kill: stop after 1 iteration, leaving durable cc_iter_1
+    // simulated kill: an exhausted budget refuses to return roots, but the
+    // durable cc_iter_1 it wrote before refusing stays for the resume
     val dir = java.nio.file.Files.createTempDirectory("cc_resume_").toString
-    ConnectedComponents.runWithStats(spark, edges.toDF("src", "dst"),
-      maxIterations = 1, checkpointDir = Some(dir), reliableEvery = 1,
-      smallGraphThreshold = 0L)._1.count()
+    val refused = intercept[IllegalStateException] {
+      ConnectedComponents.runWithStats(spark, edges.toDF("src", "dst"),
+        maxIterations = 1, checkpointDir = Some(dir), reliableEvery = 1,
+        smallGraphThreshold = 0L)
+    }
+    assert(refused.getMessage.contains("fixpoint"), refused.getMessage)
     assert(new java.io.File(dir).listFiles().exists(_.getName == "cc_iter_1"),
       "kill simulation left no durable iterate")
     // fresh run, same dir: must pick up cc_iter_1 (total iterations match the
@@ -138,35 +142,13 @@ class ConnectedComponentsSpec extends SparkSpec {
       // adaptive default → driver-side union-find path
       val small = runCc(edges)
       assert(small == expect, s"trial $trial small-path mismatch\n got=$small\n exp=$expect")
-      // threshold 0 → distributed large-star/small-star fixpoint, in BOTH
-      // physical forms of the star round (window / join)
-      Seq("window", "join").foreach { impl =>
-        val (dist, iters) = ConnectedComponents.runWithStats(
-          spark, edges.toDF("src", "dst"), smallGraphThreshold = 0L, starImpl = impl)
-        val distMap = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(iters > 0, s"distributed $impl path must actually iterate")
-        assert(distMap == expect, s"trial $trial $impl mismatch\n got=$distMap\n exp=$expect")
-      }
+      // threshold 0 → distributed large-star/small-star fixpoint
+      val (dist, iters) = ConnectedComponents.runWithStats(
+        spark, edges.toDF("src", "dst"), smallGraphThreshold = 0L)
+      val distMap = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(iters > 0, "distributed path must actually iterate")
+      assert(distMap == expect, s"trial $trial distributed mismatch\n got=$distMap\n exp=$expect")
     }
-  }
-
-  test("window and join star rounds take the same iteration count to the same roots") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(23)
-    // long chains + random chords: several rounds to converge
-    val edges = (0L until 300L).map(i => (i, i + 1)) ++
-      Seq.fill(120)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong)).filter(e => e._1 != e._2)
-    val expect = oracle(edges)
-    val results = Seq("window", "join").map { impl =>
-      val (df, iters) = ConnectedComponents.runWithStats(
-        spark, edges.toDF("src", "dst"), smallGraphThreshold = 0L, starImpl = impl)
-      (df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, iters)
-    }
-    assert(results.forall(_._1 == expect))
-    // both forms compute the identical edge-set sequence, so the star-forest
-    // early stop fires at the same iteration in each
-    assert(results.map(_._2).distinct.size == 1,
-      s"iteration counts diverged: ${results.map(_._2)}")
   }
 
   test("star-forest early stop: an input that is already a star forest converges in one round") {
@@ -209,13 +191,5 @@ class ConnectedComponentsSpec extends SparkSpec {
       smallGraphThreshold = 0L, inputCanonical = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expect)
-  }
-
-  test("starImpl is validated") {
-    import spark.implicits._
-    val e = intercept[IllegalArgumentException] {
-      ConnectedComponents.run(spark, Seq((1L, 2L)).toDF("src", "dst"), starImpl = "graphx")
-    }
-    assert(e.getMessage.contains("starImpl"))
   }
 }

@@ -49,7 +49,7 @@ class LengthPruneSpec extends SparkSpec {
       .withColumn("tokens", split(col("blocking_key"), " "))
   }
 
-  private val cfg = PairGen.Config(adaptiveSalt = true, targetBucketSize = 16)
+  private val cfg = PairGen.Config(targetBucketSize = 16)
 
   private def scoredRows(minScore: Option[Double]) =
     PairScorer.scoreCandidates(corpus, cfg, w, minScore = minScore)

@@ -33,7 +33,7 @@ class PairScorerSpec extends SparkSpec {
       .toSet
 
   test("scoreCandidates == scorePairs over candidatePairsWithFeatures (pair set + scores)") {
-    val cfg = PairGen.Config(adaptiveSalt = true, targetBucketSize = 16)
+    val cfg = PairGen.Config(targetBucketSize = 16)
     val scored = PairScorer.scoreCandidates(corpus, cfg)
     assert(scored.columns.toSeq == Seq("src", "dst", "key_sim", "jw_sim", "cos_sim", "score"),
       "lean output must carry ids and scores only")
@@ -45,7 +45,7 @@ class PairScorerSpec extends SparkSpec {
   }
 
   test("scoreCandidates rows are invariant to shuffle-partition count") {
-    val cfg = PairGen.Config(adaptiveSalt = true, targetBucketSize = 16)
+    val cfg = PairGen.Config(targetBucketSize = 16)
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       spark.conf.set("spark.sql.shuffle.partitions", "3")
@@ -61,7 +61,7 @@ class PairScorerSpec extends SparkSpec {
     // every surface distinct -> the embedding and surface-pair memos never
     // hit; the kernel must still match the relational path and emit each
     // unordered mention pair exactly once
-    val cfg = PairGen.Config(adaptiveSalt = false, saltBuckets = 2)
+    val cfg = PairGen.Config(targetBucketSize = 60) // 2 salts over 120 mentions
     val scored = PairScorer.scoreCandidates(unique, cfg)
       .select(col("src"), col("dst"), (col("score") * 1e6).cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq

@@ -2,9 +2,9 @@
 # North-rule letter check: the SAME full pipeline job through the real
 # /opt/spark/bin/spark-submit binary at two parallelism levels (local[8] and
 # local[32]) on the SAME deterministic input, reporting throughput at both
-# plus the scaling efficiency. Complements graft.ScalingBench (which pairs
-# each engine round with same-window hardware ceilings in one JVM); this
-# script evidences the spark-submit surface itself at both widths.
+# plus the scaling efficiency. Complements perfbench (one JVM, layer-traced
+# runs at a fixed width); this script evidences the spark-submit surface
+# itself at both widths.
 #
 # Usage: tools/submit_width_pair.sh [convs] [outRoot]
 #
