@@ -34,12 +34,18 @@ import pkel.scoring.PairScorer
   */
 object Pipeline {
 
+  /** Every field takes part in the stage fingerprints (`fp` hashes the
+    * config's `toString`), so adding, removing or changing one recomputes
+    * the stages it fingerprints instead of replaying them. */
   final case class Config(
+      /** Salted-bucket and MinHash-LSH candidate generation. */
       pairCfg: PairGen.Config = PairGen.Config(),
+      /** Pair-score blend (Jaro-Winkler, indel, cosine). */
       weights: PairScorer.Weights = PairScorer.Weights(),
+      /** θ: a scored residue pair becomes a similarity edge at score ≥ θ. */
       edgeThreshold: Double = 0.90,
+      /** Linking-cascade thresholds and the optional prompt tier. */
       cascade: Cascade.Config = Cascade.Config(),
-      useAnchors: Boolean = true,
       /** Length-bound prune ([[PairScorer.lengthBound]]): drop cross-key LSH
         * pairs that provably score below `edgeThreshold` BEFORE the JW/cosine
         * kernel. Edges and clusters are invariant (LengthPruneSpec); the
@@ -50,11 +56,6 @@ object Pipeline {
         * scales with distinct-key pairs and the prune removes the most
         * expensive (most-dissimilar) ones for free. */
       prunePairs: Boolean = false,
-      /** Max unassigned-residue rows for the edge stage's broadcast
-        * semi-join plan (zero shuffle of the ≥θ pair stream); above it the
-        * stage falls back to shuffle anti-joins against the assigned ids.
-        * 10M longs ≈ 320 MB hashed — comfortable for executor broadcast. */
-      broadcastResidueLimit: Long = 10000000L,
       /** Durable-checkpoint cadence inside the CC fixpoint (every k-th
         * iteration writes parquet instead of localCheckpoint). With the
         * round-5 fixpoint shape (star-forest stop, 1–2 rounds typical) the
@@ -191,7 +192,7 @@ object Pipeline {
 
     // stage 3: linking cascade → entity assignment per mention
     val linked = io.readOrCompute("linked", fp(cfg, "l")) {
-      Cascade.run(spark, keyed.drop("ordering_ok"), entries, cfg.cascade)
+      Cascade.run(spark, keyed, entries, cfg.cascade)
     }
 
     // stages 4+5: candidate pairs (salted blocking keys + MinHash-LSH) fused
@@ -220,45 +221,25 @@ object Pipeline {
     // ONLY to their entity anchor (clustering must not override the linker's
     // disambiguation — e.g. 'km' mentions resolved to Q1 vs Q51 share a
     // blocking key but are different entities). Similarity edges (score ≥ θ;
-    // identical canonical keys score 1.0) cluster the unlinked residue.
+    // identical canonical keys score 1.0) cluster the unlinked residue, so a
+    // scored pair survives only when BOTH endpoints are in that residue: two
+    // left-semi joins against the unassigned ids. The residue is the small
+    // side (most mentions are assigned), so the planner broadcasts it and
+    // the ≥θ pair stream is filtered in place without a shuffle; past the
+    // broadcast threshold the same joins run as shuffle semi-joins.
     val anchorUdf = udf((id: String) => anchorId(id))
     val edges = io.readOrCompute("edges", fp(cfg, "e")) {
-      val linkedStatuses = Seq("linked", "disambiguated", "table_default")
-      if (cfg.useAnchors) {
-        val assignedCond = col("y_pred") =!= "Q100" && col("status").isin(linkedStatuses: _*)
-        val assigned = linked.filter(assignedCond)
-          .select(col("mention_id"), anchorUdf(col("y_pred")).as("anchor"))
-        val anchorEdges = assigned.select(col("mention_id").as("src"), col("anchor").as("dst"))
-        // Keep a scored pair as a similarity edge only when NEITHER endpoint
-        // is cascade-assigned. The direct formulation — two left_anti joins
-        // against the assigned ids — shuffles the entire ≥θ pair stream
-        // TWICE, and the cascade assigns most mentions, so most of that
-        // shuffle is rows about to be discarded (measured at 3M convs:
-        // ~108 s at BOTH widths — the one width-insensitive stage in the
-        // job). The complement set (unassigned residue) is exactly
-        // linked \ assigned — typically ~10% of mentions — so when it fits
-        // a broadcast, two broadcast LEFT SEMI joins keep the same rows
-        // with ZERO shuffle of the pair stream. Counting it costs one
-        // aggregate over the committed linked table. Fallback above the
-        // broadcast limit: the original anti-join pair (still correct at
-        // any residue size).
-        val unassignedIds = linked
-          .filter(!coalesce(assignedCond, lit(false))).select("mention_id")
-        val scoredEdges = scored.filter(col("score") >= cfg.edgeThreshold)
-        val simEdges =
-          if (unassignedIds.count() <= cfg.broadcastResidueLimit)
-            scoredEdges
-              .join(broadcast(unassignedIds.withColumnRenamed("mention_id", "src")),
-                Seq("src"), "left_semi")
-              .join(broadcast(unassignedIds.withColumnRenamed("mention_id", "dst")),
-                Seq("dst"), "left_semi")
-              .select("src", "dst")
-          else scoredEdges
-            .join(assigned.select(col("mention_id").as("src")), Seq("src"), "left_anti")
-            .join(assigned.select(col("mention_id").as("dst")), Seq("dst"), "left_anti")
-            .select("src", "dst")
-        simEdges.unionByName(anchorEdges)
-      } else scored.filter(col("score") >= cfg.edgeThreshold).select("src", "dst")
+      val assignedCond = col("y_pred") =!= "Q100" &&
+        col("status").isin("linked", "disambiguated", "table_default")
+      val anchorEdges = linked.filter(assignedCond)
+        .select(col("mention_id").as("src"), anchorUdf(col("y_pred")).as("dst"))
+      val unassignedIds = linked
+        .filter(!coalesce(assignedCond, lit(false))).select("mention_id")
+      scored.filter(col("score") >= cfg.edgeThreshold)
+        .join(unassignedIds.withColumnRenamed("mention_id", "src"), Seq("src"), "left_semi")
+        .join(unassignedIds.withColumnRenamed("mention_id", "dst"), Seq("dst"), "left_semi")
+        .select("src", "dst")
+        .unionByName(anchorEdges)
     }
 
     // stage 7: connected components (large-star / small-star); iteration

@@ -6,23 +6,23 @@ import org.apache.spark.sql.functions._
 /** Feature construction (projection) stages.
   *
   * Behavioral port of `/root/reference/pk_el/data_preprocessing.py:133-308`:
-  * mention extraction, `[MENTION]`-tagged text, ±N-whitespace-token windows,
-  * HTML table row/column contexts. All per-row scalar transforms; tagged text
-  * is built from native `substring`/`concat` expressions (codegen), the
-  * window/table kernels are Scala UDFs.
+  * the bi-encoder's retrieval feature — `[MENTION]`-tagged text,
+  * ±N-whitespace-token windows, HTML table row/column contexts. All per-row
+  * scalar transforms; tagged text is built from native `substring`/`concat`
+  * expressions (codegen), the window/table kernels are Scala UDFs.
   */
 object Features {
 
   val OpenTag = "[MENTION]"
   val CloseTag = "[/MENTION]"
 
-  /** ±window whitespace tokens around the span, mention tagged
+  /** Whitespace tokens kept on each side of a sentence mention. */
+  val WindowSize = 5
+
+  /** ±`WindowSize` whitespace tokens around the span, mention tagged
     * (`get_text_mention_feature_window`, `data_preprocessing.py:151-189`). */
-  def mentionWindow(text: String, spanStart: Int, spanEnd: Int, windowSize: Int,
-      specialTokens: Boolean = true): String = {
+  def mentionWindow(text: String, spanStart: Int, spanEnd: Int): String = {
     val mention = text.substring(spanStart, spanEnd)
-    if (windowSize == 0)
-      return if (specialTokens) s"$OpenTag $mention $CloseTag" else mention
     // tokenize into non-whitespace runs with offsets
     val tokens = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)] // (start, end)
     var i = 0
@@ -43,100 +43,37 @@ object Features {
       t += 1
     }
     if (mStart < 0 || mEnd < 0) // fall back: alignment failed (reference raises)
-      return if (specialTokens) s"$OpenTag $mention $CloseTag" else mention
-    val startCtx = math.max(0, mStart - windowSize)
-    val endCtx = math.min(tokens.length, mEnd + 1 + windowSize)
+      return s"$OpenTag $mention $CloseTag"
+    val startCtx = math.max(0, mStart - WindowSize)
+    val endCtx = math.min(tokens.length, mEnd + 1 + WindowSize)
     def slice(a: Int, b: Int): Seq[String] = tokens.slice(a, b).map { case (s, e) => text.substring(s, e) }.toSeq
     val before = slice(startCtx, mStart)
-    val mid0 = slice(mStart, mEnd + 1)
-    val mid = if (specialTokens) OpenTag +: mid0 :+ CloseTag else mid0
+    val mid = OpenTag +: slice(mStart, mEnd + 1) :+ CloseTag
     val after = slice(mEnd + 1, endCtx)
     (before ++ mid ++ after).mkString(" ")
   }
 
-  private val mentionWindowUdf = udf((text: String, s: Int, e: Int, w: Int) =>
-    mentionWindow(Option(text).getOrElse(""), s, e, w))
+  private val mentionWindowUdf = udf((text: String, s: Int, e: Int) =>
+    mentionWindow(Option(text).getOrElse(""), s, e))
 
   private val tableRetrievalUdf = udf(
     (html: String, tagged: String, rowIdx: Int, colIdx: Int) =>
       HtmlTable.retrievalContext(Option(html).getOrElse(""), Option(tagged).getOrElse(""), rowIdx, colIdx))
 
-  /** Alternative table-cell context features (P7,
-    * `data_preprocessing.py:193-264`). */
-  def cellHeadersFeature(table: Seq[Seq[String]], tagged: String, row: Int, col: Int): String = {
-    val parts = Seq.newBuilder[String]
-    parts += s"[TABLE CELL] $tagged"
-    if (row < table.length && col < table(row).length) {
-      val rowHeader = if (table(row).nonEmpty) table(row).head else ""
-      val colHeader = if (table.nonEmpty && col < table.head.length) table.head(col) else ""
-      if (col != 0 && rowHeader.nonEmpty) parts += s"[ROW-HEADER] $rowHeader"
-      if (row != 0 && colHeader.nonEmpty) parts += s"[COL-HEADER] $colHeader"
-    }
-    parts.result().mkString(" ")
-  }
-
-  def cellRowColFeature(table: Seq[Seq[String]], tagged: String, rowIdx: Int, colIdx: Int): String = {
-    val rowContent = if (rowIdx >= 0 && rowIdx < table.length) table(rowIdx) else Seq.empty
-    val colContent = table.collect { case r if colIdx >= 0 && colIdx < r.length => r(colIdx) }
-    val parts = Seq.newBuilder[String]
-    parts += s"[CELL] $tagged"
-    if (rowContent.nonEmpty) parts += s"[ROW] ${rowContent.mkString(" | ")}"
-    if (colContent.nonEmpty) parts += s"[COL] ${colContent.mkString(" | ")}"
-    parts.result().mkString(" ")
-  }
-
-  def cellFooterCaptionFeature(tagged: String, caption: String, footer: String): String = {
-    val parts = Seq.newBuilder[String]
-    parts += s"[CELL] $tagged"
-    if (caption != null && caption.nonEmpty) parts += s"[CAPTION] ${caption.trim}"
-    if (footer != null && footer.nonEmpty) parts += s"[FOOTER] ${footer.trim}"
-    parts.result().mkString(" ")
-  }
-
-  def cellFullContextFeature(table: Seq[Seq[String]], tagged: String, rowIdx: Int,
-      colIdx: Int, caption: String, footer: String): String = {
-    val parts = Seq.newBuilder[String]
-    parts += cellRowColFeature(table, tagged, rowIdx, colIdx)
-    if (caption != null && caption.nonEmpty) parts += s"[CAPTION] ${caption.trim}"
-    if (footer != null && footer.nonEmpty) parts += s"[FOOTER] ${footer.trim}"
-    parts.result().mkString(" ")
-  }
-
-  /** Prompt-context assembly (P10, `data_preprocessing.py:311-388`) — kept
-    * for the pluggable external-scorer tier (the LLM tier itself is an
-    * external call and out of the offline engine's scope). */
-  def textContextForLlm(tagged: String): String =
-    "The following context is provided to help you. It shows the sentence from which the mention is derived with the mention tagged.\n" + tagged
-
-  def tableContextForLlm(rowContext: String, colContext: String, footer: String): String = {
-    val parts = Seq.newBuilder[String]
-    parts += "The following context is provided to help you. \n It shows the table row and column from which the mention is derived (with mention tagged) and the table footer, if available."
-    if (rowContext.nonEmpty) parts += s"[ROW] ${rowContext.trim}"
-    if (colContext.nonEmpty) parts += s"[COLUMN] ${colContext.trim}"
-    if (footer != null && footer.nonEmpty) parts += s"[FOOTER] ${footer.trim}"
-    parts.result().mkString("\n")
-  }
-
-  /** Adds mention features used by scoring tiers:
-    * - text_with_tagged_mention (native exprs)
-    * - mention_with_window (sentences: ±`textWindow` tokens; tables: tags only)
-    * - retrieval_feature: the bi-encoder input (sentences: window feature;
-    *   tables: tagged cell + row/col context, `format_table_context_for_retrieval`). */
-  def withMentionFeatures(mentions: DataFrame, textWindow: Int = 5): DataFrame = {
+  /** Adds `retrieval_feature`, the bi-encoder input: for a sentence the
+    * ±5-token window with the mention tagged; for a table cell the tagged
+    * turn text plus the cell's row/column context
+    * (`format_table_context_for_retrieval`). Reads text, span_start,
+    * span_end, is_table, table_html, row_idx and col_idx. */
+  def withRetrievalFeature(mentions: DataFrame): DataFrame = {
     val tagged = concat(
       expr("substring(text, 1, span_start)"),
       lit(OpenTag),
       expr("substring(text, span_start + 1, span_end - span_start)"),
       lit(CloseTag),
       expr("substring(text, span_end + 1, greatest(0, length(text) - span_end))"))
-    mentions
-      .withColumn("text_with_tagged_mention", tagged)
-      .withColumn("mention_with_window",
-        when(col("is_table"), mentionWindowUdf(col("text"), col("span_start"), col("span_end"), lit(0)))
-          .otherwise(mentionWindowUdf(col("text"), col("span_start"), col("span_end"), lit(textWindow))))
-      .withColumn("retrieval_feature",
-        when(col("is_table"),
-          tableRetrievalUdf(col("table_html"), col("text_with_tagged_mention"), col("row_idx"), col("col_idx")))
-          .otherwise(col("mention_with_window")))
+    mentions.withColumn("retrieval_feature",
+      when(col("is_table"), tableRetrievalUdf(col("table_html"), tagged, col("row_idx"), col("col_idx")))
+        .otherwise(mentionWindowUdf(col("text"), col("span_start"), col("span_end"))))
   }
 }

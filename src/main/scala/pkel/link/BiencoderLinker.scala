@@ -23,11 +23,8 @@ object BiencoderLinker {
 
   final case class OntologyVec(paramId: String, vec: Array[Float])
 
-  def ontologyMatrix(entries: Seq[OntologyEntry], embedder: Embedder = Embedder.default,
-      includeDescription: Boolean = true, includeUnits: Boolean = true): Array[OntologyVec] =
-    entries.map { e =>
-      OntologyVec(e.parameterId, embedder.encode(Ontology.embeddingFeature(e, includeDescription, includeUnits)))
-    }.toArray
+  def ontologyMatrix(entries: Seq[OntologyEntry], embedder: Embedder = Embedder.default): Array[OntologyVec] =
+    entries.map(e => OntologyVec(e.parameterId, embedder.encode(Ontology.embeddingFeature(e)))).toArray
 
   /** Top-k by cosine, then threshold+constraint filter, then NIL fallback. */
   def retrieveOne(feature: String, matrix: Array[OntologyVec], embedder: Embedder,
@@ -56,11 +53,9 @@ object BiencoderLinker {
     * Returns one point per threshold, in input order. */
   def sweep(spark: SparkSession, residue: DataFrame, entries: Seq[OntologyEntry],
       featureCol: String, thresholds: Seq[Double] = Seq(0.5, 0.6, 0.7, 0.75, 0.8, 0.9),
-      k: Int = 5, useCategoryConstraint: Boolean = true,
-      embedder: Embedder = Embedder.default): Seq[SweepPoint] =
+      k: Int = 5, embedder: Embedder = Embedder.default): Seq[SweepPoint] =
     thresholds.map { thr =>
-      val out = link(spark, residue, entries, featureCol, k, thr,
-        useCategoryConstraint, embedder).cache()
+      val out = link(spark, residue, entries, featureCol, k, thr, embedder).cache()
       val linked = out.filter(col("status") === "linked").count()
       val resid = out.filter(col("status") === "unlinked").count()
       val f1 = pkel.eval.Metrics.evaluate(
@@ -76,11 +71,12 @@ object BiencoderLinker {
 
   /** Run the bi-encoder tier over residue mentions.
     * Input columns: feature column `featureCol` (retrieval text),
-    * subsetted_concepts (nullable array). Output: + (pred_ids, pred_scores,
+    * subsetted_concepts (nullable array; when present, candidates outside a
+    * non-null subset are dropped). Output: + (pred_ids, pred_scores,
     * y_pred, score, status, tier). */
   def link(spark: SparkSession, residue: DataFrame, entries: Seq[OntologyEntry],
       featureCol: String, k: Int = 5, matchThreshold: Double = 0.75,
-      useCategoryConstraint: Boolean = true, embedder: Embedder = Embedder.default): DataFrame = {
+      embedder: Embedder = Embedder.default): DataFrame = {
     val matrix = ontologyMatrix(entries, embedder)
 
     val outSchema = StructType(residue.schema.fields.toSeq ++ Seq(
@@ -93,7 +89,7 @@ object BiencoderLinker {
 
     val featIdx = residue.schema.fieldIndex(featureCol)
     val subsetIdx =
-      if (useCategoryConstraint && residue.schema.fieldNames.contains("subsetted_concepts"))
+      if (residue.schema.fieldNames.contains("subsetted_concepts"))
         residue.schema.fieldIndex("subsetted_concepts")
       else -1
 

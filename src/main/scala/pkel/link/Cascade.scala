@@ -17,21 +17,10 @@ import pkel.ontology.Ontology
 object Cascade {
 
   final case class Config(
-      fuzzyK: Int = 10,
       fuzzyThreshold: Double = 80.0,
-      fuzzyMode: String = "token",
-      biencoderK: Int = 5,
       biencoderThreshold: Double = 0.75,
-      categoryConstrained: Boolean = true,
-      /** Graft extension (diverges from the reference, which defaults
-        * subset-unmatched mentions to NIL): when category blocking finds no
-        * subset, retrieval runs unconstrained instead of being forced empty —
-        * necessary for typo'd surfaces whose mangled tokens match no category
-        * regex. */
-      unconstrainedFallback: Boolean = true,
       /** Raw-surface fuzzy threshold (graft extension tier). */
       surfaceThreshold: Double = 90.0,
-      textWindow: Int = 5,
       /** Optional tier 5: prompt/LLM linker over the bi-encoder's unlinked
         * residue (reference wiring: `evaluate_prompt_linker.py`). None = the
         * residue stays NIL, as in rounds without an external model. */
@@ -44,32 +33,36 @@ object Cascade {
 
   private val predCols = Seq("mention_id", "label", "blocking_key", "y_pred", "tier", "status", "score")
 
-  /** Run the full cascade over a mention DataFrame (columns: mention_id,
-    * text, label, span_start, span_end, is_table, + table context columns).
-    * Returns (predictions, enriched) where predictions has one row per
-    * mention. */
-  def run(spark: SparkSession, mentions: DataFrame, entries: Seq[OntologyEntry],
-      cfg: Config = Config()): DataFrame = {
-    val index = Ontology.blockingIndex(entries)
+  /** The turn/table context the bi-encoder's retrieval feature is built from. */
+  private val contextCols =
+    Seq("mention_id", "text", "span_start", "span_end", "is_table", "table_html", "row_idx", "col_idx")
 
-    // feature + key derivation (one projection stage)
-    val featured = Features.withMentionFeatures(
-      ExactLinker.withBlockingKey(mentions), cfg.textWindow)
+  /** Run the full cascade over KEYED mentions: the canonical mention schema
+    * (mention_id, text, label, span_start, span_end, is_table + table
+    * context columns) plus the `mention`, `tokens` and `blocking_key`
+    * columns of [[ExactLinker.withBlockingKey]]. The cascade never
+    * re-tokenizes; un-keyed input fails the `require`. Returns one
+    * prediction row per mention with the columns `mention_id, label,
+    * blocking_key, y_pred, tier, status, score`. */
+  def run(spark: SparkSession, keyed: DataFrame, entries: Seq[OntologyEntry],
+      cfg: Config = Config()): DataFrame = {
+    val missing = Seq("mention", "tokens", "blocking_key").filterNot(keyed.columns.contains)
+    require(missing.isEmpty,
+      s"Cascade.run needs keyed mentions (ExactLinker.withBlockingKey); missing ${missing.mkString(", ")}")
+    val index = Ontology.blockingIndex(entries)
 
     def sink(tier: String, df: DataFrame): Unit = cfg.tierSink.foreach(_(tier, df))
 
     // tier 1: exact — emits linked/excluded, residue flows on. The
-    // full-width tier output (turn text, tagged text, table context, debug
-    // candidates) goes to the observability sink only; the cascade's own
-    // flow persists just the columns tiers 2–5 and the final union consume
-    // (ids/labels/keys/statuses + mention, tokens, retrieval_feature) — the
-    // fat text columns would otherwise dominate the cache footprint at
-    // tens of millions of mentions.
-    val exactFull = ExactLinker.link(spark, featured, index)
+    // full-width tier output (turn text, table context, debug candidates)
+    // goes to the observability sink only; the cascade's own flow persists
+    // just the columns tiers 2–5 and the final union consume (ids, labels,
+    // keys, statuses + mention, tokens) — the fat text columns would
+    // otherwise dominate the cache footprint at tens of millions of mentions.
+    val exactFull = ExactLinker.link(spark, keyed, index)
     sink("exact", exactFull)
     val exact = exactFull.select(
-      (predCols.filterNot(_ == "score") ++ Seq("mention", "tokens", "retrieval_feature"))
-        .map(col): _*)
+      (predCols.filterNot(_ == "score") ++ Seq("mention", "tokens")).map(col): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val exactEmitted = exact.filter(col("status").isin(
       ExactLinker.StatusLinked, ExactLinker.StatusDisambiguated,
@@ -78,17 +71,17 @@ object Cascade {
     val residue1 = exact.filter(col("status").isin(
       ExactLinker.StatusAmbiguous, ExactLinker.StatusUnlinked))
 
-    // stage 2: category blocking on the residue
-    val subsetted0 = CategoryBlocker.withSubsets(residue1, entries)
-    val subsetted =
-      if (cfg.unconstrainedFallback)
-        subsetted0.withColumn("subsetted_concepts",
-          when(col("subset_matched"), col("subsetted_concepts")))
-      else subsetted0
+    // stage 2: category blocking on the residue. Graft extension (the
+    // reference defaults subset-unmatched mentions to NIL): when blocking
+    // finds no subset, retrieval runs unconstrained instead of being forced
+    // empty — typo'd surfaces' mangled tokens match no category regex.
+    val subsetted = CategoryBlocker.withSubsets(residue1, entries)
+      .withColumn("subsetted_concepts",
+        when(col("subset_matched"), col("subsetted_concepts")))
 
     // tier 2: fuzzy token scoring, category-constrained
     val fuzzy = FuzzyLinker.link(spark, subsetted.drop("y_pred", "status", "tier"),
-      index, cfg.fuzzyK, cfg.fuzzyThreshold, cfg.fuzzyMode, cfg.categoryConstrained)
+      index, matchThreshold = cfg.fuzzyThreshold)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     sink("fuzzy", fuzzy)
     val fuzzyLinked = fuzzy.filter(col("status") === "linked")
@@ -104,10 +97,12 @@ object Cascade {
     val residue3 = surface.filter(col("status") === "unlinked")
       .drop("y_pred", "status", "tier", "score")
 
-    // tier 4: bi-encoder retrieval on the remaining residue
-    val bienc = BiencoderLinker.link(spark, residue3, entries,
-      featureCol = "retrieval_feature", cfg.biencoderK, cfg.biencoderThreshold,
-      cfg.categoryConstrained)
+    // tier 4: bi-encoder retrieval on the remaining residue — the only
+    // reader of the retrieval feature, so the turn/table context joins back
+    // onto the residue here and the feature is built for these rows alone
+    val withContext = residue3.join(keyed.select(contextCols.map(col): _*), Seq("mention_id"))
+    val bienc = BiencoderLinker.link(spark, Features.withRetrievalFeature(withContext), entries,
+      featureCol = "retrieval_feature", matchThreshold = cfg.biencoderThreshold)
 
     // tier 5 (optional): prompt/LLM linker over the bi-encoder's unlinked
     // residue; the tier merge mirrors merge_llm_and_unmatched_results —

@@ -89,7 +89,6 @@ object ExactLinker {
   // (measured by CascadeProbe at 1M convs / 5.6M mentions: warm cascade
   // 7.4 s → 3.9 s at local[32], 8.5 s → 7.0 s at local[8]; cold 72 s → 22 s).
   val tokenizeUdf = udf(Memo.named("pk_tokenize")((s: String) => PkTokenizer(Option(s).getOrElse(""))))
-  val blockingKeyUdf = udf(Memo.named("pk_blocking_key")((s: String) => PkTokenizer.blockingKey(Option(s).getOrElse(""))))
   private val nonPkUdf = udf(Memo.named("non_pk")((m: String) => isNonPkMention(Option(m).getOrElse(""))))
   private val invalidCtxUdf =
     udf((t: String, s: Int, e: Int) => isInInvalidContext(Option(t).getOrElse(""), s, e))

@@ -16,23 +16,22 @@ import pkel.scoring.Similarity
   * Spark shape: the index is tiny (~160 keys) so it is closed over and
   * shipped once per executor; scoring runs in a batched `mapPartitions`
   * kernel over the residue — no shuffle, no per-row UDF boxing of the index.
-  * String mode joins key tokens in canonical sorted order (the reference
-  * joins a Python frozenset, whose order is hash-dependent; sorted order is
-  * the deterministic refinement, SURVEY.md §7.5 item 5).
+  * A residue row carrying `subsetted_concepts` is scored only against those
+  * concepts; a null subset leaves it unconstrained.
   */
 object FuzzyLinker {
 
-  final case class IndexEntry(keyTokens: Array[String], keyString: String, paramIds: Array[String])
+  final case class IndexEntry(keyTokens: Array[String], paramIds: Array[String])
 
   def buildKernelIndex(index: Seq[(String, Seq[String])]): Array[IndexEntry] =
     index.map { case (key, ids) =>
       val toks = if (key.isEmpty) Array.empty[String] else key.split(" ")
-      IndexEntry(toks, key, ids.toArray)
+      IndexEntry(toks, ids.toArray)
     }.toArray
 
   /** Deterministic top-k for one mention (find_top_k_fuzzy_params_tokens). */
   def topK(tokens: Seq[String], index: Array[IndexEntry], constraint: Set[String],
-      k: Int, matchingMode: String, threshold: Double): Seq[(String, Double)] = {
+      k: Int, threshold: Double): Seq[(String, Double)] = {
     val tokenSet = tokens.distinct
     val scored = Seq.newBuilder[(String, Double)]
     var i = 0
@@ -40,9 +39,7 @@ object FuzzyLinker {
       val e = index(i)
       val ids = if (constraint == null) e.paramIds else e.paramIds.filter(constraint.contains)
       if (ids.nonEmpty) {
-        val score =
-          if (matchingMode == "string") Similarity.indelRatio(tokenSet.mkString(" "), e.keyString)
-          else Similarity.tokenSetScore(tokenSet, e.keyTokens.toSeq, 80.0)
+        val score = Similarity.tokenSetScore(tokenSet, e.keyTokens.toSeq, 80.0)
         if (score >= threshold) ids.foreach(id => scored += ((id, score)))
       }
       i += 1
@@ -96,8 +93,7 @@ object FuzzyLinker {
     * Input columns: mention_id, label, tokens, subsetted_concepts (nullable).
     * Output: input + (pred_ids, pred_scores, y_pred, score, status, tier). */
   def link(spark: SparkSession, residue: DataFrame, index: Seq[(String, Seq[String])],
-      k: Int = 10, matchThreshold: Double = 80.0, matchingMode: String = "token",
-      categoryConstrained: Boolean = true): DataFrame = {
+      k: Int = 10, matchThreshold: Double = 80.0): DataFrame = {
     val kernelIndex = buildKernelIndex(index)
 
     val outSchema = StructType(residue.schema.fields.toSeq ++ Seq(
@@ -110,7 +106,7 @@ object FuzzyLinker {
 
     val tokensIdx = residue.schema.fieldIndex("tokens")
     val subsetIdx =
-      if (categoryConstrained && residue.schema.fieldNames.contains("subsetted_concepts"))
+      if (residue.schema.fieldNames.contains("subsetted_concepts"))
         residue.schema.fieldIndex("subsetted_concepts")
       else -1
 
@@ -123,7 +119,7 @@ object FuzzyLinker {
         val constraint =
           if (subsetIdx >= 0 && !row.isNullAt(subsetIdx)) row.getSeq[String](subsetIdx).toSet
           else null
-        val top = topK(tokens, kernelIndex, constraint, k, matchingMode, matchThreshold)
+        val top = topK(tokens, kernelIndex, constraint, k, matchThreshold)
         val (yPred, score, status) = top.headOption match {
           case Some((id, s)) if s >= matchThreshold => (id, s, "linked")
           case _ => ("Q100", 0.0, "unlinked")

@@ -136,14 +136,13 @@ object Ontology {
     * (`ontology_preprocessing.py:139-171`): `[PARAM] name [SYN] a | b
     * [DESC] … [UNIT] …`, name lowercased as in
     * `prepare_ontology_for_embedding` (`:174-188`). */
-  def embeddingFeature(e: OntologyEntry, includeDescription: Boolean = true,
-      includeUnits: Boolean = true): String = {
+  def embeddingFeature(e: OntologyEntry): String = {
     val parts = Seq.newBuilder[String]
     parts += s"[PARAM] ${e.parameterName.toLowerCase.trim}"
     val syn = e.parameterSynonyms.filter(_.nonEmpty).map(_.trim).mkString(" | ")
     if (syn.nonEmpty) parts += s"[SYN] $syn"
-    if (includeDescription && e.parameterDescription.nonEmpty) parts += s"[DESC] ${e.parameterDescription.trim}"
-    if (includeUnits && e.units.nonEmpty) parts += s"[UNIT] ${e.units.trim}"
+    if (e.parameterDescription.nonEmpty) parts += s"[DESC] ${e.parameterDescription.trim}"
+    if (e.units.nonEmpty) parts += s"[UNIT] ${e.units.trim}"
     parts.result().mkString(" ")
   }
 }

@@ -2,6 +2,8 @@ package pkel
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs (one per suite). */
@@ -31,6 +33,19 @@ trait SparkSpec extends AnyFunSuite {
     }
     n.get()
   }
+
+  /** Children of an executed plan node, looking through the adaptive tree:
+    * `QueryStageExec` nodes are its LEAVES, and the materialized sub-plans
+    * (where joins and exchanges live) are only reachable through each
+    * stage's `plan` field. */
+  def planChildren(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case n => n.children
+  }
+
+  /** Every node of an executed plan, adaptive query stages included. */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: planChildren(p).flatMap(planNodes)
 
   def resourcePath(p: String): String = {
     val url = getClass.getResource(p)

@@ -189,7 +189,7 @@ class TranscriptPipelineSpec extends SparkSpec {
       (1 to 3).contains(r.getInt(0)) && r.getInt(1) == 0
     }, s"bad cell coords: ${coords.take(5).mkString(",")}")
     // the exact tier's Q57 table default fires for the ambiguous-surface slice
-    val linked = pkel.link.Cascade.run(spark, mentions.drop("ordering_ok"), entries)
+    val linked = pkel.link.Cascade.run(spark, pkel.link.ExactLinker.withBlockingKey(mentions), entries)
     val statuses = linked.groupBy("status").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(statuses.getOrElse("table_default", 0L) > 0,
@@ -230,32 +230,91 @@ class TranscriptPipelineSpec extends SparkSpec {
     assert(unsalted == salted, "salting must not change the transitive clusters")
   }
 
-  test("edge stage: broadcast semi-join plan == shuffle anti-join fallback") {
-    // The edge stage keeps a ≥θ pair only when NEITHER endpoint is
-    // cascade-assigned. broadcastResidueLimit selects between the broadcast
-    // semi-join plan (zero shuffle of the pair stream) and the original
-    // shuffle anti-joins; the two MUST emit identical edge sets — and the
-    // residue limit must not leak into stage fingerprints via toString
-    // surprises (each run uses its own root, so both compute fresh).
+  test("edge stage: broadcast and shuffle semi-join plans emit the same edges") {
+    // The edge stage keeps a ≥θ pair only when BOTH endpoints are in the
+    // cascade's unassigned residue: two left-semi joins against the residue
+    // ids. At default settings the planner broadcasts the residue and the
+    // pair stream is filtered where it is scanned; with broadcasting off
+    // the same joins run as shuffle semi-joins. Both plans must emit the
+    // same edges and clusters.
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+
     val seed = 7L
     val transcripts = TranscriptSynth.generate(spark, entries, nConvs = 150, seed = seed)
     val gold = goldDf(transcripts, seed)
-    def edgesWith(limit: Long): (Set[(Long, Long)], Map[Long, Long]) = {
-      val root = Files.createTempDirectory(s"pkel_edges${limit}_").toString
-      val cfg = Pipeline.Config(broadcastResidueLimit = limit)
-      val io = new TableIO(spark, root, s"edges-$limit")
-      val (c, _) = Pipeline.run(spark, transcripts, entries, cfg, io, Some(gold))
+    def edgesWith(tag: String): (Set[(Long, Long)], Map[Long, Long]) = {
+      val root = Files.createTempDirectory(s"pkel_edges_${tag}_").toString
+      val io = new TableIO(spark, root, s"edges-$tag")
+      val (c, _) = Pipeline.run(spark, transcripts, entries, Pipeline.Config(), io, Some(gold))
       val e = spark.read.parquet(s"$root/edges").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       (e, c.select("mention_id", "cluster_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap)
     }
-    val (eBroadcast, cBroadcast) = edgesWith(Long.MaxValue) // force semi-join plan
-    val (eAnti, cAnti) = edgesWith(0L)                      // force anti-join fallback
-    assert(eBroadcast == eAnti,
-      s"edge sets differ: semi-only=${(eBroadcast -- eAnti).take(5)}, " +
-        s"anti-only=${(eAnti -- eBroadcast).take(5)}")
-    assert(cBroadcast == cAnti, "clusters must be identical across edge plans")
+
+    def isScoredScan(p: SparkPlan): Boolean = p match {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.getName == "scored")
+      case _ => false
+    }
+    def pathToScored(p: SparkPlan): Option[List[SparkPlan]] =
+      if (isScoredScan(p)) Some(List(p))
+      else planChildren(p).iterator.flatMap(pathToScored).nextOption().map(p :: _)
+    def semiJoins(p: SparkPlan): Seq[SparkPlan] = planNodes(p).filter {
+      case j: BaseJoinExec => j.joinType == LeftSemi
+      case _ => false
+    }
+
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    def edgePlan(): SparkPlan = {
+      org.apache.spark.sql.pkelbridge.Bridge.waitForListeners(spark)
+      val edgeWrites = plans.toArray(Array.empty[SparkPlan]).toSeq
+        .filter(p => pathToScored(p).isDefined && semiJoins(p).nonEmpty)
+      plans.clear()
+      assert(edgeWrites.size == 1, s"expected one edges write, saw ${edgeWrites.size}")
+      edgeWrites.head
+    }
+
+    spark.listenerManager.register(listener)
+    try {
+      val (eBroadcast, cBroadcast) = edgesWith("broadcast")
+      val broadcastPlan = edgePlan()
+      val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold")
+      val saved = keys.map(k => k -> spark.conf.getOption(k))
+      val (eShuffle, cShuffle) =
+        try {
+          keys.foreach(spark.conf.set(_, "-1"))
+          edgesWith("shuffle")
+        } finally saved.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      val shufflePlan = edgePlan()
+
+      assert(eBroadcast.nonEmpty)
+      assert(eBroadcast == eShuffle,
+        s"edge sets differ: broadcast-only=${(eBroadcast -- eShuffle).take(5)}, " +
+          s"shuffle-only=${(eShuffle -- eBroadcast).take(5)}")
+      assert(cBroadcast == cShuffle, "clusters must be identical across edge plans")
+
+      val broadcastSemis = semiJoins(broadcastPlan)
+      assert(broadcastSemis.size == 2 && broadcastSemis.forall(_.isInstanceOf[BroadcastHashJoinExec]),
+        s"expected two broadcast left-semi joins:\n$broadcastPlan")
+      assert(!pathToScored(broadcastPlan).get.exists(_.isInstanceOf[Exchange]),
+        s"the scored pair stream must not be shuffled:\n$broadcastPlan")
+      val shuffleSemis = semiJoins(shufflePlan)
+      assert(shuffleSemis.size == 2 && !shuffleSemis.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+        s"broadcasting off must plan shuffle semi-joins:\n$shufflePlan")
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("anchor/sim edge subgraphs are node-disjoint (the CC-split precondition)") {

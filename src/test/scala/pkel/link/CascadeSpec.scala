@@ -13,10 +13,12 @@ class CascadeSpec extends SparkSpec {
 
   lazy val entries = Ontology.load()
 
+  private def keyedFixture(modality: String) =
+    ExactLinker.withBlockingKey(MentionReader.readJsonl(spark,
+      resourcePath(s"/pkel/data/$modality/test.jsonl"), isTable = modality == "tables"))
+
   test("category blocking quality on sentence fixtures") {
-    val mentions = MentionReader.readJsonl(spark, resourcePath("/pkel/data/sentences/test.jsonl"), isTable = false)
-    val withMention = ExactLinker.withBlockingKey(mentions)
-    val sub = CategoryBlocker.withSubsets(withMention, entries)
+    val sub = CategoryBlocker.withSubsets(keyedFixture("sentences"), entries)
     val stats = Metrics.evaluateSubsetMatching(spark, sub,
       Ontology.paramToCategory(entries), entries.size).head()
     val total = stats.getAs[Long]("total")
@@ -30,8 +32,7 @@ class CascadeSpec extends SparkSpec {
   }
 
   test("full cascade on sentence fixtures: micro-F1 and pairwise F1") {
-    val mentions = MentionReader.readJsonl(spark, resourcePath("/pkel/data/sentences/test.jsonl"), isTable = false)
-    val preds = Cascade.run(spark, mentions, entries).cache()
+    val preds = Cascade.run(spark, keyedFixture("sentences"), entries).cache()
     assert(preds.count() == 293, "cascade must emit exactly one prediction per mention")
     assert(preds.select("mention_id").distinct().count() == 293)
 
@@ -57,8 +58,7 @@ class CascadeSpec extends SparkSpec {
   }
 
   test("full cascade on table fixtures") {
-    val mentions = MentionReader.readJsonl(spark, resourcePath("/pkel/data/tables/test.jsonl"), isTable = true)
-    val preds = Cascade.run(spark, mentions, entries).cache()
+    val preds = Cascade.run(spark, keyedFixture("tables"), entries).cache()
     assert(preds.count() == 275)
     val m = Metrics.evaluate(preds.select(col("label").as("y_true"), col("y_pred")))
     val pw = Metrics.pairwiseF1(preds.select(col("label").as("gold"), col("y_pred").as("pred")))
@@ -69,11 +69,33 @@ class CascadeSpec extends SparkSpec {
   test("fuzzy tier: deterministic tie-break ordering") {
     val index = Ontology.blockingIndex(entries)
     val kernel = FuzzyLinker.buildKernelIndex(index)
-    val top = FuzzyLinker.topK(Seq("cl"), kernel, null, 10, "token", 50.0)
+    val top = FuzzyLinker.topK(Seq("cl"), kernel, null, 10, 50.0)
     // ordering must be (-score, param_id)
     val sorted = top.sortBy { case (id, s) => (-s, id) }
     assert(top == sorted, s"tie-break violated: $top")
     // repeated invocations identical
-    assert(top == FuzzyLinker.topK(Seq("cl"), kernel, null, 10, "token", 50.0))
+    assert(top == FuzzyLinker.topK(Seq("cl"), kernel, null, 10, 50.0))
+  }
+
+  test("cascade input contract: un-keyed mentions fail the require") {
+    val raw = MentionReader.readJsonl(spark, resourcePath("/pkel/data/sentences/test.jsonl"), isTable = false)
+    val e = intercept[IllegalArgumentException](Cascade.run(spark, raw, entries))
+    assert(e.getMessage.contains("mention, tokens, blocking_key"), e.getMessage)
+  }
+
+  test("per-mention cascade output is pinned by an order-independent digest") {
+    // bit_xor of a per-row hash: independent of partitioning and row order,
+    // sensitive to any change of one mention's prediction, tier, status or
+    // score. The values are the cascade's output before the cascade took
+    // keyed input and built retrieval features for the bi-encoder residue
+    // only; both changes keep every row identical.
+    def digest(modality: String): (Long, Long) = {
+      val r = Cascade.run(spark, keyedFixture(modality), entries)
+        .agg(count(lit(1)), expr("bit_xor(xxhash64(mention_id, y_pred, tier, status, score))"))
+        .head()
+      (r.getLong(0), r.getLong(1))
+    }
+    assert(digest("sentences") == ((293L, 8510626364730370385L)))
+    assert(digest("tables") == ((275L, -9035217638421210057L)))
   }
 }

@@ -154,8 +154,8 @@ class PromptLinkerSpec extends SparkSpec {
   }
 
   test("cascade tier 5 consumes exactly the bi-encoder's unlinked residue") {
-    val mentions = MentionReader.readJsonl(spark,
-      resourcePath("/pkel/data/sentences/test.jsonl"), isTable = false)
+    val mentions = ExactLinker.withBlockingKey(MentionReader.readJsonl(spark,
+      resourcePath("/pkel/data/sentences/test.jsonl"), isTable = false))
     val base = Cascade.run(spark, mentions, entries).cache()
     val baseUnlinked = base.filter(col("tier") === "biencoder" && col("status") === "unlinked").count()
     val baseLinkedBienc = base.filter(col("tier") === "biencoder" && col("status") === "linked").count()

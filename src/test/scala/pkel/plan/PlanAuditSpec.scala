@@ -21,20 +21,11 @@ class PlanAuditSpec extends SparkSpec {
   /** (skewedPartitions, totalSplitSpecs, planHasSkewFlag) from the final
     * adaptive plan of an executed DataFrame. */
   private def skewSplitStats(df: org.apache.spark.sql.DataFrame): (Int, Int, Boolean) = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec}
+    import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
     import org.apache.spark.sql.execution.PartialReducerPartitionSpec
     val plan = df.queryExecution.executedPlan
-    // QueryStageExec nodes are LEAVES of the adaptive tree — their materialized
-    // sub-plans (where the skew-handled join actually lives) are only reachable
-    // by recursing through each stage's `plan` field
-    def allNodes(p: SparkPlan): Seq[SparkPlan] =
-      p.collect { case n => n }.flatMap {
-        case q: QueryStageExec => q +: allNodes(q.plan)
-        case a: AdaptiveSparkPlanExec => a +: allNodes(a.executedPlan)
-        case n => Seq(n)
-      }
-    val reads = allNodes(plan).collect { case r: AQEShuffleReadExec => r }
+    // the skew-handled join lives inside a query stage's sub-plan
+    val reads = planNodes(plan).collect { case r: AQEShuffleReadExec => r }
     val skewedReads = reads.filter(_.hasSkewedPartition)
     val splits = reads.map(_.partitionSpecs.count(_.isInstanceOf[PartialReducerPartitionSpec])).sum
     val flag = plan.toString.split("== Initial Plan ==").head.contains("skew=true")

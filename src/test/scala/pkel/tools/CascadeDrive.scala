@@ -3,7 +3,7 @@ package pkel.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import pkel.io.MentionReader
-import pkel.link.Cascade
+import pkel.link.{Cascade, ExactLinker}
 import pkel.ontology.Ontology
 
 /** Error analysis driver: per-blocking-key disagreement dump.
@@ -23,12 +23,11 @@ object CascadeDrive {
       in.close(); tmp.toFile.deleteOnExit()
       tmp.toString
     }
-    val mentions = MentionReader.readJsonl(spark, path, isTable = modality == "tables")
+    val mentions = ExactLinker.withBlockingKey(
+      MentionReader.readJsonl(spark, path, isTable = modality == "tables"))
     val entries = Ontology.load()
     val preds = Cascade.run(spark, mentions, entries).cache()
-    val m = mentions.select("mention_id", "text", "span_start", "span_end")
-    val joined = preds.join(m, "mention_id")
-      .withColumn("mention", expr("substring(text, span_start+1, span_end-span_start)"))
+    val joined = preds.join(mentions.select("mention_id", "mention"), "mention_id")
     // keys with >1 distinct (gold,pred) combination and >1 mention
     val multi = joined.groupBy("blocking_key")
       .agg(count(lit(1)).as("n"),

@@ -14,10 +14,10 @@ object TypoDrive {
     val vs = TranscriptSynth.variants(entries)
     val goldUdf = udf((convId: String, turn: Int) =>
       TranscriptSynth.goldForVariants(vs, seed, convId.stripPrefix("c").toLong, turn).orNull)
-    val withGold = mentions.withColumn("gold", goldUdf(col("conv_id"), col("turn_idx")))
-    val preds = pkel.link.Cascade.run(spark, withGold.drop("ordering_ok"), entries)
-    val j = preds.join(withGold.select("mention_id", "gold", "text", "span_start", "span_end"), "mention_id")
-      .withColumn("mention", expr("substring(text, span_start+1, span_end-span_start)"))
+    val keyed = pkel.link.ExactLinker.withBlockingKey(mentions)
+      .withColumn("gold", goldUdf(col("conv_id"), col("turn_idx")))
+    val preds = pkel.link.Cascade.run(spark, keyed, entries)
+    val j = preds.join(keyed.select("mention_id", "gold", "mention"), "mention_id")
     println("== wrong or unlinked vs gold (gold != Q100) ==")
     j.filter(col("gold") =!= "Q100" && col("y_pred") =!= col("gold"))
       .groupBy("gold", "y_pred", "tier", "status", "mention").count()
