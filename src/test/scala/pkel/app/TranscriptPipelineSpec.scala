@@ -230,13 +230,15 @@ class TranscriptPipelineSpec extends SparkSpec {
     assert(unsalted == salted, "salting must not change the transitive clusters")
   }
 
-  test("edge stage: broadcast and shuffle semi-join plans emit the same edges") {
+  test("edge stage: broadcast semi-join plan == shuffle anti-join fallback") {
     // The edge stage keeps a ≥θ pair only when BOTH endpoints are in the
     // cascade's unassigned residue: two left-semi joins against the residue
     // ids. At default settings the planner broadcasts the residue and the
     // pair stream is filtered where it is scanned; with broadcasting off
     // the same joins run as shuffle semi-joins. Both plans must emit the
-    // same edges and clusters.
+    // same edges and clusters, and their similarity edges must equal the
+    // direct formulation — shuffle left-anti joins of the ≥θ pairs against
+    // the cascade-ASSIGNED ids — recomputed here from the committed tables.
     import org.apache.spark.sql.catalyst.plans.LeftSemi
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.exchange.Exchange
@@ -246,14 +248,26 @@ class TranscriptPipelineSpec extends SparkSpec {
     val seed = 7L
     val transcripts = TranscriptSynth.generate(spark, entries, nConvs = 150, seed = seed)
     val gold = goldDf(transcripts, seed)
-    def edgesWith(tag: String): (Set[(Long, Long)], Map[Long, Long]) = {
+    val broadcastKeys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    def withoutBroadcast[T](body: => T): T = {
+      val saved = broadcastKeys.map(k => k -> spark.conf.getOption(k))
+      try {
+        broadcastKeys.foreach(spark.conf.set(_, "-1"))
+        body
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    def edgesWith(tag: String): (Set[(Long, Long)], Map[Long, Long], String) = {
       val root = Files.createTempDirectory(s"pkel_edges_${tag}_").toString
       val io = new TableIO(spark, root, s"edges-$tag")
       val (c, _) = Pipeline.run(spark, transcripts, entries, Pipeline.Config(), io, Some(gold))
       val e = spark.read.parquet(s"$root/edges").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       (e, c.select("mention_id", "cluster_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap)
+        .map(r => (r.getLong(0), r.getLong(1))).toMap, root)
     }
 
     def isScoredScan(p: SparkPlan): Boolean = p match {
@@ -285,20 +299,27 @@ class TranscriptPipelineSpec extends SparkSpec {
 
     spark.listenerManager.register(listener)
     try {
-      val (eBroadcast, cBroadcast) = edgesWith("broadcast")
+      val (eBroadcast, cBroadcast, broadcastRoot) = edgesWith("broadcast")
       val broadcastPlan = edgePlan()
-      val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      val saved = keys.map(k => k -> spark.conf.getOption(k))
-      val (eShuffle, cShuffle) =
-        try {
-          keys.foreach(spark.conf.set(_, "-1"))
-          edgesWith("shuffle")
-        } finally saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
+      val (eShuffle, cShuffle, _) = withoutBroadcast(edgesWith("shuffle"))
       val shufflePlan = edgePlan()
+
+      val antiJoinSim = withoutBroadcast {
+        val linked = spark.read.parquet(s"$broadcastRoot/linked")
+        val assigned = linked.filter(col("y_pred") =!= "Q100" &&
+          col("status").isin("linked", "disambiguated", "table_default")).select("mention_id")
+        spark.read.parquet(s"$broadcastRoot/scored")
+          .filter(col("score") >= Pipeline.Config().edgeThreshold)
+          .join(assigned.withColumnRenamed("mention_id", "src"), Seq("src"), "left_anti")
+          .join(assigned.withColumnRenamed("mention_id", "dst"), Seq("dst"), "left_anti")
+          .select("src", "dst").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+      }
+      val semiJoinSim = eBroadcast.filter(_._2 >= 0L)
+      assert(semiJoinSim.nonEmpty)
+      assert(semiJoinSim == antiJoinSim,
+        s"similarity edges differ: semi-only=${(semiJoinSim -- antiJoinSim).take(5)}, " +
+          s"anti-only=${(antiJoinSim -- semiJoinSim).take(5)}")
 
       assert(eBroadcast.nonEmpty)
       assert(eBroadcast == eShuffle,
