@@ -223,10 +223,12 @@ object Pipeline {
     // blocking key but are different entities). Similarity edges (score ≥ θ;
     // identical canonical keys score 1.0) cluster the unlinked residue, so a
     // scored pair survives only when BOTH endpoints are in that residue: two
-    // left-semi joins against the unassigned ids. The residue is the small
-    // side (most mentions are assigned), so the planner broadcasts it and
-    // the ≥θ pair stream is filtered in place without a shuffle; past the
-    // broadcast threshold the same joins run as shuffle semi-joins.
+    // left-semi joins against the unassigned ids. The broadcast is forced:
+    // the planner sizes the join from the `linked` scan, not the residue, so
+    // at 3M convs (~1.7M residue ids) it would plan shuffle joins and move
+    // the ~500M-row ≥θ pair stream twice (~108 s vs ~11 s broadcast,
+    // BENCH/PIPELINE_SCALE.md). Broadcast, the pair stream is filtered
+    // where it is scanned.
     val anchorUdf = udf((id: String) => anchorId(id))
     val edges = io.readOrCompute("edges", fp(cfg, "e")) {
       val assignedCond = col("y_pred") =!= "Q100" &&
@@ -236,8 +238,8 @@ object Pipeline {
       val unassignedIds = linked
         .filter(!coalesce(assignedCond, lit(false))).select("mention_id")
       scored.filter(col("score") >= cfg.edgeThreshold)
-        .join(unassignedIds.withColumnRenamed("mention_id", "src"), Seq("src"), "left_semi")
-        .join(unassignedIds.withColumnRenamed("mention_id", "dst"), Seq("dst"), "left_semi")
+        .join(broadcast(unassignedIds.withColumnRenamed("mention_id", "src")), Seq("src"), "left_semi")
+        .join(broadcast(unassignedIds.withColumnRenamed("mention_id", "dst")), Seq("dst"), "left_semi")
         .select("src", "dst")
         .unionByName(anchorEdges)
     }

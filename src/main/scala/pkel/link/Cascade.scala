@@ -99,8 +99,11 @@ object Cascade {
 
     // tier 4: bi-encoder retrieval on the remaining residue — the only
     // reader of the retrieval feature, so the turn/table context joins back
-    // onto the residue here and the feature is built for these rows alone
-    val withContext = residue3.join(keyed.select(contextCols.map(col): _*), Seq("mention_id"))
+    // onto the residue here and the feature is built for these rows alone.
+    // The residue (the cascade's last, smallest) is the broadcast side; the
+    // keyed context columns stream through the join without a shuffle.
+    val withContext = keyed.select(contextCols.map(col): _*)
+      .join(broadcast(residue3), Seq("mention_id"))
     val bienc = BiencoderLinker.link(spark, Features.withRetrievalFeature(withContext), entries,
       featureCol = "retrieval_feature", matchThreshold = cfg.biencoderThreshold)
 

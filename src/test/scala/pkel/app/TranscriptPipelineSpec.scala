@@ -233,12 +233,15 @@ class TranscriptPipelineSpec extends SparkSpec {
   test("edge stage: broadcast semi-join plan == shuffle anti-join fallback") {
     // The edge stage keeps a ≥θ pair only when BOTH endpoints are in the
     // cascade's unassigned residue: two left-semi joins against the residue
-    // ids. At default settings the planner broadcasts the residue and the
-    // pair stream is filtered where it is scanned; with broadcasting off
-    // the same joins run as shuffle semi-joins. Both plans must emit the
-    // same edges and clusters, and their similarity edges must equal the
-    // direct formulation — shuffle left-anti joins of the ≥θ pairs against
-    // the cascade-ASSIGNED ids — recomputed here from the committed tables.
+    // ids, broadcast by hint so the pair stream is filtered where it is
+    // scanned. The hint must hold where the planner alone would not
+    // broadcast, so the stage runs twice: at default settings and with
+    // Spark's broadcast thresholds off (a residue past the threshold). Both
+    // runs must plan two broadcast semi-joins with no shuffle of the pair
+    // stream and emit the same edges and clusters, and the similarity edges
+    // must equal the direct formulation — shuffle left-anti joins of the ≥θ
+    // pairs against the cascade-ASSIGNED ids — recomputed from the
+    // committed tables.
     import org.apache.spark.sql.catalyst.plans.LeftSemi
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.exchange.Exchange
@@ -299,42 +302,41 @@ class TranscriptPipelineSpec extends SparkSpec {
 
     spark.listenerManager.register(listener)
     try {
-      val (eBroadcast, cBroadcast, broadcastRoot) = edgesWith("broadcast")
-      val broadcastPlan = edgePlan()
-      val (eShuffle, cShuffle, _) = withoutBroadcast(edgesWith("shuffle"))
-      val shufflePlan = edgePlan()
+      val (eDefault, cDefault, defaultRoot) = edgesWith("default")
+      val defaultPlan = edgePlan()
+      val (eNoAuto, cNoAuto, _) = withoutBroadcast(edgesWith("noauto"))
+      val noAutoPlan = edgePlan()
 
       val antiJoinSim = withoutBroadcast {
-        val linked = spark.read.parquet(s"$broadcastRoot/linked")
+        val linked = spark.read.parquet(s"$defaultRoot/linked")
         val assigned = linked.filter(col("y_pred") =!= "Q100" &&
           col("status").isin("linked", "disambiguated", "table_default")).select("mention_id")
-        spark.read.parquet(s"$broadcastRoot/scored")
+        spark.read.parquet(s"$defaultRoot/scored")
           .filter(col("score") >= Pipeline.Config().edgeThreshold)
           .join(assigned.withColumnRenamed("mention_id", "src"), Seq("src"), "left_anti")
           .join(assigned.withColumnRenamed("mention_id", "dst"), Seq("dst"), "left_anti")
           .select("src", "dst").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
       }
-      val semiJoinSim = eBroadcast.filter(_._2 >= 0L)
+      val semiJoinSim = eDefault.filter(_._2 >= 0L)
       assert(semiJoinSim.nonEmpty)
       assert(semiJoinSim == antiJoinSim,
         s"similarity edges differ: semi-only=${(semiJoinSim -- antiJoinSim).take(5)}, " +
           s"anti-only=${(antiJoinSim -- semiJoinSim).take(5)}")
 
-      assert(eBroadcast.nonEmpty)
-      assert(eBroadcast == eShuffle,
-        s"edge sets differ: broadcast-only=${(eBroadcast -- eShuffle).take(5)}, " +
-          s"shuffle-only=${(eShuffle -- eBroadcast).take(5)}")
-      assert(cBroadcast == cShuffle, "clusters must be identical across edge plans")
+      assert(eDefault.nonEmpty)
+      assert(eDefault == eNoAuto,
+        s"edge sets differ: default-only=${(eDefault -- eNoAuto).take(5)}, " +
+          s"thresholds-off-only=${(eNoAuto -- eDefault).take(5)}")
+      assert(cDefault == cNoAuto, "clusters must be identical across broadcast settings")
 
-      val broadcastSemis = semiJoins(broadcastPlan)
-      assert(broadcastSemis.size == 2 && broadcastSemis.forall(_.isInstanceOf[BroadcastHashJoinExec]),
-        s"expected two broadcast left-semi joins:\n$broadcastPlan")
-      assert(!pathToScored(broadcastPlan).get.exists(_.isInstanceOf[Exchange]),
-        s"the scored pair stream must not be shuffled:\n$broadcastPlan")
-      val shuffleSemis = semiJoins(shufflePlan)
-      assert(shuffleSemis.size == 2 && !shuffleSemis.exists(_.isInstanceOf[BroadcastHashJoinExec]),
-        s"broadcasting off must plan shuffle semi-joins:\n$shufflePlan")
+      for ((tag, plan) <- Seq("default" -> defaultPlan, "thresholds off" -> noAutoPlan)) {
+        val semis = semiJoins(plan)
+        assert(semis.size == 2 && semis.forall(_.isInstanceOf[BroadcastHashJoinExec]),
+          s"expected two broadcast left-semi joins ($tag):\n$plan")
+        assert(!pathToScored(plan).get.exists(_.isInstanceOf[Exchange]),
+          s"the scored pair stream must not be shuffled ($tag):\n$plan")
+      }
     } finally spark.listenerManager.unregister(listener)
   }
 

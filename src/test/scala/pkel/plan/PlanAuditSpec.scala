@@ -82,6 +82,36 @@ class PlanAuditSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), s"index join must broadcast:\n${plan.take(2000)}")
   }
 
+  test("cascade context join broadcasts the bi-encoder residue, not the keyed mentions") {
+    // the retrieval feature reads the turn/table context of the cascade's
+    // last residue only: the keyed scan (every mention's text and table
+    // html) streams through the join and the residue is the build side, so
+    // the join never shuffles or broadcasts mention-scale text
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val entries = Ontology.load()
+    val root = java.nio.file.Files.createTempDirectory("pkel_ctxjoin_").toString
+    pkel.link.ExactLinker.withBlockingKey(pkel.io.MentionReader.readJsonl(spark,
+      resourcePath("/pkel/data/sentences/test.jsonl"), isTable = false))
+      .write.parquet(s"$root/keyed")
+    val preds = pkel.link.Cascade.run(spark, spark.read.parquet(s"$root/keyed"), entries)
+    assert(preds.collect().length == 293)
+    val plan = preds.queryExecution.executedPlan
+    def readsContext(p: SparkPlan): Boolean = planNodes(p).exists {
+      case s: FileSourceScanExec => s.output.exists(_.name == "table_html")
+      case _ => false
+    }
+    // (build, streamed) children of every broadcast hash join
+    val sides = planNodes(plan).collect { case j: BroadcastHashJoinExec =>
+      if (j.buildSide == BuildLeft) (j.left, j.right) else (j.right, j.left)
+    }
+    assert(sides.exists { case (_, streamed) => readsContext(streamed) },
+      s"the keyed context scan must stream through a broadcast join:\n$plan")
+    assert(!sides.exists { case (build, _) => readsContext(build) },
+      s"the keyed context scan must not be a build side:\n$plan")
+  }
+
   test("bucket-kernel scoring path: one mention-scale exchange, no join, no pair shuffle") {
     import spark.implicits._
     val keyed = (1L to 500L).map(i => (i, if (i % 7 == 0) "auc inf" else "cl", Seq("cl"), s"m$i"))
