@@ -4,46 +4,18 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Minimal bridge into `private[sql]` Column↔Expression conversion (the
-  * public API for this disappeared in Spark 4's Column refactor; extension
-  * libraries conventionally host a shim inside the sql package namespace). */
+/** Minimal bridge into `private[sql]` / `private[spark]` API: Column↔Expression
+  * conversion (the public API for this disappeared in Spark 4's Column
+  * refactor; extension libraries conventionally host a shim inside the sql
+  * package namespace) and the listener-bus drain. Custom expressions such as
+  * `pkel.functions.IndelRatio` and the pair kernel's generator enter the
+  * Column API through [[column]]. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** `SparkSession.internalCreateDataFrame` shim: build a DataFrame over an
-    * RDD of InternalRows (UnsafeRows) without the external-Row encoder round
-    * trip — the per-row boxing of that round trip is a GC bottleneck for
-    * billion-row kernel outputs. */
-  def internalDf(spark: org.apache.spark.sql.SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
 
   /** Drain the async listener bus (`private[spark]`) so a test counting
     * Spark jobs via a SparkListener observes every event before asserting. */
   def waitForListeners(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
-
-  /** Share one materialization of a DataFrame between several downstream
-    * plans WITHOUT the CacheManager: re-plan `origin`'s executed RDD as a
-    * LogicalRDD that keeps the executed plan's output partitioning and
-    * ordering — `Dataset.checkpoint`'s mechanics minus any persistence.
-    * Consumers of the returned frame re-run only the narrow post-shuffle
-    * tail of the lineage; the shuffle MAP stages behind it execute once
-    * (shuffle files are written once per shuffle id and re-fetched by every
-    * consumer job). Because each call creates a FRESH lineage (new shuffle
-    * ids), repeated invocations recompute from the inputs — nothing is
-    * served across invocations, unlike a persist, which the CacheManager
-    * would silently substitute into later identical plans.
-    * NOTE: `toRdd` materializes the plan's exchanges EAGERLY (adaptive
-    * stages run here, not at the consumer's action). */
-  def shareLineage(origin: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val ds = origin.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    val rdd = origin.queryExecution.toRdd
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      ds.sparkSession,
-      org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false))
-  }
 }

@@ -51,8 +51,8 @@ object Pipeline {
         * kernel. Edges and clusters are invariant (LengthPruneSpec); the
         * Summary's scored-pair count shrinks by exactly the pruned pairs,
         * which land in the metrics table as `length_pruned_pairs`. Off by
-        * default so the scored-pairs/sec metric stays comparable across
-        * rounds; turn on when deploying — at 100 TB the cross-key pair list
+        * default so the scored-pair count stays comparable across rounds;
+        * turn on when deploying — at 100 TB the cross-key pair list
         * scales with distinct-key pairs and the prune removes the most
         * expensive (most-dissimilar) ones for free. */
       prunePairs: Boolean = false,
@@ -69,7 +69,7 @@ object Pipeline {
   final case class Summary(
       mentions: Long, pairs: Long, edges: Long, clusters: Long,
       pairwiseF1: Double, pairwisePrecision: Double, pairwiseRecall: Double,
-      pairwiseF1AtKey: Double, scoredPairsPerSec: Double, wallSec: Double)
+      pairwiseF1AtKey: Double, wallSec: Double)
 
   private def fp(cfg: Config, extra: String = ""): String =
     (cfg.toString + extra).hashCode.toHexString
@@ -196,8 +196,10 @@ object Pipeline {
     }
 
     // stages 4+5: candidate pairs (salted blocking keys + MinHash-LSH) fused
-    // with batched scoring — pairs are born with both sides' features, so the
-    // kernel pipelines on the bucket-join output without shuffling pair rows.
+    // with batched scoring in one lazy plan — the bucket kernel enumerates
+    // and scores each salted bucket's pairs in place, so no pair row is
+    // shuffled; only the sparse rep-star and LSH pairs go through the row
+    // kernel.
     // The LSH oversize-bucket drop counts what it discards into
     // PairDropMetrics accumulators during the commit's write action; the
     // drained snapshot lands in the metrics table, so candidate-recall
@@ -324,8 +326,7 @@ object Pipeline {
       case None => (Double.NaN, Double.NaN, Double.NaN, Double.NaN)
     }
 
-    val summary = Summary(nMentions, nPairs, nEdges, nClusters, f1, p, r, f1Key,
-      if (wallSec > 0) nPairs / wallSec else 0.0, wallSec)
+    val summary = Summary(nMentions, nPairs, nEdges, nClusters, f1, p, r, f1Key, wallSec)
     (clusters, summary)
   }
 }

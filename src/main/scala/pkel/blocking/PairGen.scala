@@ -23,8 +23,10 @@ import scala.util.hashing.MurmurHash3
   *   salted pairs as rows: one window pass on `blocking_key` (key frequency)
   *   and one `groupBy(bucket_key)` build the [[saltedBucketTable]], and the
   *   bucket kernel enumerates and scores each bucket's pairs in place. The
-  *   relational [[candidatePairsWithFeatures]] — the kernel's spec oracle —
-  *   enumerates the same pairs with a streaming bucket self-join;
+  *   rep star reads a second [[annotated]] in the same plan, so the
+  *   blocking_key exchange runs once and is reused. The relational
+  *   [[candidatePairsWithFeatures]] — the kernel's spec oracle — enumerates
+  *   the same pairs with a streaming bucket self-join;
   * - MinHash-LSH runs over *distinct* blocking keys (one representative
   *   mention per key): all mentions of a key share one token set, so banding
   *   them individually would replicate every hot key's block once per band.
@@ -37,10 +39,12 @@ import scala.util.hashing.MurmurHash3
 object PairGen {
 
   final case class Config(
-      minhashFunctions: Int = 32,
-      lshBands: Int = 8,
       maxBucketSize: Int = 1000,     // LSH buckets above this are dropped
       targetBucketSize: Int = 64)    // salted buckets: aim C(target,2) pairs each
+
+  /** MinHash signature length and LSH band count (4 rows per band). */
+  private val MinhashFunctions = 32
+  private val LshBands = 8
 
   /** MinHash signature of a token set: k seeded min-hashes. */
   def minhash(tokens: Seq[String], k: Int): Array[Int] = {
@@ -112,8 +116,9 @@ object PairGen {
   /** Per-key annotation in a single exchange on blocking_key: key frequency
     * (salt factor) via an unordered count window. The downstream
     * per-(key,salt) rep aggregation and the rep-star window reuse this
-    * partitioning — no further key-side exchange. Public so callers fusing
-    * both pair generators can share one lineage of it. */
+    * partitioning — no further key-side exchange. A plan that reads it
+    * twice (the bucket table and the rep star) runs the exchange once: the
+    * second read is a ReusedExchange. */
   def annotated(mentions: DataFrame, cfg: Config = Config()): DataFrame = {
     // project EARLY (guide §2.3): only (mention_id, blocking_key, mention)
     // ride the key exchange + count window. The tokens array — the fattest
@@ -154,7 +159,7 @@ object PairGen {
     * (measured: a 3M-conv corpus whose hottest keys salt into ~10^4 buckets
     * took 11 CC iterations, the fixpoint 59% of the job wall), while the
     * star shape contracts in O(1) rounds at ANY key skew. */
-  private def repStarPairs(annotated: DataFrame): DataFrame = {
+  private[pkel] def repStarPairs(annotated: DataFrame): DataFrame = {
     val reps = annotated.groupBy("blocking_key", "salt")
       .agg(min("mention_id").as("rep"),
         min_by(col("mention"), col("mention_id")).as("rep_mention"))
@@ -188,7 +193,7 @@ object PairGen {
         min_by(col("mention"), col("mention_id")).as("mention"))
     val banded = keyReps
       .select(col("mention_id"), col("blocking_key"), col("mention"),
-        explode(minhashUdf(col("tokens"), lit(cfg.minhashFunctions), lit(cfg.lshBands))).as("band"))
+        explode(minhashUdf(col("tokens"), lit(MinhashFunctions), lit(LshBands))).as("band"))
       .withColumn("bucket_key", col("band").cast("string"))
       .select(("bucket_key" +: memberCols).map(col): _*)
     // LSH buckets run up to maxBucketSize (default 1000) members; the
@@ -216,32 +221,17 @@ object PairGen {
     * Every bucket holds exactly one non-empty blocking key. Pair enumeration
     * happens inside the scoring kernel, so the quadratic pair stream is never
     * materialized as a relational intermediate. */
-  def saltedBucketTable(mentions: DataFrame, cfg: Config = Config()): DataFrame =
-    saltedBucketTableFromAnnotated(annotated(mentions, cfg))
-
-  /** [[saltedBucketTable]] over an already-annotated table — lets
-    * `PairScorer.scoreCandidates` share one lineage of the key exchange +
-    * count window between its two physical plans. */
-  def saltedBucketTableFromAnnotated(ann: DataFrame): DataFrame = {
+  def saltedBucketTable(mentions: DataFrame, cfg: Config = Config()): DataFrame = {
     val member = struct(memberCols.map(col): _*)
     // group on the COMPOSITE bucket key string, not (blocking_key, salt):
     // the latter would satisfy its distribution with the count window's
     // by-key partitioning and keep every bucket of a hot key in one task —
     // pair emission for that key would serialize. The deliberate second
     // exchange redistributes buckets so the quadratic work is balanced.
-    ann
+    annotated(mentions, cfg)
       .groupBy("bucket_key")
       .agg(collect_list(member).as("ms"))
       .filter(size(col("ms")) >= 2)
       .select("ms")
   }
-
-  /** The sparse complement of the salted bucket table: representative
-    * star pairs + MinHash-LSH rep pairs (both O(distinct keys), not
-    * O(mentions)), with scoring features attached. The rep-star side reads
-    * an already-annotated table; the LSH side aggregates the raw mentions —
-    * it needs `tokens`, which [[annotated]] deliberately projects away. */
-  def sparsePairsFromAnnotated(ann: DataFrame, mentions: DataFrame,
-      cfg: Config = Config()): DataFrame =
-    repStarPairs(ann).unionByName(lshPairs(mentions, cfg))
 }

@@ -86,8 +86,8 @@ object ExactLinker {
   // Surface-keyed kernels run behind a per-task bounded memo (pkel.text.Memo):
   // the regex chains cost microseconds per call and transcript corpora repeat
   // surfaces massively, so the memo removes >99.9% of chain invocations
-  // (measured by CascadeProbe at 1M convs / 5.6M mentions: warm cascade
-  // 7.4 s → 3.9 s at local[32], 8.5 s → 7.0 s at local[8]; cold 72 s → 22 s).
+  // (measured at 1M convs / 5.6M mentions: warm cascade 7.4 s → 3.9 s at
+  // local[32], 8.5 s → 7.0 s at local[8]; cold 72 s → 22 s).
   val tokenizeUdf = udf(Memo.named("pk_tokenize")((s: String) => PkTokenizer(Option(s).getOrElse(""))))
   private val nonPkUdf = udf(Memo.named("non_pk")((m: String) => isNonPkMention(Option(m).getOrElse(""))))
   private val invalidCtxUdf =

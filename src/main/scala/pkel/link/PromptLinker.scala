@@ -221,10 +221,6 @@ object PromptLinker {
     perVariant.reduce(_ unionByName _).orderBy("variant")
   }
 
-  /** Entry-order-preserving lookup helper for tests. */
-  def entryFor(entries: Seq[OntologyEntry], id: String): Option[OntologyEntry] =
-    entries.find(_.parameterId == id)
-
   /** Deterministic offline stand-in model: answers with the name of the
     * first ontology entry whose name or synonym occurs (case-insensitive)
     * in the prompt's mention line, else NIL. Exercises both grounding

@@ -43,11 +43,6 @@ object Ontology {
     finally in.close()
   }
 
-  def loadFromPath(path: String, removeNil: Boolean = true): Seq[OntologyEntry] = {
-    val r = new java.io.InputStreamReader(new java.io.FileInputStream(path), "UTF-8")
-    try loadFromReader(r, removeNil) finally r.close()
-  }
-
   private def loadFromReader(reader: java.io.Reader, removeNil: Boolean): Seq[OntologyEntry] = {
     val settings = new CsvParserSettings()
     settings.setHeaderExtractionEnabled(true)
@@ -80,12 +75,6 @@ object Ontology {
     val m = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[String]]
     entries.foreach(e => m.getOrElseUpdate(e.categoryId, mutable.ArrayBuffer.empty) += e.parameterId)
     m.view.mapValues(_.toSeq).toMap
-  }
-
-  def paramToName(entries: Seq[OntologyEntry], includeNil: Boolean = false): Map[String, String] = {
-    val base = entries.iterator.filter(e => e.parameterId.nonEmpty && e.parameterName.nonEmpty)
-      .map(e => e.parameterId -> e.parameterName).toMap
-    if (includeNil) base + ("Q100" -> "NIL") else base
   }
 
   /** THE exact blocking index: canonical token-set key → parameter ids, in

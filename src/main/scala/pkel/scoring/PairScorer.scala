@@ -1,18 +1,28 @@
 package pkel.scoring
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, SpecificInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.pkelbridge.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import pkel.blocking.PairGen
 
 /** Batched pairwise scoring kernel (north_star: "batched mapPartitions kernel
   * combining Jaro-Winkler/Levenshtein edit similarity with cosine similarity
   * over broadcast bi-encoder embedding vectors").
   *
-  * Input: candidate pairs already joined with both sides' features
-  * (`key_a/key_b` canonical blocking-key strings, `mention_a/mention_b` raw
-  * surface strings), or the salted bucket-member table for the fused bucket
-  * kernel. Embeddings come from `Embedder.encode` on the raw surface, behind
-  * a bounded per-partition memo.
+  * Two kernels: [[scorePairs]] scores candidate pairs already joined with
+  * both sides' features (`key_a/key_b` canonical blocking-key strings,
+  * `mention_a/mention_b` raw surface strings); [[scoreBuckets]] enumerates
+  * and scores the pairs of the salted bucket-member table in place, as the
+  * [[BucketPairs]] generator. [[scoreCandidates]] unions both into one lazy
+  * plan. Embeddings come from `Embedder.encode` on the raw surface, behind
+  * a bounded per-task memo.
   *
   * Combined score = wKey·indel(key_a,key_b)/100 + wJw·JW(mention_a,mention_b)
   * + wCos·cosine — the key term carries the reference's canonicalization
@@ -137,121 +147,126 @@ object PairScorer {
     * (`PairGen.saltedBucketTable`): pair enumeration AND scoring run in one
     * pass over the bucket rows, so the quadratic pair stream is never a
     * relational intermediate (no pair-row shuffle, member payloads decoded
-    * once per member). Pairs are oriented src > dst by sorting members on
-    * descending mention_id, making output rows independent of collect_list
-    * order (parallelism-invariant).
+    * once per member). The kernel is the [[BucketPairs]] generator, so the
+    * scored pairs are a `Generate` node in the caller's own lazy plan. */
+  def scoreBuckets(buckets: DataFrame, embedder: Embedder = Embedder.default): DataFrame =
+    buckets.select(Bridge.column(BucketPairs(Bridge.expression(col("ms")), embedder)))
+
+  /** The bucket kernel as a Catalyst generator: one bucket's member array
+    * (structs of mention_id, blocking_key, mention) in, its scored pairs
+    * out. Pairs are oriented src > dst by sorting members on descending
+    * mention_id, making output rows independent of collect_list order
+    * (parallelism-invariant).
     *
-    * Runs at the InternalRow level and emits one reused fixed-width
-    * UnsafeRow: zero per-pair allocation (an external-Row encoder boxes ~6
-    * values per pair, and at 10^9 pairs that allocation rate serializes wide
-    * fan-out). Every bucket must hold ONE non-empty blocking key — the
-    * salted table groups on `key#salt` after dropping empty keys — so
-    * key_sim and the combined score are the constant 1.0 (identical
-    * canonical keys are the reference's own equality predicate) and jw/cos
-    * depend only on the SURFACE pair: distinct surfaces are interned per
-    * bucket and a d x d sim matrix is scored once (with a cross-bucket
-    * memo); each emitted pair is index lookups + six fixed-width writes. A
-    * mixed-key or empty-key bucket fails the task. */
-  def scoreBuckets(buckets: DataFrame, embedder: Embedder = Embedder.default): DataFrame = {
-    val msIdx = buckets.schema.fieldIndex("ms")
-    val memberSchema = buckets.schema(msIdx).dataType.asInstanceOf[ArrayType]
-      .elementType.asInstanceOf[StructType]
-    val nMemberFields = memberSchema.length
-    val iId = memberSchema.fieldIndex("mention_id")
-    val iKey = memberSchema.fieldIndex("blocking_key")
-    val iMen = memberSchema.fieldIndex("mention")
-    val rdd = buckets.queryExecution.toRdd.mapPartitions { iter =>
-      val embMemo = new CappedMemo[Array[Float]]
-      val surfPairMemo = new CappedMemo[Array[Double]]
-      // one reused output row: 8-byte null bitset + 6 fixed-width fields.
-      // Downstream operators consume or copy each UnsafeRow before the next
-      // one is produced (standard codegen buffer-reuse contract).
-      val outBuf = new Array[Byte](8 + 6 * 8)
-      val out = new org.apache.spark.sql.catalyst.expressions.UnsafeRow(6)
-      out.pointTo(outBuf, outBuf.length)
+    * Every bucket must hold ONE non-empty blocking key — the salted table
+    * groups on `key#salt` after dropping empty keys — so key_sim and the
+    * combined score are the constant 1.0 (identical canonical keys are the
+    * reference's own equality predicate) and jw/cos depend only on the
+    * SURFACE pair: distinct surfaces are interned per bucket and a d x d sim
+    * matrix is scored once (with a cross-bucket memo); each emitted pair is
+    * index lookups + six fixed-width writes into one reused row. A
+    * mixed-key or empty-key bucket fails the task. The memos are held per
+    * task: every task deserializes its own copy of the expression. */
+  private case class BucketPairs(child: Expression, embedder: Embedder)
+      extends UnaryExpression with Generator with CodegenFallback {
 
-      iter.flatMap { bucketRow =>
-        val arr = bucketRow.getArray(msIdx)
-        val n = arr.numElements()
-        val ids = new Array[Long](n)
-        val mens = new Array[String](n)
-        var key: org.apache.spark.unsafe.types.UTF8String = null
-        var k = 0
-        while (k < n) {
-          val m = arr.getStruct(k, nMemberFields)
-          val mk = if (m.isNullAt(iKey)) null else m.getUTF8String(iKey)
-          require(mk != null && mk.numBytes > 0 && (key == null || key == mk),
-            s"bucket kernel needs one non-empty blocking key per bucket, got '$key' and '$mk'")
-          key = mk
-          ids(k) = m.getLong(iId)
-          mens(k) = if (m.isNullAt(iMen)) "" else m.getUTF8String(iMen).toString
-          k += 1
-        }
-        // sort member indices by descending id so pair (i,j), i<j is (src,dst)
-        val order = Array.range(0, n).sortBy(t => -ids(t))
+    override def prettyName: String = "bucket_pairs"
+    override def elementSchema: StructType = leanSchema
 
-        val surfOf = new Array[Int](n)
-        val surfMap = new java.util.HashMap[String, Integer](16)
-        val surfs = new scala.collection.mutable.ArrayBuffer[String](8)
-        val surfVecs = new scala.collection.mutable.ArrayBuffer[Array[Float]](8)
-        var t = 0
-        while (t < n) {
-          val mt = order(t)
-          var si = surfMap.get(mens(mt))
-          if (si == null) {
-            si = Integer.valueOf(surfs.length)
-            surfMap.put(mens(mt), si)
-            surfs += mens(mt)
-            surfVecs += embMemo(mens(mt))(embedder.encode(mens(mt)))
-          }
-          surfOf(t) = si.intValue()
-          t += 1
-        }
-        val d = surfs.length
-        val jwM = Array.ofDim[Double](d, d)
-        val cosM = Array.ofDim[Double](d, d)
-        var x = 0
-        while (x < d) {
-          var y = x
-          while (y < d) {
-            val v = surfPairMemo(surfs(x) + "\u0001" + surfs(y))(Array(
-              Similarity.jaroWinkler(surfs(x).toLowerCase, surfs(y).toLowerCase),
-              Similarity.dot(surfVecs(x), surfVecs(y))))
-            jwM(x)(y) = v(0); jwM(y)(x) = v(0)
-            cosM(x)(y) = v(1); cosM(y)(x) = v(1)
-            y += 1
-          }
-          x += 1
-        }
+    @transient private lazy val memberSchema =
+      child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+    @transient private lazy val iId = memberSchema.fieldIndex("mention_id")
+    @transient private lazy val iKey = memberSchema.fieldIndex("blocking_key")
+    @transient private lazy val iMen = memberSchema.fieldIndex("mention")
+    @transient private lazy val embMemo = new CappedMemo[Array[Float]]
+    @transient private lazy val surfPairMemo = new CappedMemo[Array[Double]]
+    // consumers read or copy each row before asking for the next one
+    @transient private lazy val out = new SpecificInternalRow(leanSchema.map(_.dataType))
 
-        new scala.collection.AbstractIterator[org.apache.spark.sql.catalyst.InternalRow] {
-          private var i = 0
-          private var j = 1
-          private def skipSelfPairs(): Unit = {
-            while (i < n - 1 && j < n && ids(order(i)) == ids(order(j))) {
-              j += 1
-              if (j >= n) { i += 1; j = i + 1 }
-            }
-          }
-          skipSelfPairs()
-          override def hasNext: Boolean = i < n - 1 && j < n
-          override def next(): org.apache.spark.sql.catalyst.InternalRow = {
-            val pi = i; val pj = j
+    override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+      val arr = child.eval(input).asInstanceOf[ArrayData]
+      if (arr == null) return Iterator.empty
+      val n = arr.numElements()
+      val ids = new Array[Long](n)
+      val mens = new Array[String](n)
+      var key: UTF8String = null
+      var k = 0
+      while (k < n) {
+        val m = arr.getStruct(k, memberSchema.length)
+        val mk = if (m.isNullAt(iKey)) null else m.getUTF8String(iKey)
+        require(mk != null && mk.numBytes > 0 && (key == null || key == mk),
+          s"bucket kernel needs one non-empty blocking key per bucket, got '$key' and '$mk'")
+        key = mk
+        ids(k) = m.getLong(iId)
+        mens(k) = if (m.isNullAt(iMen)) "" else m.getUTF8String(iMen).toString
+        k += 1
+      }
+      // sort member indices by descending id so pair (i,j), i<j is (src,dst)
+      val order = Array.range(0, n).sortBy(t => -ids(t))
+
+      val surfOf = new Array[Int](n)
+      val surfMap = new java.util.HashMap[String, Integer](16)
+      val surfs = new scala.collection.mutable.ArrayBuffer[String](8)
+      val surfVecs = new scala.collection.mutable.ArrayBuffer[Array[Float]](8)
+      var t = 0
+      while (t < n) {
+        val mt = order(t)
+        var si = surfMap.get(mens(mt))
+        if (si == null) {
+          si = Integer.valueOf(surfs.length)
+          surfMap.put(mens(mt), si)
+          surfs += mens(mt)
+          surfVecs += embMemo(mens(mt))(embedder.encode(mens(mt)))
+        }
+        surfOf(t) = si.intValue()
+        t += 1
+      }
+      val d = surfs.length
+      val jwM = Array.ofDim[Double](d, d)
+      val cosM = Array.ofDim[Double](d, d)
+      var x = 0
+      while (x < d) {
+        var y = x
+        while (y < d) {
+          val v = surfPairMemo(surfs(x) + "\u0001" + surfs(y))(Array(
+            Similarity.jaroWinkler(surfs(x).toLowerCase, surfs(y).toLowerCase),
+            Similarity.dot(surfVecs(x), surfVecs(y))))
+          jwM(x)(y) = v(0); jwM(y)(x) = v(0)
+          cosM(x)(y) = v(1); cosM(y)(x) = v(1)
+          y += 1
+        }
+        x += 1
+      }
+
+      new scala.collection.AbstractIterator[InternalRow] {
+        private var i = 0
+        private var j = 1
+        private def skipSelfPairs(): Unit = {
+          while (i < n - 1 && j < n && ids(order(i)) == ids(order(j))) {
             j += 1
             if (j >= n) { i += 1; j = i + 1 }
-            out.setLong(0, ids(order(pi)))
-            out.setLong(1, ids(order(pj)))
-            out.setDouble(2, 1.0)
-            out.setDouble(3, jwM(surfOf(pi))(surfOf(pj)))
-            out.setDouble(4, cosM(surfOf(pi))(surfOf(pj)))
-            out.setDouble(5, 1.0)
-            skipSelfPairs()
-            out
           }
+        }
+        skipSelfPairs()
+        override def hasNext: Boolean = i < n - 1 && j < n
+        override def next(): InternalRow = {
+          val pi = i; val pj = j
+          j += 1
+          if (j >= n) { i += 1; j = i + 1 }
+          out.setLong(0, ids(order(pi)))
+          out.setLong(1, ids(order(pj)))
+          out.setDouble(2, 1.0)
+          out.setDouble(3, jwM(surfOf(pi))(surfOf(pj)))
+          out.setDouble(4, cosM(surfOf(pi))(surfOf(pj)))
+          out.setDouble(5, 1.0)
+          skipSelfPairs()
+          out
         }
       }
     }
-    org.apache.spark.sql.pkelbridge.Bridge.internalDf(buckets.sparkSession, rdd, leanSchema)
+
+    override protected def withNewChildInternal(newChild: Expression): BucketPairs =
+      copy(child = newChild)
   }
 
   /** Full fused candidate scoring: salted buckets through the bucket kernel,
@@ -259,31 +274,21 @@ object PairScorer {
     * pair set as `scorePairs(PairGen.candidatePairsWithFeatures(...))` with
     * one less relational materialization of the quadratic stream. */
   def scoreCandidates(mentions: DataFrame,
-      cfg: pkel.blocking.PairGen.Config = pkel.blocking.PairGen.Config(),
+      cfg: PairGen.Config = PairGen.Config(),
       w: Weights = Weights(), embedder: Embedder = Embedder.default,
       minScore: Option[Double] = None): DataFrame = {
     // `minScore` (the length-bound prune) applies to the SPARSE relational
     // path only: salted-bucket and rep-star pairs share one blocking key
     // (bound = 1.0, never prunable), so only the cross-key MinHash-LSH pairs
     // can fall below the bound — and those are exactly the pairs that pay
-    // the full JW + cosine kernel on distinct surfaces.
-    //
-    // The bucket kernel runs at the InternalRow level (toRdd), so its plan
-    // and the sparse plan are separate query executions that cannot share
-    // exchanges — both used to re-run the scan + key exchange + count
-    // window (two identical ~90 MB exchange writes per probe rep, one full
-    // extra pass over the mention table at any scale). The annotated
-    // lineage is therefore shared via Bridge.shareLineage: one scan + one
-    // key-exchange map stage feeds both plans through the same shuffle
-    // files, the LogicalRDD keeps the by-key partitioning (so the rep-star
-    // window still adds no exchange), and NOTHING is persisted — every
-    // invocation builds a fresh lineage and recomputes from the inputs.
-    val ann = org.apache.spark.sql.pkelbridge.Bridge.shareLineage(
-      pkel.blocking.PairGen.annotated(mentions, cfg))
-    val sparse = scorePairs(
-      pkel.blocking.PairGen.sparsePairsFromAnnotated(ann, mentions, cfg), w, embedder, minScore)
-      .select("src", "dst", "key_sim", "jw_sim", "cos_sim", "score")
-    scoreBuckets(pkel.blocking.PairGen.saltedBucketTableFromAnnotated(ann), embedder)
-      .unionByName(sparse)
+    // the full JW + cosine kernel on distinct surfaces. Both key-side
+    // branches start from the same `annotated` plan, so the planner runs its
+    // blocking_key exchange once and the rep-star branch reads it back as a
+    // ReusedExchange (PlanAuditSpec).
+    val sparse = PairGen.repStarPairs(PairGen.annotated(mentions, cfg))
+      .unionByName(PairGen.lshPairs(mentions, cfg))
+    scoreBuckets(PairGen.saltedBucketTable(mentions, cfg), embedder)
+      .unionByName(scorePairs(sparse, w, embedder, minScore)
+        .select("src", "dst", "key_sim", "jw_sim", "cos_sim", "score"))
   }
 }

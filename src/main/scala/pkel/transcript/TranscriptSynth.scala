@@ -269,21 +269,6 @@ object TranscriptSynth {
     } else Some(vs(pick(6, vs.length)).paramId)
   }
 
-  /** Is (conv, turn) a table turn under `tableRate`? Mirror of the generate
-    * branch, for span-count logic and assertions. */
-  def isTableTurn(seed: Long, conv: Long, turn: Int, mentionRate: Double = 0.7,
-      nilRate: Double = 0.1, tableRate: Double = 0.0): Boolean = {
-    def h(salt: Long): Long = {
-      var z = seed ^ (conv * 0x9E3779B97F4A7C15L) ^ (turn * 0xBF58476D1CE4E5B9L) ^ (salt * 0x94D049BB133111EBL)
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
-    (h(1) >>> 32) < (mentionRate * (1L << 32)).toLong &&
-      (h(3) >>> 32) >= (nilRate * (1L << 32)).toLong &&
-      (h(15) >>> 32) < (tableRate * (1L << 32)).toLong
-  }
-
   /** Span-indexed gold: one entry per embedded `«…»` span of the turn, in
     * span order (element 0 = `goldForVariants`; element 1 exists only for
     * multi-mention turns and is always a context-free entity). Mention ids

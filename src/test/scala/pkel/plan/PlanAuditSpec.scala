@@ -127,13 +127,53 @@ class PlanAuditSpec extends SparkSpec {
     assert(exchanges == 2, s"expected two exchanges (key window + bucket rebalance), got $exchanges:\n$bucketPlan")
     assert(bucketPlan.contains("bucket_key"), s"bucket rebalance missing:\n$bucketPlan")
     assert(!bucketPlan.contains("Join"), s"bucket path must not join:\n$bucketPlan")
-    // the kernel runs below the RDD boundary and emits scored pairs directly:
-    // the relational plan above it is a bare RDD scan — by construction
-    // nothing can shuffle the pair stream
-    val scored = pkel.scoring.PairScorer.scoreBuckets(buckets)
-    val scoredPlan = scored.queryExecution.executedPlan.toString
-    assert(scoredPlan.contains("Scan ExistingRDD"), s"unexpected plan:\n$scoredPlan")
-    assert(!scoredPlan.contains("Exchange"), s"pair stream must not shuffle:\n$scoredPlan")
+    // the kernel is a generator that emits scored pairs directly: it shows
+    // as a Generate node, and no exchange sits above it — nothing shuffles
+    // the pair stream
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val plan = pkel.scoring.PairScorer.scoreBuckets(buckets).queryExecution.executedPlan
+    assert(planNodes(plan).exists(_.isInstanceOf[GenerateExec]), s"kernel must be a Generate node:\n$plan")
+    val aboveKernel = planNodes(plan).collect { case e: Exchange => e }
+      .filter(e => planNodes(e).exists(_.isInstanceOf[GenerateExec]))
+    assert(aboveKernel.isEmpty, s"pair stream must not shuffle:\n$plan")
+  }
+
+  test("scoreCandidates is one lazy plan: no job at build time, one key exchange reused") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    val keyed = (1L to 600L).map { i =>
+      val key = if (i % 3 == 0) "auc inf" else "cl"
+      (i, key, key.split(" ").toSeq, s"m${i % 40}")
+    }.toDF("mention_id", "blocking_key", "tokens", "mention")
+    val cfg = pkel.blocking.PairGen.Config(targetBucketSize = 16)
+    var scored: org.apache.spark.sql.DataFrame = null
+    val buildJobs = jobsDuring {
+      scored = pkel.scoring.PairScorer.scoreCandidates(keyed, cfg)
+    }
+    assert(buildJobs == 0, s"building the plan ran $buildJobs Spark jobs")
+    scored.collect()
+    val plan = scored.queryExecution.executedPlan
+    // the annotated key window's exchange: hash-partitioned on blocking_key
+    // alone over (mention_id, blocking_key, mention). The LSH side's key-rep
+    // aggregate also partitions on blocking_key, but over partial aggregates
+    // with tokens: a different exchange
+    def keyWindow(p: SparkPlan): Boolean = p match {
+      case e: ShuffleExchangeExec =>
+        e.output.map(_.name) == Seq("mention_id", "blocking_key", "mention") &&
+          (e.outputPartitioning match {
+            case h: HashPartitioning => h.references.toSeq.map(_.name) == Seq("blocking_key")
+            case _ => false
+          })
+      case _ => false
+    }
+    val nodes = planNodes(plan)
+    val exchanges = nodes.count(keyWindow)
+    val reused = nodes.count { case r: ReusedExchangeExec => keyWindow(r.child); case _ => false }
+    assert(exchanges == 1 && reused == 1,
+      s"expected one key-window exchange and one reuse of it, got $exchanges and $reused:\n$plan")
   }
 
   test("set-op and rollup filters reach the parquet scan") {
