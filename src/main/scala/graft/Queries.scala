@@ -1389,20 +1389,8 @@ object Queries {
   private def goldAssignments(spark: SparkSession, dir: String): DataFrame =
     assignCache.getOrElseUpdate(cacheKey(spark, dir), {
       val (entries, mentions) = synthMentions(spark, dir)
-      // variant lists hoisted out of the UDF: goldFor(entries, ...) would
-      // rebuild the whole-ontology flatMap on every mention row
-      val vs = pkel.transcript.TranscriptSynth.variants(entries)
-      val tdVs = pkel.transcript.TranscriptSynth.tableDefaultVariants(entries)
-      val safeVs = pkel.transcript.TranscriptSynth.tableSafeVariants(entries)
-      val goldUdf = udf((convId: String, turn: Int, spanIdx: Int) =>
-        pkel.transcript.TranscriptSynth.goldSpansForVariants(
-          vs, seed = 42L, convId.stripPrefix("c").toLong, turn,
-          tableRate = batteryTableRate, tdVs = tdVs, safeVs = safeVs)
-          .lift(spanIdx).orNull)
-      val goldDf = mentions
-        .select(col("mention_id"),
-          goldUdf(col("conv_id"), col("turn_idx"), col("span_idx")).as("gold"))
-        .filter(col("gold").isNotNull)
+      val goldDf = TranscriptSynth.goldLabels(mentions, entries, seed = 42L,
+        tableRate = batteryTableRate)
       val linked = linkedMentions(spark, dir)
         .select(col("mention_id"), col("y_pred").as("pred"), col("blocking_key"))
         .join(goldDf, "mention_id")

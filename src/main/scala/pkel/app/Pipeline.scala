@@ -40,8 +40,6 @@ object Pipeline {
   final case class Config(
       /** Salted-bucket and MinHash-LSH candidate generation. */
       pairCfg: PairGen.Config = PairGen.Config(),
-      /** Pair-score blend (Jaro-Winkler, indel, cosine). */
-      weights: PairScorer.Weights = PairScorer.Weights(),
       /** θ: a scored residue pair becomes a similarity edge at score ≥ θ. */
       edgeThreshold: Double = 0.90,
       /** Linking-cascade thresholds and the optional prompt tier. */
@@ -199,25 +197,22 @@ object Pipeline {
     // with batched scoring in one lazy plan — the bucket kernel enumerates
     // and scores each salted bucket's pairs in place, so no pair row is
     // shuffled; only the sparse rep-star and LSH pairs go through the row
-    // kernel.
-    // The LSH oversize-bucket drop counts what it discards into
-    // PairDropMetrics accumulators during the commit's write action; the
-    // drained snapshot lands in the metrics table, so candidate-recall
-    // truncation is a visible counter, never a silent cap. A resumed stage
-    // drains nothing (the counters were recorded when it originally computed).
-    PairDropMetrics.reset(spark)
+    // kernel. Both kernels score with `PairScorer.Weights()`.
+    // The LSH oversize-bucket drop and the length prune count what they
+    // discard into this run's own counters during the commit's write
+    // action; a computed commit appends them to the metrics table, so
+    // candidate-recall truncation is a visible counter, never a silent cap.
+    // A replayed stage appends nothing (the counters were recorded when it
+    // originally computed).
+    val drops = PairDropMetrics(spark)
+    var scoredComputed = false
     val scored = io.readOrCompute("scored", fp(cfg, "s")) {
+      scoredComputed = true
       PairScorer.scoreCandidates(
-        keyed.select("mention_id", "blocking_key", "tokens", "mention"), cfg.pairCfg, cfg.weights,
-        minScore = if (cfg.prunePairs) Some(cfg.edgeThreshold) else None)
+        keyed.select("mention_id", "blocking_key", "tokens", "mention"), cfg.pairCfg,
+        minScore = if (cfg.prunePairs) Some(cfg.edgeThreshold) else None, drops = drops)
     }
-    PairDropMetrics.drain(spark).foreach { d =>
-      io.appendCounters("scored", Seq(
-        "lsh_dropped_buckets" -> d.droppedBuckets,
-        "lsh_dropped_members" -> d.droppedMembers,
-        "lsh_total_buckets" -> d.totalBuckets,
-        "length_pruned_pairs" -> d.prunedPairs))
-    }
+    if (scoredComputed) io.appendCounters("scored", drops.counters)
 
     // stage 6: edge set. Mentions the cascade links to an entity take edges
     // ONLY to their entity anchor (clustering must not override the linker's

@@ -68,19 +68,8 @@ object PipelineApp {
         val tableRate = opts.getOrElse("table-rate", "0.0").toDouble
         val t = TranscriptSynth.generate(spark, entries, nConvs, seed = seed,
           multiRate = multiRate, tableRate = tableRate)
-        val vs = TranscriptSynth.variants(entries)
-        val tdVs = if (tableRate > 0) TranscriptSynth.tableDefaultVariants(entries)
-          else IndexedSeq.empty[TranscriptSynth.Variant]
-        val safeVs = if (tableRate > 0) TranscriptSynth.tableSafeVariants(entries)
-          else IndexedSeq.empty[TranscriptSynth.Variant]
-        val goldUdf = udf((convId: String, turn: Int, spanIdx: Int) =>
-          TranscriptSynth.goldSpansForVariants(vs, seed, convId.stripPrefix("c").toLong,
-            turn, multiRate = multiRate, tableRate = tableRate,
-            tdVs = tdVs, safeVs = safeVs).lift(spanIdx).orNull)
-        val g = Pipeline.extractMentions(t)
-          .select(col("mention_id"),
-            goldUdf(col("conv_id"), col("turn_idx"), col("span_idx")).as("gold"))
-          .filter(col("gold").isNotNull)
+        val g = TranscriptSynth.goldLabels(Pipeline.extractMentions(t), entries, seed,
+          multiRate = multiRate, tableRate = tableRate)
         (t, Some(g))
     }
 

@@ -4,78 +4,45 @@ import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.LongAccumulator
 
-/** Counter surface for [[PairGen]]'s oversize-bucket drop (the round-4
-  * verdict's "silent cap" finding): degenerate MinHash-LSH buckets larger
-  * than `maxBucketSize` are dropped wholesale — the right scale move, but
-  * truncation that emits no counter reads as "covered everything".
+/** The candidate-recall counters of ONE scoring call (`PairGen.lshPairs` or
+  * `PairScorer.scoreCandidates`): what the LSH oversize-bucket drop and the
+  * length-bound prune discarded. Degenerate MinHash-LSH buckets larger than
+  * `maxBucketSize` are dropped wholesale — the right scale move, but
+  * truncation that emits no counter reads as "covered everything". The
+  * caller creates the object, passes it to the call and reads it after the
+  * action that executed the call's plan; nothing is shared between calls,
+  * so two plans (or two pipelines in one JVM) never mix their counts.
   *
-  * Implementation note — why ACCUMULATORS and not `Dataset.observe`: the
-  * obvious `CollectMetrics` node over the bucket-count aggregate is removed
-  * from the final physical plan by AQE's empty-relation propagation whenever
-  * the filter drops EVERY bucket (the join side materializes empty, AQE
-  * rewrites the subtree to `EmptyRelation`, and `qe.observedMetrics` finds no
-  * node to read) — i.e. the observation disappears precisely in the
-  * worst-truncation case it exists to expose. Accumulators ride the tasks
-  * that actually executed, so they survive any plan rewrite. The counting
-  * filter runs over the O(buckets) count aggregate — a few thousand rows per
-  * billion pairs — so the non-codegen UDF is nowhere near a hot path.
-  *
-  * Semantics: counters accumulate from the last [[drain]]/[[reset]] across
-  * every action that executes an instrumented PairGen subtree (a task retry
-  * or a re-executed plan recounts, the standard Spark accumulator caveat —
-  * these are diagnostics, not billing). The pipeline drains right after its
-  * scored-stage commit, whose single parquet-write action executes the plan
-  * exactly once.
+  * Why ACCUMULATORS and not `Dataset.observe`: the obvious `CollectMetrics`
+  * node over the bucket-count aggregate is removed from the final physical
+  * plan by AQE's empty-relation propagation whenever the filter drops EVERY
+  * bucket (the join side materializes empty, AQE rewrites the subtree to
+  * `EmptyRelation`, and `qe.observedMetrics` finds no node to read) — i.e.
+  * the observation disappears precisely in the worst-truncation case it
+  * exists to expose. Accumulators ride the tasks that actually executed, so
+  * they survive any plan rewrite. The counting filter runs over the
+  * O(buckets) count aggregate, so the non-codegen UDF is nowhere near a hot
+  * path. A task retry or a re-executed plan recounts (the standard
+  * accumulator caveat — these are diagnostics, not billing); the pipeline's
+  * scored-stage commit executes the plan exactly once.
   */
+final class PairDropMetrics private (sc: SparkContext) {
+  val droppedBuckets: LongAccumulator = sc.longAccumulator("pkel.lsh.dropped_buckets")
+  val droppedMembers: LongAccumulator = sc.longAccumulator("pkel.lsh.dropped_members")
+  val totalBuckets: LongAccumulator = sc.longAccumulator("pkel.lsh.total_buckets")
+  /** Cross-key pairs the length-bound prune dropped
+    * ([[pkel.scoring.PairScorer.lengthBound]]); 0 when the prune is off. */
+  val prunedPairs: LongAccumulator = sc.longAccumulator("pkel.pairs.length_pruned")
+
+  /** The counters as metrics-table rows, in the pipeline's `scored.*` names. */
+  def counters: Seq[(String, Long)] = Seq(
+    "lsh_dropped_buckets" -> droppedBuckets.value,
+    "lsh_dropped_members" -> droppedMembers.value,
+    "lsh_total_buckets" -> totalBuckets.value,
+    "length_pruned_pairs" -> prunedPairs.value)
+}
+
 object PairDropMetrics {
-
-  /** What the candidate-recall guards discarded since the last drain:
-    * oversized LSH buckets (dropped wholesale) and, when the caller enables
-    * the length-bound prune ([[pkel.scoring.PairScorer.lengthBound]]),
-    * cross-key pairs whose score upper bound sits below the edge threshold. */
-  final case class LshDrops(droppedBuckets: Long, droppedMembers: Long, totalBuckets: Long,
-      prunedPairs: Long = 0L)
-
-  final private[blocking] class Accs(sc: SparkContext) extends Serializable {
-    val dropped: LongAccumulator = sc.longAccumulator("pkel.lsh.dropped_buckets")
-    val members: LongAccumulator = sc.longAccumulator("pkel.lsh.dropped_members")
-    val total: LongAccumulator = sc.longAccumulator("pkel.lsh.total_buckets")
-    val pruned: LongAccumulator = sc.longAccumulator("pkel.pairs.length_pruned")
-  }
-
-  // one accumulator trio per SparkContext; weak so a stopped context can die
-  private val registry =
-    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkContext, Accs]())
-
-  private[blocking] def accsFor(sc: SparkContext): Accs = registry.synchronized {
-    var a = registry.get(sc)
-    if (a == null) { a = new Accs(sc); registry.put(sc, a) }
-    a
-  }
-
-  /** Present counter values (None when no instrumented query ran yet). */
-  def snapshot(spark: SparkSession): Option[LshDrops] = {
-    val a = accsFor(spark.sparkContext)
-    if (a.total.isZero && a.dropped.isZero && a.members.isZero && a.pruned.isZero) None
-    else Some(LshDrops(a.dropped.value, a.members.value, a.total.value, a.pruned.value))
-  }
-
-  /** Snapshot and zero the counters — call after the action that executed
-    * the PairGen query. Returns None when nothing was counted (e.g. a stage
-    * resumed from its checkpoint and never re-ran the generator). */
-  def drain(spark: SparkSession): Option[LshDrops] = {
-    val s = snapshot(spark)
-    reset(spark)
-    s
-  }
-
-  /** Zero the counters without reading them. */
-  def reset(spark: SparkSession): Unit = {
-    val a = accsFor(spark.sparkContext)
-    a.dropped.reset(); a.members.reset(); a.total.reset(); a.pruned.reset()
-  }
-
-  /** Accumulator for [[pkel.scoring.PairScorer]]'s length-bound prune (lives
-    * here so every candidate-recall counter drains through one surface). */
-  def prunedAcc(sc: SparkContext): LongAccumulator = accsFor(sc).pruned
+  def apply(spark: SparkSession = SparkSession.active): PairDropMetrics =
+    new PairDropMetrics(spark.sparkContext)
 }

@@ -30,9 +30,10 @@ import scala.util.hashing.MurmurHash3
   * - MinHash-LSH runs over *distinct* blocking keys (one representative
   *   mention per key): all mentions of a key share one token set, so banding
   *   them individually would replicate every hot key's block once per band.
-  *   Degenerate (oversized) LSH buckets are dropped wholesale;
+  *   Degenerate (oversized) LSH buckets are dropped wholesale, counted into
+  *   the call's own [[PairDropMetrics]];
   * - the one scoring feature carried through pairs is the raw `mention`
-  *   surface; the scorer embeds it behind a bounded memo;
+  *   surface; the scorer embeds it through its per-task `SurfaceSims` cache;
   * - duplicate pairs across generators are tolerated downstream (CC dedupes
   *   edges; scoring is idempotent) — no global distinct shuffle.
   */
@@ -81,29 +82,29 @@ object PairGen {
 
   /** All (src>dst) pairs within each bucket as a streaming self-join on
     * `bucket_key`: O(members) memory per bucket at any bucket size. `buckets`
-    * columns: bucket_key, mention_id, blocking_key, mention. */
+    * columns: bucket_key, mention_id, blocking_key, mention. With `drops`,
+    * buckets above `maxBucketSize` are dropped and counted into it. */
   private def pairsInBucketsJoin(buckets: DataFrame, maxBucketSize: Int,
-      dropOversized: Boolean): DataFrame = {
-    val (boundedA, boundedB) =
-      if (!dropOversized) (buckets, buckets)
-      else {
-        // the oversize drop is no longer silent: the filter over the
-        // bucket-count aggregate (computed anyway) counts what it discards
-        // into PairDropMetrics' accumulators. Only the a-side carries the
-        // counting UDF — the self-join's b-side applies the plain predicate,
-        // so each bucket is counted exactly once per executed plan. The UDF
-        // is nondeterministic so Catalyst never duplicates or collapses it;
-        // it runs over O(buckets) count rows, never over pair rows.
+      drops: Option[PairDropMetrics]): DataFrame = {
+    val (boundedA, boundedB) = drops match {
+      case None => (buckets, buckets)
+      case Some(m) =>
+        // the filter over the bucket-count aggregate (computed anyway)
+        // counts what it discards. Only the a-side carries the counting
+        // UDF — the self-join's b-side applies the plain predicate, so each
+        // bucket is counted exactly once per executed plan. The UDF is
+        // nondeterministic so Catalyst never duplicates or collapses it; it
+        // runs over O(buckets) count rows, never over pair rows.
         val counts = buckets.groupBy("bucket_key").agg(count(lit(1)).as("bucket_n"))
-        val accs = PairDropMetrics.accsFor(buckets.sparkSession.sparkContext)
+        val (total, dropped, members) = (m.totalBuckets, m.droppedBuckets, m.droppedMembers)
         val keepCounting = udf { (n: Long) =>
-          accs.total.add(1L)
-          if (n > maxBucketSize) { accs.dropped.add(1L); accs.members.add(n); false }
+          total.add(1L)
+          if (n > maxBucketSize) { dropped.add(1L); members.add(n); false }
           else true
         }.asNondeterministic()
         (buckets.join(counts.filter(keepCounting(col("bucket_n"))), "bucket_key"),
           buckets.join(counts.filter(col("bucket_n") <= maxBucketSize), "bucket_key"))
-      }
+    }
     val a = boundedA.select(col("bucket_key"), col("mention_id").as("src"),
       col("blocking_key").as("key_a"), col("mention").as("mention_a"))
     val b = boundedB.select(col("bucket_key"), col("mention_id").as("dst"),
@@ -146,7 +147,7 @@ object PairGen {
     * becomes one array value. */
   private def saltedPairs(annotated: DataFrame, cfg: Config): DataFrame = {
     val buckets = annotated.select(("bucket_key" +: memberCols).map(col): _*)
-    pairsInBucketsJoin(buckets, cfg.maxBucketSize, dropOversized = false)
+    pairsInBucketsJoin(buckets, cfg.maxBucketSize, drops = None)
       .unionByName(repStarPairs(annotated))
   }
 
@@ -183,8 +184,10 @@ object PairGen {
   /** MinHash-LSH pairs over *distinct* canonical token sets: one
     * representative per blocking key (rep = min mention_id, computed by a
     * map-side-combined aggregation — output is O(distinct keys), never
-    * O(mentions)). Input columns: mention_id, blocking_key, tokens, mention. */
-  def lshPairs(mentions: DataFrame, cfg: Config = Config()): DataFrame = {
+    * O(mentions)). Input columns: mention_id, blocking_key, tokens, mention.
+    * Oversized buckets are dropped and counted into `drops`. */
+  def lshPairs(mentions: DataFrame, cfg: Config = Config(),
+      drops: PairDropMetrics = PairDropMetrics()): DataFrame = {
     val keyReps = mentions
       .filter(col("blocking_key") =!= "" && size(col("tokens")) > 0)
       .groupBy("blocking_key")
@@ -198,7 +201,7 @@ object PairGen {
       .select(("bucket_key" +: memberCols).map(col): _*)
     // LSH buckets run up to maxBucketSize (default 1000) members; the
     // self-join streams their pairs in O(n) memory
-    pairsInBucketsJoin(banded, cfg.maxBucketSize, dropOversized = true)
+    pairsInBucketsJoin(banded, cfg.maxBucketSize, Some(drops))
       // same key pair recurs across bands; rep set is small
       .dropDuplicates("src", "dst")
   }

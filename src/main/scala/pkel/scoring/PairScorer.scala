@@ -10,7 +10,7 @@ import org.apache.spark.sql.pkelbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import pkel.blocking.PairGen
+import pkel.blocking.{PairDropMetrics, PairGen}
 
 /** Batched pairwise scoring kernel (north_star: "batched mapPartitions kernel
   * combining Jaro-Winkler/Levenshtein edit similarity with cosine similarity
@@ -21,35 +21,48 @@ import pkel.blocking.PairGen
   * `mention_a/mention_b` raw surface strings); [[scoreBuckets]] enumerates
   * and scores the pairs of the salted bucket-member table in place, as the
   * [[BucketPairs]] generator. [[scoreCandidates]] unions both into one lazy
-  * plan. Embeddings come from `Embedder.encode` on the raw surface, behind
-  * a bounded per-task memo.
+  * plan. Both read jw and cosine through one per-task [[SurfaceSims]] cache
+  * (embeddings from `Embedder.encode` on the raw surface).
   *
   * Combined score = wKey·indel(key_a,key_b)/100 + wJw·JW(mention_a,mention_b)
-  * + wCos·cosine — the key term carries the reference's canonicalization
-  * semantics (equal keys ⇒ same surface family), the JW/cosine terms grade
-  * near-duplicates across keys.
+  * + wCos·max(0, cosine) — the key term carries the reference's
+  * canonicalization semantics (equal keys ⇒ same surface family), the
+  * JW/cosine terms grade near-duplicates across keys. Identical non-empty
+  * keys score 1.0.
   */
 object PairScorer {
 
-  /** Per-partition bound on every kernel memo (embeddings per surface, scores
-    * per surface/combo pair). Above ~this many distinct surfaces the memos
-    * stop growing and the kernel re-encodes per bucket occurrence. */
+  /** Per-task bound on each [[SurfaceSims]] table (embeddings per surface,
+    * (jw, cos) per surface pair). Above ~this many distinct surfaces the
+    * cache stops growing and the kernel recomputes per bucket occurrence. */
   val MemoCap = 200000
 
   final case class Weights(wKey: Double = 0.5, wJw: Double = 0.2, wCos: Double = 0.3)
 
-  def score(keyA: String, keyB: String, mentionA: String, mentionB: String,
-      vecA: Array[Float], vecB: Array[Float], w: Weights): (Double, Double, Double, Double) = {
-    val keySim = Similarity.indelRatio(keyA, keyB) / 100.0
-    val jw = Similarity.jaroWinkler(mentionA.toLowerCase, mentionB.toLowerCase)
-    val cos = Similarity.dot(vecA, vecB)
-    // identical non-empty canonical keys are the reference's own equality
-    // predicate (same sorted-dedup token set) ⇒ certain match; otherwise a
-    // graded combination for near-duplicates across keys
-    val combined =
-      if (keyA.nonEmpty && keyA == keyB) 1.0
-      else w.wKey * keySim + w.wJw * jw + w.wCos * math.max(0.0, cos)
-    (keySim, jw, cos, combined)
+  /** The per-task similarity cache both kernels share: an embedding per
+    * surface and `(jw, cos)` per ORDERED surface pair `(a, b)` — JW of the
+    * lower-cased surfaces, dot of their unit embeddings. Each table is
+    * bounded at [[MemoCap]] entries: past the cap a miss computes without
+    * storing, so an all-unique partition keeps memory flat. */
+  private final class SurfaceSims(embedder: Embedder) {
+    private val vecs = new java.util.HashMap[String, Array[Float]](1024)
+    private val sims = new java.util.HashMap[String, Array[Double]](1024)
+
+    private def cached[V <: AnyRef](m: java.util.HashMap[String, V], k: String)(compute: => V): V = {
+      var v = m.get(k)
+      if (v == null) {
+        v = compute
+        if (m.size < MemoCap) m.put(k, v)
+      }
+      v
+    }
+
+    private def vec(s: String): Array[Float] = cached(vecs, s)(embedder.encode(s))
+
+    /** `Array(jw, cos)` of the surface pair (a, b). */
+    def apply(a: String, b: String): Array[Double] =
+      cached(sims, a + "\u0001" + b)(Array(
+        Similarity.jaroWinkler(a.toLowerCase, b.toLowerCase), Similarity.dot(vec(a), vec(b))))
   }
 
   /** Upper bound on the combined score from key LENGTHS alone (the classic
@@ -73,28 +86,24 @@ object PairScorer {
   }
 
   /** Drop pairs whose [[lengthBound]] sits below `minScore`, counting drops
-    * into [[pkel.blocking.PairDropMetrics]] (no silent caps: truncation that
-    * emits no counter reads as "covered everything"). The counting UDF is
-    * nondeterministic so Catalyst neither duplicates nor collapses it; it
-    * evaluates integer length arithmetic only — no edit distance. */
-  private def lengthPrune(pairs: DataFrame, w: Weights, minScore: Double): DataFrame = {
-    val acc = pkel.blocking.PairDropMetrics.prunedAcc(pairs.sparkSession.sparkContext)
+    * into `pruned` (no silent caps: truncation that emits no counter reads
+    * as "covered everything"). The counting UDF is nondeterministic so
+    * Catalyst neither duplicates nor collapses it; it evaluates integer
+    * length arithmetic only — no edit distance. */
+  private def lengthPrune(pairs: DataFrame, w: Weights, minScore: Double,
+      pruned: org.apache.spark.util.LongAccumulator): DataFrame = {
     val countDrop = udf { (bound: Double) =>
       val keep = bound >= minScore
-      if (!keep) acc.add(1L)
+      if (!keep) pruned.add(1L)
       keep
     }.asNondeterministic()
     pairs.filter(countDrop(lengthBound(w)))
   }
 
   /** Score a pair DataFrame with columns (src, dst, key_a, key_b, mention_a,
-    * mention_b). Appends (key_sim, jw_sim, cos_sim, score). `minScore`
-    * enables the [[lengthBound]] prune: pairs that provably score below it
-    * never reach the kernel. */
-  def scorePairs(pairs0: DataFrame, w: Weights = Weights(),
-      embedder: Embedder = Embedder.default,
-      minScore: Option[Double] = None): DataFrame = {
-    val pairs = minScore.map(t => lengthPrune(pairs0, w, t)).getOrElse(pairs0)
+    * mention_b). Appends (key_sim, jw_sim, cos_sim, score). */
+  def scorePairs(pairs: DataFrame, w: Weights = Weights(),
+      embedder: Embedder = Embedder.default): DataFrame = {
     val outSchema = StructType(pairs.schema.fields.toSeq ++ simFields)
     val iKeyA = pairs.schema.fieldIndex("key_a")
     val iKeyB = pairs.schema.fieldIndex("key_b")
@@ -102,38 +111,22 @@ object PairScorer {
     val iMenB = pairs.schema.fieldIndex("mention_b")
     val encoder = org.apache.spark.sql.Encoders.row(outSchema)
     pairs.mapPartitions { rows =>
-      // embeddings per surface, and the full score per
-      // (key_a,key_b,mention_a,mention_b) combo — transcript-scale data
-      // repeats surface combinations massively, so most pairs are a hash
-      // lookup
-      val embMemo = new CappedMemo[Array[Float]]
-      val comboMemo = new CappedMemo[Array[Double]]
-      def embed(s: String): Array[Float] = embMemo(s)(embedder.encode(s))
+      val sims = new SurfaceSims(embedder)
       rows.map { r =>
         def s(i: Int): String = if (r.isNullAt(i)) "" else r.getString(i)
         val keyA = s(iKeyA); val keyB = s(iKeyB)
-        val menA = s(iMenA); val menB = s(iMenB)
-        val v = comboMemo(keyA + "\u0001" + keyB + "\u0001" + menA + "\u0001" + menB) {
-          val (keySim, jw, cos, combined) = score(keyA, keyB, menA, menB, embed(menA), embed(menB), w)
-          Array(keySim, jw, cos, combined)
-        }
-        Row.fromSeq(r.toSeq ++ Seq(v(0), v(1), v(2), v(3)))
+        val surf = sims(s(iMenA), s(iMenB))
+        val keySim = Similarity.indelRatio(keyA, keyB) / 100.0
+        val jw = surf(0); val cos = surf(1)
+        // identical non-empty canonical keys are the reference's own
+        // equality predicate (same sorted-dedup token set) ⇒ certain match;
+        // otherwise a graded combination for near-duplicates across keys
+        val score =
+          if (keyA.nonEmpty && keyA == keyB) 1.0
+          else w.wKey * keySim + w.wJw * jw + w.wCos * math.max(0.0, cos)
+        Row.fromSeq(r.toSeq ++ Seq(keySim, jw, cos, score))
       }
     }(encoder)
-  }
-
-  /** Per-partition memo bounded at [[MemoCap]] entries: past the cap a miss
-    * computes without storing, so an all-unique partition keeps memory flat. */
-  private final class CappedMemo[V <: AnyRef] {
-    private val map = new java.util.HashMap[String, V](1024)
-    def apply(k: String)(compute: => V): V = {
-      var v = map.get(k)
-      if (v == null) {
-        v = compute
-        if (map.size < MemoCap) map.put(k, v)
-      }
-      v
-    }
   }
 
   private val simFields = Seq(
@@ -163,9 +156,9 @@ object PairScorer {
     * combined score are the constant 1.0 (identical canonical keys are the
     * reference's own equality predicate) and jw/cos depend only on the
     * SURFACE pair: distinct surfaces are interned per bucket and a d x d sim
-    * matrix is scored once (with a cross-bucket memo); each emitted pair is
+    * matrix is read from the task's [[SurfaceSims]]; each emitted pair is
     * index lookups + six fixed-width writes into one reused row. A
-    * mixed-key or empty-key bucket fails the task. The memos are held per
+    * mixed-key or empty-key bucket fails the task. The cache is held per
     * task: every task deserializes its own copy of the expression. */
   private case class BucketPairs(child: Expression, embedder: Embedder)
       extends UnaryExpression with Generator with CodegenFallback {
@@ -178,8 +171,7 @@ object PairScorer {
     @transient private lazy val iId = memberSchema.fieldIndex("mention_id")
     @transient private lazy val iKey = memberSchema.fieldIndex("blocking_key")
     @transient private lazy val iMen = memberSchema.fieldIndex("mention")
-    @transient private lazy val embMemo = new CappedMemo[Array[Float]]
-    @transient private lazy val surfPairMemo = new CappedMemo[Array[Double]]
+    @transient private lazy val sims = new SurfaceSims(embedder)
     // consumers read or copy each row before asking for the next one
     @transient private lazy val out = new SpecificInternalRow(leanSchema.map(_.dataType))
 
@@ -207,7 +199,6 @@ object PairScorer {
       val surfOf = new Array[Int](n)
       val surfMap = new java.util.HashMap[String, Integer](16)
       val surfs = new scala.collection.mutable.ArrayBuffer[String](8)
-      val surfVecs = new scala.collection.mutable.ArrayBuffer[Array[Float]](8)
       var t = 0
       while (t < n) {
         val mt = order(t)
@@ -216,7 +207,6 @@ object PairScorer {
           si = Integer.valueOf(surfs.length)
           surfMap.put(mens(mt), si)
           surfs += mens(mt)
-          surfVecs += embMemo(mens(mt))(embedder.encode(mens(mt)))
         }
         surfOf(t) = si.intValue()
         t += 1
@@ -228,9 +218,7 @@ object PairScorer {
       while (x < d) {
         var y = x
         while (y < d) {
-          val v = surfPairMemo(surfs(x) + "\u0001" + surfs(y))(Array(
-            Similarity.jaroWinkler(surfs(x).toLowerCase, surfs(y).toLowerCase),
-            Similarity.dot(surfVecs(x), surfVecs(y))))
+          val v = sims(surfs(x), surfs(y))
           jwM(x)(y) = v(0); jwM(y)(x) = v(0)
           cosM(x)(y) = v(1); cosM(y)(x) = v(1)
           y += 1
@@ -272,11 +260,14 @@ object PairScorer {
   /** Full fused candidate scoring: salted buckets through the bucket kernel,
     * the sparse star + LSH pairs through the row kernel. Produces the same
     * pair set as `scorePairs(PairGen.candidatePairsWithFeatures(...))` with
-    * one less relational materialization of the quadratic stream. */
+    * one less relational materialization of the quadratic stream. The LSH
+    * oversize drop and the length prune count into `drops`, which holds
+    * this call's counts only once an action has executed the plan. */
   def scoreCandidates(mentions: DataFrame,
       cfg: PairGen.Config = PairGen.Config(),
       w: Weights = Weights(), embedder: Embedder = Embedder.default,
-      minScore: Option[Double] = None): DataFrame = {
+      minScore: Option[Double] = None,
+      drops: PairDropMetrics = PairDropMetrics()): DataFrame = {
     // `minScore` (the length-bound prune) applies to the SPARSE relational
     // path only: salted-bucket and rep-star pairs share one blocking key
     // (bound = 1.0, never prunable), so only the cross-key MinHash-LSH pairs
@@ -286,9 +277,10 @@ object PairScorer {
     // blocking_key exchange once and the rep-star branch reads it back as a
     // ReusedExchange (PlanAuditSpec).
     val sparse = PairGen.repStarPairs(PairGen.annotated(mentions, cfg))
-      .unionByName(PairGen.lshPairs(mentions, cfg))
+      .unionByName(PairGen.lshPairs(mentions, cfg, drops))
+    val kept = minScore.fold(sparse)(t => lengthPrune(sparse, w, t, drops.prunedPairs))
     scoreBuckets(PairGen.saltedBucketTable(mentions, cfg), embedder)
-      .unionByName(scorePairs(sparse, w, embedder, minScore)
+      .unionByName(scorePairs(kept, w, embedder)
         .select("src", "dst", "key_sim", "jw_sim", "cos_sim", "score"))
   }
 }

@@ -108,6 +108,15 @@ object TranscriptSynth {
     }
   }
 
+  /** splitmix64 over (seed, conv, turn, salt) — stable & uniform. Every
+    * draw of [[generate]] and of its gold re-derivation reads this hash. */
+  private def splitmix(seed: Long, conv: Long, turn: Int, salt: Long): Long = {
+    var z = seed ^ (conv * 0x9E3779B97F4A7C15L) ^ (turn * 0xBF58476D1CE4E5B9L) ^ (salt * 0x94D049BB133111EBL)
+    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+    z ^ (z >>> 31)
+  }
+
   /** Pick the first variant at-or-after `idx` (cyclically) with NO
     * disambiguation context — used for the second mention of a multi-mention
     * turn, so the two mentions' context snippets cannot cross-trigger the
@@ -164,13 +173,7 @@ object TranscriptSynth {
         val preL = bPre.value; val sufL = bSuf.value; val fillL = bFill.value
         rows.map { r =>
           val conv = r.getLong(0); val turn = r.getInt(1)
-          def h(salt: Long): Long = {
-            // splitmix64 over (seed, conv, turn, salt) — stable & uniform
-            var z = seed ^ (conv * 0x9E3779B97F4A7C15L) ^ (turn * 0xBF58476D1CE4E5B9L) ^ (salt * 0x94D049BB133111EBL)
-            z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-            z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-            z ^ (z >>> 31)
-          }
+          def h(salt: Long): Long = splitmix(seed, conv, turn, salt)
           def pick(salt: Long, n: Int): Int = ((h(salt) >>> 1) % n).toInt
           val convId = f"c$conv%010d"
           val role = roles(turn % roles.length)
@@ -230,31 +233,13 @@ object TranscriptSynth {
       }.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
   }
 
-  /** Gold assignment for a generated corpus: re-derive (conv_id, turn_idx) →
-    * gold entity id from the same hash functions. Deterministic companion of
-    * `generate` (not used by the pipeline — evaluation only). */
-  def goldFor(entries: Seq[OntologyEntry], seed: Long, conv: Long, turn: Int,
-      mentionRate: Double = 0.7, nilRate: Double = 0.1,
-      tableRate: Double = 0.0): Option[String] =
-    goldForVariants(variants(entries), seed, conv, turn, mentionRate, nilRate,
-      tableRate,
-      if (tableRate > 0) tableDefaultVariants(entries) else IndexedSeq.empty,
-      if (tableRate > 0) tableSafeVariants(entries) else IndexedSeq.empty)
-
-  /** Same as `goldFor` over precomputed variant lists — per-row callers
-    * (gold UDFs) must hoist `variants(entries)` (and, with tables, the
-    * table-variant lists) into the closure instead of rebuilding the
-    * whole-ontology flatMap on every row. */
-  def goldForVariants(vs: IndexedSeq[Variant], seed: Long, conv: Long, turn: Int,
+  /** Gold entity of a generated turn's first span, re-derived from
+    * [[generate]]'s draws (evaluation only, never the pipeline). */
+  private def goldForVariants(vs: IndexedSeq[Variant], seed: Long, conv: Long, turn: Int,
       mentionRate: Double = 0.7, nilRate: Double = 0.1,
       tableRate: Double = 0.0, tdVs: IndexedSeq[Variant] = IndexedSeq.empty,
       safeVs: IndexedSeq[Variant] = IndexedSeq.empty): Option[String] = {
-    def h(salt: Long): Long = {
-      var z = seed ^ (conv * 0x9E3779B97F4A7C15L) ^ (turn * 0xBF58476D1CE4E5B9L) ^ (salt * 0x94D049BB133111EBL)
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
+    def h(salt: Long): Long = splitmix(seed, conv, turn, salt)
     def pick(salt: Long, n: Int): Int = ((h(salt) >>> 1) % n).toInt
     val mentionThreshold = (mentionRate * (1L << 32)).toLong
     val nilThreshold = (nilRate * (1L << 32)).toLong
@@ -273,18 +258,15 @@ object TranscriptSynth {
     * span order (element 0 = `goldForVariants`; element 1 exists only for
     * multi-mention turns and is always a context-free entity). Mention ids
     * derive from (conv_id, turn_idx, span_idx), so evaluation joins gold by
-    * the same triple. */
+    * the same triple. Per-row callers hoist `variants(entries)` (and, with
+    * tables, the table-variant lists) out of the row loop, as
+    * [[goldLabels]] does. */
   def goldSpansForVariants(vs: IndexedSeq[Variant], seed: Long, conv: Long, turn: Int,
       mentionRate: Double = 0.7, nilRate: Double = 0.1,
       multiRate: Double = 0.0, tableRate: Double = 0.0,
       tdVs: IndexedSeq[Variant] = IndexedSeq.empty,
       safeVs: IndexedSeq[Variant] = IndexedSeq.empty): Seq[String] = {
-    def h(salt: Long): Long = {
-      var z = seed ^ (conv * 0x9E3779B97F4A7C15L) ^ (turn * 0xBF58476D1CE4E5B9L) ^ (salt * 0x94D049BB133111EBL)
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
+    def h(salt: Long): Long = splitmix(seed, conv, turn, salt)
     goldForVariants(vs, seed, conv, turn, mentionRate, nilRate,
       tableRate, tdVs, safeVs) match {
       case None => Seq.empty
@@ -298,5 +280,24 @@ object TranscriptSynth {
           Seq(primary, plainVariant(vs, idx).paramId)
         } else Seq(primary)
     }
+  }
+
+  /** Gold labels `(mention_id, gold)` of a generated corpus's extracted
+    * mentions (`Pipeline.extractMentions` columns `mention_id`, `conv_id`,
+    * `turn_idx`, `span_idx`), for a corpus generated with this `seed`,
+    * `multiRate` and `tableRate` and the default mention and NIL rates.
+    * Mentions with no gold span are left out. */
+  def goldLabels(mentions: DataFrame, entries: Seq[OntologyEntry], seed: Long,
+      multiRate: Double = 0.0, tableRate: Double = 0.0): DataFrame = {
+    val vs = variants(entries)
+    val tdVs = if (tableRate > 0) tableDefaultVariants(entries) else IndexedSeq.empty[Variant]
+    val safeVs = if (tableRate > 0) tableSafeVariants(entries) else IndexedSeq.empty[Variant]
+    val goldUdf = udf((convId: String, turn: Int, spanIdx: Int) =>
+      goldSpansForVariants(vs, seed, convId.stripPrefix("c").toLong, turn,
+        multiRate = multiRate, tableRate = tableRate, tdVs = tdVs, safeVs = safeVs)
+        .lift(spanIdx).orNull)
+    mentions
+      .select(col("mention_id"), goldUdf(col("conv_id"), col("turn_idx"), col("span_idx")).as("gold"))
+      .filter(col("gold").isNotNull)
   }
 }

@@ -15,19 +15,9 @@ class TranscriptPipelineSpec extends SparkSpec {
   lazy val entries = Ontology.load()
 
   private def goldDf(transcripts: org.apache.spark.sql.DataFrame, seed: Long,
-      multiRate: Double = 0.0, tableRate: Double = 0.0) = {
-    val vs = TranscriptSynth.variants(entries)
-    val tdVs = TranscriptSynth.tableDefaultVariants(entries)
-    val safeVs = TranscriptSynth.tableSafeVariants(entries)
-    val goldUdf = udf((convId: String, turn: Int, spanIdx: Int) =>
-      TranscriptSynth.goldSpansForVariants(vs, seed, convId.stripPrefix("c").toLong,
-        turn, multiRate = multiRate, tableRate = tableRate,
-        tdVs = tdVs, safeVs = safeVs).lift(spanIdx).orNull)
-    Pipeline.extractMentions(transcripts)
-      .select(col("mention_id"),
-        goldUdf(col("conv_id"), col("turn_idx"), col("span_idx")).as("gold"))
-      .filter(col("gold").isNotNull)
-  }
+      multiRate: Double = 0.0, tableRate: Double = 0.0) =
+    TranscriptSynth.goldLabels(Pipeline.extractMentions(transcripts), entries, seed,
+      multiRate = multiRate, tableRate = tableRate)
 
   test("synthesizer is deterministic and schema-exact") {
     val t1 = TranscriptSynth.generate(spark, entries, nConvs = 50, seed = 42L)

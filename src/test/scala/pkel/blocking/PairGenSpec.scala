@@ -59,6 +59,12 @@ class PairGenSpec extends SparkSpec {
     assert(p.get.getString(4) == "clearance" && p.get.getString(5) == "CL")
   }
 
+  private lazy val degenerate = (1L to 12L).map(i =>
+    (i, s"auc inf ss pad$i", s"m$i")).toDF("mention_id", "blocking_key", "mention")
+    .withColumn("tokens", split(lit("auc inf ss"), " ")) // shared token set
+
+  private lazy val cleanPair = mentionsDf(Seq((1L, "cl a", "x"), (2L, "cl b", "y")))
+
   test("LSH oversize-bucket drop is counted, never silent") {
     // 12 DISTINCT blocking keys sharing one token set → identical minhash
     // signatures → every band buckets all 12 reps together; maxBucketSize=5
@@ -66,26 +72,35 @@ class PairGenSpec extends SparkSpec {
     // all-dropped case is the adversarial one: AQE rewrites the emptied join
     // to EmptyRelation, which is exactly why the counter rides accumulators
     // and not a CollectMetrics node (see PairDropMetrics scaladoc).
-    val degenerate = (1L to 12L).map(i =>
-      (i, s"auc inf ss pad$i", s"m$i")).toDF("mention_id", "blocking_key", "mention")
-      .withColumn("tokens", split(lit("auc inf ss"), " ")) // shared token set
     val cfg = PairGen.Config(maxBucketSize = 5)
-    PairDropMetrics.reset(spark)
-    val n = PairGen.lshPairs(degenerate, cfg).count()
-    val drops = PairDropMetrics.drain(spark)
-    info(s"lsh pairs=$n drops=$drops")
+    val d = PairDropMetrics(spark)
+    val n = PairGen.lshPairs(degenerate, cfg, d).count()
+    info(s"lsh pairs=$n drops=${d.counters}")
     assert(n == 0, "oversized buckets must be dropped wholesale")
-    assert(drops.isDefined, "drop counters missing")
-    val d = drops.get
-    assert(d.droppedBuckets >= 1, s"expected dropped buckets, got $d")
-    assert(d.droppedMembers >= 12L, s"expected >= 12 dropped members, got $d")
-    assert(d.totalBuckets >= d.droppedBuckets)
+    assert(!d.totalBuckets.isZero, "drop counters missing")
+    assert(d.droppedBuckets.value >= 1, s"expected dropped buckets, got ${d.counters}")
+    assert(d.droppedMembers.value >= 12L, s"expected >= 12 dropped members, got ${d.counters}")
+    assert(d.totalBuckets.value >= d.droppedBuckets.value)
     // and a clean run reports zero drops but counts its buckets
-    PairDropMetrics.reset(spark)
-    PairGen.lshPairs(mentionsDf(Seq((1L, "cl a", "x"), (2L, "cl b", "y"))), cfg).count()
-    val clean = PairDropMetrics.drain(spark)
-    assert(clean.exists(c => c.droppedBuckets == 0L && c.totalBuckets > 0L),
-      s"clean run should count buckets with zero drops: $clean")
+    val clean = PairDropMetrics(spark)
+    PairGen.lshPairs(cleanPair, cfg, clean).count()
+    assert(clean.droppedBuckets.value == 0L && clean.totalBuckets.value > 0L,
+      s"clean run should count buckets with zero drops: ${clean.counters}")
+  }
+
+  test("drop counters belong to the call: two calls in one job never mix their counts") {
+    val cfg = PairGen.Config(maxBucketSize = 5)
+    val dirty = PairDropMetrics(spark)
+    val clean = PairDropMetrics(spark)
+    PairGen.lshPairs(degenerate, cfg, dirty)
+      .unionByName(PairGen.lshPairs(cleanPair, cfg, clean))
+      .count()
+    assert(dirty.droppedBuckets.value >= 1 && dirty.droppedMembers.value >= 12L,
+      s"the degenerate call's drops: ${dirty.counters}")
+    assert(clean.droppedBuckets.value == 0L && clean.droppedMembers.value == 0L,
+      s"the clean call recorded another call's drops: ${clean.counters}")
+    assert(clean.totalBuckets.value > 0L, s"the clean call's buckets: ${clean.counters}")
+    assert(clean.prunedPairs.isZero && dirty.prunedPairs.isZero)
   }
 
   test("LSH connects near-duplicate keys via representatives") {

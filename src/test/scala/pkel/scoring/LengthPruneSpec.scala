@@ -51,17 +51,15 @@ class LengthPruneSpec extends SparkSpec {
 
   private val cfg = PairGen.Config(targetBucketSize = 16)
 
-  private def scoredRows(minScore: Option[Double]) =
-    PairScorer.scoreCandidates(corpus, cfg, w, minScore = minScore)
+  private def scoredRows(minScore: Option[Double], drops: PairDropMetrics = PairDropMetrics(spark)) =
+    PairScorer.scoreCandidates(corpus, cfg, w, minScore = minScore, drops = drops)
       .select(col("src"), col("dst"), (col("score") * 1e6).cast("long").as("q"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("pruned scoring = unpruned minus provably-sub-threshold pairs; edges invariant") {
-    PairDropMetrics.reset(spark)
     val unpruned = scoredRows(None)
-    PairDropMetrics.reset(spark)
-    val pruned = scoredRows(Some(theta))
-    val drops = PairDropMetrics.drain(spark)
+    val drops = PairDropMetrics(spark)
+    val pruned = scoredRows(Some(theta), drops)
 
     assert(pruned.subsetOf(unpruned), "prune must never add or rescore pairs")
     val dropped = unpruned -- pruned
@@ -76,8 +74,8 @@ class LengthPruneSpec extends SparkSpec {
     val edgesPruned = pruned.filter(_._3 >= thetaQ).map(t => (t._1, t._2))
     assert(edgesUnpruned == edgesPruned, "edge set must be prune-invariant")
     // every drop is counted
-    assert(drops.exists(_.prunedPairs == dropped.size.toLong),
-      s"counter must equal dropped pairs: $drops vs ${dropped.size}")
+    assert(drops.prunedPairs.value == dropped.size.toLong,
+      s"counter must equal dropped pairs: ${drops.counters} vs ${dropped.size}")
   }
 
   test("lengthBound column upper-bounds the kernel score on every scored pair") {

@@ -6,7 +6,8 @@ import pkel.blocking.PairGen
 
 /** Pins the kernel-fused bucket scoring path (`scoreCandidates`) to the
   * relational reference path (`scorePairs` over exploded candidate pairs),
-  * and the bucket kernel to its one-key-per-bucket contract. */
+  * the bucket kernel to its one-key-per-bucket contract, and both branches'
+  * score bits to a committed digest. */
 class PairScorerSpec extends SparkSpec {
 
   import spark.implicits._
@@ -24,7 +25,7 @@ class PairScorerSpec extends SparkSpec {
       (i, key, s"surface ${key.toUpperCase} $i")
     })
 
-  // every surface distinct: the kernel's per-partition memos never hit
+  // every surface distinct: the kernels' SurfaceSims cache never hits
   private val unique = keyedDf((1L to 120L).map(i => (i, "cl", s"unique-surface-$i")))
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
@@ -58,7 +59,7 @@ class PairScorerSpec extends SparkSpec {
   }
 
   test("unique-surface corpus (memo-miss regime): vec path scores each mention once") {
-    // every surface distinct -> the embedding and surface-pair memos never
+    // every surface distinct -> the embedding and surface-pair caches never
     // hit; the kernel must still match the relational path and emit each
     // unordered mention pair exactly once
     val cfg = PairGen.Config(targetBucketSize = 60) // 2 salts over 120 mentions
@@ -73,6 +74,21 @@ class PairScorerSpec extends SparkSpec {
     assert(pairs.forall { case (a, b) => a != b }, "self pair emitted")
     assert(pairs.flatMap { case (a, b) => Seq(a, b) }.toSet == (1L to 120L).toSet,
       "every mention must be scored")
+  }
+
+  test("scores are pinned: row count and xxhash64 digest of both scoring branches") {
+    // the kernel-vs-oracle tests above compare two kernels that share
+    // SurfaceSims, so only a committed digest catches a drift of both
+    def digest(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      val r = df.agg(count(lit(1)),
+        expr("bit_xor(xxhash64(src, dst, key_sim, jw_sim, cos_sim, score))")).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val cfg = PairGen.Config(targetBucketSize = 16)
+    assert(digest(PairScorer.scoreCandidates(corpus, cfg)) == ((2215L, 8299975067314214660L)))
+    val sparse = PairScorer.scorePairs(
+      PairGen.repStarPairs(PairGen.annotated(corpus, cfg)).unionByName(PairGen.lshPairs(corpus, cfg)))
+    assert(digest(sparse) == ((16L, 1075657570144337123L)))
   }
 
   test("bucket kernel fails the task on a mixed-key or empty-key bucket") {

@@ -11,13 +11,10 @@ object TypoDrive {
     val seed = 42L
     val transcripts = TranscriptSynth.generate(spark, entries, 400, seed = seed)
     val mentions = pkel.app.Pipeline.extractMentions(transcripts)
-    val vs = TranscriptSynth.variants(entries)
-    val goldUdf = udf((convId: String, turn: Int) =>
-      TranscriptSynth.goldForVariants(vs, seed, convId.stripPrefix("c").toLong, turn).orNull)
     val keyed = pkel.link.ExactLinker.withBlockingKey(mentions)
-      .withColumn("gold", goldUdf(col("conv_id"), col("turn_idx")))
     val preds = pkel.link.Cascade.run(spark, keyed, entries)
-    val j = preds.join(keyed.select("mention_id", "gold", "mention"), "mention_id")
+    val j = preds.join(keyed.select("mention_id", "mention"), "mention_id")
+      .join(TranscriptSynth.goldLabels(mentions, entries, seed), "mention_id")
     println("== wrong or unlinked vs gold (gold != Q100) ==")
     j.filter(col("gold") =!= "Q100" && col("y_pred") =!= col("gold"))
       .groupBy("gold", "y_pred", "tier", "status", "mention").count()
