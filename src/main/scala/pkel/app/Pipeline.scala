@@ -293,11 +293,12 @@ object Pipeline {
     // stage 8: cluster assignment (singletons = own cluster). Mentions the
     // cascade *excluded* as non-PK (NIL patterns / invalid context) are not
     // entities — they are singletonized for evaluation, mirroring the
-    // reference's NIL semantics (NIL never forms a cluster).
+    // reference's NIL semantics (NIL never forms a cluster). `linked` holds
+    // one row per keyed mention (the cascade's tiers partition their input)
+    // and carries its blocking key, so it alone drives the assignment.
     val clusters = io.readOrCompute("clusters", fp(cfg, "cl")) {
-      keyed.select("mention_id", "blocking_key")
+      linked.select("mention_id", "blocking_key", "y_pred", "status")
         .join(components.withColumnRenamed("node", "mention_id"), Seq("mention_id"), "left")
-        .join(linked.select(col("mention_id"), col("y_pred"), col("status")), Seq("mention_id"), "left")
         .withColumn("is_nil", col("status") === "excluded")
         .withColumn("cluster_id", coalesce(col("root"), col("mention_id")))
         .drop("root")

@@ -1,10 +1,16 @@
 package pkel.io
 
 import java.nio.charset.StandardCharsets
+import java.time.Instant
+import java.time.temporal.ChronoUnit
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.StructType
 
 /** Stage-checkpointed table IO with per-write-task lineage metrics.
@@ -28,12 +34,12 @@ import org.apache.spark.sql.types.StructType
   * scheme as the parquet it guards (driver-local `java.nio` would silently
   * write markers to the driver's disk instead).
   *
-  * A commit's only Spark jobs are its write and the one-row-per-file
-  * `_metrics` append (plus an [[StageStore.Audit]]'s aggregate when one is
-  * given): the row count, the lineage rows and the returned frame's schema
-  * come from the parquet footers the write produced ([[SnapshotFooters]]),
-  * read on the driver. A replay reads the footer schema the same way and
-  * runs no job.
+  * A commit's only Spark job is its write (plus an [[StageStore.Audit]]'s
+  * aggregate when one is given): the row count, the lineage rows and the
+  * returned frame's schema come from the parquet footers the write produced
+  * ([[SnapshotFooters]]), read on the driver, and the lineage rows go to
+  * `_metrics` as one parquet file the driver writes itself. A replay reads
+  * the footer schema the same way and runs no job.
   */
 trait StageStore {
   protected def spark: SparkSession
@@ -113,19 +119,35 @@ trait StageStore {
     * e.g. LSH dropped-bucket counts). Counters share the lineage rows'
     * schema — `stage` = "<stage>.<counter>", `rows_out` = value,
     * `partition_id` = −1 marks a run-level counter — so one parquet schema
-    * serves both row kinds and `metrics()` reads them together. */
+    * serves both row kinds and `metrics()` reads them together. Written on
+    * the driver like every metrics append: no Spark job. */
   final def appendCounters(stage: String, counters: Seq[(String, Long)]): Unit =
     if (counters.nonEmpty)
       appendMetrics(counters.map { case (name, value) => (-1, value, s"$stage.$name", value, 0L) })
 
-  /** One local write of `(partition_id, rows_out, stage, total_rows,
-    * wall_ms)` rows to the metrics table, in [[StageStore.MetricsSchema]]. */
-  private def appendMetrics(rows: Seq[(Int, Long, String, Long, Long)]): Unit =
-    spark.createDataFrame(rows).toDF("partition_id", "rows_out", "stage", "total_rows", "wall_ms")
-      .select(col("partition_id"), col("rows_out"), lit(runId).as("run_id"), col("stage"),
-        col("total_rows"), col("wall_ms"), current_timestamp().as("committed_at"))
-      .coalesce(1)
-      .write.mode("append").parquet(s"$root/_metrics")
+  /** Write `(partition_id, rows_out, stage, total_rows, wall_ms)` rows to
+    * the metrics table as one parquet file, on the driver: no DataFrame,
+    * Spark job or output committer. `committed_at` is the driver clock. The
+    * file is written under a hidden `.part-<uuid>.parquet.tmp` name, which
+    * Spark's and DuckDB's readers skip, and renamed into place, so a reader
+    * never sees a partial file and concurrent appends never collide. */
+  private def appendMetrics(rows: Seq[(Int, Long, String, Long, Long)]): Unit = {
+    val dir = new Path(s"$root/_metrics")
+    val name = s"part-${java.util.UUID.randomUUID()}.parquet"
+    val tmp = new Path(dir, s".$name.tmp")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val committedAt = ChronoUnit.MICROS.between(Instant.EPOCH, Instant.now())
+    val groups = new SimpleGroupFactory(StageStore.MetricsParquetType)
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf).withType(StageStore.MetricsParquetType).build()
+    try rows.foreach { case (partition, rowsOut, stage, totalRows, wallMs) =>
+      w.write(groups.newGroup().append("partition_id", partition).append("rows_out", rowsOut)
+        .append("run_id", runId).append("stage", stage).append("total_rows", totalRows)
+        .append("wall_ms", wallMs).append("committed_at", committedAt))
+    } finally w.close()
+    if (!fs(dir).rename(tmp, new Path(dir, name)))
+      throw new java.io.IOException(s"metrics append: rename of $tmp to $name failed")
+  }
 
   def metrics(): DataFrame = spark.read.schema(StageStore.MetricsSchema).parquet(s"$root/_metrics")
 }
@@ -138,6 +160,20 @@ object StageStore {
   private[io] val MetricsSchema: StructType = StructType.fromDDL(
     "partition_id INT, rows_out BIGINT, run_id STRING, stage STRING, " +
       "total_rows BIGINT, wall_ms BIGINT, committed_at TIMESTAMP")
+
+  /** [[MetricsSchema]] as the parquet type the driver-side append writes;
+    * `committed_at` is UTC microseconds, which Spark reads as TIMESTAMP just
+    * like the INT96 stamps of metrics files Spark wrote. */
+  private val MetricsParquetType: MessageType = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  required int32 partition_id;
+      |  required int64 rows_out;
+      |  required binary run_id (STRING);
+      |  required binary stage (STRING);
+      |  required int64 total_rows;
+      |  required int64 wall_ms;
+      |  required int64 committed_at (TIMESTAMP(MICROS,true));
+      |}""".stripMargin)
 
   /** Commit-time audit: `aggs` run in one aggregate over the committed
     * snapshot, after `count(lit(1))`; `check` receives the aggregate row

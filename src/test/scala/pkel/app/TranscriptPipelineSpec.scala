@@ -136,6 +136,12 @@ class TranscriptPipelineSpec extends SparkSpec {
     val snap2 = c2.select("mention_id", "cluster_id").collect().map(_.toString).sorted
     assert(snap1.sameElements(snap2))
     assert(s2.wallSec < s1.wallSec, "resumed run should be faster (no recompute)")
+    // the clusters stage reads `linked` alone, so it relies on the cascade
+    // emitting each keyed mention exactly once
+    val keyedIds = spark.read.parquet(s"$root/keyed").select("mention_id").collect().map(_.getLong(0)).sorted
+    val clusterIds = c2.select("mention_id").collect().map(_.getLong(0)).sorted
+    assert(keyedIds.nonEmpty && clusterIds.sameElements(keyedIds),
+      s"${clusterIds.length} cluster rows, ${clusterIds.distinct.length} distinct ids, ${keyedIds.length} keyed ids")
     // the closing counts, read from the snapshots' footers, are the committed
     // tables' counts on both the computing and the replaying run
     val committed = Seq("mentions", "scored", "edges").map(st => spark.read.parquet(s"$root/$st").count())

@@ -1,10 +1,16 @@
 package pkel.io
 
 import java.nio.file.{Files, Paths}
+import java.time.Instant
+import java.time.temporal.ChronoUnit
+import java.util.concurrent.Executors
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.functions.col
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{ArrayType, StringType}
 
 import pkel.SparkSpec
@@ -13,7 +19,8 @@ import pkel.SparkSpec
   * Iceberg-shaped catalog-pointer store must satisfy the identical
   * StageStore behavior (partial-write recovery, committed replay,
   * fingerprint invalidation, footer-backed lineage metrics and schema, job
-  * counts) — proving the backend swap is config-only. */
+  * counts, driver-side metrics appends) — proving the backend swap is
+  * config-only. */
 class TableIOSpec extends SparkSpec {
 
   import spark.implicits._
@@ -82,8 +89,58 @@ class TableIOSpec extends SparkSpec {
       val commit = jobsDuring(io.commit("s", df, "fp"))
       val replay = jobsDuring(io.readOrCompute("s", "fp")(fail("must replay")))
       info(s"jobs: write=$write commit=$commit replay=$replay")
-      assert(commit == write + 1, s"commit ran $commit jobs, the bare write $write")
+      assert(commit == write, s"commit ran $commit jobs, the bare write $write")
       assert(replay == 0, s"replay ran $replay jobs")
+    }
+
+    test(s"$name: driver-side metrics appends join Spark-written ones, leave no temp file, lose no concurrent append") {
+      val root = Files.createTempDirectory(s"pkel_${name}_metrics_").toString
+      val io = mk(root)
+      // (a) a metrics file as Spark appended it: a write job, INT96 stamps
+      val legacyAt = java.sql.Timestamp.valueOf("2026-01-02 03:04:05.123456")
+      Seq((7, 3L, "old", "legacy", 3L, 11L)).toDF("partition_id", "rows_out", "run_id", "stage", "total_rows", "wall_ms")
+        .withColumn("committed_at", lit(legacyAt))
+        .write.mode("append").parquet(s"$root/_metrics")
+      val legacyFile = Files.list(Paths.get(s"$root/_metrics")).iterator().asScala
+        .find(_.getFileName.toString.startsWith("part-")).get
+      val footer = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(legacyFile.toUri), spark.sparkContext.hadoopConfiguration))
+      try assert(footer.getFileMetaData.getSchema.getColumnDescription(Array("committed_at"))
+        .getPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT96)
+      finally footer.close()
+
+      val t0 = Instant.now().truncatedTo(ChronoUnit.MICROS)
+      io.commit("s", Seq(1, 2, 3).toDF("x"), "fp")
+      io.appendCounters("s", Seq("c" -> 5L))
+      // (c) concurrent appends against one root
+      val pool = Executors.newFixedThreadPool(4)
+      try (0 until 40).map { i =>
+        pool.submit(new Runnable { def run(): Unit = io.appendCounters("t", Seq(s"c$i" -> i.toLong)) })
+      }.foreach(_.get())
+      finally pool.shutdown()
+      val t1 = Instant.now()
+
+      val m = io.metrics()
+      assert(m.schema.map(_.dataType) == StageStore.MetricsSchema.map(_.dataType), m.schema)
+      val rows = m.collect()
+      def stamp(r: org.apache.spark.sql.Row) = r.getTimestamp(6).toInstant
+      def values(r: org.apache.spark.sql.Row) =
+        (r.getInt(0), r.getLong(1), r.getString(2), r.getString(3), r.getLong(4), r.getLong(5))
+      val legacy = rows.filter(_.getString(3) == "legacy")
+      assert(legacy.map(values).toSeq == Seq((7, 3L, "old", "legacy", 3L, 11L)) &&
+        stamp(legacy.head) == legacyAt.toInstant)
+      val driverRows = rows.filter(_.getString(3) != "legacy")
+      assert(driverRows.forall(r => !stamp(r).isBefore(t0) && !stamp(r).isAfter(t1) &&
+        r.getString(2) == "r1"), driverRows.toSeq)
+      val lineage = driverRows.filter(_.getString(3) == "s")
+      assert(lineage.nonEmpty && lineage.map(_.getLong(1)).sum == 3L && lineage.forall(_.getLong(4) == 3L))
+      assert(driverRows.filter(_.getString(3) == "s.c").map(values).toSeq == Seq((-1, 5L, "r1", "s.c", 5L, 0L)))
+      assert(driverRows.filter(_.getString(3).startsWith("t.")).map(values).sortBy(_._2).toSeq ==
+        (0 until 40).map(i => (-1, i.toLong, "r1", s"t.c$i", i.toLong, 0L)))
+      // (b) every append renamed its temp file into place
+      val left = Files.walk(Paths.get(s"$root/_metrics")).iterator().asScala
+        .map(_.getFileName.toString).filter(_.contains(".tmp")).toSeq
+      assert(left.isEmpty, s"temp files left: $left")
     }
   }
 
