@@ -1126,7 +1126,7 @@ object Queries {
       val (entries, mentions) = synthMentions(spark, dir)
       val sink = if (shouldDump(dir)) Some(tierDumpSink(oracleDump(dir) + "/cascade")) else None
       pkel.link.Cascade.run(spark, pkel.link.ExactLinker.withBlockingKey(mentions), entries,
-        pkel.link.Cascade.Config(tierSink = sink))
+        pkel.link.Cascade.Config(tierSink = sink)).predictions
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     })
 
@@ -1227,7 +1227,7 @@ object Queries {
       promptScorer = Some(new pkel.link.PromptLinker.SubstringScorer(entries)),
       tierSink = if (shouldDump(dir))
         Some(tierDumpSink(oracleDump(dir) + "/prompt_cascade")) else None)
-    pkel.link.Cascade.run(spark, pkel.link.ExactLinker.withBlockingKey(mentions), entries, cfg)
+    pkel.link.Cascade.run(spark, pkel.link.ExactLinker.withBlockingKey(mentions), entries, cfg).predictions
       .groupBy("tier", "status").agg(count(lit(1)).as("n"))
       .orderBy("tier", "status")
   }

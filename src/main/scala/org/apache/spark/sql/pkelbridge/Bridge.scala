@@ -7,7 +7,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Minimal bridge into `private[sql]` / `private[spark]` API: Column↔Expression
   * conversion (the public API for this disappeared in Spark 4's Column
   * refactor; extension libraries conventionally host a shim inside the sql
-  * package namespace) and the listener-bus drain. Custom expressions such as
+  * package namespace), the listener-bus drain and the cached-plan count. Custom expressions such as
   * `pkel.functions.IndelRatio` and the pair kernel's generator enter the
   * Column API through [[column]]. */
 object Bridge {
@@ -18,4 +18,9 @@ object Bridge {
     * Spark jobs via a SparkListener observes every event before asserting. */
   def waitForListeners(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Plans the session's cache manager holds (`private[sql]`): a run that
+    * releases what it persisted leaves this count as it found it. */
+  def cachedPlans(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.sharedState.cacheManager.numCachedEntries
 }

@@ -188,16 +188,21 @@ object Pipeline {
       ExactLinker.withBlockingKey(mentions)
     }
 
-    // stage 3: linking cascade → entity assignment per mention
-    val linked = io.readOrCompute("linked", fp(cfg, "l")) {
-      Cascade.run(spark, keyed, entries, cfg.cascade)
-    }
+    // stage 3: linking cascade → entity assignment per mention. The tier
+    // outputs the cascade persists serve the commit's write only: they are
+    // released once the stage commits (or fails), so no cache outlives the run
+    var cascade: Option[Cascade.Output] = None
+    val linked = try io.readOrCompute("linked", fp(cfg, "l")) {
+      val out = Cascade.run(spark, keyed, entries, cfg.cascade)
+      cascade = Some(out)
+      out.predictions
+    } finally cascade.foreach(_.release())
 
     // stages 4+5: candidate pairs (salted blocking keys + MinHash-LSH) fused
-    // with batched scoring in one lazy plan — the bucket kernel enumerates
-    // and scores each salted bucket's pairs in place, so no pair row is
-    // shuffled; only the sparse rep-star and LSH pairs go through the row
-    // kernel. Both kernels score with `PairScorer.Weights()`.
+    // with batched scoring in one lazy `(src, dst, score)` plan — the
+    // bucket kernel enumerates each salted bucket's same-key pairs in place
+    // at score 1.0, so no pair row is shuffled; only the cross-key LSH pairs
+    // go through the row kernel, with `PairScorer.Weights()`.
     // The LSH oversize-bucket drop and the length prune count what they
     // discard into this run's own counters during the commit's write
     // action; a computed commit appends them to the metrics table, so

@@ -21,10 +21,11 @@ import scala.util.hashing.MurmurHash3
   *   `targetBucketSize = Int.MaxValue` (salt_n = 1 for every key);
   * - production scoring (`PairScorer.scoreCandidates`) never materializes
   *   salted pairs as rows: one window pass on `blocking_key` (key frequency)
-  *   and one `groupBy(bucket_key)` build the [[saltedBucketTable]], and the
-  *   bucket kernel enumerates and scores each bucket's pairs in place. The
-  *   rep star reads a second [[annotated]] in the same plan, so the
-  *   blocking_key exchange runs once and is reused. The relational
+  *   and one `groupBy(bucket_key)` build the [[saltedBucketTable]] of
+  *   (mention_id, blocking_key) members, and the bucket kernel enumerates
+  *   each bucket's pairs in place. The rep star reads a second [[annotated]]
+  *   in the same plan, so the blocking_key exchange runs once and is
+  *   reused. Neither reads a surface: same-key pairs score 1.0. The relational
   *   [[candidatePairsWithFeatures]] — the kernel's spec oracle — enumerates
   *   the same pairs with a streaming bucket self-join;
   * - MinHash-LSH runs over *distinct* blocking keys (one representative
@@ -32,8 +33,9 @@ import scala.util.hashing.MurmurHash3
   *   them individually would replicate every hot key's block once per band.
   *   Degenerate (oversized) LSH buckets are dropped wholesale, counted into
   *   the call's own [[PairDropMetrics]];
-  * - the one scoring feature carried through pairs is the raw `mention`
-  *   surface; the scorer embeds it through its per-task `SurfaceSims` cache;
+  * - the one scoring feature carried through LSH pairs (and the oracle's
+  *   pairs) is the raw `mention` surface; the scorer embeds it through its
+  *   per-task `SurfaceSims` cache;
   * - duplicate pairs across generators are tolerated downstream (CC dedupes
   *   edges; scoring is idempotent) — no global distinct shuffle.
   */
@@ -121,12 +123,14 @@ object PairGen {
     * twice (the bucket table and the rep star) runs the exchange once: the
     * second read is a ReusedExchange. */
   def annotated(mentions: DataFrame, cfg: Config = Config()): DataFrame = {
-    // project EARLY (guide §2.3): only (mention_id, blocking_key, mention)
-    // ride the key exchange + count window. The tokens array — the fattest
-    // input column, consumed solely by the LSH path's key-rep aggregate,
-    // which runs on the raw mentions — previously paid this shuffle + the
-    // window sort + the bucket collect_list partials for nothing (measured
-    // ~90 MB exchange at the 1M-conv probe, most of it tokens).
+    // project EARLY (guide §2.3): at most (mention_id, blocking_key, mention)
+    // ride the key exchange + count window, and only the relational oracle
+    // reads `mention` — in `PairScorer.scoreCandidates` Catalyst prunes it,
+    // so the exchange carries (mention_id, blocking_key). The tokens array —
+    // the fattest input column, consumed solely by the LSH path's key-rep
+    // aggregate, which runs on the raw mentions — previously paid this
+    // shuffle + the window sort + the bucket collect_list partials for
+    // nothing (measured ~90 MB exchange at the 1M-conv probe).
     val keyed = mentions
       .select(memberCols.map(col): _*)
       .filter(col("blocking_key") =!= "")
@@ -220,12 +224,13 @@ object PairGen {
 
   /** Salted bucket-member table for kernel-fused scoring
     * (`PairScorer.scoreBuckets`): one row per salted bucket with ≥ 2
-    * members, each member a struct of (mention_id, blocking_key, mention).
-    * Every bucket holds exactly one non-empty blocking key. Pair enumeration
-    * happens inside the scoring kernel, so the quadratic pair stream is never
-    * materialized as a relational intermediate. */
+    * members, each member a struct of (mention_id, blocking_key). Every
+    * bucket holds exactly one non-empty blocking key, so its pairs score
+    * 1.0 and no surface rides the key exchange or the bucket shuffle. Pair
+    * enumeration happens inside the scoring kernel, so the quadratic pair
+    * stream is never materialized as a relational intermediate. */
   def saltedBucketTable(mentions: DataFrame, cfg: Config = Config()): DataFrame = {
-    val member = struct(memberCols.map(col): _*)
+    val member = struct(col("mention_id"), col("blocking_key"))
     // group on the COMPOSITE bucket key string, not (blocking_key, salt):
     // the latter would satisfy its distribution with the count window's
     // by-key partitioning and keep every bucket of a hot key in one task —

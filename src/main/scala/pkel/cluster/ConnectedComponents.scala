@@ -78,40 +78,6 @@ object ConnectedComponents {
     (row.getLong(0), row.getLong(1))
   }
 
-  /** Run to fixpoint; returns (node, root) for every node appearing in an
-    * edge. Singleton nodes (no edges) are their own root — callers union
-    * them in.
-    *
-    * ADAPTIVE execution: when the canonical edge count is at or below
-    * `smallGraphThreshold`, the component computation runs as a single
-    * driver-side union-find over the collected edges instead of the
-    * iterative fixpoint — the same move Spark itself makes when it
-    * broadcasts a small join side. The distributed fixpoint pays a
-    * per-iteration job floor (two window stars + distinct per round) that
-    * dominates wall time on small graphs; at 2M edges the collect is
-    * ~32 MB of longs, far below any driver budget, and the result is
-    * IDENTICAL (min-reachable-id roots, equality property-tested). Pass
-    * `smallGraphThreshold = 0` to force the distributed path.
-    *
-    * Lineage is truncated every iteration. By default with `localCheckpoint`
-    * (executor-memory-resident — fast, but an executor loss mid-job forces a
-    * full recompute); pass `checkpointDir` for RELIABLE checkpoints — every
-    * `reliableEvery`-th iteration the edge set is written to parquet and
-    * re-read, so on a long cluster run the job resumes from durable state
-    * instead of dying with a lost executor. Intermediate iterations still
-    * use localCheckpoint (cheap) between durable ones.
-    *
-    * Throws `IllegalStateException` when `maxIterations` fresh rounds pass
-    * without reaching the fixpoint; a durable iterate written before the
-    * throw stays for the next run to resume from. */
-  def run(spark: SparkSession, edges0: DataFrame, maxIterations: Int = 50,
-      checkpointDir: Option[String] = None, reliableEvery: Int = 3,
-      smallGraphThreshold: Long = 2000000L,
-      onIteration: (Int, Long, Long) => Unit = (_, _, _) => (),
-      inputCanonical: Boolean = false): DataFrame =
-    runWithStats(spark, edges0, maxIterations, checkpointDir, reliableEvery,
-      smallGraphThreshold, onIteration, inputCanonical)._1
-
   /** Driver-side union-find with min-root semantics (attach the larger root
     * under the smaller), path-compressed. */
   private def unionFind(rows: Array[(Long, Long)]): Iterator[(Long, Long)] = {
@@ -140,17 +106,43 @@ object ConnectedComponents {
     }
   }
 
-  /** `run` plus the number of star iterations executed (probes/specs use the
-    * count to audit convergence; the small-graph path reports 0).
+  /** Run to fixpoint; returns (node, root) for every node appearing in an
+    * edge. Singleton nodes (no edges) are their own root — callers union
+    * them in.
+    *
+    * ADAPTIVE execution: when the canonical edge count is at or below
+    * `smallGraphThreshold`, the component computation runs as a single
+    * driver-side union-find over the collected edges instead of the
+    * iterative fixpoint — the same move Spark itself makes when it
+    * broadcasts a small join side. The distributed fixpoint pays a
+    * per-iteration job floor (two window stars + distinct per round) that
+    * dominates wall time on small graphs; at 2M edges the collect is
+    * ~32 MB of longs, far below any driver budget, and the result is
+    * IDENTICAL (min-reachable-id roots, equality property-tested). Pass
+    * `smallGraphThreshold = 0` to force the distributed path.
+    *
+    * Lineage is truncated every iteration. By default with `localCheckpoint`
+    * (executor-memory-resident — fast, but an executor loss mid-job forces a
+    * full recompute); pass `checkpointDir` for RELIABLE checkpoints — every
+    * `reliableEvery`-th iteration the edge set is written to parquet and
+    * re-read, so on a long cluster run the job resumes from durable state
+    * instead of dying with a lost executor. Intermediate iterations still
+    * use localCheckpoint (cheap) between durable ones.
+    *
+    * Throws `IllegalStateException` when `maxIterations` fresh rounds pass
+    * without reaching the fixpoint; a durable iterate written before the
+    * throw stays for the next run to resume from.
     *
     * `onIteration(iteration, canonicalEdges, wallMs)` fires once per
     * materialized edge set — iteration 0 is the initial canonicalization
     * (or the durable-checkpoint read on resume), each subsequent call one
-    * star round. The fixpoint's per-iteration jobs run EAGERLY inside this
-    * method, so a caller that only times the returned DataFrame's write
-    * (the stage-commit pattern) never sees them; the callback is how the
-    * pipeline surfaces the fixpoint's true cost into its metrics table. */
-  def runWithStats(spark: SparkSession, edges0: DataFrame, maxIterations: Int = 50,
+    * star round, so the last iteration it reports is the last star round
+    * run (0 when a fresh input takes the small-graph path). The fixpoint's
+    * per-iteration jobs run EAGERLY inside this method, so a caller that
+    * only times the returned DataFrame's write (the stage-commit pattern)
+    * never sees them; the callback is how the pipeline surfaces the
+    * fixpoint's true cost into its metrics table. */
+  def run(spark: SparkSession, edges0: DataFrame, maxIterations: Int = 50,
       checkpointDir: Option[String] = None, reliableEvery: Int = 3,
       smallGraphThreshold: Long = 2000000L,
       onIteration: (Int, Long, Long) => Unit = (_, _, _) => (),
@@ -162,7 +154,7 @@ object ConnectedComponents {
         * The star rounds themselves tolerate non-canonical input (bidirection
         * covers both orders; each round ends in a canonical distinct), so a
         * wrong vouch costs duplicate work in round 1, never wrong roots. */
-      inputCanonical: Boolean = false): (DataFrame, Int) = {
+      inputCanonical: Boolean = false): DataFrame = {
     // superseded durable checkpoints are deleted as soon as the next one is
     // fully written, so a run keeps AT MOST ONE edge-set copy on disk (the
     // final checkpoint remains until the caller is done with the returned
@@ -229,7 +221,7 @@ object ConnectedComponents {
       import spark.implicits._
       val rows = edges.select(col("src"), col("dst")).collect()
         .map(r => (r.getLong(0), r.getLong(1)))
-      return (unionFind(rows).toSeq.toDF("node", "root"), 0)
+      return unionFind(rows).toSeq.toDF("node", "root")
     }
     var converged = false
     // the counter resumes too: the next durable write lands on a FRESH
@@ -264,6 +256,6 @@ object ConnectedComponents {
     val roots = edges.select(col("src").as("node"), col("dst").as("root"))
     // roots themselves
     val selfRoots = edges.select(col("dst").as("node"), col("dst").as("root")).distinct()
-    (roots.union(selfRoots).groupBy("node").agg(min("root").as("root")), it)
+    roots.union(selfRoots).groupBy("node").agg(min("root").as("root"))
   }
 }

@@ -37,21 +37,33 @@ object Cascade {
   private val contextCols =
     Seq("mention_id", "text", "span_start", "span_end", "is_table", "table_html", "row_idx", "col_idx")
 
+  /** The cascade's result: `predictions`, one row per mention with the
+    * columns `mention_id, label, blocking_key, y_pred, tier, status, score`,
+    * and the tier outputs the cascade persisted so that one action over
+    * `predictions` computes each tier once. `release()` unpersists them
+    * (no Spark job); call it once `predictions` is written or cached. */
+  final case class Output(predictions: DataFrame, tierCaches: Seq[DataFrame]) {
+    def release(): Unit = tierCaches.foreach(_.unpersist(blocking = false))
+  }
+
   /** Run the full cascade over KEYED mentions: the canonical mention schema
     * (mention_id, text, label, span_start, span_end, is_table + table
     * context columns) plus the `mention`, `tokens` and `blocking_key`
     * columns of [[ExactLinker.withBlockingKey]]. The cascade never
-    * re-tokenizes; un-keyed input fails the `require`. Returns one
-    * prediction row per mention with the columns `mention_id, label,
-    * blocking_key, y_pred, tier, status, score`. */
+    * re-tokenizes; un-keyed input fails the `require`. */
   def run(spark: SparkSession, keyed: DataFrame, entries: Seq[OntologyEntry],
-      cfg: Config = Config()): DataFrame = {
+      cfg: Config = Config()): Output = {
     val missing = Seq("mention", "tokens", "blocking_key").filterNot(keyed.columns.contains)
     require(missing.isEmpty,
       s"Cascade.run needs keyed mentions (ExactLinker.withBlockingKey); missing ${missing.mkString(", ")}")
     val index = Ontology.blockingIndex(entries)
 
     def sink(tier: String, df: DataFrame): Unit = cfg.tierSink.foreach(_(tier, df))
+    val tierCaches = Seq.newBuilder[DataFrame]
+    def persisted(df: DataFrame): DataFrame = {
+      tierCaches += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      df
+    }
 
     // tier 1: exact — emits linked/excluded, residue flows on. The
     // full-width tier output (turn text, table context, debug candidates)
@@ -61,9 +73,8 @@ object Cascade {
     // otherwise dominate the cache footprint at tens of millions of mentions.
     val exactFull = ExactLinker.link(spark, keyed, index)
     sink("exact", exactFull)
-    val exact = exactFull.select(
-      (predCols.filterNot(_ == "score") ++ Seq("mention", "tokens")).map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val exact = persisted(exactFull.select(
+      (predCols.filterNot(_ == "score") ++ Seq("mention", "tokens")).map(col): _*))
     val exactEmitted = exact.filter(col("status").isin(
       ExactLinker.StatusLinked, ExactLinker.StatusDisambiguated,
       ExactLinker.StatusTableDefault, ExactLinker.StatusExcluded))
@@ -80,18 +91,16 @@ object Cascade {
         when(col("subset_matched"), col("subsetted_concepts")))
 
     // tier 2: fuzzy token scoring, category-constrained
-    val fuzzy = FuzzyLinker.link(spark, subsetted.drop("y_pred", "status", "tier"),
-      index, matchThreshold = cfg.fuzzyThreshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fuzzy = persisted(FuzzyLinker.link(spark, subsetted.drop("y_pred", "status", "tier"),
+      index, matchThreshold = cfg.fuzzyThreshold))
     sink("fuzzy", fuzzy)
     val fuzzyLinked = fuzzy.filter(col("status") === "linked")
     val residue2 = fuzzy.filter(col("status") === "unlinked")
       .drop("pred_ids", "pred_scores", "y_pred", "status", "tier", "score")
 
     // tier 3 (graft extension): typo-tolerant raw-surface fuzzy pass
-    val surface = FuzzyLinker.linkRawSurface(spark, residue2,
-      Ontology.surfaceIndex(entries), cfg.surfaceThreshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val surface = persisted(FuzzyLinker.linkRawSurface(spark, residue2,
+      Ontology.surfaceIndex(entries), cfg.surfaceThreshold))
     sink("surface", surface)
     val surfaceLinked = surface.filter(col("status") === "linked")
     val residue3 = surface.filter(col("status") === "unlinked")
@@ -112,7 +121,7 @@ object Cascade {
     // linked bi-encoder rows pass through, the NIL residue is re-asked.
     val tier4And5 = cfg.promptScorer match {
       case Some(scorer) =>
-        val biencPersisted = bienc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val biencPersisted = persisted(bienc)
         sink("bienc", biencPersisted)
         val biencLinked = biencPersisted.filter(col("status") === "linked")
         val residue4 = biencPersisted.filter(col("status") === "unlinked")
@@ -121,26 +130,22 @@ object Cascade {
         // evaluates the prompt tier once and the final union recomputes it
         // from scratch (and a non-deterministic scorer could diverge between
         // the dumped tier and the returned union)
-        val prompted = if (cfg.tierSink.isDefined)
-          PromptLinker.link(spark, residue4, entries, scorer)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else PromptLinker.link(spark, residue4, entries, scorer)
+        val prompt = PromptLinker.link(spark, residue4, entries, scorer)
+        val prompted = if (cfg.tierSink.isDefined) persisted(prompt) else prompt
         sink("prompt", prompted)
         biencLinked.select(predCols.map(col): _*)
           .unionByName(prompted.select(predCols.map(col): _*))
       case None =>
         // persist before an eager sink write so the final union reuses the
         // tier output instead of recomputing it
-        val b = if (cfg.tierSink.isDefined)
-          bienc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else bienc
+        val b = if (cfg.tierSink.isDefined) persisted(bienc) else bienc
         sink("bienc", b)
         b.select(predCols.map(col): _*)
     }
 
-    exactEmitted.select(predCols.map(col): _*)
+    Output(exactEmitted.select(predCols.map(col): _*)
       .unionByName(fuzzyLinked.select(predCols.map(col): _*))
       .unionByName(surfaceLinked.select(predCols.map(col): _*))
-      .unionByName(tier4And5)
+      .unionByName(tier4And5), tierCaches.result())
   }
 }

@@ -36,19 +36,17 @@ object ExactLinker {
   }
 
   /** Invalid-context exclusion: ±15-char window around the span matches a
-    * mention-anchored pattern (`exact_linker.py:200-221`). */
+    * mention-anchored pattern (`exact_linker.py:200-221`). The reference's
+    * four patterns are one alternation: `find()` succeeds exactly when one
+    * alternative is found, so one compile per mention does the work of four. */
   def isInInvalidContext(fullText: String, spanStart: Int, spanEnd: Int, window: Int = 15): Boolean = {
     val text = fullText.toLowerCase
     val s = math.max(0, spanStart)
     val e = math.min(text.length, spanEnd)
-    val mention = Pattern.quote(text.substring(s, e))
+    val m = Pattern.quote(text.substring(s, e))
     val ctx = text.substring(math.max(0, s - window), math.min(text.length, e + window))
-    val pats = Seq(
-      s"$mention[\\s\\-_/:]*(mic|pharmacodynamic)",
-      s"$mention[\\s\\-_/:]*(creatinine|cr)",
-      s"$mention/fe",
-      s"m\\s*\\+\\s*$mention")
-    pats.exists(p => Pattern.compile(p, Pattern.CASE_INSENSITIVE | Pattern.UNICODE_CASE).matcher(ctx).find())
+    Pattern.compile(s"$m[\\s\\-_/:]*(?:mic|pharmacodynamic|creatinine|cr)|$m/fe|m\\s*\\+\\s*$m",
+      Pattern.CASE_INSENSITIVE | Pattern.UNICODE_CASE).matcher(ctx).find()
   }
 
   /** Contextual disambiguation of ambiguous exact matches

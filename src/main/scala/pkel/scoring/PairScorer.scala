@@ -18,28 +18,29 @@ import pkel.blocking.{PairDropMetrics, PairGen}
   *
   * Two kernels: [[scorePairs]] scores candidate pairs already joined with
   * both sides' features (`key_a/key_b` canonical blocking-key strings,
-  * `mention_a/mention_b` raw surface strings); [[scoreBuckets]] enumerates
-  * and scores the pairs of the salted bucket-member table in place, as the
-  * [[BucketPairs]] generator. [[scoreCandidates]] unions both into one lazy
-  * plan. Both read jw and cosine through one per-task [[SurfaceSims]] cache
-  * (embeddings from `Embedder.encode` on the raw surface).
+  * `mention_a/mention_b` raw surface strings), reading jw and cosine through
+  * a per-task [[SurfaceSims]] cache (embeddings from `Embedder.encode` on the
+  * raw surface); [[scoreBuckets]] enumerates the pairs of the salted
+  * bucket-member table in place, as the [[BucketPairs]] generator.
+  * [[scoreCandidates]] unions both into one lazy `(src, dst, score)` plan.
   *
   * Combined score = wKey·indel(key_a,key_b)/100 + wJw·JW(mention_a,mention_b)
   * + wCos·max(0, cosine) — the key term carries the reference's
   * canonicalization semantics (equal keys ⇒ same surface family), the
   * JW/cosine terms grade near-duplicates across keys. Identical non-empty
-  * keys score 1.0.
+  * keys are the reference's own equality predicate and score 1.0 without
+  * reading a surface, so only cross-key pairs pay for JW and cosine.
   */
 object PairScorer {
 
   /** Per-task bound on each [[SurfaceSims]] table (embeddings per surface,
     * (jw, cos) per surface pair). Above ~this many distinct surfaces the
-    * cache stops growing and the kernel recomputes per bucket occurrence. */
+    * cache stops growing and the kernel recomputes per pair. */
   val MemoCap = 200000
 
   final case class Weights(wKey: Double = 0.5, wJw: Double = 0.2, wCos: Double = 0.3)
 
-  /** The per-task similarity cache both kernels share: an embedding per
+  /** The per-task similarity cache of [[scorePairs]]: an embedding per
     * surface and `(jw, cos)` per ORDERED surface pair `(a, b)` — JW of the
     * lower-cased surfaces, dot of their unit embeddings. Each table is
     * bounded at [[MemoCap]] entries: past the cap a miss computes without
@@ -133,34 +134,31 @@ object PairScorer {
     StructField("key_sim", DoubleType), StructField("jw_sim", DoubleType),
     StructField("cos_sim", DoubleType), StructField("score", DoubleType))
 
+  /** The committed pair schema: ids and the combined score. */
   private val leanSchema = StructType(Seq(
-    StructField("src", LongType), StructField("dst", LongType)) ++ simFields)
+    StructField("src", LongType), StructField("dst", LongType), StructField("score", DoubleType)))
 
   /** Kernel-fused scoring over a salted bucket-member table
-    * (`PairGen.saltedBucketTable`): pair enumeration AND scoring run in one
-    * pass over the bucket rows, so the quadratic pair stream is never a
-    * relational intermediate (no pair-row shuffle, member payloads decoded
-    * once per member). The kernel is the [[BucketPairs]] generator, so the
-    * scored pairs are a `Generate` node in the caller's own lazy plan. */
-  def scoreBuckets(buckets: DataFrame, embedder: Embedder = Embedder.default): DataFrame =
-    buckets.select(Bridge.column(BucketPairs(Bridge.expression(col("ms")), embedder)))
+    * (`PairGen.saltedBucketTable`): pair enumeration runs in one pass over
+    * the bucket rows, so the quadratic pair stream is never a relational
+    * intermediate (no pair-row shuffle). The kernel is the [[BucketPairs]]
+    * generator, so the scored pairs are a `Generate` node in the caller's
+    * own lazy plan. */
+  def scoreBuckets(buckets: DataFrame): DataFrame =
+    buckets.select(Bridge.column(BucketPairs(Bridge.expression(col("ms")))))
 
   /** The bucket kernel as a Catalyst generator: one bucket's member array
-    * (structs of mention_id, blocking_key, mention) in, its scored pairs
+    * (structs of mention_id, blocking_key) in, its `(src, dst, 1.0)` pairs
     * out. Pairs are oriented src > dst by sorting members on descending
     * mention_id, making output rows independent of collect_list order
     * (parallelism-invariant).
     *
     * Every bucket must hold ONE non-empty blocking key — the salted table
-    * groups on `key#salt` after dropping empty keys — so key_sim and the
-    * combined score are the constant 1.0 (identical canonical keys are the
-    * reference's own equality predicate) and jw/cos depend only on the
-    * SURFACE pair: distinct surfaces are interned per bucket and a d x d sim
-    * matrix is read from the task's [[SurfaceSims]]; each emitted pair is
-    * index lookups + six fixed-width writes into one reused row. A
-    * mixed-key or empty-key bucket fails the task. The cache is held per
-    * task: every task deserializes its own copy of the expression. */
-  private case class BucketPairs(child: Expression, embedder: Embedder)
+    * groups on `key#salt` after dropping empty keys — so every pair scores
+    * the constant 1.0 (identical canonical keys are the reference's own
+    * equality predicate) and no surface is read. A mixed-key or empty-key
+    * bucket fails the task. */
+  private case class BucketPairs(child: Expression)
       extends UnaryExpression with Generator with CodegenFallback {
 
     override def prettyName: String = "bucket_pairs"
@@ -170,8 +168,6 @@ object PairScorer {
       child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
     @transient private lazy val iId = memberSchema.fieldIndex("mention_id")
     @transient private lazy val iKey = memberSchema.fieldIndex("blocking_key")
-    @transient private lazy val iMen = memberSchema.fieldIndex("mention")
-    @transient private lazy val sims = new SurfaceSims(embedder)
     // consumers read or copy each row before asking for the next one
     @transient private lazy val out = new SpecificInternalRow(leanSchema.map(_.dataType))
 
@@ -180,7 +176,6 @@ object PairScorer {
       if (arr == null) return Iterator.empty
       val n = arr.numElements()
       val ids = new Array[Long](n)
-      val mens = new Array[String](n)
       var key: UTF8String = null
       var k = 0
       while (k < n) {
@@ -190,41 +185,10 @@ object PairScorer {
           s"bucket kernel needs one non-empty blocking key per bucket, got '$key' and '$mk'")
         key = mk
         ids(k) = m.getLong(iId)
-        mens(k) = if (m.isNullAt(iMen)) "" else m.getUTF8String(iMen).toString
         k += 1
       }
       // sort member indices by descending id so pair (i,j), i<j is (src,dst)
       val order = Array.range(0, n).sortBy(t => -ids(t))
-
-      val surfOf = new Array[Int](n)
-      val surfMap = new java.util.HashMap[String, Integer](16)
-      val surfs = new scala.collection.mutable.ArrayBuffer[String](8)
-      var t = 0
-      while (t < n) {
-        val mt = order(t)
-        var si = surfMap.get(mens(mt))
-        if (si == null) {
-          si = Integer.valueOf(surfs.length)
-          surfMap.put(mens(mt), si)
-          surfs += mens(mt)
-        }
-        surfOf(t) = si.intValue()
-        t += 1
-      }
-      val d = surfs.length
-      val jwM = Array.ofDim[Double](d, d)
-      val cosM = Array.ofDim[Double](d, d)
-      var x = 0
-      while (x < d) {
-        var y = x
-        while (y < d) {
-          val v = sims(surfs(x), surfs(y))
-          jwM(x)(y) = v(0); jwM(y)(x) = v(0)
-          cosM(x)(y) = v(1); cosM(y)(x) = v(1)
-          y += 1
-        }
-        x += 1
-      }
 
       new scala.collection.AbstractIterator[InternalRow] {
         private var i = 0
@@ -244,9 +208,6 @@ object PairScorer {
           out.setLong(0, ids(order(pi)))
           out.setLong(1, ids(order(pj)))
           out.setDouble(2, 1.0)
-          out.setDouble(3, jwM(surfOf(pi))(surfOf(pj)))
-          out.setDouble(4, cosM(surfOf(pi))(surfOf(pj)))
-          out.setDouble(5, 1.0)
           skipSelfPairs()
           out
         }
@@ -257,30 +218,31 @@ object PairScorer {
       copy(child = newChild)
   }
 
-  /** Full fused candidate scoring: salted buckets through the bucket kernel,
-    * the sparse star + LSH pairs through the row kernel. Produces the same
-    * pair set as `scorePairs(PairGen.candidatePairsWithFeatures(...))` with
-    * one less relational materialization of the quadratic stream. The LSH
-    * oversize drop and the length prune count into `drops`, which holds
-    * this call's counts only once an action has executed the plan. */
+  /** Full fused candidate scoring, as `(src, dst, score)`: salted buckets
+    * through the bucket kernel, rep-star pairs at their known score 1.0,
+    * and the cross-key MinHash-LSH pairs through the row kernel. Produces
+    * the same pairs and scores as
+    * `scorePairs(PairGen.candidatePairsWithFeatures(...))` with one less
+    * relational materialization of the quadratic stream. The LSH oversize
+    * drop and the length prune count into `drops`, which holds this call's
+    * counts only once an action has executed the plan. */
   def scoreCandidates(mentions: DataFrame,
       cfg: PairGen.Config = PairGen.Config(),
       w: Weights = Weights(), embedder: Embedder = Embedder.default,
       minScore: Option[Double] = None,
       drops: PairDropMetrics = PairDropMetrics()): DataFrame = {
-    // `minScore` (the length-bound prune) applies to the SPARSE relational
-    // path only: salted-bucket and rep-star pairs share one blocking key
-    // (bound = 1.0, never prunable), so only the cross-key MinHash-LSH pairs
-    // can fall below the bound — and those are exactly the pairs that pay
-    // the full JW + cosine kernel on distinct surfaces. Both key-side
-    // branches start from the same `annotated` plan, so the planner runs its
-    // blocking_key exchange once and the rep-star branch reads it back as a
+    // salted-bucket and rep-star pairs share one non-empty blocking key, so
+    // they score 1.0 and read no surface (and their length bound, 1.0, never
+    // prunes). Only the cross-key LSH pairs pay the JW + cosine kernel and
+    // the `minScore` length-bound prune. Both key-side branches start from
+    // the same `annotated` plan, so the planner runs its blocking_key
+    // exchange once and the rep-star branch reads it back as a
     // ReusedExchange (PlanAuditSpec).
-    val sparse = PairGen.repStarPairs(PairGen.annotated(mentions, cfg))
-      .unionByName(PairGen.lshPairs(mentions, cfg, drops))
-    val kept = minScore.fold(sparse)(t => lengthPrune(sparse, w, t, drops.prunedPairs))
-    scoreBuckets(PairGen.saltedBucketTable(mentions, cfg), embedder)
-      .unionByName(scorePairs(kept, w, embedder)
-        .select("src", "dst", "key_sim", "jw_sim", "cos_sim", "score"))
+    val lsh = PairGen.lshPairs(mentions, cfg, drops)
+    val kept = minScore.fold(lsh)(t => lengthPrune(lsh, w, t, drops.prunedPairs))
+    scoreBuckets(PairGen.saltedBucketTable(mentions, cfg))
+      .unionByName(PairGen.repStarPairs(PairGen.annotated(mentions, cfg))
+        .select(col("src"), col("dst"), lit(1.0).as("score")))
+      .unionByName(scorePairs(kept, w, embedder).select("src", "dst", "score"))
   }
 }

@@ -1,13 +1,17 @@
 package pkel
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one per suite). */
-trait SparkSpec extends AnyFunSuite {
+/** Shared local SparkSession for specs (one per suite), and one temp root
+  * per suite that is deleted after it. */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -19,6 +23,27 @@ trait SparkSpec extends AnyFunSuite {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  private var suiteRoot: Option[Path] = None
+
+  /** A new directory under this suite's temp root, named `prefix` plus a
+    * random suffix. The whole root is deleted after the suite. */
+  def tempDir(prefix: String): String = synchronized {
+    val root = suiteRoot.getOrElse {
+      val r = Files.createTempDirectory(s"pkel_${getClass.getSimpleName}_")
+      suiteRoot = Some(r)
+      r
+    }
+    Files.createTempDirectory(root, prefix).toString
+  }
+
+  override def afterAll(): Unit =
+    try suiteRoot.foreach { root =>
+      val walk = Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+      finally walk.close()
+      suiteRoot = None
+    } finally super.afterAll()
 
   /** Spark jobs started while `body` runs, counted by a listener. */
   def jobsDuring(body: => Unit): Int = {

@@ -1,7 +1,5 @@
 package pkel.app
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import pkel.SparkSpec
@@ -45,7 +43,7 @@ class TranscriptPipelineSpec extends SparkSpec {
   test("end-to-end: clusters reach pairwise F1 >= 0.99 vs constructed gold") {
     val seed = 42L
     val transcripts = TranscriptSynth.generate(spark, entries, nConvs = 400, seed = seed)
-    val root = Files.createTempDirectory("pkel_pipe_").toString
+    val root = tempDir("pkel_pipe_")
     val io = new TableIO(spark, root, "test-run")
     val gold = goldDf(transcripts, seed)
     val (clusters, summary) = Pipeline.run(spark, transcripts, entries, Pipeline.Config(), io, Some(gold))
@@ -75,7 +73,7 @@ class TranscriptPipelineSpec extends SparkSpec {
     // every extracted span has a gold assignment and the e2e gate is unchanged
     val gold = goldDf(transcripts, seed, multiRate = 0.3)
     assert(gold.count() == mentions.count(), "gold does not cover every span")
-    val root = Files.createTempDirectory("pkel_multi_").toString
+    val root = tempDir("pkel_multi_")
     val io = new TableIO(spark, root, "multi-run")
     val (_, summary) = Pipeline.run(spark, transcripts, entries, Pipeline.Config(), io, Some(gold))
     info(s"multi-span summary: $summary")
@@ -98,11 +96,11 @@ class TranscriptPipelineSpec extends SparkSpec {
     import spark.implicits._
     val t = TranscriptSynth.generate(spark, entries, nConvs = 40, seed = 5L)
     val mentions = Pipeline.extractMentions(t)
-    val rootA = Files.createTempDirectory("pkel_audit_sep_").toString
+    val rootA = tempDir("pkel_audit_sep_")
     val plain = jobsDuring(new TableIO(spark, rootA, "sep").commit("mentions", mentions, "f"))
     val snapshot = new TableIO(spark, rootA, "sep").readOrCompute("mentions", "f")(fail("must replay"))
     val audit = jobsDuring(Pipeline.auditMentionIds(snapshot))
-    val rootB = Files.createTempDirectory("pkel_audit_fold_").toString
+    val rootB = tempDir("pkel_audit_fold_")
     val audited = jobsDuring {
       new TableIO(spark, rootB, "fold")
         .commit("mentions", mentions, "f", Some(Pipeline.mentionIdAudit))
@@ -114,7 +112,7 @@ class TranscriptPipelineSpec extends SparkSpec {
     // resumable with corrupt ids
     val collided = Seq((1L, "c1", 0, 0), (1L, "c2", 0, 0))
       .toDF("mention_id", "conv_id", "turn_idx", "span_idx")
-    val rootC = Files.createTempDirectory("pkel_audit_veto_").toString
+    val rootC = tempDir("pkel_audit_veto_")
     val ioC = new TableIO(spark, rootC, "veto")
     val e = intercept[IllegalArgumentException](
       ioC.commit("mentions", collided, "fx", Some(Pipeline.mentionIdAudit)))
@@ -125,7 +123,7 @@ class TranscriptPipelineSpec extends SparkSpec {
   test("resume is idempotent: second run replays committed stages byte-identically") {
     val seed = 7L
     val transcripts = TranscriptSynth.generate(spark, entries, nConvs = 60, seed = seed)
-    val root = Files.createTempDirectory("pkel_resume_").toString
+    val root = tempDir("pkel_resume_")
     val gold = goldDf(transcripts, seed)
     val io1 = new TableIO(spark, root, "run-1")
     val (c1, s1) = Pipeline.run(spark, transcripts, entries, Pipeline.Config(), io1, Some(gold))
@@ -185,13 +183,13 @@ class TranscriptPipelineSpec extends SparkSpec {
       (1 to 3).contains(r.getInt(0)) && r.getInt(1) == 0
     }, s"bad cell coords: ${coords.take(5).mkString(",")}")
     // the exact tier's Q57 table default fires for the ambiguous-surface slice
-    val linked = pkel.link.Cascade.run(spark, pkel.link.ExactLinker.withBlockingKey(mentions), entries)
+    val linked = pkel.link.Cascade.run(spark, pkel.link.ExactLinker.withBlockingKey(mentions), entries).predictions
     val statuses = linked.groupBy("status").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(statuses.getOrElse("table_default", 0L) > 0,
       s"no table_default rows in $statuses")
     // table-default mentions predict Q57 — which IS their constructed gold
-    val root = Files.createTempDirectory("pkel_table_").toString
+    val root = tempDir("pkel_table_")
     val io = new TableIO(spark, root, "table-run")
     val gold = goldDf(transcripts, seed, tableRate = tableRate)
     assert(gold.count() == mentions.count(), "gold does not cover every mention")
@@ -207,7 +205,7 @@ class TranscriptPipelineSpec extends SparkSpec {
     val gold = goldDf(transcripts, seed)
     // targetBucketSize = Int.MaxValue gives every key one bucket (unsalted)
     def clustersWith(target: Int): (Map[Long, String], Pipeline.Summary) = {
-      val root = Files.createTempDirectory(s"pkel_salt${target}_").toString
+      val root = tempDir(s"pkel_salt${target}_")
       val cfg = Pipeline.Config(pairCfg = PairGen.Config(targetBucketSize = target))
       val io = new TableIO(spark, root, s"salt-$target")
       val (c, summary) = Pipeline.run(spark, transcripts, entries, cfg, io, Some(gold))
@@ -260,7 +258,7 @@ class TranscriptPipelineSpec extends SparkSpec {
       }
     }
     def edgesWith(tag: String): (Set[(Long, Long)], Map[Long, Long], String) = {
-      val root = Files.createTempDirectory(s"pkel_edges_${tag}_").toString
+      val root = tempDir(s"pkel_edges_${tag}_")
       val io = new TableIO(spark, root, s"edges-$tag")
       val (c, _) = Pipeline.run(spark, transcripts, entries, Pipeline.Config(), io, Some(gold))
       val e = spark.read.parquet(s"$root/edges").collect()
@@ -336,6 +334,17 @@ class TranscriptPipelineSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("a run leaks no cache: as many cached plans after Pipeline.run as before") {
+    // the cascade persists its tier outputs for the `linked` commit's write;
+    // the run releases them once that stage commits
+    val transcripts = TranscriptSynth.generate(spark, entries, nConvs = 60, seed = 5L)
+    def cached = org.apache.spark.sql.pkelbridge.Bridge.cachedPlans(spark)
+    val before = cached
+    Pipeline.run(spark, transcripts, entries, Pipeline.Config(),
+      new TableIO(spark, tempDir("pkel_cache_"), "cache"))
+    assert(cached == before, s"${cached - before} cached plans outlive the run")
+  }
+
   test("anchor/sim edge subgraphs are node-disjoint (the CC-split precondition)") {
     // Stage 7 runs the CC fixpoint on sim edges only and unions anchor rows
     // in as ready-made (node, root) assignments. That is correct ONLY if no
@@ -347,7 +356,7 @@ class TranscriptPipelineSpec extends SparkSpec {
     // clustering drift.
     val seed = 13L
     val transcripts = TranscriptSynth.generate(spark, entries, nConvs = 150, seed = seed)
-    val root = Files.createTempDirectory("pkel_ccsplit_").toString
+    val root = tempDir("pkel_ccsplit_")
     val io = new TableIO(spark, root, "ccsplit")
     Pipeline.run(spark, transcripts, entries, Pipeline.Config(), io,
       Some(goldDf(transcripts, seed)))

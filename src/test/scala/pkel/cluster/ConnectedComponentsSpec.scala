@@ -1,5 +1,7 @@
 package pkel.cluster
 
+import org.apache.spark.sql.DataFrame
+
 import pkel.SparkSpec
 
 class ConnectedComponentsSpec extends SparkSpec {
@@ -25,6 +27,14 @@ class ConnectedComponentsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
+  /** Roots of one `run` and the last iteration its `onIteration` callback
+    * reported, which is the number of star rounds run. */
+  private def runCounted(cc: ((Int, Long, Long) => Unit) => DataFrame): (DataFrame, Int) = {
+    var last = -1
+    val roots = cc((it, _, _) => last = it)
+    (roots, last)
+  }
+
   test("simple chain and star") {
     assert(runCc(Seq((1L, 2L), (2L, 3L), (3L, 4L))) ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
@@ -43,7 +53,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     val rnd = new scala.util.Random(11)
     val edges = Seq.fill(150)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
       .filter(e => e._1 != e._2)
-    val dir = java.nio.file.Files.createTempDirectory("cc-ck").toString
+    val dir = tempDir("cc-ck")
     // threshold 0 forces the distributed fixpoint (the adaptive small-graph
     // path would satisfy this graph driver-side and write no checkpoints)
     val durable = ConnectedComponents.run(spark, edges.toDF("src", "dst"),
@@ -63,11 +73,11 @@ class ConnectedComponentsSpec extends SparkSpec {
     val edges = Seq.fill(200)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
       .filter(e => e._1 != e._2)
     val stats = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
-    val (roots, iters) = ConnectedComponents.runWithStats(
+    val roots = ConnectedComponents.run(
       spark, edges.toDF("src", "dst"), smallGraphThreshold = 0L,
       onIteration = (it, n, ms) => stats += ((it, n, ms)))
     // one callback for the initial canonicalization + one per star round
-    assert(stats.map(_._1) == (0 to iters))
+    assert(stats.size >= 2 && stats.map(_._1) == (0 until stats.size))
     assert(stats.forall(_._3 >= 0L))
     // iteration 0 reports the canonical (dedup'd, undirected) edge count
     val canonical = edges.map(e => (math.max(e._1, e._2), math.min(e._1, e._2))).distinct.size
@@ -79,7 +89,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(rootMap == oracle(edges))
     // the small-graph path never iterates: a single callback for iteration 0
     val small = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
-    ConnectedComponents.runWithStats(spark, edges.toDF("src", "dst"),
+    ConnectedComponents.run(spark, edges.toDF("src", "dst"),
       onIteration = (it, n, ms) => small += ((it, n, ms)))
     assert(small.map(_._1) == Seq(0) && small.head._2 == canonical)
   }
@@ -93,17 +103,17 @@ class ConnectedComponentsSpec extends SparkSpec {
       Seq.fill(200)((rnd.nextInt(400).toLong, rnd.nextInt(400).toLong)).filter(e => e._1 != e._2)
     val expect = oracle(edges)
     // cold full run (its own dir) for the iteration-count baseline
-    val coldDir = java.nio.file.Files.createTempDirectory("cc_cold_").toString
-    val (coldDf, coldIters) = ConnectedComponents.runWithStats(spark, edges.toDF("src", "dst"),
-      checkpointDir = Some(coldDir), reliableEvery = 1, smallGraphThreshold = 0L)
+    val coldDir = tempDir("cc_cold_")
+    val (coldDf, coldIters) = runCounted(cb => ConnectedComponents.run(spark, edges.toDF("src", "dst"),
+      checkpointDir = Some(coldDir), reliableEvery = 1, smallGraphThreshold = 0L, onIteration = cb))
     val cold = coldDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cold == expect)
     assert(coldIters >= 2, s"graph too easy for a resume test ($coldIters iterations)")
     // simulated kill: an exhausted budget refuses to return roots, but the
     // durable cc_iter_1 it wrote before refusing stays for the resume
-    val dir = java.nio.file.Files.createTempDirectory("cc_resume_").toString
+    val dir = tempDir("cc_resume_")
     val refused = intercept[IllegalStateException] {
-      ConnectedComponents.runWithStats(spark, edges.toDF("src", "dst"),
+      ConnectedComponents.run(spark, edges.toDF("src", "dst"),
         maxIterations = 1, checkpointDir = Some(dir), reliableEvery = 1,
         smallGraphThreshold = 0L)
     }
@@ -112,9 +122,9 @@ class ConnectedComponentsSpec extends SparkSpec {
       "kill simulation left no durable iterate")
     // fresh run, same dir: must pick up cc_iter_1 (total iterations match the
     // cold run's — the first iteration is NOT redone) and match the oracle
-    val (resumedDf, totalIters) = ConnectedComponents.runWithStats(spark,
+    val (resumedDf, totalIters) = runCounted(cb => ConnectedComponents.run(spark,
       edges.toDF("src", "dst"), checkpointDir = Some(dir), reliableEvery = 1,
-      smallGraphThreshold = 0L)
+      smallGraphThreshold = 0L, onIteration = cb))
     val resumed = resumedDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(resumed == expect, "resumed run diverged from the oracle")
     assert(totalIters == coldIters,
@@ -143,8 +153,8 @@ class ConnectedComponentsSpec extends SparkSpec {
       val small = runCc(edges)
       assert(small == expect, s"trial $trial small-path mismatch\n got=$small\n exp=$expect")
       // threshold 0 → distributed large-star/small-star fixpoint
-      val (dist, iters) = ConnectedComponents.runWithStats(
-        spark, edges.toDF("src", "dst"), smallGraphThreshold = 0L)
+      val (dist, iters) = runCounted(cb => ConnectedComponents.run(
+        spark, edges.toDF("src", "dst"), smallGraphThreshold = 0L, onIteration = cb))
       val distMap = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(iters > 0, "distributed path must actually iterate")
       assert(distMap == expect, s"trial $trial distributed mismatch\n got=$distMap\n exp=$expect")
@@ -156,12 +166,12 @@ class ConnectedComponentsSpec extends SparkSpec {
     // two disjoint stars rooted at their minima — the fixpoint shape
     val edges = Seq((5L, 1L), (7L, 1L), (9L, 1L), (20L, 10L), (30L, 10L))
     val stats = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
-    val (df, iters) = ConnectedComponents.runWithStats(
+    val df = ConnectedComponents.run(
       spark, edges.toDF("src", "dst"), smallGraphThreshold = 0L,
       onIteration = (it, n, ms) => stats += ((it, n, ms)))
     // round 1 reproduces the star forest; the shape test detects the
     // fixpoint there — no second (verification) round is spent
-    assert(iters == 1, s"expected 1 iteration, got $iters (stats=$stats)")
+    assert(stats.map(_._1) == Seq(0, 1), s"expected 1 iteration, got stats=$stats")
     val roots = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(roots == oracle(edges))
   }
@@ -174,10 +184,10 @@ class ConnectedComponentsSpec extends SparkSpec {
     // canonical-distinct form (src > dst, each unordered pair once)
     val canon = raw.map(e => (math.max(e._1, e._2), math.min(e._1, e._2))).distinct
     val expect = oracle(raw)
-    val dir = java.nio.file.Files.createTempDirectory("cc-canon").toString
-    val (df, iters) = ConnectedComponents.runWithStats(spark,
+    val dir = tempDir("cc-canon")
+    val (df, iters) = runCounted(cb => ConnectedComponents.run(spark,
       canon.toDF("src", "dst"), checkpointDir = Some(dir), reliableEvery = 3,
-      smallGraphThreshold = 0L, inputCanonical = true)
+      smallGraphThreshold = 0L, onIteration = cb, inputCanonical = true))
     assert(df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expect)
     // iteration 0 (the canonicalize + durable re-write of the input) was
     // skipped: no cc_iter_0 directory ever appears

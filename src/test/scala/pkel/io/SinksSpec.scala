@@ -13,7 +13,7 @@ class SinksSpec extends SparkSpec {
       (1L, "t1/2 of drug", "Q57"),
       (2L, "AUC0-∞", "Q88"))
       .toDF("id", "text", "label")
-    val dir = java.nio.file.Files.createTempDirectory("jsonl-sink").toString + "/out"
+    val dir = tempDir("jsonl-sink") + "/out"
     Sinks.writeJsonl(df, dir)
     val back = spark.read.json(dir).select("id", "text", "label")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet

@@ -30,7 +30,7 @@ class TableIOSpec extends SparkSpec {
   private def contract(name: String, mk: String => StageStore,
       recordedRows: (String, String) => Long): Unit = {
     test(s"$name: partial output recomputed, committed replayed, fingerprint invalidates") {
-      val root = Files.createTempDirectory(s"pkel_${name}_").toString
+      val root = tempDir(s"pkel_${name}_")
       val io = mk(root)
       var computes = 0
       def data = { computes += 1; Seq(1, 2, 3).toDF("x") }
@@ -55,7 +55,7 @@ class TableIOSpec extends SparkSpec {
     }
 
     test(s"$name: lineage rows, schema and row count come from the footers") {
-      val root = Files.createTempDirectory(s"pkel_${name}_footers_").toString
+      val root = tempDir(s"pkel_${name}_footers_")
       val io = mk(root)
       val df = Seq((1L, Seq("a", "b"), Some("x")), (2L, Seq.empty[String], None),
         (3L, Seq("c"), Some("y")), (4L, Seq("d", "e", "f"), None))
@@ -82,7 +82,7 @@ class TableIOSpec extends SparkSpec {
     }
 
     test(s"$name: a commit runs its write and one metrics append, a replay no job") {
-      val root = Files.createTempDirectory(s"pkel_${name}_jobs_").toString
+      val root = tempDir(s"pkel_${name}_jobs_")
       val io = mk(root)
       val df = Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "k").groupBy("k").count()
       val write = jobsDuring(df.write.parquet(s"$root/bare"))
@@ -94,7 +94,7 @@ class TableIOSpec extends SparkSpec {
     }
 
     test(s"$name: driver-side metrics appends join Spark-written ones, leave no temp file, lose no concurrent append") {
-      val root = Files.createTempDirectory(s"pkel_${name}_metrics_").toString
+      val root = tempDir(s"pkel_${name}_metrics_")
       val io = mk(root)
       // (a) a metrics file as Spark appended it: a write job, INT96 stamps
       val legacyAt = java.sql.Timestamp.valueOf("2026-01-02 03:04:05.123456")
@@ -154,14 +154,14 @@ class TableIOSpec extends SparkSpec {
     (root, stage) => recordLine(Files.readString(Paths.get(s"$root/_catalog/$stage.json")), """"rows":"(\d+)""""))
 
   test("backend factory resolves by config name and rejects unknowns") {
-    val root = Files.createTempDirectory("pkel_factory_").toString
+    val root = tempDir("pkel_factory_")
     assert(StageStore.forBackend("snapshot", spark, root, "r").isInstanceOf[TableIO])
     assert(StageStore.forBackend("catalog", spark, root, "r").isInstanceOf[CatalogTableIO])
     intercept[IllegalArgumentException](StageStore.forBackend("iceberg-someday", spark, root, "r"))
   }
 
   test("catalog backend keeps superseded snapshots and swaps the pointer atomically") {
-    val root = Files.createTempDirectory("pkel_cat_hist_").toString
+    val root = tempDir("pkel_cat_hist_")
     val io = new CatalogTableIO(spark, root, "r1")
     io.readOrCompute("s", "fpA")(Seq(1).toDF("x"))
     io.readOrCompute("s", "fpB")(Seq(1, 2).toDF("x"))

@@ -32,7 +32,7 @@ class CascadeSpec extends SparkSpec {
   }
 
   test("full cascade on sentence fixtures: micro-F1 and pairwise F1") {
-    val preds = Cascade.run(spark, keyedFixture("sentences"), entries).cache()
+    val preds = Cascade.run(spark, keyedFixture("sentences"), entries).predictions.cache()
     assert(preds.count() == 293, "cascade must emit exactly one prediction per mention")
     assert(preds.select("mention_id").distinct().count() == 293)
 
@@ -58,7 +58,7 @@ class CascadeSpec extends SparkSpec {
   }
 
   test("full cascade on table fixtures") {
-    val preds = Cascade.run(spark, keyedFixture("tables"), entries).cache()
+    val preds = Cascade.run(spark, keyedFixture("tables"), entries).predictions.cache()
     assert(preds.count() == 275)
     val m = Metrics.evaluate(preds.select(col("label").as("y_true"), col("y_pred")))
     val pw = Metrics.pairwiseF1(preds.select(col("label").as("gold"), col("y_pred").as("pred")))
@@ -90,7 +90,7 @@ class CascadeSpec extends SparkSpec {
     // keyed input and built retrieval features for the bi-encoder residue
     // only; both changes keep every row identical.
     def digest(modality: String): (Long, Long) = {
-      val r = Cascade.run(spark, keyedFixture(modality), entries)
+      val r = Cascade.run(spark, keyedFixture(modality), entries).predictions
         .agg(count(lit(1)), expr("bit_xor(xxhash64(mention_id, y_pred, tier, status, score))"))
         .head()
       (r.getLong(0), r.getLong(1))

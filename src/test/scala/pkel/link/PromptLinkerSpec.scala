@@ -156,14 +156,14 @@ class PromptLinkerSpec extends SparkSpec {
   test("cascade tier 5 consumes exactly the bi-encoder's unlinked residue") {
     val mentions = ExactLinker.withBlockingKey(MentionReader.readJsonl(spark,
       resourcePath("/pkel/data/sentences/test.jsonl"), isTable = false))
-    val base = Cascade.run(spark, mentions, entries).cache()
+    val base = Cascade.run(spark, mentions, entries).predictions.cache()
     val baseUnlinked = base.filter(col("tier") === "biencoder" && col("status") === "unlinked").count()
     val baseLinkedBienc = base.filter(col("tier") === "biencoder" && col("status") === "linked").count()
 
     // deterministic fake: everything the earlier tiers could not link is NIL
     val nilScorer = new AlwaysNilScorer
     val withTier5 = Cascade.run(spark, mentions, entries,
-      Cascade.Config(promptScorer = Some(nilScorer))).cache()
+      Cascade.Config(promptScorer = Some(nilScorer))).predictions.cache()
     assert(withTier5.count() == base.count(), "tier merge must keep one row per mention")
     val prompted = withTier5.filter(col("tier") === "prompt")
     assert(prompted.count() == baseUnlinked,

@@ -91,11 +91,11 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val entries = Ontology.load()
-    val root = java.nio.file.Files.createTempDirectory("pkel_ctxjoin_").toString
+    val root = tempDir("pkel_ctxjoin_")
     pkel.link.ExactLinker.withBlockingKey(pkel.io.MentionReader.readJsonl(spark,
       resourcePath("/pkel/data/sentences/test.jsonl"), isTable = false))
       .write.parquet(s"$root/keyed")
-    val preds = pkel.link.Cascade.run(spark, spark.read.parquet(s"$root/keyed"), entries)
+    val preds = pkel.link.Cascade.run(spark, spark.read.parquet(s"$root/keyed"), entries).predictions
     assert(preds.collect().length == 293)
     val plan = preds.queryExecution.executedPlan
     def readsContext(p: SparkPlan): Boolean = planNodes(p).exists {
@@ -114,8 +114,11 @@ class PlanAuditSpec extends SparkSpec {
 
   test("bucket-kernel scoring path: one mention-scale exchange, no join, no pair shuffle") {
     import spark.implicits._
-    val keyed = (1L to 500L).map(i => (i, if (i % 7 == 0) "auc inf" else "cl", Seq("cl"), s"m$i"))
-      .toDF("mention_id", "blocking_key", "tokens", "mention")
+    // a parquet source, so the scan's read schema is planned like production
+    val root = tempDir("pkel_buckets_")
+    (1L to 500L).map(i => (i, if (i % 7 == 0) "auc inf" else "cl", Seq("cl"), s"m$i"))
+      .toDF("mention_id", "blocking_key", "tokens", "mention").write.parquet(s"$root/keyed")
+    val keyed = spark.read.parquet(s"$root/keyed")
     val buckets = pkel.blocking.PairGen.saltedBucketTable(keyed)
     val bucketPlan = buckets.queryExecution.executedPlan.toString
     val exchanges = bucketPlan.linesIterator.count(_.contains("Exchange hashpartitioning"))
@@ -137,6 +140,11 @@ class PlanAuditSpec extends SparkSpec {
     val aboveKernel = planNodes(plan).collect { case e: Exchange => e }
       .filter(e => planNodes(e).exists(_.isInstanceOf[GenerateExec]))
     assert(aboveKernel.isEmpty, s"pair stream must not shuffle:\n$plan")
+    // same-key pairs score 1.0 from ids alone: no node of the bucket path,
+    // the scan included, reads or carries the surface
+    val withSurface = planNodes(plan).filter(_.output.exists(_.name == "mention"))
+    assert(withSurface.isEmpty,
+      s"bucket path reads the mention surface in ${withSurface.map(_.nodeName).mkString(", ")}")
   }
 
   test("scoreCandidates is one lazy plan: no job at build time, one key exchange reused") {
@@ -157,12 +165,13 @@ class PlanAuditSpec extends SparkSpec {
     scored.collect()
     val plan = scored.queryExecution.executedPlan
     // the annotated key window's exchange: hash-partitioned on blocking_key
-    // alone over (mention_id, blocking_key, mention). The LSH side's key-rep
-    // aggregate also partitions on blocking_key, but over partial aggregates
-    // with tokens: a different exchange
+    // alone over (mention_id, blocking_key) — the bucket and rep-star
+    // branches read no surface. The LSH side's key-rep aggregate also
+    // partitions on blocking_key, but over partial aggregates with tokens
+    // and mention: a different exchange
     def keyWindow(p: SparkPlan): Boolean = p match {
       case e: ShuffleExchangeExec =>
-        e.output.map(_.name) == Seq("mention_id", "blocking_key", "mention") &&
+        e.output.map(_.name) == Seq("mention_id", "blocking_key") &&
           (e.outputPartitioning match {
             case h: HashPartitioning => h.references.toSeq.map(_.name) == Seq("blocking_key")
             case _ => false

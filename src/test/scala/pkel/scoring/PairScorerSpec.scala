@@ -6,8 +6,9 @@ import pkel.blocking.PairGen
 
 /** Pins the kernel-fused bucket scoring path (`scoreCandidates`) to the
   * relational reference path (`scorePairs` over exploded candidate pairs),
-  * the bucket kernel to its one-key-per-bucket contract, and both branches'
-  * score bits to a committed digest. */
+  * the bucket kernel to its one-key-per-bucket contract and its
+  * `(src, dst, 1.0)` rows, and both branches' score bits to a committed
+  * digest. */
 class PairScorerSpec extends SparkSpec {
 
   import spark.implicits._
@@ -25,7 +26,7 @@ class PairScorerSpec extends SparkSpec {
       (i, key, s"surface ${key.toUpperCase} $i")
     })
 
-  // every surface distinct: the kernels' SurfaceSims cache never hits
+  // every surface distinct: the row kernel's SurfaceSims cache never hits
   private val unique = keyedDf((1L to 120L).map(i => (i, "cl", s"unique-surface-$i")))
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
@@ -36,7 +37,7 @@ class PairScorerSpec extends SparkSpec {
   test("scoreCandidates == scorePairs over candidatePairsWithFeatures (pair set + scores)") {
     val cfg = PairGen.Config(targetBucketSize = 16)
     val scored = PairScorer.scoreCandidates(corpus, cfg)
-    assert(scored.columns.toSeq == Seq("src", "dst", "key_sim", "jw_sim", "cos_sim", "score"),
+    assert(scored.columns.toSeq == Seq("src", "dst", "score"),
       "lean output must carry ids and scores only")
     val viaKernel = rowsOf(scored)
     val viaRows = rowsOf(PairScorer.scorePairs(PairGen.candidatePairsWithFeatures(corpus, cfg)))
@@ -59,9 +60,9 @@ class PairScorerSpec extends SparkSpec {
   }
 
   test("unique-surface corpus (memo-miss regime): vec path scores each mention once") {
-    // every surface distinct -> the embedding and surface-pair caches never
-    // hit; the kernel must still match the relational path and emit each
-    // unordered mention pair exactly once
+    // every surface distinct -> the row kernel's embedding and surface-pair
+    // caches never hit; the bucket kernel reads no surface, must still match
+    // the relational path and emit each unordered mention pair exactly once
     val cfg = PairGen.Config(targetBucketSize = 60) // 2 salts over 120 mentions
     val scored = PairScorer.scoreCandidates(unique, cfg)
       .select(col("src"), col("dst"), (col("score") * 1e6).cast("long"))
@@ -77,34 +78,36 @@ class PairScorerSpec extends SparkSpec {
   }
 
   test("scores are pinned: row count and xxhash64 digest of both scoring branches") {
-    // the kernel-vs-oracle tests above compare two kernels that share
-    // SurfaceSims, so only a committed digest catches a drift of both
+    // the kernel-vs-oracle tests above compare kernels that score the
+    // cross-key pairs with the same `scorePairs`, so only a committed digest
+    // catches a drift of both
     def digest(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(src, dst, key_sim, jw_sim, cos_sim, score))")).head()
+      val r = df.agg(count(lit(1)), expr("bit_xor(xxhash64(src, dst, score))")).head()
       (r.getLong(0), r.getLong(1))
     }
     val cfg = PairGen.Config(targetBucketSize = 16)
-    assert(digest(PairScorer.scoreCandidates(corpus, cfg)) == ((2215L, 8299975067314214660L)))
+    assert(digest(PairScorer.scoreCandidates(corpus, cfg)) == ((2215L, -2207706275865898655L)))
     val sparse = PairScorer.scorePairs(
       PairGen.repStarPairs(PairGen.annotated(corpus, cfg)).unionByName(PairGen.lshPairs(corpus, cfg)))
-    assert(digest(sparse) == ((16L, 1075657570144337123L)))
+    assert(digest(sparse) == ((16L, 6493711759632423526L)))
   }
 
   test("bucket kernel fails the task on a mixed-key or empty-key bucket") {
-    def bucket(members: (Long, String, String)*) =
-      members.toDF("mention_id", "blocking_key", "mention")
-        .agg(collect_list(struct(col("mention_id"), col("blocking_key"), col("mention"))).as("ms"))
-    def rejects(members: (Long, String, String)*): Boolean = {
+    def bucket(members: (Long, String)*) =
+      members.toDF("mention_id", "blocking_key")
+        .agg(collect_list(struct(col("mention_id"), col("blocking_key"))).as("ms"))
+    def rejects(members: (Long, String)*): Boolean = {
       val e = intercept[org.apache.spark.SparkException](
         PairScorer.scoreBuckets(bucket(members: _*)).collect())
       Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(t => Option(t.getMessage).exists(_.contains("one non-empty blocking key")))
     }
-    assert(PairScorer.scoreBuckets(bucket((3L, "cl", "x"), (1L, "cl", "y"), (2L, "cl", "x")))
-      .count() == 3)
-    assert(rejects((1L, "cl", "x"), (2L, "auc inf", "y")), "mixed-key bucket must fail")
-    assert(rejects((1L, "", "x"), (2L, "", "y")), "empty-key bucket must fail")
-    assert(rejects((1L, "cl", "x"), (2L, null, "y")), "null-key member must fail")
+    val pairs = PairScorer.scoreBuckets(bucket((3L, "cl"), (1L, "cl"), (2L, "cl")))
+    assert(pairs.columns.toSeq == Seq("src", "dst", "score"))
+    assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet ==
+      Set((3L, 2L, 1.0), (3L, 1L, 1.0), (2L, 1L, 1.0)))
+    assert(rejects((1L, "cl"), (2L, "auc inf")), "mixed-key bucket must fail")
+    assert(rejects((1L, ""), (2L, "")), "empty-key bucket must fail")
+    assert(rejects((1L, "cl"), (2L, null)), "null-key member must fail")
   }
 }

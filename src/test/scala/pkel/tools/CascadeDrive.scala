@@ -26,7 +26,7 @@ object CascadeDrive {
     val mentions = ExactLinker.withBlockingKey(
       MentionReader.readJsonl(spark, path, isTable = modality == "tables"))
     val entries = Ontology.load()
-    val preds = Cascade.run(spark, mentions, entries).cache()
+    val preds = Cascade.run(spark, mentions, entries).predictions.cache()
     val joined = preds.join(mentions.select("mention_id", "mention"), "mention_id")
     // keys with >1 distinct (gold,pred) combination and >1 mention
     val multi = joined.groupBy("blocking_key")

@@ -12,7 +12,7 @@ object TypoDrive {
     val transcripts = TranscriptSynth.generate(spark, entries, 400, seed = seed)
     val mentions = pkel.app.Pipeline.extractMentions(transcripts)
     val keyed = pkel.link.ExactLinker.withBlockingKey(mentions)
-    val preds = pkel.link.Cascade.run(spark, keyed, entries)
+    val preds = pkel.link.Cascade.run(spark, keyed, entries).predictions
     val j = preds.join(keyed.select("mention_id", "mention"), "mention_id")
       .join(TranscriptSynth.goldLabels(mentions, entries, seed), "mention_id")
     println("== wrong or unlinked vs gold (gold != Q100) ==")
