@@ -20,7 +20,8 @@ import pkel.scoring.PairScorer
   *     → candidate pairs (salted blocking keys + MinHash-LSH)
   *     → batched pair scoring (JW + Levenshtein/indel + cosine)
   *     → edges (score ≥ θ) ∪ entity-anchor edges from the cascade
-  *     → large-star/small-star connected components → clusters
+  *     → connected components (one driver union-find over a small edge
+  *       snapshot, large-star/small-star beyond it) → clusters
   *     → pairwise-F1 evaluation vs gold labels
   *
   * Entity anchors: a mention linked to ontology entity Qn contributes an edge
@@ -169,6 +170,17 @@ object Pipeline {
       countDistinct(col("conv_id"), col("turn_idx"), col("span_idx")).as("triples")),
     r => checkMentionIds(r.getLong(1), r.getLong(2)))
 
+  /** The `linked` commit's audit: the cascade's tiers partition their
+    * input, so `linked` holds one row per keyed mention; stage 8 and the
+    * summary's cluster count rely on it. `keyedRows` is read when the
+    * commit checks, and the check compares it with the snapshot's footer
+    * row count, so it runs no job. */
+  def linkedRowAudit(keyedRows: => Long): pkel.io.StageStore.Audit =
+    pkel.io.StageStore.Audit(Seq.empty, { r =>
+      val (rows, keyed) = (r.getLong(0), keyedRows)
+      require(rows == keyed, s"linked holds $rows rows for $keyed keyed mentions")
+    })
+
   /** Run the full pipeline. `gold` (mention_id, gold) is optional — when
     * present the summary carries pairwise F1 vs gold. */
   def run(spark: SparkSession, transcripts: DataFrame, entries: Seq[OntologyEntry],
@@ -190,9 +202,11 @@ object Pipeline {
 
     // stage 3: linking cascade → entity assignment per mention. The tier
     // outputs the cascade persists serve the commit's write only: they are
-    // released once the stage commits (or fails), so no cache outlives the run
+    // released once the stage commits (or fails), so no cache outlives the
+    // run. The commit checks one row per keyed mention against the footers.
     var cascade: Option[Cascade.Output] = None
-    val linked = try io.readOrCompute("linked", fp(cfg, "l")) {
+    val linked = try io.readOrCompute("linked", fp(cfg, "l"),
+        Some(linkedRowAudit(SnapshotFooters.rows(keyed)))) {
       val out = Cascade.run(spark, keyed, entries, cfg.cascade)
       cascade = Some(out)
       out.predictions
@@ -245,55 +259,76 @@ object Pipeline {
         .select("src", "dst")
         .unionByName(anchorEdges)
     }
+    // a bare scan of the committed snapshot, so its footers count it
+    val nEdges = SnapshotFooters.rows(edges)
 
-    // stage 7: connected components (large-star / small-star); iteration
-    // state checkpoints durably under the run's own root so a killed JVM or
-    // lost executor mid-fixpoint RESUMES from the last durable iterate, not
-    // from a full recompute. The checkpoint dir is scoped by the stage
+    // stage 7: connected components. An edge snapshot of at most
+    // `SmallGraphThreshold` rows (counted by its footers) is collected once,
+    // anchor edges included, into one driver union-find: 2 jobs, the collect
+    // and the write. Negative anchor ids make each anchored star's root its
+    // anchor, so the rows equal the split below. The pass also counts the
+    // mention nodes and the components, for the summary's cluster count.
+    //
+    // A larger edge set runs the distributed fixpoint; its iteration state
+    // checkpoints durably under the run's own root so a killed JVM or lost
+    // executor mid-fixpoint RESUMES from the last durable iterate, not from
+    // a full recompute. The checkpoint dir is scoped by the stage
     // fingerprint: CC resume is only valid against the identical edge set,
     // so a config change can never pick up a stale iterate. A fixpoint that
     // exhausts its budget throws inside the compute thunk, so an unproven
     // root set never commits; the next run resumes from the durable iterate.
-    // the fixpoint's star iterations execute eagerly inside run(), BEFORE
-    // the stage commit's timed write — the per-iteration callback is the
-    // only place their cost is observable, so it lands in the metrics
-    // table (cc_iter_NN_wall_ms / _edges + the fixpoint total). A resumed
-    // stage replays the snapshot and records nothing (the counters were
-    // written when it originally computed).
+    //
+    // Either path runs eagerly inside the compute thunk, BEFORE the stage
+    // commit's timed write, so its cost lands in the metrics table as
+    // counters: cc_iter_NN_wall_ms / _edges (the driver path reports
+    // iteration 00 with the sim-edge count), the fixpoint total, and
+    // cc_on_driver, the path taken. A resumed stage replays the snapshot and
+    // records nothing (the counters were written when it originally computed).
     val ccIterStats = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
+    var ccOnDriver: Option[ConnectedComponents.DriverComponents] = None
     val components = io.readOrCompute("components", fp(cfg, "c")) {
-      // the anchor subgraph needs no fixpoint: anchor edges (dst < 0 — the
-      // anchors' id space) attach each cascade-ASSIGNED mention to exactly
-      // one anchor, and sim edges exist only between UNASSIGNED mentions
-      // (the edge stage's both-endpoint semi-join), so the anchor rows are
-      // a star forest rooted at their (negative, hence component-minimal)
-      // anchors, node-disjoint from the sim subgraph. Contracting them
-      // through every star round would only inflate each round's volume —
-      // ~20-90% of all edges depending on the cascade's assignment rate —
-      // so the fixpoint runs on the sim subgraph alone and the anchor rows
-      // union in as ready-made (node, root) assignments.
-      val simEdges = edges.filter(col("dst") >= 0L)
-      val anchorRows = edges.filter(col("dst") < 0L)
-        .select(col("src").as("node"), col("dst").as("root"))
-      val simRoots = ConnectedComponents.run(spark, simEdges,
-        checkpointDir = Some(s"${io.root}/_cc_checkpoints/${fp(cfg, "c")}"),
-        reliableEvery = cfg.ccReliableEvery,
-        onIteration = (it, nEdges, wallMs) => ccIterStats += ((it, nEdges, wallMs)),
-        // the committed edges snapshot is canonical-distinct by
-        // construction — pair generators emit each unordered pair once
-        // (salted intra-bucket i<j; LSH pairs deduped across bands; rep-star
-        // pairs cross-bucket) — so CC skips re-canonicalizing and durably
-        // re-writing all edges as its iteration 0
-        inputCanonical = true)
-      simRoots
-        .unionByName(anchorRows)
-        .unionByName(anchorRows.select(col("root").as("node"), col("root")).distinct())
+      if (nEdges <= ConnectedComponents.SmallGraphThreshold) {
+        val t = System.nanoTime()
+        val cc = ConnectedComponents.onDriver(spark, edges)
+        ccIterStats += ((0, cc.simEdges, (System.nanoTime() - t) / 1000000))
+        ccOnDriver = Some(cc)
+        cc.rows
+      } else {
+        // the anchor subgraph needs no fixpoint: anchor edges (dst < 0 —
+        // the anchors' id space) attach each cascade-ASSIGNED mention to
+        // exactly one anchor, and sim edges exist only between UNASSIGNED
+        // mentions (the edge stage's both-endpoint semi-join), so the
+        // anchor rows are a star forest rooted at their (negative, hence
+        // component-minimal) anchors, node-disjoint from the sim subgraph.
+        // Contracting them through every star round would only inflate
+        // each round's volume — ~20-90% of all edges depending on the
+        // cascade's assignment rate — so the fixpoint runs on the sim
+        // subgraph alone and the anchor rows union in as ready-made
+        // (node, root) assignments.
+        val simEdges = edges.filter(col("dst") >= 0L)
+        val anchorRows = edges.filter(col("dst") < 0L)
+          .select(col("src").as("node"), col("dst").as("root"))
+        val simRoots = ConnectedComponents.run(spark, simEdges,
+          checkpointDir = Some(s"${io.root}/_cc_checkpoints/${fp(cfg, "c")}"),
+          reliableEvery = cfg.ccReliableEvery,
+          onIteration = (it, nEdges, wallMs) => ccIterStats += ((it, nEdges, wallMs)),
+          // the committed edges snapshot is canonical-distinct by
+          // construction — pair generators emit each unordered pair once
+          // (salted intra-bucket i<j; LSH pairs deduped across bands;
+          // rep-star pairs cross-bucket) — so CC skips re-canonicalizing and
+          // durably re-writing all edges as its iteration 0
+          inputCanonical = true)
+        simRoots
+          .unionByName(anchorRows)
+          .unionByName(anchorRows.select(col("root").as("node"), col("root")).distinct())
+      }
     }
     if (ccIterStats.nonEmpty)
       io.appendCounters("components",
         ccIterStats.flatMap { case (it, nEdges, wallMs) =>
           Seq(f"cc_iter_$it%02d_wall_ms" -> wallMs, f"cc_iter_$it%02d_edges" -> nEdges)
-        }.toSeq :+ ("cc_fixpoint_wall_ms" -> ccIterStats.map(_._3).sum))
+        }.toSeq ++ Seq("cc_fixpoint_wall_ms" -> ccIterStats.map(_._3).sum,
+          "cc_on_driver" -> (if (ccOnDriver.isDefined) 1L else 0L)))
 
     // stage 8: cluster assignment (singletons = own cluster). Mentions the
     // cascade *excluded* as non-PK (NIL patterns / invalid context) are not
@@ -301,7 +336,9 @@ object Pipeline {
     // reference's NIL semantics (NIL never forms a cluster). `linked` holds
     // one row per keyed mention (the cascade's tiers partition their input)
     // and carries its blocking key, so it alone drives the assignment.
+    var clustersComputed = false
     val clusters = io.readOrCompute("clusters", fp(cfg, "cl")) {
+      clustersComputed = true
       linked.select("mention_id", "blocking_key", "y_pred", "status")
         .join(components.withColumnRenamed("node", "mention_id"), Seq("mention_id"), "left")
         .withColumn("is_nil", col("status") === "excluded")
@@ -309,11 +346,16 @@ object Pipeline {
         .drop("root")
     }
 
-    // each is a bare scan of a committed snapshot, so its footers count it
+    // each is a bare scan of a committed snapshot, so its footers count it.
+    // When this run built `components` on the driver and `clusters` from
+    // it, clusters count without a job: each component has one root and at
+    // least one mention, and every other `linked` mention is its own cluster.
     val nMentions = SnapshotFooters.rows(mentions)
     val nPairs = SnapshotFooters.rows(scored)
-    val nEdges = SnapshotFooters.rows(edges)
-    val nClusters = clusters.select("cluster_id").distinct().count()
+    val nClusters = ccOnDriver match {
+      case Some(cc) if clustersComputed => SnapshotFooters.rows(linked) - cc.mentionNodes + cc.roots
+      case _ => clusters.select("cluster_id").distinct().count()
+    }
     val wallSec = (System.nanoTime() - t0) / 1e9
 
     val (f1, p, r, f1Key) = gold match {

@@ -78,9 +78,14 @@ object ConnectedComponents {
     (row.getLong(0), row.getLong(1))
   }
 
+  /** Edge counts at or below this take the driver path ([[onDriver]]):
+    * 2M edges collect as ~32 MB of longs. */
+  val SmallGraphThreshold: Long = 2000000L
+
   /** Driver-side union-find with min-root semantics (attach the larger root
-    * under the smaller), path-compressed. */
-  private def unionFind(rows: Array[(Long, Long)]): Iterator[(Long, Long)] = {
+    * under the smaller), path-compressed: `(node, root)` for every node of
+    * `rows`. */
+  private def unionFind(rows: Array[(Long, Long)]): Array[(Long, Long)] = {
     val parent = new java.util.HashMap[Long, Long]()
     def findRoot(x0: Long): Long = {
       var x = x0
@@ -99,11 +104,32 @@ object ConnectedComponents {
     }
     val nodes = new java.util.HashSet[Long]()
     rows.foreach { case (a, b) => nodes.add(a); nodes.add(b) }
-    val it = nodes.iterator()
-    new Iterator[(Long, Long)] {
-      def hasNext: Boolean = it.hasNext
-      def next(): (Long, Long) = { val n = it.next(); (n, findRoot(n)) }
-    }
+    val out = new Array[(Long, Long)](nodes.size)
+    var i = 0
+    nodes.forEach { n => out(i) = (n, findRoot(n)); i += 1 }
+    out
+  }
+
+  /** The components [[onDriver]] found. Ids ≥ 0 are mentions in the
+    * pipeline's id space; its entity anchors are negative.
+    * @param rows `(node, root)` for every node of an edge, as a local relation
+    * @param simEdges edges whose `dst` is ≥ 0 (the pipeline's similarity edges)
+    * @param mentionNodes nodes ≥ 0
+    * @param roots nodes that are their own root: one per component */
+  final case class DriverComponents(rows: DataFrame, simEdges: Long, mentionNodes: Long, roots: Long)
+
+  /** Components of a small edge set in one driver pass: `edges` (src, dst)
+    * is collected in one job and joined by union-find; building `rows` runs
+    * no job. [[run]] takes this path when its signature counts at most
+    * `smallGraphThreshold` edges, the pipeline when the committed edge
+    * snapshot's footers count at most [[SmallGraphThreshold]]. */
+  def onDriver(spark: SparkSession, edges: DataFrame): DriverComponents = {
+    import spark.implicits._
+    val collected = edges.select(col("src").cast("long"), col("dst").cast("long")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val roots = unionFind(collected)
+    DriverComponents(roots.toSeq.toDF("node", "root"), collected.count(_._2 >= 0L),
+      roots.count(_._1 >= 0L), roots.count { case (n, r) => n == r })
   }
 
   /** Run to fixpoint; returns (node, root) for every node appearing in an
@@ -111,9 +137,9 @@ object ConnectedComponents {
     * them in.
     *
     * ADAPTIVE execution: when the canonical edge count is at or below
-    * `smallGraphThreshold`, the component computation runs as a single
+    * `smallGraphThreshold`, the component computation is [[onDriver]] — one
     * driver-side union-find over the collected edges instead of the
-    * iterative fixpoint — the same move Spark itself makes when it
+    * iterative fixpoint, the same move Spark itself makes when it
     * broadcasts a small join side. The distributed fixpoint pays a
     * per-iteration job floor (two window stars + distinct per round) that
     * dominates wall time on small graphs; at 2M edges the collect is
@@ -144,7 +170,7 @@ object ConnectedComponents {
     * fixpoint's true cost into its metrics table. */
   def run(spark: SparkSession, edges0: DataFrame, maxIterations: Int = 50,
       checkpointDir: Option[String] = None, reliableEvery: Int = 3,
-      smallGraphThreshold: Long = 2000000L,
+      smallGraphThreshold: Long = SmallGraphThreshold,
       onIteration: (Int, Long, Long) => Unit = (_, _, _) => (),
       /** Caller vouches edges0 is ALREADY canonical-distinct (src ≠ dst,
         * each unordered pair exactly once — e.g. a committed pair-stage
@@ -217,12 +243,7 @@ object ConnectedComponents {
     }
     var sig = signature(edges)
     onIteration(startIt, sig._1, (System.nanoTime() - tInit) / 1000000)
-    if (sig._1 <= smallGraphThreshold) {
-      import spark.implicits._
-      val rows = edges.select(col("src"), col("dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      return unionFind(rows).toSeq.toDF("node", "root")
-    }
+    if (sig._1 <= smallGraphThreshold) return onDriver(spark, edges).rows
     var converged = false
     // the counter resumes too: the next durable write lands on a FRESH
     // cc_iter_N (overwriting the iterate being read would self-destruct).

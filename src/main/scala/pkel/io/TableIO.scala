@@ -9,7 +9,7 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.StructType
 
@@ -35,7 +35,7 @@ import org.apache.spark.sql.types.StructType
   * write markers to the driver's disk instead).
   *
   * A commit's only Spark job is its write (plus an [[StageStore.Audit]]'s
-  * aggregate when one is given): the row count, the lineage rows and the
+  * aggregate when it has one): the row count, the lineage rows and the
   * returned frame's schema come from the parquet footers the write produced
   * ([[SnapshotFooters]]), read on the driver, and the lineage rows go to
   * `_metrics` as one parquet file the driver writes itself. A replay reads
@@ -86,7 +86,8 @@ trait StageStore {
     val footers = SnapshotFooters.read(spark, dir)
     val out = scan(dir, footers)
     audit.foreach { a =>
-      a.check(out.agg(count(lit(1)).as("rows_total"), a.aggs: _*).head())
+      a.check(if (a.aggs.isEmpty) Row(footers.rows)
+        else out.agg(count(lit(1)).as("rows_total"), a.aggs: _*).head())
     }
     val wallMs = (System.nanoTime() - t0) / 1000000
     appendMetrics(footers.parts.map { case (partition, rows) =>
@@ -178,10 +179,11 @@ object StageStore {
   /** Commit-time audit: `aggs` run in one aggregate over the committed
     * snapshot, after `count(lit(1))`; `check` receives the aggregate row
     * with `rows_total` at index 0 followed by `aggs` in order and throws to
-    * veto the commit. This is how the pipeline's mention-id collision audit
-    * keeps a bad mention table from ever being resumable. */
-  final case class Audit(aggs: Seq[org.apache.spark.sql.Column],
-      check: org.apache.spark.sql.Row => Unit)
+    * veto the commit. With no `aggs` no job runs: the row holds only
+    * `rows_total`, the snapshot's footer row count. This is how the
+    * pipeline's mention-id collision audit keeps a bad mention table from
+    * ever being resumable, and how its `linked` row-count audit runs free. */
+  final case class Audit(aggs: Seq[org.apache.spark.sql.Column], check: Row => Unit)
 
   /** Config-selected backend — the "Iceberg swap is config-only" seam. */
   def forBackend(backend: String, spark: SparkSession, root: String, runId: String): StageStore =

@@ -1,10 +1,12 @@
 package pkel.app
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import pkel.SparkSpec
 import pkel.blocking.PairGen
-import pkel.io.TableIO
+import pkel.io.{SnapshotFooters, StageStore, TableIO}
 import pkel.ontology.Ontology
 import pkel.transcript.TranscriptSynth
 
@@ -120,6 +122,85 @@ class TranscriptPipelineSpec extends SparkSpec {
     assert(!ioC.isCommitted("mentions", "fx"), "vetoed commit must leave no marker")
   }
 
+  test("linked audit: a duplicated row vetoes the commit, and the audit adds no job") {
+    val t = TranscriptSynth.generate(spark, entries, nConvs = 40, seed = 5L)
+    val src = new TableIO(spark, tempDir("pkel_linked_src_"), "src")
+    val keyed = src.commit("keyed", pkel.link.ExactLinker.withBlockingKey(Pipeline.extractMentions(t)), "k")
+    val cascade = pkel.link.Cascade.run(spark, keyed, entries)
+    val predictions = try src.commit("predictions", cascade.predictions, "p") finally cascade.release()
+    def audit = Some(Pipeline.linkedRowAudit(SnapshotFooters.rows(keyed)))
+    val plain = jobsDuring(new TableIO(spark, tempDir("pkel_linked_plain_"), "plain")
+      .commit("linked", predictions, "l"))
+    val audited = jobsDuring(new TableIO(spark, tempDir("pkel_linked_audited_"), "audited")
+      .commit("linked", predictions, "l", audit))
+    assert(audited == plain, s"the footer-count audit ran jobs ($audited vs $plain)")
+    val vetoed = new TableIO(spark, tempDir("pkel_linked_veto_"), "veto")
+    val e = intercept[IllegalArgumentException](
+      vetoed.commit("linked", predictions.union(predictions.limit(1)), "l", audit))
+    assert(e.getMessage.contains("keyed mentions"), e.getMessage)
+    assert(!vetoed.isCommitted("linked", "l"), "vetoed commit must leave no marker")
+  }
+
+  /** A snapshot store that tags each Spark job with the pipeline phase that
+    * started it: a stage from its `isCommitted` check until its commit
+    * returns, then `after-<stage>` (the summary is `after-clusters`). The
+    * tag is a local property, so it travels with the job, not the listener. */
+  private final class PhaseStore(protected val spark: SparkSession, inner: TableIO)
+      extends StageStore {
+    def root: String = inner.root
+    def runId: String = inner.runId
+    def isCommitted(stage: String, fingerprint: String): Boolean = {
+      spark.sparkContext.setLocalProperty(PhaseStore.Key, stage)
+      inner.isCommitted(stage, fingerprint)
+    }
+    override protected def committedLocation(stage: String): String = s"$root/$stage"
+    def commit(stage: String, df: DataFrame, fingerprint: String,
+        audit: Option[StageStore.Audit]): DataFrame = {
+      val out = inner.commit(stage, df, fingerprint, audit)
+      spark.sparkContext.setLocalProperty(PhaseStore.Key, s"after-$stage")
+      out
+    }
+  }
+  private object PhaseStore { val Key = "pkel.spec.phase" }
+
+  /** Jobs per phase of one `Pipeline.run` through a [[PhaseStore]]. */
+  private def jobsPerPhase(transcripts: DataFrame, root: String, runId: String): Map[String, Int] = {
+    val jobs = scala.collection.mutable.Map.empty[String, Int]
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(PhaseStore.Key)))
+          .foreach(phase => jobs.synchronized(jobs(phase) = jobs.getOrElse(phase, 0) + 1))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try Pipeline.run(spark, transcripts, entries, Pipeline.Config(),
+      new PhaseStore(spark, new TableIO(spark, root, runId)))
+    finally {
+      spark.sparkContext.setLocalProperty(PhaseStore.Key, null)
+      org.apache.spark.sql.pkelbridge.Bridge.waitForListeners(spark)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    jobs.synchronized(jobs.toMap)
+  }
+
+  test("a small edge snapshot clusters in two jobs, and the summary runs none") {
+    val transcripts = TranscriptSynth.generate(spark, entries, nConvs = 60, seed = 3L)
+    val root = tempDir("pkel_ccjobs_")
+    // a fresh run, then a resume of its stages up to edges
+    val fresh = jobsPerPhase(transcripts, root, "fresh")
+    Seq("components", "clusters").foreach(st => assert(new java.io.File(s"$root/$st/_COMMIT").delete()))
+    val resumed = jobsPerPhase(transcripts, root, "resume")
+    for ((tag, jobs) <- Seq("fresh" -> fresh, "resume" -> resumed)) {
+      info(s"$tag: $jobs")
+      assert(jobs.get("components").contains(2), s"$tag: components is the collect and the write: $jobs")
+      assert(!jobs.contains("after-clusters"), s"$tag: the summary ran jobs: $jobs")
+      assert(jobs.contains("clusters"), s"$tag: no job tagged with its phase: $jobs")
+    }
+    val onDriver = new TableIO(spark, root, "read").metrics()
+      .filter(col("stage") === "components.cc_on_driver")
+      .select("run_id", "rows_out").collect().map(r => r.getString(0) -> r.getLong(1)).toSet
+    assert(onDriver == Set("fresh" -> 1L, "resume" -> 1L), s"cc_on_driver rows: $onDriver")
+  }
+
   test("resume is idempotent: second run replays committed stages byte-identically") {
     val seed = 7L
     val transcripts = TranscriptSynth.generate(spark, entries, nConvs = 60, seed = seed)
@@ -145,6 +226,17 @@ class TranscriptPipelineSpec extends SparkSpec {
     val committed = Seq("mentions", "scored", "edges").map(st => spark.read.parquet(s"$root/$st").count())
     for (s <- Seq(s1, s2))
       assert(Seq(s.mentions, s.pairs, s.edges) == committed, s"$s vs committed counts $committed")
+    // a run that recomputes only components and clusters, as a kill during
+    // CC leaves the root: the summary counts clusters from the driver
+    // union-find like run-1, and run-2 counts them with a distinct
+    Seq("components", "clusters").foreach(st => assert(new java.io.File(s"$root/$st/_COMMIT").delete()))
+    val (c3, s3) = Pipeline.run(spark, transcripts, entries, Pipeline.Config(),
+      new TableIO(spark, root, "run-3"), Some(gold))
+    assert(c3.select("mention_id", "cluster_id").collect().map(_.toString).sorted.sameElements(snap1))
+    val nClusters = spark.read.parquet(s"$root/clusters").select("cluster_id").distinct().count()
+    for ((s, run) <- Seq(s1, s2, s3).zipWithIndex)
+      assert(s.clusters == nClusters, s"run-${run + 1}: summary ${s.clusters} clusters, table $nClusters")
+    assert(Seq(s1, s2, s3).map(_.copy(wallSec = 0)).distinct.size == 1, s"summaries differ: $s1 $s2 $s3")
     // metrics table has rows for every stage
     val stages = io1.metrics().select("stage").distinct().collect().map(_.getString(0)).toSet
     assert(Set("mentions", "keyed", "linked", "scored", "edges", "components", "clusters")
@@ -346,9 +438,11 @@ class TranscriptPipelineSpec extends SparkSpec {
   }
 
   test("anchor/sim edge subgraphs are node-disjoint (the CC-split precondition)") {
-    // Stage 7 runs the CC fixpoint on sim edges only and unions anchor rows
-    // in as ready-made (node, root) assignments. That is correct ONLY if no
-    // mention appears in both subgraphs: anchor edges (dst < 0) attach
+    // Above the driver threshold, stage 7 runs the CC fixpoint on sim edges
+    // only and unions anchor rows in as ready-made (node, root) assignments;
+    // below it, the driver union-find over all edges gives the same rows.
+    // Both are correct ONLY if no mention appears in both subgraphs: anchor
+    // edges (dst < 0) attach
     // cascade-ASSIGNED mentions, sim edges connect UNASSIGNED ones — the
     // edge stage's both-endpoint filter enforces it. Pin the invariant
     // directly on a committed edges snapshot so a future edge-stage change

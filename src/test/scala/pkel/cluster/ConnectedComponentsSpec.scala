@@ -161,6 +161,40 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
+  test("driver path over anchor stars and sim edges == the split composition, and its counts") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    // the pipeline's edge snapshot shape: canonical sim edges among mention
+    // ids 0..59, and anchor edges attaching mentions 100.. to one negative
+    // anchor each, node-disjoint from the sim edges
+    val rnd = new scala.util.Random(23)
+    def pairs(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    (1 to 4).foreach { trial =>
+      val sim = Seq.fill(30 + rnd.nextInt(50))((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+        .filter(e => e._1 != e._2).map(e => (math.max(e._1, e._2), math.min(e._1, e._2))).distinct
+      val anchored = (100L until 100L + 20 + rnd.nextInt(60)).map(m => (m, -1L - rnd.nextInt(6)))
+      val all = rnd.shuffle(sim ++ anchored)
+      val edges = all.toDF("src", "dst")
+      val cc = ConnectedComponents.onDriver(spark, edges)
+      val driver = pairs(cc.rows)
+      assert(driver.distinct.size == driver.size, s"trial $trial: duplicate (node, root) rows")
+      // the split composition stage 7 runs above the threshold, on both
+      // of the fixpoint's paths
+      val anchorRows = edges.filter(col("dst") < 0L).select(col("src").as("node"), col("dst").as("root"))
+      for (threshold <- Seq(ConnectedComponents.SmallGraphThreshold, 0L)) {
+        val split = pairs(ConnectedComponents.run(spark, edges.filter(col("dst") >= 0L),
+            smallGraphThreshold = threshold, inputCanonical = true)
+          .unionByName(anchorRows)
+          .unionByName(anchorRows.select(col("root").as("node"), col("root")).distinct()))
+        assert(split.sorted == driver.sorted, s"trial $trial, threshold $threshold: split differs")
+      }
+      assert(driver.toMap == oracle(all))
+      assert(cc.simEdges == sim.size)
+      assert(cc.mentionNodes == all.flatMap(e => Seq(e._1, e._2)).distinct.count(_ >= 0L))
+      assert(cc.roots == oracle(all).values.toSet.size)
+    }
+  }
+
   test("star-forest early stop: an input that is already a star forest converges in one round") {
     import spark.implicits._
     // two disjoint stars rooted at their minima — the fixpoint shape
