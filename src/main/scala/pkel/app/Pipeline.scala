@@ -170,15 +170,17 @@ object Pipeline {
       countDistinct(col("conv_id"), col("turn_idx"), col("span_idx")).as("triples")),
     r => checkMentionIds(r.getLong(1), r.getLong(2)))
 
-  /** The `linked` commit's audit: the cascade's tiers partition their
-    * input, so `linked` holds one row per keyed mention; stage 8 and the
-    * summary's cluster count rely on it. `keyedRows` is read when the
+  /** A commit audit that the snapshot holds one row per row of the stage
+    * it derives from: `expected` is that stage's row count, read when the
     * commit checks, and the check compares it with the snapshot's footer
-    * row count, so it runs no job. */
-  def linkedRowAudit(keyedRows: => Long): pkel.io.StageStore.Audit =
+    * row count, so it runs no job. `keyed` holds one row per mention
+    * (`withBlockingKey` only adds columns), and `linked` one per keyed
+    * mention (the cascade's tiers partition their input); stage 8 and the
+    * summary's cluster count rely on both. */
+  def rowCountAudit(stage: String, per: String, expected: => Long): pkel.io.StageStore.Audit =
     pkel.io.StageStore.Audit(Seq.empty, { r =>
-      val (rows, keyed) = (r.getLong(0), keyedRows)
-      require(rows == keyed, s"linked holds $rows rows for $keyed keyed mentions")
+      val (rows, want) = (r.getLong(0), expected)
+      require(rows == want, s"$stage holds $rows rows for $want $per")
     })
 
   /** Run the full pipeline. `gold` (mention_id, gold) is optional — when
@@ -195,8 +197,10 @@ object Pipeline {
       extractMentions(transcripts)
     }
 
-    // stage 2: normalization + blocking keys
-    val keyed = io.readOrCompute("keyed", fp(cfg, "k")) {
+    // stage 2: normalization + blocking keys; the commit checks one row per
+    // mention against the footers
+    val keyed = io.readOrCompute("keyed", fp(cfg, "k"),
+        Some(rowCountAudit("keyed", "mentions", SnapshotFooters.rows(mentions)))) {
       ExactLinker.withBlockingKey(mentions)
     }
 
@@ -206,7 +210,7 @@ object Pipeline {
     // run. The commit checks one row per keyed mention against the footers.
     var cascade: Option[Cascade.Output] = None
     val linked = try io.readOrCompute("linked", fp(cfg, "l"),
-        Some(linkedRowAudit(SnapshotFooters.rows(keyed)))) {
+        Some(rowCountAudit("linked", "keyed mentions", SnapshotFooters.rows(keyed)))) {
       val out = Cascade.run(spark, keyed, entries, cfg.cascade)
       cascade = Some(out)
       out.predictions

@@ -182,7 +182,8 @@ object StageStore {
     * veto the commit. With no `aggs` no job runs: the row holds only
     * `rows_total`, the snapshot's footer row count. This is how the
     * pipeline's mention-id collision audit keeps a bad mention table from
-    * ever being resumable, and how its `linked` row-count audit runs free. */
+    * ever being resumable, and how its `keyed` and `linked` row-count
+    * audits run free. */
   final case class Audit(aggs: Seq[org.apache.spark.sql.Column], check: Row => Unit)
 
   /** Config-selected backend — the "Iceberg swap is config-only" seam. */

@@ -122,23 +122,38 @@ class TranscriptPipelineSpec extends SparkSpec {
     assert(!ioC.isCommitted("mentions", "fx"), "vetoed commit must leave no marker")
   }
 
+  /** `audit` adds no job to `stage`'s commit of `frame`, and vetoes a
+    * commit of `frame` with one row duplicated, leaving no marker. */
+  private def checkRowCountAudit(stage: String, per: String, frame: DataFrame,
+      audit: StageStore.Audit): Unit = {
+    val plain = jobsDuring(new TableIO(spark, tempDir(s"pkel_${stage}_plain_"), "plain")
+      .commit(stage, frame, "f"))
+    val audited = jobsDuring(new TableIO(spark, tempDir(s"pkel_${stage}_audited_"), "audited")
+      .commit(stage, frame, "f", Some(audit)))
+    assert(audited == plain, s"the footer-count audit ran jobs ($audited vs $plain)")
+    val vetoed = new TableIO(spark, tempDir(s"pkel_${stage}_veto_"), "veto")
+    val e = intercept[IllegalArgumentException](
+      vetoed.commit(stage, frame.union(frame.limit(1)), "f", Some(audit)))
+    assert(e.getMessage.contains(s"$stage holds") && e.getMessage.endsWith(per), e.getMessage)
+    assert(!vetoed.isCommitted(stage, "f"), "vetoed commit must leave no marker")
+  }
+
   test("linked audit: a duplicated row vetoes the commit, and the audit adds no job") {
     val t = TranscriptSynth.generate(spark, entries, nConvs = 40, seed = 5L)
     val src = new TableIO(spark, tempDir("pkel_linked_src_"), "src")
     val keyed = src.commit("keyed", pkel.link.ExactLinker.withBlockingKey(Pipeline.extractMentions(t)), "k")
     val cascade = pkel.link.Cascade.run(spark, keyed, entries)
     val predictions = try src.commit("predictions", cascade.predictions, "p") finally cascade.release()
-    def audit = Some(Pipeline.linkedRowAudit(SnapshotFooters.rows(keyed)))
-    val plain = jobsDuring(new TableIO(spark, tempDir("pkel_linked_plain_"), "plain")
-      .commit("linked", predictions, "l"))
-    val audited = jobsDuring(new TableIO(spark, tempDir("pkel_linked_audited_"), "audited")
-      .commit("linked", predictions, "l", audit))
-    assert(audited == plain, s"the footer-count audit ran jobs ($audited vs $plain)")
-    val vetoed = new TableIO(spark, tempDir("pkel_linked_veto_"), "veto")
-    val e = intercept[IllegalArgumentException](
-      vetoed.commit("linked", predictions.union(predictions.limit(1)), "l", audit))
-    assert(e.getMessage.contains("keyed mentions"), e.getMessage)
-    assert(!vetoed.isCommitted("linked", "l"), "vetoed commit must leave no marker")
+    checkRowCountAudit("linked", "keyed mentions", predictions,
+      Pipeline.rowCountAudit("linked", "keyed mentions", SnapshotFooters.rows(keyed)))
+  }
+
+  test("keyed audit: a duplicated row vetoes the commit, and the audit adds no job") {
+    val t = TranscriptSynth.generate(spark, entries, nConvs = 40, seed = 5L)
+    val mentions = new TableIO(spark, tempDir("pkel_keyed_src_"), "src")
+      .commit("mentions", Pipeline.extractMentions(t), "m")
+    checkRowCountAudit("keyed", "mentions", pkel.link.ExactLinker.withBlockingKey(mentions),
+      Pipeline.rowCountAudit("keyed", "mentions", SnapshotFooters.rows(mentions)))
   }
 
   /** A snapshot store that tags each Spark job with the pipeline phase that

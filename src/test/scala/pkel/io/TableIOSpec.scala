@@ -7,7 +7,8 @@ import java.util.concurrent.Executors
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.functions.{col, lit}
@@ -79,6 +80,25 @@ class TableIOSpec extends SparkSpec {
           s"$stage: ${out.schema} / ${replayed.schema}")
         assert(out.schema("tokens").dataType == ArrayType(StringType) && out.schema("note").nullable)
       }
+    }
+
+    test(s"$name: footer row counts ignore a record filter on the session's Hadoop conf") {
+      val root = tempDir(s"pkel_${name}_filter_")
+      val io = mk(root)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val keys = Seq(ParquetInputFormat.FILTER_PREDICATE, s"${ParquetInputFormat.FILTER_PREDICATE}.human.readable")
+      val saved = keys.map(k => k -> Option(conf.get(k)))
+      // no row matches, so the row-group statistics filter drops every row group
+      ParquetInputFormat.setFilterPredicate(conf, FilterApi.eq(FilterApi.longColumn("id"), java.lang.Long.valueOf(-1L)))
+      try {
+        val out = io.commit("s", Seq(1L, 2L, 3L, 4L).toDF("id").repartition(2), "fp")
+        val replayed = io.readOrCompute("s", "fp")(fail("must replay"))
+        assert(SnapshotFooters.rows(out) == 4L && SnapshotFooters.rows(replayed) == 4L)
+        assert(recordedRows(root, "s") == 4L, "commit record rows")
+      } finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+      val lineage = io.metrics().filter(col("stage") === "s" && col("partition_id") >= 0)
+        .select("rows_out").as[Long].collect()
+      assert(lineage.sum == 4L, s"lineage rows ${lineage.toSeq}")
     }
 
     test(s"$name: a commit runs its write and one metrics append, a replay no job") {
