@@ -1,8 +1,11 @@
 package pkel.app
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.pkelbridge.Bridge
+import org.apache.spark.unsafe.types.UTF8String
 
 import pkel.blocking.{PairDropMetrics, PairGen}
 import pkel.cluster.ConnectedComponents
@@ -183,6 +186,20 @@ object Pipeline {
       require(rows == want, s"$stage holds $rows rows for $want $per")
     })
 
+  /** The `linked` columns a cluster row carries. */
+  private val ClusterKeys = Seq("mention_id", "blocking_key", "y_pred", "status")
+
+  /** Stage 8 as a relational plan: each `linked` mention with `is_nil` (the
+    * cascade excluded it) and `cluster_id`, its `components` root, or its
+    * own id when no edge touches it. The pipeline's driver path builds the
+    * same rows in this plan's schema. */
+  def assignClusters(linked: DataFrame, components: DataFrame): DataFrame =
+    linked.select(ClusterKeys.map(col): _*)
+      .join(components.withColumnRenamed("node", "mention_id"), Seq("mention_id"), "left")
+      .withColumn("is_nil", col("status") === "excluded")
+      .withColumn("cluster_id", coalesce(col("root"), col("mention_id")))
+      .drop("root")
+
   /** Run the full pipeline. `gold` (mention_id, gold) is optional — when
     * present the summary carries pairwise F1 vs gold. */
   def run(spark: SparkSession, transcripts: DataFrame, entries: Seq[OntologyEntry],
@@ -268,10 +285,12 @@ object Pipeline {
 
     // stage 7: connected components. An edge snapshot of at most
     // `SmallGraphThreshold` rows (counted by its footers) is collected once,
-    // anchor edges included, into one driver union-find: 2 jobs, the collect
-    // and the write. Negative anchor ids make each anchored star's root its
-    // anchor, so the rows equal the split below. The pass also counts the
-    // mention nodes and the components, for the summary's cluster count.
+    // anchor edges included, into one driver union-find. Its `(node, root)`
+    // rows are a local relation, which the commit writes on the driver, so
+    // the collect is the stage's one job. Negative anchor ids make each
+    // anchored star's root its anchor, so the rows equal the split below.
+    // The pass also counts the mention nodes and the components, for the
+    // summary's cluster count, and keeps the node→root lookup stage 8 uses.
     //
     // A larger edge set runs the distributed fixpoint; its iteration state
     // checkpoints durably under the run's own root so a killed JVM or lost
@@ -340,15 +359,35 @@ object Pipeline {
     // reference's NIL semantics (NIL never forms a cluster). `linked` holds
     // one row per keyed mention (the cascade's tiers partition their input)
     // and carries its blocking key, so it alone drives the assignment.
+    //
+    // When this run built `components` on the driver and `linked`'s footers
+    // count at most `SmallGraphThreshold` rows, `linked`'s four columns are
+    // collected in one job, each mention takes its root from the driver's
+    // union-find, and the rows commit as a local relation with the join's
+    // schema (analysis only): the commit writes them on the driver, so the
+    // stage runs that one job. Every other run takes the join.
     var clustersComputed = false
+    var clustersOnDriver = false
     val clusters = io.readOrCompute("clusters", fp(cfg, "cl")) {
       clustersComputed = true
-      linked.select("mention_id", "blocking_key", "y_pred", "status")
-        .join(components.withColumnRenamed("node", "mention_id"), Seq("mention_id"), "left")
-        .withColumn("is_nil", col("status") === "excluded")
-        .withColumn("cluster_id", coalesce(col("root"), col("mention_id")))
-        .drop("root")
+      val assigned = assignClusters(linked, components)
+      ccOnDriver match {
+        case Some(cc) if SnapshotFooters.rows(linked) <= ConnectedComponents.SmallGraphThreshold =>
+          clustersOnDriver = true
+          val excluded = UTF8String.fromString("excluded")
+          val rows = Bridge.collectInternal(linked.select(ClusterKeys.map(col): _*)).map { r =>
+            val id = if (r.isNullAt(0)) null else r.getLong(0)
+            val status = r.getUTF8String(3)
+            InternalRow(id, r.getUTF8String(1), r.getUTF8String(2), status,
+              if (status == null) null else status == excluded,
+              if (id == null) null else cc.rootOf(r.getLong(0)))
+          }
+          Bridge.localFrame(spark, assigned.schema, rows.toSeq)
+        case _ => assigned
+      }
     }
+    if (clustersComputed)
+      io.appendCounters("clusters", Seq("on_driver" -> (if (clustersOnDriver) 1L else 0L)))
 
     // each is a bare scan of a committed snapshot, so its footers count it.
     // When this run built `components` on the driver and `clusters` from

@@ -1,8 +1,11 @@
 package pkel.cluster
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.pkelbridge.Bridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Iterative large-star / small-star connected components over DataFrames
   * (no RDDs) — the Kiveris et al. "Connected Components in MapReduce and
@@ -82,54 +85,71 @@ object ConnectedComponents {
     * 2M edges collect as ~32 MB of longs. */
   val SmallGraphThreshold: Long = 2000000L
 
-  /** Driver-side union-find with min-root semantics (attach the larger root
-    * under the smaller), path-compressed: `(node, root)` for every node of
-    * `rows`. */
-  private def unionFind(rows: Array[(Long, Long)]): Array[(Long, Long)] = {
-    val parent = new java.util.HashMap[Long, Long]()
-    def findRoot(x0: Long): Long = {
+  /** Driver-side union-find with min-root semantics over the edges
+    * `(src(i), dst(i))`: the distinct nodes, sorted, and each one's root,
+    * the least node of its component. A node is its index in the sorted
+    * array, so the parent links are one int array, and attaching the larger
+    * root under the smaller keeps each root its component's least node. */
+  private def unionFind(src: Array[Long], dst: Array[Long]): (Array[Long], Array[Long]) = {
+    val all = src ++ dst
+    java.util.Arrays.sort(all)
+    var n = 0
+    all.indices.foreach { i => if (i == 0 || all(i) != all(i - 1)) { all(n) = all(i); n += 1 } }
+    val nodes = java.util.Arrays.copyOf(all, n)
+    val parent = Array.tabulate(n)(identity)
+    def findRoot(x0: Int): Int = {
       var x = x0
-      var p = parent.getOrDefault(x, x)
-      while (p != x) { // path halving
-        val gp = parent.getOrDefault(p, p)
-        parent.put(x, gp)
-        x = gp
-        p = parent.getOrDefault(x, x)
+      while (parent(x) != x) { // path halving
+        parent(x) = parent(parent(x))
+        x = parent(x)
       }
       x
     }
-    rows.foreach { case (a, b) =>
-      val ra = findRoot(a); val rb = findRoot(b)
-      if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
+    src.indices.foreach { i =>
+      val ra = findRoot(java.util.Arrays.binarySearch(nodes, src(i)))
+      val rb = findRoot(java.util.Arrays.binarySearch(nodes, dst(i)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    val nodes = new java.util.HashSet[Long]()
-    rows.foreach { case (a, b) => nodes.add(a); nodes.add(b) }
-    val out = new Array[(Long, Long)](nodes.size)
-    var i = 0
-    nodes.forEach { n => out(i) = (n, findRoot(n)); i += 1 }
-    out
+    (nodes, Array.tabulate(n)(i => nodes(findRoot(i))))
   }
+
+  /** `(node, root)`, the schema of the rows [[onDriver]] returns. */
+  private val RootSchema = StructType(Seq(
+    StructField("node", LongType, nullable = false), StructField("root", LongType, nullable = false)))
 
   /** The components [[onDriver]] found. Ids ≥ 0 are mentions in the
     * pipeline's id space; its entity anchors are negative.
-    * @param rows `(node, root)` for every node of an edge, as a local relation
+    * @param nodes every node of an edge, ascending
+    * @param nodeRoots the root of `nodes(i)` at index `i`
     * @param simEdges edges whose `dst` is ≥ 0 (the pipeline's similarity edges)
-    * @param mentionNodes nodes ≥ 0
-    * @param roots nodes that are their own root: one per component */
-  final case class DriverComponents(rows: DataFrame, simEdges: Long, mentionNodes: Long, roots: Long)
+    * @param rows `(node, root)` for every node, as a bare local relation */
+  final class DriverComponents(val nodes: Array[Long], val nodeRoots: Array[Long],
+      val simEdges: Long, val rows: DataFrame) {
+    /** Nodes ≥ 0. */
+    val mentionNodes: Long = nodes.count(_ >= 0L)
+    /** Nodes that are their own root: one per component. */
+    val roots: Long = nodes.indices.count(i => nodes(i) == nodeRoots(i))
+    /** The root of `node`, or `node` itself when no edge touches it. */
+    def rootOf(node: Long): Long = {
+      val i = java.util.Arrays.binarySearch(nodes, node)
+      if (i >= 0) nodeRoots(i) else node
+    }
+  }
 
   /** Components of a small edge set in one driver pass: `edges` (src, dst)
     * is collected in one job and joined by union-find; building `rows` runs
-    * no job. [[run]] takes this path when its signature counts at most
-    * `smallGraphThreshold` edges, the pipeline when the committed edge
-    * snapshot's footers count at most [[SmallGraphThreshold]]. */
+    * no job, and a stage commit writes them on the driver. [[run]] takes
+    * this path when its signature counts at most `smallGraphThreshold`
+    * edges, the pipeline when the committed edge snapshot's footers count at
+    * most [[SmallGraphThreshold]]. */
   def onDriver(spark: SparkSession, edges: DataFrame): DriverComponents = {
-    import spark.implicits._
-    val collected = edges.select(col("src").cast("long"), col("dst").cast("long")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val roots = unionFind(collected)
-    DriverComponents(roots.toSeq.toDF("node", "root"), collected.count(_._2 >= 0L),
-      roots.count(_._1 >= 0L), roots.count { case (n, r) => n == r })
+    val collected = Bridge.collectInternal(edges.select(col("src").cast("long"), col("dst").cast("long")))
+    val src = collected.map(_.getLong(0))
+    val dst = collected.map(_.getLong(1))
+    val (nodes, nodeRoots) = unionFind(src, dst)
+    val rows = Bridge.localFrame(spark, RootSchema,
+      nodes.indices.map(i => InternalRow(nodes(i), nodeRoots(i))))
+    new DriverComponents(nodes, nodeRoots, dst.count(_ >= 0L), rows)
   }
 
   /** Run to fixpoint; returns (node, root) for every node appearing in an

@@ -11,6 +11,7 @@ import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.pkelbridge.Bridge
 import org.apache.spark.sql.types.StructType
 
 /** Stage-checkpointed table IO with per-write-task lineage metrics.
@@ -35,11 +36,14 @@ import org.apache.spark.sql.types.StructType
   * write markers to the driver's disk instead).
   *
   * A commit's only Spark job is its write (plus an [[StageStore.Audit]]'s
-  * aggregate when it has one): the row count, the lineage rows and the
-  * returned frame's schema come from the parquet footers the write produced
-  * ([[SnapshotFooters]]), read on the driver, and the lineage rows go to
-  * `_metrics` as one parquet file the driver writes itself. A replay reads
-  * the footer schema the same way and runs no job.
+  * aggregate when it has one), and a frame that is a bare local relation
+  * needs no job at all: the driver already holds its rows and writes them
+  * as one part file with Spark's own parquet writer. The row count, the
+  * lineage rows and the returned frame's schema come from the parquet
+  * footers the write produced ([[SnapshotFooters]]), read on the driver,
+  * and the lineage rows go to `_metrics` as one parquet file the driver
+  * writes itself. A replay reads the footer schema the same way and runs
+  * no job.
   */
 trait StageStore {
   protected def spark: SparkSession
@@ -74,15 +78,24 @@ trait StageStore {
     spark.read.schema(footers.schema).parquet(dir)
 
   /** The commit body both backends share, up to their commit point: write
-    * `df` to `dir`, read its footers, run the audit (whose `check` throws
-    * before the caller's marker/pointer write, so a vetoed stage stays
-    * uncommitted and the next run recomputes it), append the lineage rows.
+    * `df` to `dir` (a bare local relation on the driver as one
+    * `part-00000-*` file, after deleting any partial attempt; any other
+    * frame with a Spark write in overwrite mode), read its footers, run the
+    * audit (whose `check` throws before the caller's marker/pointer write,
+    * so a vetoed stage stays uncommitted and the next run recomputes it),
+    * append the lineage rows.
     * Returns the snapshot scan, its row count and the commit's `wall_ms`,
     * which covers the write, the footer read and the audit. */
   protected final def writeSnapshot(stage: String, dir: String, df: DataFrame,
       audit: Option[StageStore.Audit]): (DataFrame, Long, Long) = {
     val t0 = System.nanoTime()
-    df.write.mode("overwrite").parquet(dir)
+    Bridge.localRows(df) match {
+      case Some((schema, rows)) =>
+        val p = new Path(dir)
+        fs(p).delete(p, true) // what mode("overwrite") does to a partial attempt
+        Bridge.writeParquet(spark, schema, rows, dir)
+      case None => df.write.mode("overwrite").parquet(dir)
+    }
     val footers = SnapshotFooters.read(spark, dir)
     val out = scan(dir, footers)
     audit.foreach { a =>

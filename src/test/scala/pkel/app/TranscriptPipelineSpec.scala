@@ -197,7 +197,12 @@ class TranscriptPipelineSpec extends SparkSpec {
     jobs.synchronized(jobs.toMap)
   }
 
-  test("a small edge snapshot clusters in two jobs, and the summary runs none") {
+  /** `(run_id, value)` of every `_metrics` counter row named `stage`. */
+  private def counterRows(root: String, stage: String): Set[(String, Long)] =
+    new TableIO(spark, root, "read").metrics().filter(col("stage") === stage)
+      .select("run_id", "rows_out").collect().map(r => r.getString(0) -> r.getLong(1)).toSet
+
+  test("a small edge snapshot clusters in one job per stage, and the summary runs none") {
     val transcripts = TranscriptSynth.generate(spark, entries, nConvs = 60, seed = 3L)
     val root = tempDir("pkel_ccjobs_")
     // a fresh run, then a resume of its stages up to edges
@@ -206,14 +211,47 @@ class TranscriptPipelineSpec extends SparkSpec {
     val resumed = jobsPerPhase(transcripts, root, "resume")
     for ((tag, jobs) <- Seq("fresh" -> fresh, "resume" -> resumed)) {
       info(s"$tag: $jobs")
-      assert(jobs.get("components").contains(2), s"$tag: components is the collect and the write: $jobs")
+      assert(jobs.get("components").contains(1), s"$tag: components is the edge collect: $jobs")
+      assert(jobs.get("clusters").contains(1), s"$tag: clusters is the linked collect: $jobs")
       assert(!jobs.contains("after-clusters"), s"$tag: the summary ran jobs: $jobs")
-      assert(jobs.contains("clusters"), s"$tag: no job tagged with its phase: $jobs")
     }
-    val onDriver = new TableIO(spark, root, "read").metrics()
-      .filter(col("stage") === "components.cc_on_driver")
-      .select("run_id", "rows_out").collect().map(r => r.getString(0) -> r.getLong(1)).toSet
-    assert(onDriver == Set("fresh" -> 1L, "resume" -> 1L), s"cc_on_driver rows: $onDriver")
+    for (counter <- Seq("components.cc_on_driver", "clusters.on_driver"))
+      assert(counterRows(root, counter) == Set("fresh" -> 1L, "resume" -> 1L), s"$counter rows")
+  }
+
+  /** Rows and footer schema of a committed `clusters` table match `want`,
+    * a Spark-written table, both ways. */
+  private def assertSameClusters(root: String, want: String): Unit = {
+    val (got, exp) = (spark.read.parquet(s"$root/clusters"), spark.read.parquet(want))
+    assert(got.count() > 0 && got.exceptAll(exp).isEmpty && exp.exceptAll(got).isEmpty,
+      s"${got.count()} rows vs ${exp.count()}")
+    assert(SnapshotFooters.read(spark, s"$root/clusters").schema == SnapshotFooters.read(spark, want).schema)
+  }
+
+  test("the driver-built cluster table equals the relational join over the same components") {
+    val transcripts = TranscriptSynth.generate(spark, entries, nConvs = 60, seed = 5L)
+    val root = tempDir("pkel_cldriver_")
+    Pipeline.run(spark, transcripts, entries, Pipeline.Config(), new TableIO(spark, root, "r1"))
+    assert(counterRows(root, "clusters.on_driver") == Set("r1" -> 1L))
+    // the stage's relational plan over the committed inputs, written by Spark
+    Pipeline.assignClusters(spark.read.parquet(s"$root/linked"), spark.read.parquet(s"$root/components"))
+      .write.parquet(s"$root/joined")
+    assertSameClusters(root, s"$root/joined")
+  }
+
+  test("a run that replays components but recomputes clusters takes the join and yields the same table") {
+    val transcripts = TranscriptSynth.generate(spark, entries, nConvs = 60, seed = 5L)
+    val root = tempDir("pkel_cljoin_")
+    val cfg = Pipeline.Config()
+    val (_, s1) = Pipeline.run(spark, transcripts, entries, cfg, new TableIO(spark, root, "r1"))
+    spark.read.parquet(s"$root/clusters").write.parquet(s"$root/first")
+    assert(new java.io.File(s"$root/clusters/_COMMIT").delete())
+    val (_, s2) = Pipeline.run(spark, transcripts, entries, cfg, new TableIO(spark, root, "r2"))
+    assert(counterRows(root, "clusters.on_driver") == Set("r1" -> 1L, "r2" -> 0L))
+    assert(counterRows(root, "components.cc_on_driver") == Set("r1" -> 1L), "components replays")
+    assertSameClusters(root, s"$root/first")
+    assert(Seq(s1, s2).map(s => (s.mentions, s.pairs, s.edges, s.clusters)).distinct.size == 1,
+      s"summaries differ: $s1 $s2")
   }
 
   test("resume is idempotent: second run replays committed stages byte-identically") {

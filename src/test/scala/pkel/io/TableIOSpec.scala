@@ -11,8 +11,9 @@ import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{ArrayType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
 
 import pkel.SparkSpec
 
@@ -20,8 +21,8 @@ import pkel.SparkSpec
   * Iceberg-shaped catalog-pointer store must satisfy the identical
   * StageStore behavior (partial-write recovery, committed replay,
   * fingerprint invalidation, footer-backed lineage metrics and schema, job
-  * counts, driver-side metrics appends) — proving the backend swap is
-  * config-only. */
+  * counts, driver-side commits of local relations and metrics appends) —
+  * proving the backend swap is config-only. */
 class TableIOSpec extends SparkSpec {
 
   import spark.implicits._
@@ -111,6 +112,56 @@ class TableIOSpec extends SparkSpec {
       info(s"jobs: write=$write commit=$commit replay=$replay")
       assert(commit == write, s"commit ran $commit jobs, the bare write $write")
       assert(replay == 0, s"replay ran $replay jobs")
+    }
+
+    test(s"$name: a local relation commits on the driver") {
+      val root = tempDir(s"pkel_${name}_local_")
+      val io = mk(root)
+      val schema = StructType.fromDDL("id BIGINT NOT NULL, tokens ARRAY<STRING>, note STRING")
+      def local(rows: Row*) = spark.createDataFrame(rows.asJava, schema)
+      val df = local(Row(1L, Seq("a", "b"), "x"), Row(2L, Seq.empty[String], null), Row(3L, Seq("c"), "y"))
+      // the same rows through a Spark write: its footers' key-value metadata
+      // (row schema, writer version) and column codecs
+      def footer(dir: String) = {
+        val f = Files.list(Paths.get(dir)).iterator().asScala.find(_.getFileName.toString.startsWith("part-")).get
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toUri), spark.sparkContext.hadoopConfiguration))
+        try (r.getFileMetaData.getKeyValueMetaData.asScala.toMap,
+          r.getRowGroups.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet)
+        finally r.close()
+      }
+      df.repartition(1).write.parquet(s"$root/spark")
+      val sparkFooter = footer(s"$root/spark")
+      for ((stage, frame, want) <- Seq(("rows", df, 3L), ("empty", local(), 0L))) {
+        // a killed attempt left garbage where either backend writes
+        for (dir <- Seq(s"$root/$stage", s"$root/$stage/snap-fp")) {
+          Files.createDirectories(Paths.get(dir))
+          Files.writeString(Paths.get(s"$dir/part-00007-garbage-c000.snappy.parquet"), "not parquet")
+        }
+        var out: DataFrame = null
+        val jobs = jobsDuring { out = io.commit(stage, frame, "fp") }
+        assert(jobs == 0, s"$stage: the commit ran $jobs jobs")
+        val dir = Paths.get(new java.net.URI(out.inputFiles.head)).getParent.toString
+        val parts = Files.list(Paths.get(dir)).iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("part-")).toSeq
+        assert(parts.size == 1 && parts.head.matches("""part-00000-[0-9a-f-]{36}-c000\.snappy\.parquet"""),
+          s"$stage: $parts")
+        val footers = SnapshotFooters.read(spark, dir)
+        assert(footers.parts == Seq(0 -> want), s"$stage: ${footers.parts}")
+        // the footers keep the frame's NOT NULL flags as a Spark write's do;
+        // the scan the commit returns reads them nullable, as a plain read does
+        assert(footers.schema == schema && out.schema == spark.read.parquet(dir).schema &&
+          out.schema == StructType(schema.map(_.copy(nullable = true))),
+          s"$stage: footer ${footers.schema}, scan ${out.schema}")
+        val (meta, codecs) = footer(dir)
+        assert(meta == sparkFooter._1, s"$stage: footer metadata $meta, Spark write ${sparkFooter._1}")
+        assert(want == 0 || codecs == sparkFooter._2, s"$stage: codecs $codecs, Spark write ${sparkFooter._2}")
+        assert(out.exceptAll(frame).isEmpty && frame.exceptAll(out).isEmpty, s"$stage: rows differ")
+        assert(recordedRows(root, stage) == want, s"$stage: commit record rows")
+        val lineage = io.metrics().filter(col("stage") === stage && col("partition_id") >= 0)
+          .select("partition_id", "rows_out").as[(Int, Long)].collect().toSeq
+        assert(lineage == Seq(0 -> want), s"$stage: lineage $lineage")
+      }
     }
 
     test(s"$name: driver-side metrics appends join Spark-written ones, leave no temp file, lose no concurrent append") {
